@@ -31,6 +31,9 @@ EV_START, EV_END = "2024-01-09 00:00:00", "2024-01-13 00:00:00"
 TR_START, TR_END = "2024-01-01 00:00:00", "2024-02-01 00:00:00"
 HORIZON = "2024-02-01 00:00:00"
 
+# a gate runner: (session, sf_dir) -> the frame the driver hashes
+Runner = Callable[[SparkSession, str], DataFrame]
+
 
 # last sf_dir whose base tables are registered on a session (keyed by
 # the LIVE session object — see the _CKPT_SILVER note).  Re-registering
@@ -1985,145 +1988,6 @@ def _match_sum_of_fills_oracle(match_sql: str) -> str:
     return match_sql.replace("WITH tset AS", f"WITH {sof_trades}, tset AS", 1)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    ORDERING IS THE ROTATION PROTOCOL: the driver's correctness file caps
-    at the FIRST 50 entries, so the dict is ordered by verification need —
-    (1) entries that have never had a driver row, (2) entries rotated out
-    of the previous round's 50, (3) entries new or code-touched this
-    round, (4) stable core operators. The tail (driver-green in the last
-    round, code unchanged) rotates back in next round; every entry must
-    get a driver row at least once every two rounds."""
-    return {
-        # -- (1) r16 WINDOW: the 49 keys whose last driver row is r14
-        #    (they rotated out of r15's 50 — the whole r15 tail rotates
-        #    back in, VERDICT r15 #8), in the r15 tail order.  r16 is
-        #    the final OPTIMIZATION round: no registrations, no
-        #    retirements — the window is pure rotation. ---------------
-        "semdedup": _q_semdedup,
-        "render_sequences": _q_render_sequences,
-        "pack_stream": _q_pack_stream,
-        "ann_ivfpq_query": _q_ann_ivfpq_query,
-        "order_book": _q_order_book_union,
-        "corpus_clean": _q_corpus_clean_union,
-        "wav_roundtrip": _q_wav_adpcm_union,
-        "spread": _q_spread_union,
-        "sessionize_stream": _q_sessionize_stream,
-        "embedding_dedup_stream": _q_embedding_dedup_stream,
-        "dup_spans": _q_dup_spans,
-        "pack_sequences": _q_pack_sequences,
-        "decontaminate": _q_decontaminate,
-        "quality_classifier": _q_quality_classifier,
-        "bigram_rarity": _q_bigram_rarity,
-        "hash_sample": _q_hash_sample,
-        "depth_summary": _q_depth_summary,
-        "queues": _q_queues,
-        "trading_period": _q_trading_period,
-        "trading_strategy": _q_trading_strategy_merged,
-        "get_events": _q_get_events_merged,
-        "codec_roundtrip": _q_codec_roundtrip,
-        "mjpeg_sample": _q_mjpeg_sample,
-        "depth_chains": _q_depth_chains,
-        "dup_clusters": _q_dup_clusters,
-        "cleanse_order": _q_cleanse_order,
-        "fix_aggressor_order": _q_fix_aggressor,
-        "reveal_episodes": _q_reveal_episodes,
-        "symbol_upsert": _q_symbol_upsert,
-        "insert_era": _q_insert_era,
-        "csv_roundtrip": _q_csv_roundtrip,
-        "move_events": _q_move_events,
-        "move_trades": _q_move_trades,
-        "staging_summary": _q_staging_summary,
-        "fix_chain_integrity": _q_fix_chain_integrity,
-        "depth_change": _q_depth_change,
-        "get_trades": _q_get_trades,
-        "events_intervals": _q_intervals,
-        "summary": _q_summary,
-        "ann_ivf": _q_ann_ivf,
-        "winnow_fingerprints": _q_winnow_fingerprints,
-        "winnow_pairs": _q_winnow_pairs,
-        "multimodal_resize": _q_multimodal_resize,
-        "merge_crossed_books": _q_merge_crossed_books,
-        "merge_episodes": _q_merge_episodes,
-        "era_reassign": _q_era_reassign,
-        "crossed_books": _q_crossed_books,
-        "order_book_takers": _q_order_book_takers,
-        "jpeg_roundtrip": _q_jpeg_roundtrip,
-        # -- (2) slot 50: match_sweep pulled forward from the r15 window
-        #    — its cell loop is restructured by this round's biggest
-        #    optimization, so it re-verifies in-window even though its
-        #    r15 row would satisfy the age bound. ---------------------
-        "match_sweep": _q_match_sweep,
-        # ---- slot 51+: r15 driver-green (CORRECTNESS_r15 rows, 50/50),
-        #      values unchanged this round — they rotate back into the
-        #      window next round.  The r16 BUILD-round registration the
-        #      staged queue was sized for did not happen (r16 ran as
-        #      the final optimization round); pending_queries() stays
-        #      registration-ready for any future build round. ---------
-        "shuffle_sequences": _pq_shuffle_sequences,
-        "stratified_sample": _pq_stratified_sample,
-        "dsir_sample": _pq_dsir_sample,
-        "ann_ivfpq": _pq_ann_ivfpq_union,
-        "lsh_recall": _pq_lsh_recall_union,
-        "minhash_pairs": _pq_minhash_pairs_union,
-        "match_fill_exact": _pq_match_fill_union,
-        "corpus_prepare": _q_corpus_prepare,
-        "near_dup_verify": _q_near_dup_verify,
-        "bpe_encode": _q_bpe_encode,
-        "chunk_documents": _q_chunk_documents,
-        "layout_keys": _q_layout_keys,  # zorder + hilbert union
-        "get_depth": _q_get_depth_merged,
-        "get_spread": _q_get_spread_merged,
-        "epsilon_draws": _q_epsilon_draws_merged,
-        "gopher_quality": _q_gopher_quality,
-        "pii_scrub": _q_pii_scrub,
-        "data_overview": _q_data_overview,
-        "q1_pricing_summary": _q_q1,
-        "q3_shipping_priority": _q_q3,
-        "q5_revenue_by_nation": _q_q5,
-        "topk_orders_per_customer": _q_topk,
-        "sessionize_events": _q_sessionize,
-        "exact_dedup": _q_exact_dedup,
-        "ngram_jaccard": _q_ngram_jaccard,
-        "simhash": _q_simhash,
-        "text_stats": _q_text_stats,
-        "ann_bruteforce": _q_ann_bruteforce,
-        "ann_lsh_pairs": _q_ann_lsh,
-        "embedding_dedup": _q_embedding_dedup,
-        "export_events": _q_export,
-        "book_by_episode": _q_book_by_episode,
-        "depth_resample": _q_depth_resample,
-        "move_audit": _q_move_audit,
-        "bs_capture_orders": _q_bs_capture_orders,
-        "capture_trades": _q_capture_trades,
-        "capture_raw_book": _q_capture_raw_book,
-        "episode_framing": _q_episode_framing,
-        "match_sum_of_fills": _q_match_sum_of_fills,
-        "inferred_trades": _q_inferred_trades,
-        "match_audit": _q_match_audit,
-        "repair_missing_fill": _q_repair_missing_fill,
-        "chain_audit": _q_chain_audit,
-        "trading_strategy_rho": _q_trading_strategy_rho,
-        "lang_id_ngram": _q_lang_id_ngram,
-        "tokenize_regex": _q_tokenize_regex,
-        "tfidf_top_terms": _q_tfidf_top_terms,
-        "match_sequential": _q_match_sequential,
-        "multimodal_features": _q_multimodal,
-    }
-
-
-# ======================================================================
-# r14 REGISTERED GATES (moved from the staged queue this round) followed
-# by the r15 REGISTRATION QUEUE — staged gates NOT yet in
-# queries()/oracle_sql().  The rotation protocol requires brand-new keys
-# to enter inside the first-50 window; staged runners and oracles are
-# complete and pre-verifiable NOW via
-#   python tools/verify_local.py /root/testdata/sf0.01 --pending
-# so each round's registration is a dict move, not a build.
-# ======================================================================
-
-
 def _q_semdedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): IVF-cell-bucketed within-cell
     nearest-smaller-id cosine with keep-first representatives — the
@@ -2235,7 +2099,7 @@ def _q_ann_ivfpq_query(spark, sf_dir):
         cb = _IVF_CODEBOOKS[key] = train_ivf_codebook(emb)
     # train_pq=False: the ann_ivfpq gate (and ann_ivfpq_oracle) use the
     # stride-SEED sub-codebooks; the Lloyd-trained PQ default would fork
-    # the ADC ordering from the SQL oracle (found by --pending verify)
+    # the ADC ordering from the SQL oracle
     write_ivfpq_index(emb.filter(even), path, train_emb=emb,
                       train_pq=False, codebook=cb)
     append_ivfpq_index(spark, path, emb.filter(~even))
@@ -2311,7 +2175,7 @@ def _q_spread_union(spark, sf_dir):
     )
 
 
-def _pq_minhash_pairs_union(spark, sf_dir):
+def _q_minhash_pairs_union(spark, sf_dir):
     """r15 capacity merge (3→1): the three (doc_a, doc_b) MinHash-LSH
     candidate-pair gates — batch, persisted-index incremental, and the
     streaming-replay form — as one variant-tagged gate; each branch
@@ -2346,15 +2210,13 @@ def _pq_minhash_pairs_union(spark, sf_dir):
     )
 
 
-def _pq_lsh_recall_union(spark, sf_dir):
+def _q_lsh_recall_union(spark, sf_dir):
     """r15 capacity merge (2→1): the two one-row LSH recall bounds —
     similarity-search recall vs the exact strong-pair set, and the
     dedup sweep's recall vs the exact duplicate set — as one
     variant-tagged gate.  The count column is unified to ``n_pairs``
     (n_strong / n_exact_dups in the standalone keys); each branch keeps
     its exact oracle with the same rename."""
-    from pyspark.sql import functions as F
-
     a = _q_ann_lsh_recall(spark, sf_dir).withColumnRenamed(
         "n_strong", "n_pairs")
     b = _q_embedding_dedup_lsh_recall(spark, sf_dir).withColumnRenamed(
@@ -2362,7 +2224,7 @@ def _pq_lsh_recall_union(spark, sf_dir):
     return _variant_union(("search", a), ("dedup", b))
 
 
-def _pq_lsh_recall_union_oracle() -> str:
+def _q_lsh_recall_union_oracle() -> str:
     from obadiah_spark.pipelines import dedup
     from obadiah_spark.pipelines.similarity import ann_lsh_recall_oracle
 
@@ -2379,7 +2241,7 @@ def _pq_lsh_recall_union_oracle() -> str:
 _MIX_FRACTIONS = {f"src{k}": round((k + 1) / 20, 2) for k in range(20)}
 
 
-def _pq_stratified_sample(spark, sf_dir):
+def _q_stratified_sample(spark, sf_dir):
     """Deterministic per-stratum data mixing over the documents table's
     source column — the hash_sample gate's data-mixing form (r15
     candidate): each source keeps its own 60-bit-hash fraction, strata
@@ -2391,7 +2253,7 @@ def _pq_stratified_sample(spark, sf_dir):
                              "source")
 
 
-def _pq_ann_ivfpq_trained(spark, sf_dir):
+def _q_ann_ivfpq_trained(spark, sf_dir):
     """IVF-PQ with Lloyd-TRAINED sub-codebooks — the production default
     of write_ivfpq_index, now value-pinnable: ann_ivfpq_oracle(
     train_pq=True) replays the per-subspace training as a CTE chain
@@ -2411,21 +2273,19 @@ def _pq_ann_ivfpq_trained(spark, sf_dir):
                      subcodebook=_session_pq_subcodebook(spark, sf_dir))
 
 
-def _pq_ann_ivfpq_union(spark, sf_dir):
+def _q_ann_ivfpq_union(spark, sf_dir):
     """r15 capacity merge (2→1): the structured-quantizer ANN gate's two
     sub-codebook modes — the fixed 4×4-bit grid (base, the retired
     ann_ivfpq tail key) and Lloyd-trained sub-codebooks (the
-    write_ivfpq_index production default) — as one variant-tagged gate.
-    VERDICT r14 #1: ann_ivfpq is a tail key with the identical output
-    schema, so this union frees the window slot the staged plan was
-    over-subscribed by; each branch keeps its exact oracle."""
+    write_ivfpq_index production default) — as one variant-tagged gate;
+    each branch keeps its exact oracle."""
     return _variant_union(
         ("base", _q_ann_ivfpq(spark, sf_dir)),
-        ("trained", _pq_ann_ivfpq_trained(spark, sf_dir)),
+        ("trained", _q_ann_ivfpq_trained(spark, sf_dir)),
     )
 
 
-def _pq_ann_ivfpq_union_oracle() -> str:
+def _q_ann_ivfpq_union_oracle() -> str:
     from obadiah_spark.pipelines.similarity import ann_ivfpq_oracle
 
     return _variant_union_oracle(
@@ -2433,7 +2293,7 @@ def _pq_ann_ivfpq_union_oracle() -> str:
         trained=ann_ivfpq_oracle(train_pq=True))
 
 
-def _pq_shuffle_sequences(spark, sf_dir):
+def _q_shuffle_sequences(spark, sf_dir):
     """NEW r13 (second session): deterministic global corpus shuffle —
     every packed training sequence gets a reproducible pseudorandom
     (out_shard, out_pos) via the repo's 60-bit md5 sampling hash; no
@@ -2447,7 +2307,7 @@ def _pq_shuffle_sequences(spark, sf_dir):
         pack_sequences(_docs(spark, sf_dir), n_shards=PACK_SHARDS))
 
 
-def _pq_match_fill_union(spark, sf_dir):
+def _q_match_fill_union(spark, sf_dir):
     """r15 capacity merge (2→1): the one-shot I5 matcher and its
     chunked scheduled-lifecycle replay as one variant-tagged gate —
     the same link set discipline as the order_book/ckpt union.  The
@@ -2463,7 +2323,7 @@ def _pq_match_fill_union(spark, sf_dir):
     return _variant_union(("oneshot", a), ("incremental", b))
 
 
-def _pq_match_fill_union_oracle() -> str:
+def _q_match_fill_union_oracle() -> str:
     from obadiah_spark.operators.matching import match_fill_exact_oracle_sql
     from obadiah_spark.synth import level3_matches_cte
 
@@ -2474,7 +2334,7 @@ def _pq_match_fill_union_oracle() -> str:
         incremental=level3_matches_cte(_match_incremental_oracle()))
 
 
-def _pq_minhash_pairs_union_oracle() -> str:
+def _q_minhash_pairs_union_oracle() -> str:
     from obadiah_spark.pipelines import dedup
 
     return _variant_union_oracle(
@@ -2492,7 +2352,7 @@ DSIR_TARGET_FRACTION = 0.3
 DSIR_TARGET_SALT = "dsir_target"
 
 
-def _pq_dsir_sample(spark, sf_dir):
+def _q_dsir_sample(spark, sf_dir):
     """DSIR importance resampling (Xie et al. 2023) — hashed-bigram
     target-vs-raw importance weights in whole-bit surprisal, then the
     deterministic exp-weight hash race (accept ∝ 2^weight_bits).  The
@@ -2507,7 +2367,7 @@ def _pq_dsir_sample(spark, sf_dir):
     return dsir_sample(docs, target)
 
 
-def _pq_dsir_sample_oracle() -> str:
+def _q_dsir_sample_oracle() -> str:
     from obadiah_spark.pipelines.dsir import dsir_sample_oracle_sql
     from obadiah_spark.pipelines.sampling import _threshold, sample_u_sql
 
@@ -2518,267 +2378,11 @@ def _pq_dsir_sample_oracle() -> str:
     return dsir_sample_oracle_sql(target_sql)
 
 
-# ---- r16 capacity merges (staged a round early — the r16 window is
-# the 50 r14-window keys expiring with ZERO free slots, so the repair
-# family's shared level3 schema is the only room; these three 2→1
-# unions retire 6 members and free 3 slots for whatever r16 ships) ----
+def _gates() -> dict[str, tuple[Runner, str]]:
+    """Every gate as key → (runner, DuckDB-runnable ANSI SQL oracle).
 
-
-def _pq_drop_boilerplate(spark, sf_dir):
-    """CCNet-style cross-document boilerplate line removal (NEW r14,
-    r16 candidate — fills one of the three slots the repair unions
-    free).  The fabric ships whitespace-flattened, so the gate pins
-    the word-window segmentation (line_words=12): the planted
-    duplicate documents share every aligned window, giving the census
-    real rows; the newline mode is pinned by
-    tests/test_boilerplate.py's fixture differential."""
-    from obadiah_spark.pipelines.docquality import drop_boilerplate
-
-    return drop_boilerplate(_docs(spark, sf_dir).select("doc_id", "text"),
-                            line_words=12)
-
-
-def _pq_dup_spans_union(spark, sf_dir):
-    """r16 capacity merge (2→1): dup_spans' historical remove-every-
-    covered-position mode and the NEW r15 ExactSubstr span-granularity
-    mode (min_span=16 — only maximal merged spans ≥ 16 tokens removed,
-    Lee et al. 2022 §3's long-verbatim-duplication rule, under which
-    short incidental repeats survive: 45/500 fabric docs keep a
-    removal at this geometry and 300+ differ from base mode, so the
-    leg pins the islands chain, not a rerun) as one variant-tagged
-    gate over the identical output schema.  Retiring the dup_spans
-    tail key frees the slot that lets ann_ingest_stream register in
-    r16 instead of waiting a round; each leg keeps its exact oracle
-    geometry."""
-    from obadiah_spark.pipelines.docquality import _words, dup_spans
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    # ONE tokenization pass shared by both legs (dup_spans' tok=
-    # contract, the gopher_quality sharing precedent) — the union must
-    # not double the gate's most expensive stage
-    tok = _words(d).localCheckpoint()
-    return _variant_union(
-        ("all", dup_spans(d, tok=tok)),
-        ("minspan", dup_spans(d, tok=tok, min_span=16)),
-    )
-
-
-def _pq_ann_ingest_stream(spark, sf_dir):
-    """Streaming IVF-PQ index maintenance (NEW r15, r16 candidate):
-    the embeddings table replayed as a 3-micro-batch vector stream
-    through ``run_ann_index_ingest`` — each batch PQ-encodes under
-    frozen session codebooks and lands in idempotent
-    ingest_batch/cell partitions — then the standard index query over
-    the streamed layout.  Because every batch runs the exact
-    _encode_vectors pass the batch build runs, the streamed index is
-    row-identical to a single-shot build (pytest-pinned), so the
-    oracle is ann_ivfpq_oracle() VERBATIM: the hash covers the
-    streaming driver, the idempotent partition layout, and the
-    pruned query over it."""
-    import os
-
-    from obadiah_spark.pipelines.similarity import (ann_ivfpq_query,
-                                                    pq_subcodebooks,
-                                                    train_ivf_codebook)
-    from obadiah_spark.streaming.ann_ingest import run_ann_index_ingest
-
-    _load(spark, sf_dir)
-    emb = spark.table("embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cb = _IVF_CODEBOOKS.get(key)
-    if cb is None:
-        cb = _IVF_CODEBOOKS[key] = train_ivf_codebook(emb)
-    work = _gate_tmpdir("ann_ingest_gate_")
-    src, _n = _write_replay_chunks(emb.select("vec_id", "embedding"),
-                                   ["vec_id"], work, subdir="vecs")
-    idx = os.path.join(work, "index")
-    # seeded sub-codebooks: the ann_ivfpq oracle's geometry (the
-    # Lloyd-trained default would fork the ADC ordering from the SQL)
-    run_ann_index_ingest(
-        spark, src, "vec_id long, embedding array<float>",
-        os.path.join(work, "ckpt"), idx,
-        codebook=cb, subcodebook=pq_subcodebooks(emb))
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return ann_ivfpq_query(spark, idx, q)
-
-
-def _pq_ppl_buckets(spark, sf_dir):
-    """CCNet §4.2 per-language perplexity bucketing (NEW r15, r16
-    candidate — takes one of the two free slots the recomputed window
-    math leaves): head/middle/tail thirds by the integer milli-bit
-    bigram-surprisal CDF within each lang_id_ngram language.  The
-    boundaries are value-based over the (lang, score) CENSUS — no
-    per-document window, so a dominant language costs a combinable agg
-    plus a broadcast join, not a single-task sort (the 100 TB English
-    problem)."""
-    from obadiah_spark.pipelines.text import perplexity_buckets
-
-    return perplexity_buckets(_docs(spark, sf_dir))
-
-
-def _pq_cluster_sample(spark, sf_dir):
-    """Cluster-balanced subsampling (NEW r14, r16 candidate): keep the
-    per_cell=20 lowest-hash vectors of every IVF cell — topic
-    balancing composed from the verified IVF assignment and the shared
-    60-bit hash.  Reuses the session's trained coarse codebook like
-    ann_ivfpq/semdedup."""
-    from obadiah_spark.pipelines.sampling import cluster_balanced_sample
-    from obadiah_spark.pipelines.similarity import train_ivf_codebook
-
-    _load(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cb = _IVF_CODEBOOKS.get(key)
-    if cb is None:
-        cb = _IVF_CODEBOOKS[key] = train_ivf_codebook(
-            spark.table("embeddings"))
-    return cluster_balanced_sample(spark.table("embeddings"), 20,
-                                   codebook=cb)
-
-
-def _pq_cleanse_union(spark, sf_dir):
-    """r16 capacity merge (2→1): the two Q5 staging-repair passes that
-    rewrite event order — pga_cleanse's event-order normalization and
-    the aggressor-creation-order fix — as one variant-tagged gate over
-    the shared level3 output schema; each branch keeps its exact
-    oracle."""
-    return _variant_union(
-        ("cleanse", _q_cleanse_order(spark, sf_dir)),
-        ("aggressor", _q_fix_aggressor(spark, sf_dir)),
-    )
-
-
-def _pq_reveal_era_union(spark, sf_dir):
-    """r16 capacity merge (2→1): reveal_episodes' episode recovery and
-    insert_level3_era's era split — both full-log level3 rewrites —
-    as one variant-tagged gate; each branch keeps its exact oracle."""
-    return _variant_union(
-        ("reveal", _q_reveal_episodes(spark, sf_dir)),
-        ("era", _q_insert_era(spark, sf_dir)),
-    )
-
-
-def _pq_merge_repairs_union(spark, sf_dir):
-    """r16 capacity merge (2→1): the two merge-class repairs —
-    merge_crossed_books and merge_episodes — as one variant-tagged
-    gate; each branch keeps its exact oracle."""
-    return _variant_union(
-        ("crossed", _q_merge_crossed_books(spark, sf_dir)),
-        ("episodes", _q_merge_episodes(spark, sf_dir)),
-    )
-
-
-def pending_queries() -> dict:
-    """The staged r16 gates — same contract as queries(), invisible to
-    the driver until moved there inside r16's first-50 window.  All
-    were staged and pre-verified in r14 (`verify_local --pending`); the
-    r15 registration (this round) moved its own seven keys out of this
-    queue, leaving exactly the r16 window plan.
-
-    r16 window math — PRE-SOLVED (recomputed per VERDICT r14 #1): the
-    r16 window is the 50 r14-window keys, of which
-    embedding_dedup_lsh_recall already retired at r15 registration
-    (absorbed by the lsh_recall union) → 49 expiring; the three staged
-    repair-family unions below (cleanse_order ∪ fix_aggressor_order,
-    reveal_episodes ∪ insert_era, merge_crossed_books ∪
-    merge_episodes — all share the level3 output schema) retire 6
-    members → 43 remaining + 3 unions = 46; the dup_spans union (base
-    mode ∪ the NEW ExactSubstr min_span mode — identical schema)
-    retires a 7th tail member → 42 remaining + 4 unions = 46, and the
-    four staged standalones (drop_boilerplate, cluster_sample,
-    ppl_buckets, ann_ingest_stream) fill it to exactly 50.  The whole
-    computation is executable: staged_registration_plan() +
-    tests/test_entry_contract.py::
-    test_staged_registration_plan_fits_the_window.  Slack if r16 needs
-    a slot after all: csv_roundtrip shares the repair family's level3
-    schema."""
-    return {
-        # r16 queue (4 capacity merges + 4 staged standalones;
-        # window exactly full — the plan helper pins it)
-        "cleanse_order": _pq_cleanse_union,
-        "reveal_episodes": _pq_reveal_era_union,
-        "merge_crossed_books": _pq_merge_repairs_union,
-        "dup_spans": _pq_dup_spans_union,
-        "drop_boilerplate": _pq_drop_boilerplate,
-        "cluster_sample": _pq_cluster_sample,
-        "ppl_buckets": _pq_ppl_buckets,
-        "ann_ingest_stream": _pq_ann_ingest_stream,
-    }
-
-
-# r16 capacity merges: union key -> the member keys it retires (the
-# union reuses the FIRST member's key; the rest delete from queries()).
-_R16_UNION_RETIRES = {
-    "cleanse_order": ("cleanse_order", "fix_aggressor_order"),
-    "reveal_episodes": ("reveal_episodes", "insert_era"),
-    "merge_crossed_books": ("merge_crossed_books", "merge_episodes"),
-    # base mode ∪ the NEW ExactSubstr min_span mode, identical schema
-    "dup_spans": ("dup_spans",),
-}
-_R16_NEW_STANDALONES = ("drop_boilerplate", "cluster_sample",
-                        "ppl_buckets", "ann_ingest_stream")
-
-
-def staged_registration_plan() -> list[str]:
-    """The planned first-50 window for the NEXT build round, MECHANIZED —
-    VERDICT r14 #1 was a hand-arithmetic slip in exactly this
-    computation, so the plan is executable and pytest-checked instead of
-    prose: the expiring keys are the CURRENT tail; the staged unions
-    retire their members; the staged standalones take freed slots.
-
-    HISTORY: the plan was sized to fit r16's window exactly (the r15
-    tail contained all 7 union-retired members → 42 surviving + 4
-    unions + 4 standalones = 50).  r16 ran as the FINAL optimization
-    round — registration is feature work, out of its scope — so the r16
-    window is pure rotation (the 49 r14-verified keys + match_sweep)
-    and this plan now describes a hypothetical future build round whose
-    expiring set is the r15-window keys, none of which the staged
-    unions retire: the plan exceeds one 50-slot window and such a round
-    would stage part of it.  tests/test_entry_contract.py keeps the
-    structural invariants (resolvable, duplicate-free, every pending
-    key planned, every tail key planned-or-retired, retired members
-    real)."""
-    current = list(queries())
-    tail = current[50:]
-    retired = {m for ms in _R16_UNION_RETIRES.values() for m in ms}
-    surviving = [k for k in tail if k not in retired]
-    return (list(_R16_NEW_STANDALONES) + list(_R16_UNION_RETIRES)
-            + surviving)
-
-
-def pending_oracle_sql() -> dict[str, str]:
-    """DuckDB oracles for pending_queries(), keyed identically."""
-    from obadiah_spark.pipelines import docquality
-    from obadiah_spark.pipelines import sampling as sampling_mod
-    from obadiah_spark.pipelines import text as text_mod
-    from obadiah_spark.pipelines.similarity import ann_ivfpq_oracle
-
-    full = oracle_sql()
-    return {
-        # r16 queue: the level3-repair schema family in pairs
-        "cleanse_order": _variant_union_oracle(
-            cleanse=full["cleanse_order"],
-            aggressor=full["fix_aggressor_order"]),
-        "reveal_episodes": _variant_union_oracle(
-            reveal=full["reveal_episodes"], era=full["insert_era"]),
-        "merge_crossed_books": _variant_union_oracle(
-            crossed=full["merge_crossed_books"],
-            episodes=full["merge_episodes"]),
-        "drop_boilerplate": docquality.drop_boilerplate_oracle_sql(
-            line_words=12),
-        "cluster_sample": sampling_mod.cluster_balanced_sample_oracle_sql(20),
-        "ppl_buckets": text_mod.perplexity_buckets_oracle_sql(),
-        "dup_spans": _variant_union_oracle(
-            all=docquality.dup_spans_oracle_sql(),
-            minspan=docquality.dup_spans_oracle_sql(min_span=16)),
-        # streamed index ≡ single-shot build (shared _encode_vectors
-        # pass; pytest-pinned), so the query oracle is verbatim
-        "ann_ingest_stream": ann_ivfpq_oracle(),
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL equivalent for each queries() key."""
+    The oracle builders are imported here, not at module level, so
+    importing the driver contract stays cheap."""
     from obadiah_spark import relational
     from obadiah_spark.operators.depth import (
         DEPTH_CHANGE_ORACLE_BODY,
@@ -2820,7 +2424,6 @@ def oracle_sql() -> dict[str, str]:
     )
     from obadiah_spark.operators.matching import (
         inferred_trades_oracle_sql,
-        match_fill_exact_oracle_sql,
         match_sequential_oracle_sql,
         match_sum_of_fills_oracle_sql,
     )
@@ -2869,7 +2472,6 @@ def oracle_sql() -> dict[str, str]:
         ann_ivf_oracle,
         ann_ivfpq_oracle,
         ann_lsh_pairs_oracle_sql,
-        ann_lsh_recall_oracle,
     )
     from obadiah_spark.pipelines import langid
     from obadiah_spark.pipelines.video import mjpeg_sample_oracle_sql
@@ -2883,228 +2485,118 @@ def oracle_sql() -> dict[str, str]:
     from obadiah_spark.pipelines.tokenize import TOKENIZE_REGEX_ORACLE
     from obadiah_spark.synth import level3_cte, level3_matches_cte
 
+    # Order matters: the driver records only the first 50 keys per
+    # round, so the keys rotate through that window, and
+    # tests/test_entry_contract.py::test_rotation_age_bound checks that
+    # every key past it has a green driver row at most two rounds old.
     return {
-        "q1_pricing_summary": relational.Q1_ORACLE,
-        "q3_shipping_priority": relational.Q3_ORACLE,
-        "q5_revenue_by_nation": relational.Q5_ORACLE,
-        "topk_orders_per_customer": relational.TOPK_ORACLE,
-        "sessionize_events": relational.sessionize_oracle(30),
-        # stream replay == batch islands SQL once every session is
-        # flush-closed; us-long bounds are the streaming column shape
-        "sessionize_stream": relational.sessionize_us_oracle(30),
-        # merged r14 (2→1): the batch cleaning composition + its
+        # IVF-cell-bucketed within-cell cosine, keep-first
+        # representatives (threshold=0.3 — fabric note in the runner)
+        "semdedup": (_q_semdedup, dedup.semdedup_oracle_sql(threshold=0.3)),
+        # pack assignments hydrated + concatenated per
+        # (shard, seq_no); seq_md5 pins byte-exact sequence content
+        "render_sequences": (
+            _q_render_sequences, packing.render_sequences_oracle_sql(
+                n_shards=packing.PACK_SHARDS)),
+        # streaming packing ON INGEST == batch pack under the
+        # per-shard doc_id-ordered replay (test_pack_stream differential)
+        "pack_stream": (_q_pack_stream, packing.pack_sequences_oracle_sql(
+            n_shards=packing.PACK_SHARDS)),
+        # appended index ≡ single-shot full build (the append
+        # runs the exact _encode_vectors pass the build ran), so the
+        # index-backed query gate reuses the in-memory operator's SQL
+        "ann_ivfpq_query": (_q_ann_ivfpq_query, ann_ivfpq_oracle()),
+        # merged (2→1): L2 probe + checkpoint-seeded probe — the
+        # branches are the same operator, so both tags carry its SQL
+        "order_book": (_q_order_book_union, _variant_union_oracle(
+            base=level3_cte(order_book_oracle_sql(OB_AT)),
+            ckpt=level3_cte(order_book_oracle_sql(OB_AT)))),
+        # merged (2→1): the batch cleaning composition + its
         # streaming replay — stream == batch under the doc_id-ordered
         # replay (first-seen canonical == min-doc_id canonical), so
         # both tags carry the same member SQL
-        "corpus_clean": _variant_union_oracle(
+        "corpus_clean": (_q_corpus_clean_union, _variant_union_oracle(
             batch=docquality.corpus_clean_oracle_sql(),
-            stream=docquality.corpus_clean_oracle_sql()),
-        "dup_spans": docquality.dup_spans_oracle_sql(),
-        # NEW r13: the full composition — every stage the exact SQL its
-        # standalone gate carries, composed
-        "corpus_prepare": docquality.corpus_prepare_oracle_sql(),
-        # NEW r15: deterministic global corpus shuffle of the packed
-        # sequences (pmod buckets + per-out-shard windows, no global sort)
-        "shuffle_sequences": packing.shuffle_sequences_oracle_sql(
-            n_shards=packing.PACK_SHARDS),
-        # NEW r15: per-stratum data mixing, 20 distinct fractions
-        "stratified_sample": sampling.stratified_sample_oracle_sql(
-            _MIX_FRACTIONS, "source"),
-        # NEW r15: DSIR importance resampling (bucket censuses + the
-        # tempered exp-weight hash race, replayed as a CTE chain)
-        "dsir_sample": _pq_dsir_sample_oracle(),
-        # NEW r13: LSH candidates verified by normalized Levenshtein;
-        # both engines restrict hydration to ASCII docs (codepoint ==
-        # byte edit domain — see near_dup_verify docstring)
-        "near_dup_verify": dedup.near_dup_verify_oracle_sql(),
-        # NEW r13: recursive replace-pass re-encoding under the pinned
-        # VALUES merge table
-        "bpe_encode": bpe.bpe_encode_oracle_sql(BPE_GATE_MERGES),
-        "chunk_documents": chunking.chunk_documents_oracle_sql(),
-        # NEW r13: both curves recomputed bit-for-bit over the same
-        # (event-time micros, user) projection
-        "layout_keys": _variant_union_oracle(
-            z=f"SELECT event_id, zb_ts_us, zb_user_id, zkey AS skey "
-              f"FROM ({layout.zorder_keys_oracle_sql(LAYOUT_COLS, table=_EV_US_SQL)}) zq",
-            hilbert=f"SELECT event_id, zb_ts_us, zb_user_id, hkey AS skey "
-                    f"FROM ({layout.hilbert_keys_oracle_sql(LAYOUT_COLS, table=_EV_US_SQL)}) hq"),
-        "pack_sequences": packing.pack_sequences_oracle_sql(),
-        # NEW r14: pack assignments hydrated + concatenated per
-        # (shard, seq_no); seq_md5 pins byte-exact sequence content
-        "render_sequences": packing.render_sequences_oracle_sql(
-            n_shards=packing.PACK_SHARDS),
-        # NEW r14: streaming packing ON INGEST == batch pack under the
-        # per-shard doc_id-ordered replay (test_pack_stream differential)
-        "pack_stream": packing.pack_sequences_oracle_sql(
-            n_shards=packing.PACK_SHARDS),
-        # NEW r14: IVF-cell-bucketed within-cell cosine, keep-first
-        # representatives (threshold=0.3 — fabric note in the runner)
-        "semdedup": dedup.semdedup_oracle_sql(threshold=0.3),
-        "decontaminate": decontam.decontaminate_oracle_sql(4),
-        "quality_classifier": classifier.quality_classifier_oracle_sql(),
-        "bigram_rarity": bigram_rarity_oracle_sql(),
-        "hash_sample": _variant_union_oracle(
-            base=sampling.hash_sample_oracle_sql(0.2, salt="gate"),
-            strat=sampling.stratified_sample_oracle_sql(
-                MIX_FRACTIONS, "source", salt="gate")),
-        # merged r14 (2→1): L2 probe + checkpoint-seeded probe — the
-        # branches are the same operator, so both tags carry its SQL
-        "order_book": _variant_union_oracle(
-            base=level3_cte(order_book_oracle_sql(OB_AT)),
-            ckpt=level3_cte(order_book_oracle_sql(OB_AT))),
-        # merged r14 (2→1): emit-on-change L1 stream + period-boundary
+            stream=docquality.corpus_clean_oracle_sql())),
+        # merged: wav + the adpcm leg padded to the wav schema
+        "wav_roundtrip": (_q_wav_adpcm_union, _q_wav_adpcm_union_oracle()),
+        # merged (2→1): emit-on-change L1 stream + period-boundary
         # sampling (both pin to the same linear-interpolation SQL)
-        "spread": _variant_union_oracle(
+        "spread": (_q_spread_union, _variant_union_oracle(
             base=level3_cte(SPREAD_LINEAR_ORACLE_BODY),
-            periods=level3_cte(SPREAD_LINEAR_ORACLE_BODY)),
-        "depth_change": level3_cte(DEPTH_CHANGE_ORACLE_BODY),
-        # merged E1 family (r12): base + freq, each branch the exact
-        # oracle its retired key carried
-        "get_events": _variant_union_oracle(
-            base=level3_matches_cte(events_oracle_sql(EV_START, EV_END)),
-            freq=level3_matches_cte(events_oracle_sql(
-                EV_START, EV_END,
-                l1_ctes=grid_sample_l3_sql(SPREAD_L1_CTES, GET_FREQ_S)))),
-        "get_trades": level3_matches_cte(trades_oracle_sql(TR_START, TR_END)),
-        "events_intervals": level3_cte(intervals_oracle_sql(HORIZON)),
-        "summary": level3_matches_cte(SUMMARY_ORACLE_BODY),
-        "exact_dedup": dedup.EXACT_DEDUP_ORACLE,
-        "ngram_jaccard": dedup.ngram_jaccard_oracle(),
-        # merged r15 (3→1): batch + persisted-index incremental +
-        # streaming replay, each branch its retired key's exact oracle
-        "minhash_pairs": _pq_minhash_pairs_union_oracle(),
-        "simhash": dedup.SIMHASH_ORACLE,
-        "text_stats": TEXT_STATS_ORACLE,
-        "gopher_quality": docquality.gopher_quality_oracle_sql(),
-        "pii_scrub": docquality.pii_gate_oracle_sql(),
-        "lang_id_ngram": langid.lang_id_ngram_oracle_sql(),
-        "tokenize_regex": TOKENIZE_REGEX_ORACLE,
-        "tfidf_top_terms": tfidf_top_terms_oracle(),
-        "dup_clusters": dedup.dup_clusters_oracle(),
-        "winnow_fingerprints": WINNOW_ORACLE,
-        "winnow_pairs": WINNOW_PAIRS_ORACLE,
-        "multimodal_resize": resize_images_oracle(),
-        "ann_bruteforce": ann_bruteforce_oracle(),
-        "ann_ivf": ann_ivf_oracle(),
-        # merged r15 (2→1): fixed 4×4-bit grid + Lloyd-trained
-        # sub-codebooks (ann_ivfpq_oracle(train_pq=True) CTE chain)
-        "ann_ivfpq": _pq_ann_ivfpq_union_oracle(),
-        # NEW r14: appended index ≡ single-shot full build (the append
-        # runs the exact _encode_vectors pass the build ran), so the
-        # index-backed query gate reuses the in-memory operator's SQL
-        "ann_ivfpq_query": ann_ivfpq_oracle(),
-        # dim=64 is the TESTDATA.md embeddings contract (all sf dirs); the
-        # plane weights are emitted into the SQL as a VALUES CTE, so DuckDB
-        # recomputes signatures + buckets + cosines from scratch
-        "ann_lsh_pairs": ann_lsh_pairs_oracle_sql(64),
+            periods=level3_cte(SPREAD_LINEAR_ORACLE_BODY))),
+        # stream replay == batch islands SQL once every session is
+        # flush-closed; us-long bounds are the streaming column shape
+        "sessionize_stream": (_q_sessionize_stream,
+            relational.sessionize_us_oracle(30)),
         # stream replay == batch ann_lsh_pairs at the dedup-sweep
         # geometry when no bucket exceeds the (10k) cap: same VALUES-CTE
         # plane-weight oracle, dedup geometry + the 0.45 threshold
-        "embedding_dedup_stream": ann_lsh_pairs_oracle_sql(
-            64, min_cosine=0.45, tables=dedup.DEDUP_TABLES,
-            planes=dedup.DEDUP_PLANES),
-        # merged r15 (2→1): search recall + dedup-sweep recall, count
-        # column unified to n_pairs on both engines
-        "lsh_recall": _pq_lsh_recall_union_oracle(),
-        "embedding_dedup": dedup.embedding_dedup_oracle(),
-        "multimodal_features": MULTIMODAL_ORACLE,
-        "codec_roundtrip": CODEC_ROUNDTRIP_ORACLE,
-        "jpeg_roundtrip": JPEG_ROUNDTRIP_ORACLE,
-        # merged r14: wav + the NEW adpcm leg padded to the wav schema
-        "wav_roundtrip": _q_wav_adpcm_union_oracle(),
-        "mjpeg_sample": mjpeg_sample_oracle_sql(),
+        "embedding_dedup_stream": (
+            _q_embedding_dedup_stream, ann_lsh_pairs_oracle_sql(
+                64, min_cosine=0.45, tables=dedup.DEDUP_TABLES,
+                planes=dedup.DEDUP_PLANES)),
+        "dup_spans": (_q_dup_spans, docquality.dup_spans_oracle_sql()),
+        "pack_sequences": (_q_pack_sequences,
+            packing.pack_sequences_oracle_sql()),
+        "decontaminate": (_q_decontaminate,
+            decontam.decontaminate_oracle_sql(4)),
+        "quality_classifier": (_q_quality_classifier,
+            classifier.quality_classifier_oracle_sql()),
+        "bigram_rarity": (_q_bigram_rarity, bigram_rarity_oracle_sql()),
+        "hash_sample": (_q_hash_sample, _variant_union_oracle(
+            base=sampling.hash_sample_oracle_sql(0.2, salt="gate"),
+            strat=sampling.stratified_sample_oracle_sql(
+                MIX_FRACTIONS, "source", salt="gate"))),
+        # merged overload families: every branch is the SAME oracle
+        # the retired per-overload key carried, tagged and unioned
+        "depth_summary": (_q_depth_summary, _variant_union_oracle(
+            base=level3_cte(depth_summary_oracle_sql()),
+            freq=level3_cte(
+                grid_sample_l3_sql(depth_summary_oracle_sql(), GET_FREQ_S)),
+            range=level3_cte(
+                depth_summary_oracle_sql(start=EV_START, end=EV_END)))),
+        "queues": (_q_queues, _variant_union_oracle(
+            base=level3_cte(queues_oracle_sql()),
+            freq=level3_cte(
+                grid_sample_l3_sql(queues_oracle_sql(), GET_FREQ_S)),
+            range=level3_cte(
+                queues_oracle_sql(start=EV_START, end=EV_END)))),
+        "trading_period": (_q_trading_period, _variant_union_oracle(
+            base=level3_cte(trading_period_v0_oracle()),
+            freq=level3_cte(
+                grid_sample_l3_sql(trading_period_v0_oracle(), GET_FREQ_S)),
+            range=level3_cte(
+                trading_period_v0_range_oracle(EV_START, EV_END)))),
         # real-book T2/T3: recursive-CTE replay of the state machines in mid
         # mode (phi/epsilon must match the _q_* calls above); the *_zigzag
         # entries additionally hash-check against a closed-form extrema oracle
-        # merged T2 family (r12): base/zigzag/freq/range, each branch
+        # merged T2 family: base/zigzag/freq/range, each branch
         # the exact oracle its retired key carried (rho stays separate)
-        "trading_strategy": _variant_union_oracle(
+        "trading_strategy": (_q_trading_strategy_merged, _variant_union_oracle(
             base=level3_cte(trading_strategy_mid_oracle_sql(phi=0.0001)),
             zigzag=trading_strategy_zigzag_oracle_sql(),
             freq=level3_cte(grid_sample_l3_sql(
                 trading_strategy_mid_oracle_sql(phi=0.0001), GET_FREQ_S)),
             range=level3_cte(trading_strategy_mid_oracle_sql(
-                phi=0.0, mid_cte=_mid_range_cte(EV_START, EV_END)))),
-        "trading_strategy_rho": level3_cte(trading_strategy_mid_oracle_sql(
-            phi=0.0001, rho=STRATEGY_RHO)),
-        # merged T3 family (r13): base/zigzag/range, each branch the
-        # exact oracle its retired key carried
-        "epsilon_draws": _variant_union_oracle(
-            base=level3_cte(epsilon_draws_mid_oracle_sql(epsilon=0.0005)),
-            zigzag=epsilon_draws_zigzag_oracle_sql(),
-            range=level3_cte(epsilon_draws_mid_oracle_sql(
-                epsilon=0.0005, mid_cte=_mid_range_cte(EV_START, EV_END)))),
-        # merged D4 family (r13): base + freq
-        "get_depth": _variant_union_oracle(
-            base=level3_cte(get_depth_oracle_sql(EV_START, EV_END)),
-            freq=level3_cte(get_depth_oracle_sql(
-                EV_START, EV_END, frequency_s=GET_FREQ_S))),
-        # merged D8 family (r13): base + freq + single-instant
-        "get_spread": _variant_union_oracle(
-            base=level3_cte(get_spread_oracle_sql(EV_START, EV_END)),
-            freq=level3_cte(
-                get_spread_freq_oracle_sql(EV_START, EV_END, GET_FREQ_S)),
-            at=level3_cte(spread_at_oracle_sql(EV_START))),
-        # merged overload families (r12): every branch is the SAME oracle
-        # the retired per-overload key carried, tagged and unioned
-        "depth_summary": _variant_union_oracle(
-            base=level3_cte(depth_summary_oracle_sql()),
-            freq=level3_cte(
-                grid_sample_l3_sql(depth_summary_oracle_sql(), GET_FREQ_S)),
-            range=level3_cte(
-                depth_summary_oracle_sql(start=EV_START, end=EV_END))),
-        "queues": _variant_union_oracle(
-            base=level3_cte(queues_oracle_sql()),
-            freq=level3_cte(
-                grid_sample_l3_sql(queues_oracle_sql(), GET_FREQ_S)),
-            range=level3_cte(
-                queues_oracle_sql(start=EV_START, end=EV_END))),
-        "trading_period": _variant_union_oracle(
-            base=level3_cte(trading_period_v0_oracle()),
-            freq=level3_cte(
-                grid_sample_l3_sql(trading_period_v0_oracle(), GET_FREQ_S)),
-            range=level3_cte(
-                trading_period_v0_range_oracle(EV_START, EV_END))),
-        "crossed_books": level3_cte(crossed_books_oracle()),
-        "order_book_takers": level3_cte(invalid_takers_oracle_sql()),
-        "chain_audit": level3_cte(CHAIN_AUDIT_ORACLE_BODY),
-        "match_audit": level3_matches_cte(MATCH_AUDIT_ORACLE_BODY),
-        # merged r15 (2→1): one-shot I5 matcher (padded matcher='exact')
-        # + chunked scheduled-lifecycle replay
-        "match_fill_exact": _pq_match_fill_union_oracle(),
-        "inferred_trades": level3_cte(inferred_trades_oracle_sql()),
-        "match_sequential": level3_cte(_match_sequential_oracle(
-            inferred_trades_oracle_sql(), match_sequential_oracle_sql())),
-        "match_sweep": level3_cte(_match_sweep_oracle()),
-        "match_sum_of_fills": level3_matches_cte(
-            _match_sum_of_fills_oracle(match_sum_of_fills_oracle_sql())),
-        "data_overview": level3_cte(DATA_OVERVIEW_ORACLE_BODY),
-        "export_events": level3_cte(export_oracle_sql(EV_START, EV_END)),
-        "book_by_episode": level3_cte(book_by_episode_oracle_sql()),
-        "depth_resample": level3_cte(depth_resample_oracle_sql()),
-        "merge_episodes": level3_cte(merge_episodes_oracle_sql(EV_START, EV_END)),
-        "merge_crossed_books": level3_cte(merge_crossed_books_oracle_sql()),
-        "fix_chain_integrity": level3_cte("SELECT * FROM level3"),
-        "move_audit": level3_cte(audit_microtimestamp_moves_oracle_sql(120)),
-        "insert_era": level3_cte(insert_level3_era_oracle_sql(ERA_SPLIT_AT)),
-        "csv_roundtrip": level3_cte(csv_roundtrip_oracle_sql()),
-        "move_events": level3_matches_cte(move_events_oracle_sql(EV_START, EV_END)),
-        "move_trades": level3_matches_cte(move_trades_oracle_sql(EV_START, EV_END)),
-        "staging_summary": level3_matches_cte(staging_summary_oracle_sql()),
-        "depth_chains": level3_cte(depth_chains_oracle_sql()),
-        "repair_missing_fill": level3_matches_cte(
-            find_and_repair_missing_fill_oracle_sql(CORRUPT_FABRIC_CTES)),
-        "reveal_episodes": level3_cte(reveal_episodes_oracle_sql(
-            f"rev_trades AS ({inferred_trades_oracle_sql()})")),
-        "bs_capture_orders": capture_transient_orders_oracle_sql(),
-        "era_reassign": _era_reassign_oracle(),
-        "capture_trades": level3_cte(capture_transient_trades_oracle_sql()),
-        "episode_framing": frame_episodes_oracle_sql(),
-        "capture_raw_book": capture_raw_book_oracle_sql(),
-        "cleanse_order": level3_matches_cte(normalize_event_order_oracle_sql()),
-        "symbol_upsert": update_symbol_details_oracle_sql(),
-        "fix_aggressor_order": level3_cte(fix_aggressor_creation_order_oracle_sql(
-            f"""agg_trades AS (
+                phi=0.0, mid_cte=_mid_range_cte(EV_START, EV_END))))),
+        # merged E1 family: base + freq, each branch the exact
+        # oracle its retired key carried
+        "get_events": (_q_get_events_merged, _variant_union_oracle(
+            base=level3_matches_cte(events_oracle_sql(EV_START, EV_END)),
+            freq=level3_matches_cte(events_oracle_sql(
+                EV_START, EV_END,
+                l1_ctes=grid_sample_l3_sql(SPREAD_L1_CTES, GET_FREQ_S))))),
+        "codec_roundtrip": (_q_codec_roundtrip, CODEC_ROUNDTRIP_ORACLE),
+        "mjpeg_sample": (_q_mjpeg_sample, mjpeg_sample_oracle_sql()),
+        "depth_chains": (_q_depth_chains,
+            level3_cte(depth_chains_oracle_sql())),
+        "dup_clusters": (_q_dup_clusters, dedup.dup_clusters_oracle()),
+        "cleanse_order": (_q_cleanse_order,
+            level3_matches_cte(normalize_event_order_oracle_sql())),
+        "fix_aggressor_order": (_q_fix_aggressor,
+            level3_cte(fix_aggressor_creation_order_oracle_sql(
+                f"""agg_trades AS (
     SELECT pair_id, microtimestamp, price, amount,
         CASE WHEN (buy_order_id + sell_order_id) % 3 = 0
              THEN CASE side WHEN 'b' THEN 's' ELSE 'b' END
@@ -3112,5 +2604,176 @@ def oracle_sql() -> dict[str, str]:
         buy_microtimestamp, buy_order_id, buy_event_no,
         sell_microtimestamp, sell_order_id, sell_event_no
     FROM ({inferred_trades_oracle_sql()}) it
-)""")),
+)"""))),
+        "reveal_episodes": (
+            _q_reveal_episodes, level3_cte(reveal_episodes_oracle_sql(
+                f"rev_trades AS ({inferred_trades_oracle_sql()})"))),
+        "symbol_upsert": (_q_symbol_upsert,
+            update_symbol_details_oracle_sql()),
+        "insert_era": (_q_insert_era,
+            level3_cte(insert_level3_era_oracle_sql(ERA_SPLIT_AT))),
+        "csv_roundtrip": (_q_csv_roundtrip,
+            level3_cte(csv_roundtrip_oracle_sql())),
+        "move_events": (_q_move_events,
+            level3_matches_cte(move_events_oracle_sql(EV_START, EV_END))),
+        "move_trades": (_q_move_trades,
+            level3_matches_cte(move_trades_oracle_sql(EV_START, EV_END))),
+        "staging_summary": (_q_staging_summary,
+            level3_matches_cte(staging_summary_oracle_sql())),
+        "fix_chain_integrity": (_q_fix_chain_integrity,
+            level3_cte("SELECT * FROM level3")),
+        "depth_change": (_q_depth_change,
+            level3_cte(DEPTH_CHANGE_ORACLE_BODY)),
+        "get_trades": (_q_get_trades,
+            level3_matches_cte(trades_oracle_sql(TR_START, TR_END))),
+        "events_intervals": (_q_intervals,
+            level3_cte(intervals_oracle_sql(HORIZON))),
+        "summary": (_q_summary, level3_matches_cte(SUMMARY_ORACLE_BODY)),
+        "ann_ivf": (_q_ann_ivf, ann_ivf_oracle()),
+        "winnow_fingerprints": (_q_winnow_fingerprints, WINNOW_ORACLE),
+        "winnow_pairs": (_q_winnow_pairs, WINNOW_PAIRS_ORACLE),
+        "multimodal_resize": (_q_multimodal_resize, resize_images_oracle()),
+        "merge_crossed_books": (_q_merge_crossed_books,
+            level3_cte(merge_crossed_books_oracle_sql())),
+        "merge_episodes": (_q_merge_episodes,
+            level3_cte(merge_episodes_oracle_sql(EV_START, EV_END))),
+        "era_reassign": (_q_era_reassign, _era_reassign_oracle()),
+        "crossed_books": (_q_crossed_books,
+            level3_cte(crossed_books_oracle())),
+        "order_book_takers": (_q_order_book_takers,
+            level3_cte(invalid_takers_oracle_sql())),
+        "jpeg_roundtrip": (_q_jpeg_roundtrip, JPEG_ROUNDTRIP_ORACLE),
+        "match_sweep": (_q_match_sweep, level3_cte(_match_sweep_oracle())),
+        # deterministic global corpus shuffle of the packed
+        # sequences (pmod buckets + per-out-shard windows, no global sort)
+        "shuffle_sequences": (
+            _q_shuffle_sequences, packing.shuffle_sequences_oracle_sql(
+                n_shards=packing.PACK_SHARDS)),
+        # per-stratum data mixing, 20 distinct fractions
+        "stratified_sample": (
+            _q_stratified_sample, sampling.stratified_sample_oracle_sql(
+                _MIX_FRACTIONS, "source")),
+        # DSIR importance resampling (bucket censuses + the
+        # tempered exp-weight hash race, replayed as a CTE chain)
+        "dsir_sample": (_q_dsir_sample, _q_dsir_sample_oracle()),
+        # merged (2→1): fixed 4×4-bit grid + Lloyd-trained
+        # sub-codebooks (ann_ivfpq_oracle(train_pq=True) CTE chain)
+        "ann_ivfpq": (_q_ann_ivfpq_union, _q_ann_ivfpq_union_oracle()),
+        # merged (2→1): search recall + dedup-sweep recall, count
+        # column unified to n_pairs on both engines
+        "lsh_recall": (_q_lsh_recall_union, _q_lsh_recall_union_oracle()),
+        # merged (3→1): batch + persisted-index incremental +
+        # streaming replay, each branch its retired key's exact oracle
+        "minhash_pairs": (_q_minhash_pairs_union,
+            _q_minhash_pairs_union_oracle()),
+        # merged (2→1): one-shot I5 matcher (padded matcher='exact')
+        # + chunked scheduled-lifecycle replay
+        "match_fill_exact": (_q_match_fill_union,
+            _q_match_fill_union_oracle()),
+        # the full composition — every stage the exact SQL its
+        # standalone gate carries, composed
+        "corpus_prepare": (_q_corpus_prepare,
+            docquality.corpus_prepare_oracle_sql()),
+        # LSH candidates verified by normalized Levenshtein;
+        # both engines restrict hydration to ASCII docs (codepoint ==
+        # byte edit domain — see near_dup_verify docstring)
+        "near_dup_verify": (_q_near_dup_verify,
+            dedup.near_dup_verify_oracle_sql()),
+        # recursive replace-pass re-encoding under the pinned
+        # VALUES merge table
+        "bpe_encode": (_q_bpe_encode,
+            bpe.bpe_encode_oracle_sql(BPE_GATE_MERGES)),
+        "chunk_documents": (_q_chunk_documents,
+            chunking.chunk_documents_oracle_sql()),
+        # both curves recomputed bit-for-bit over the same
+        # (event-time micros, user) projection
+        "layout_keys": (  # zorder + hilbert union
+            _q_layout_keys, _variant_union_oracle(
+                z=f"SELECT event_id, zb_ts_us, zb_user_id, zkey AS skey "
+                  f"FROM ({layout.zorder_keys_oracle_sql(LAYOUT_COLS, table=_EV_US_SQL)}) zq",
+                hilbert=f"SELECT event_id, zb_ts_us, zb_user_id, hkey AS skey "
+                        f"FROM ({layout.hilbert_keys_oracle_sql(LAYOUT_COLS, table=_EV_US_SQL)}) hq")),
+        # merged D4 family: base + freq
+        "get_depth": (_q_get_depth_merged, _variant_union_oracle(
+            base=level3_cte(get_depth_oracle_sql(EV_START, EV_END)),
+            freq=level3_cte(get_depth_oracle_sql(
+                EV_START, EV_END, frequency_s=GET_FREQ_S)))),
+        # merged D8 family: base + freq + single-instant
+        "get_spread": (_q_get_spread_merged, _variant_union_oracle(
+            base=level3_cte(get_spread_oracle_sql(EV_START, EV_END)),
+            freq=level3_cte(
+                get_spread_freq_oracle_sql(EV_START, EV_END, GET_FREQ_S)),
+            at=level3_cte(spread_at_oracle_sql(EV_START)))),
+        # merged T3 family: base/zigzag/range, each branch the
+        # exact oracle its retired key carried
+        "epsilon_draws": (_q_epsilon_draws_merged, _variant_union_oracle(
+            base=level3_cte(epsilon_draws_mid_oracle_sql(epsilon=0.0005)),
+            zigzag=epsilon_draws_zigzag_oracle_sql(),
+            range=level3_cte(epsilon_draws_mid_oracle_sql(
+                epsilon=0.0005, mid_cte=_mid_range_cte(EV_START, EV_END))))),
+        "gopher_quality": (_q_gopher_quality,
+            docquality.gopher_quality_oracle_sql()),
+        "pii_scrub": (_q_pii_scrub, docquality.pii_gate_oracle_sql()),
+        "data_overview": (_q_data_overview,
+            level3_cte(DATA_OVERVIEW_ORACLE_BODY)),
+        "q1_pricing_summary": (_q_q1, relational.Q1_ORACLE),
+        "q3_shipping_priority": (_q_q3, relational.Q3_ORACLE),
+        "q5_revenue_by_nation": (_q_q5, relational.Q5_ORACLE),
+        "topk_orders_per_customer": (_q_topk, relational.TOPK_ORACLE),
+        "sessionize_events": (_q_sessionize, relational.sessionize_oracle(30)),
+        "exact_dedup": (_q_exact_dedup, dedup.EXACT_DEDUP_ORACLE),
+        "ngram_jaccard": (_q_ngram_jaccard, dedup.ngram_jaccard_oracle()),
+        "simhash": (_q_simhash, dedup.SIMHASH_ORACLE),
+        "text_stats": (_q_text_stats, TEXT_STATS_ORACLE),
+        "ann_bruteforce": (_q_ann_bruteforce, ann_bruteforce_oracle()),
+        # dim=64 is the TESTDATA.md embeddings contract (all sf dirs); the
+        # plane weights are emitted into the SQL as a VALUES CTE, so DuckDB
+        # recomputes signatures + buckets + cosines from scratch
+        "ann_lsh_pairs": (_q_ann_lsh, ann_lsh_pairs_oracle_sql(64)),
+        "embedding_dedup": (_q_embedding_dedup,
+            dedup.embedding_dedup_oracle()),
+        "export_events": (_q_export,
+            level3_cte(export_oracle_sql(EV_START, EV_END))),
+        "book_by_episode": (_q_book_by_episode,
+            level3_cte(book_by_episode_oracle_sql())),
+        "depth_resample": (_q_depth_resample,
+            level3_cte(depth_resample_oracle_sql())),
+        "move_audit": (_q_move_audit,
+            level3_cte(audit_microtimestamp_moves_oracle_sql(120))),
+        "bs_capture_orders": (_q_bs_capture_orders,
+            capture_transient_orders_oracle_sql()),
+        "capture_trades": (_q_capture_trades,
+            level3_cte(capture_transient_trades_oracle_sql())),
+        "capture_raw_book": (_q_capture_raw_book,
+            capture_raw_book_oracle_sql()),
+        "episode_framing": (_q_episode_framing, frame_episodes_oracle_sql()),
+        "match_sum_of_fills": (_q_match_sum_of_fills, level3_matches_cte(
+            _match_sum_of_fills_oracle(match_sum_of_fills_oracle_sql()))),
+        "inferred_trades": (_q_inferred_trades,
+            level3_cte(inferred_trades_oracle_sql())),
+        "match_audit": (_q_match_audit,
+            level3_matches_cte(MATCH_AUDIT_ORACLE_BODY)),
+        "repair_missing_fill": (_q_repair_missing_fill, level3_matches_cte(
+            find_and_repair_missing_fill_oracle_sql(CORRUPT_FABRIC_CTES))),
+        "chain_audit": (_q_chain_audit, level3_cte(CHAIN_AUDIT_ORACLE_BODY)),
+        "trading_strategy_rho": (_q_trading_strategy_rho,
+            level3_cte(trading_strategy_mid_oracle_sql(
+                phi=0.0001, rho=STRATEGY_RHO))),
+        "lang_id_ngram": (_q_lang_id_ngram, langid.lang_id_ngram_oracle_sql()),
+        "tokenize_regex": (_q_tokenize_regex, TOKENIZE_REGEX_ORACLE),
+        "tfidf_top_terms": (_q_tfidf_top_terms, tfidf_top_terms_oracle()),
+        "match_sequential": (
+            _q_match_sequential, level3_cte(_match_sequential_oracle(
+                inferred_trades_oracle_sql(), match_sequential_oracle_sql()))),
+        "multimodal_features": (_q_multimodal, MULTIMODAL_ORACLE),
     }
+
+
+def queries() -> dict[str, Runner]:
+    """The gate runners, keyed and ordered as ``_gates()``."""
+    return {key: run for key, (run, _) in _gates().items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    """DuckDB-runnable ANSI SQL equivalent for each queries() key."""
+    return {key: sql for key, (_, sql) in _gates().items()}

@@ -47,14 +47,6 @@ def match_rule(trade_amount: Column, trade_price: Column, event_amount: Column,
     ).cast("int")
 
 
-MATCH_RULE_SQL = """CASE
-    WHEN {ta} = {ef} THEN 0
-    WHEN abs({ta} * {tp} - {ef} * {tp}) < {tol} THEN 1
-    WHEN {ef} IS NULL THEN 2
-    WHEN {deleted} AND {ef} = 0 AND abs({ta} * {tp} - {ea} * {tp}) < {tol} THEN 3
-END"""
-
-
 def match_price_and_fill_exact(l3: DataFrame, trades: DataFrame,
                                max_delay_s: int = 1) -> DataFrame:
     """I5: link unlinked trades to the level3 event that produced them.

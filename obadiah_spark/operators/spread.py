@@ -19,11 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-SPREAD_COLS = [
-    "pair_id", "microtimestamp",
-    "best_bid_price", "best_bid_qty", "best_ask_price", "best_ask_qty",
-]
-
 
 def spread_slow(l3: DataFrame) -> DataFrame:
     """Declarative emit-on-change level1 stream for the whole log."""
@@ -83,47 +78,3 @@ def spread_slow(l3: DataFrame) -> DataFrame:
             "best_bid_price", "best_bid_qty", "best_ask_price", "best_ask_qty",
         )
     )
-
-
-SPREAD_ORACLE_BODY = """
-WITH eps AS (
-    SELECT DISTINCT pair_id, era, microtimestamp AS ts FROM level3
-), live AS (
-    SELECT e.pair_id, e.era, e.ts, l.side, l.price, l.amount
-    FROM eps e JOIN level3 l
-      ON l.pair_id = e.pair_id AND l.era = e.era
-     AND l.microtimestamp <= e.ts
-     AND (l.chain_state = 'alive'
-          OR (l.chain_state = 'chained' AND l.next_microtimestamp > e.ts))
-), lvl AS (
-    SELECT pair_id, era, ts, side, price, sum(amount) AS qty
-    FROM live GROUP BY pair_id, era, ts, side, price
-), best AS (
-    SELECT pair_id, era, ts,
-           max(CASE WHEN side = 'b' THEN price END) AS best_bid_price,
-           min(CASE WHEN side = 's' THEN price END) AS best_ask_price
-    FROM lvl GROUP BY pair_id, era, ts
-), joined AS (
-    SELECT b.pair_id, b.era, b.ts, b.best_bid_price, b.best_ask_price,
-           max(CASE WHEN l.side = 'b' AND l.price = b.best_bid_price THEN l.qty END) AS best_bid_qty,
-           max(CASE WHEN l.side = 's' AND l.price = b.best_ask_price THEN l.qty END) AS best_ask_qty
-    FROM best b JOIN lvl l
-      ON l.pair_id = b.pair_id AND l.era = b.era AND l.ts = b.ts
-    GROUP BY b.pair_id, b.era, b.ts, b.best_bid_price, b.best_ask_price
-), dedup AS (
-    SELECT *,
-           lag(best_bid_price) OVER w AS p_bb,
-           lag(best_bid_qty)  OVER w AS p_bq,
-           lag(best_ask_price) OVER w AS p_ba,
-           lag(best_ask_qty)  OVER w AS p_aq
-    FROM joined
-    WINDOW w AS (PARTITION BY pair_id, era ORDER BY ts)
-)
-SELECT pair_id, ts AS microtimestamp,
-       best_bid_price, best_bid_qty, best_ask_price, best_ask_qty
-FROM dedup
-WHERE p_bb IS DISTINCT FROM best_bid_price
-   OR p_bq IS DISTINCT FROM best_bid_qty
-   OR p_ba IS DISTINCT FROM best_ask_price
-   OR p_aq IS DISTINCT FROM best_ask_qty
-"""

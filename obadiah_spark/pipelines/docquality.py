@@ -673,7 +673,6 @@ FROM m GROUP BY doc_id
 
 
 BOILERPLATE_MIN_DF = 2
-BOILERPLATE_LINE_WORDS = 12
 
 
 def _boilerplate_marked(docs: DataFrame, min_df: int,

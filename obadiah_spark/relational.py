@@ -203,9 +203,6 @@ ORDER BY user_id, session_no
 """.format(gap_us=gap_minutes * 60 * 1_000_000)
 
 
-SESSIONIZE_ORACLE = sessionize_oracle(30)
-
-
 def sessionize_us_oracle(gap_minutes: int = 30) -> str:
     """``sessionize_oracle`` with microsecond-long window bounds — the
     column shape of the STREAMING sessionizer (SESSIONS_SCHEMA in

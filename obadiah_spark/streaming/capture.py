@@ -321,8 +321,6 @@ def _resolve_seq_base(bronze_path: str, subs: Iterable[str],
 
 BOOK_COLS = ["exchange_ts", "order_id", "price", "amount", "pair_id",
              "local_ts", "channel_id", "is_snapshot", "event_id"]
-TRADE_COLS = ["id", "qty", "price", "local_timestamp", "exchange_timestamp",
-              "pair_id", "channel_id"]
 # explicit sink schemas: the buffered flush() path must NOT type-infer from
 # pandas (an all-None column, e.g. exchange_ts for frames without rts,
 # would fail inference or drift vs the write-per-batch parquet schema)
@@ -766,14 +764,6 @@ def parse_bitstamp_frames(lines: DataFrame,
     slow_rows = (with_no.filter(~F.coalesce(is_fast, F.lit(False)))
                  .mapInPandas(gen, schema=BS_PARSED_SCHEMA))
     return slow_rows.unionByName(fast_rows)
-
-
-BS_ORDER_COLS = ["microtimestamp", "datetime", "amount", "price", "order_id",
-                 "order_type", "event", "era", "pair_id", "local_timestamp",
-                 "event_id"]
-BS_TRADE_COLS = ["trade_timestamp", "amount", "buy_order_id",
-                 "sell_order_id", "price", "bitstamp_trade_id", "trade_type",
-                 "pair_id", "local_timestamp"]
 
 
 def route_bitstamp_batch(parsed: DataFrame, pair_id: int, era_us: int,

@@ -37,8 +37,6 @@ from __future__ import annotations
 
 import pandas as pd
 
-_WEEK_ANCHOR = pd.Timestamp("2024-01-01")  # a Monday; date_trunc('week') grid
-
 
 def _raw_vals(oid: int, step: int) -> tuple[float, float]:
     """Deterministic (price, amount) of an event — the same integer-cent

@@ -31,11 +31,8 @@ total cores on local mode and the cluster's default parallelism on a
 real deployment — a Python stateful stage cannot use more concurrency
 than that, and every extra partition is pure per-trigger fixed cost.
 
-Production knobs: ``OBADIAH_STREAM_SHUFFLE_PARTITIONS`` pins an explicit
-count (a deployment sizing for peak traffic sets this once per stream);
-``OBADIAH_STREAM_ROWS_PER_PARTITION`` / ``OBADIAH_STREAM_GROUPS_PER_PARTITION``
-re-tune the densities.  Defaults: 50 000 rows/partition (µs-class per-row
-work ⇒ ~0.1-0.5 s per-partition compute, an order of magnitude above the
+Density defaults: 50 000 rows/partition (µs-class per-row work ⇒
+~0.1-0.5 s per-partition compute, an order of magnitude above the
 ~30 ms task + state-store fixed cost) and 1 000 groups/partition
 (~0.5-1 s of per-group overhead).  Operators whose per-row work is far
 heavier pass an explicit ``rows_per_partition`` (the embedding-rescoring
@@ -49,7 +46,6 @@ differentials and the driver oracle hashes are partition-count-invariant.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 #: default density: rows of stream volume per state partition
@@ -58,11 +54,11 @@ STREAM_ROWS_PER_PARTITION = 50_000
 STREAM_GROUPS_PER_PARTITION = 1_000
 
 
-def stream_shuffle_partitions(spark, n_rows: int,
-                              n_groups: int | None = None,
-                              rows_per_partition: int | None = None,
-                              groups_per_partition: int | None = None,
-                              n_triggers: int = 1) -> int:
+def stream_shuffle_partitions(
+        spark, n_rows: int, n_groups: int | None = None,
+        rows_per_partition: int = STREAM_ROWS_PER_PARTITION,
+        groups_per_partition: int = STREAM_GROUPS_PER_PARTITION,
+        n_triggers: int = 1) -> int:
     """Partition count for a stateful stream expected to carry ``n_rows``
     over ``n_groups`` state keys (total replay volume, or peak
     rows-per-trigger × a safety factor — either way the count scales
@@ -80,17 +76,6 @@ def stream_shuffle_partitions(spark, n_rows: int,
     and leaves the default 1).  Compute-heavy folds whose per-row work
     dwarfs the fixed cost (the embedding rescorer) should still size
     from total volume — parallelism is what bounds THEIR wall clock."""
-    env = os.environ.get("OBADIAH_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    if rows_per_partition is None:
-        rows_per_partition = int(os.environ.get(
-            "OBADIAH_STREAM_ROWS_PER_PARTITION",
-            str(STREAM_ROWS_PER_PARTITION)))
-    if groups_per_partition is None:
-        groups_per_partition = int(os.environ.get(
-            "OBADIAH_STREAM_GROUPS_PER_PARTITION",
-            str(STREAM_GROUPS_PER_PARTITION)))
     n_triggers = max(1, int(n_triggers))
     rows_per_trigger = -(-int(n_rows) // n_triggers)
     want = -(-rows_per_trigger // rows_per_partition)

@@ -1,6 +1,6 @@
-"""Gate-contract guard: every registered query must be oracle-backed (or
-carry a documented exemption), and the rotation must keep every entry
-driver-verified within two rounds (VERDICT r5 process note)."""
+"""Gate-contract guard: every gate pairs a callable runner with a DuckDB
+oracle, and the rotation must keep every entry driver-verified within two
+rounds (VERDICT r5 process note)."""
 
 from __future__ import annotations
 
@@ -11,52 +11,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 
-# Approximate-by-design operators whose output is intentionally not
-# SQL-reproducible; each MUST have a gate-checked companion metric bounding
-# it (listed as the value, which must itself be oracle-backed).
-# Empty since r9: ann_lsh_pairs (the last member) got a value-level oracle
-# by emitting its md5-seeded plane weights as a VALUES CTE.
-NO_ORACLE: dict[str, str] = {}
-
 
 def test_every_query_is_oracle_backed():
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    missing = [k for k in qs if k not in oracles and k not in NO_ORACLE]
-    assert not missing, f"queries without oracle or exemption: {missing}"
-
-
-def test_exemptions_have_gate_checked_bounds():
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    for k, bound in NO_ORACLE.items():
-        assert k in qs, f"exemption {k} is not even registered"
-        assert bound in qs and bound in oracles, (
-            f"{k} is exempt but its bounding metric {bound} is not "
-            f"oracle-backed")
+    """Each gate-table entry has a callable runner and a non-empty SQL
+    oracle, so queries() and oracle_sql() share one key set."""
+    gates = entry._gates()
+    assert gates, "gate table unexpectedly empty"
+    for k, (run, sql) in gates.items():
+        assert callable(run), f"{k} runner is not callable"
+        assert isinstance(sql, str) and sql.strip(), (
+            f"{k} oracle is not a SQL string")
+    assert list(entry.queries()) == list(gates)
+    assert list(entry.oracle_sql()) == list(gates)
 
 
 def test_no_orphan_oracles():
     qs = entry.queries()
     orphans = [k for k in entry.oracle_sql() if k not in qs]
     assert not orphans, f"oracles without a query: {orphans}"
-
-
-def test_pending_queue_is_oracle_backed_and_callable():
-    """The staged next-round registration queue (pending_queries) must
-    stay registration-ready: every staged key callable and oracle-backed
-    (value verification is `tools/verify_local.py <sf> --pending`)."""
-    pq = entry.pending_queries()
-    po = entry.pending_oracle_sql()
-    assert pq, "pending queue unexpectedly empty"
-    missing = [k for k in pq if k not in po]
-    assert not missing, f"pending keys without oracle: {missing}"
-    orphans = [k for k in po if k not in pq]
-    assert not orphans, f"pending oracles without a query: {orphans}"
-    for k, fn in pq.items():
-        assert callable(fn), f"pending {k} is not callable"
-        assert isinstance(po[k], str) and po[k].strip(), (
-            f"pending {k} oracle is not a SQL string")
 
 
 def _recent_correctness(n: int = 2) -> tuple[list[str], dict]:
@@ -100,53 +72,9 @@ def test_rotation_age_bound():
     for k in keys[50:]:
         row = union.get(k)
         green = bool(row) and row.get("rows_match") and not row.get("err")
-        if k in NO_ORACLE:
-            # by-design rows-only: the driver records err="no_oracle" with
-            # a bare spark row count; "ran and produced rows" is the
-            # strongest row such a key can have (its correctness bound is
-            # the oracle-backed companion metric)
-            green = bool(row) and row.get("spark_rows") is not None
         if not green:
             stale.append(k)
     assert not stale, (
         f"entries past the driver's 50-slot cap without a green row in "
         f"{[os.path.basename(p) for p in paths]} (their driver "
         f"verification would age past two rounds): {stale}")
-
-
-def test_staged_registration_plan_fits_the_window():
-    """Structural invariants of the staged registration plan (VERDICT
-    r14 #1 was a hand-arithmetic slip here).  The plan was sized to fit
-    r16's 50-slot window exactly; r16 ran as the final OPTIMIZATION
-    round (registration is feature work, out of scope), so after the
-    r16 rotation the expiring set no longer contains the union-retired
-    members and the exact-50 fit is no longer assertable — a future
-    build round would stage part of the plan.  What must stay true for
-    the queue to remain registration-ready: every key resolves to a
-    registered or staged runner, no planned key duplicates, every
-    CURRENT tail key (expiring into the next round) is either in the
-    plan or retired by a staged union, and the retired members are real
-    registered keys."""
-    plan = entry.staged_registration_plan()
-    assert len(plan) >= 50, f"planned window is {len(plan)}: the tail no longer fills a 50-slot window"
-    assert len(set(plan)) == len(plan), "duplicate keys in the plan"
-    known = set(entry.queries()) | set(entry.pending_queries())
-    missing = [k for k in plan if k not in known]
-    assert not missing, f"planned keys with no runner: {missing}"
-    # staged union/standalone keys must be in the pending queue with
-    # oracles (the pending contract test covers callability)
-    pend = set(entry.pending_queries())
-    staged = [k for k in plan if k in pend]
-    assert set(staged) == pend, (
-        "every pending key must appear in the plan (else it never "
-        "gets a driver row)")
-    # age bound: every current tail key is accounted for
-    tail = list(entry.queries())[50:]
-    retired = {m for ms in entry._R16_UNION_RETIRES.values() for m in ms}
-    unaccounted = [k for k in tail if k not in plan and k not in retired]
-    assert not unaccounted, (
-        f"tail keys neither planned nor retired: {unaccounted}")
-    # retired members must really be current keys (a typo here would
-    # silently shrink the window)
-    ghost = [m for m in retired if m not in set(entry.queries())]
-    assert not ghost, f"retired members not in queries(): {ghost}"

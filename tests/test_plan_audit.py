@@ -43,9 +43,7 @@ def test_no_unexplained_cross_products():
 
 
 def test_allowed_lists_only_name_registered_queries():
-    # staged pending gates count: plan_audit --pending audits them under
-    # the same allow-lists before they ever reach the driver window
-    qs = set(entry.queries()) | set(entry.pending_queries())
+    qs = set(entry.queries())
     stale = [k for k in (set(ALLOWED_CROSS) | set(ALLOWED_BNLJ))
              if k not in qs]
     assert not stale, f"allow-list names unknown queries: {stale}"

@@ -21,16 +21,6 @@ def spark():
     return get_spark("test_stream_scale")
 
 
-@pytest.fixture(autouse=True)
-def _clean_densities(monkeypatch):
-    # a developer's pinned density env vars must not skew the derivation
-    # expectations (ADVICE r15)
-    for var in ("OBADIAH_STREAM_SHUFFLE_PARTITIONS",
-                "OBADIAH_STREAM_ROWS_PER_PARTITION",
-                "OBADIAH_STREAM_GROUPS_PER_PARTITION"):
-        monkeypatch.delenv(var, raising=False)
-
-
 def test_row_bound_sizing(spark):
     par = spark.sparkContext.defaultParallelism
     assert stream_shuffle_partitions(spark, 100) == 1
@@ -64,11 +54,6 @@ def test_per_trigger_sizing(spark):
     # default n_triggers=1 is the old behavior
     assert stream_shuffle_partitions(
         spark, 100_000, rows_per_partition=4200) == min(par, 24)
-
-
-def test_env_pin_wins(spark, monkeypatch):
-    monkeypatch.setenv("OBADIAH_STREAM_SHUFFLE_PARTITIONS", "7")
-    assert stream_shuffle_partitions(spark, 10**9, n_groups=10**9) == 7
 
 
 def test_scoped_conf_restores(spark):

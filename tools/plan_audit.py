@@ -45,13 +45,10 @@ ALLOWED_CROSS = {"ann_bruteforce", "ngram_jaccard",
                  # per-subspace encode, and the 16-row coarse codebook as
                  # in ann_ivf; the candidate/ADC joins are equi-joins
                  "ann_ivfpq",
-                 # staged pending gates with the identical bounded IVF
-                 # patterns: coarse/sub-codebook broadcasts only; the
-                 # pair/candidate joins are (cell, bucket) equi-joins;
-                 # ann_ivfpq is the base+Lloyd-trained union since r15;
-                 # ann_ingest_stream queries the streamed index through
-                 # the same ann_ivfpq_query plan
-                 "semdedup", "ann_ivfpq_query", "ann_ingest_stream",
+                 # the identical bounded IVF patterns: coarse/sub-codebook
+                 # broadcasts only; the pair/candidate joins are
+                 # (cell, bucket) equi-joins
+                 "semdedup", "ann_ivfpq_query",
                  # the union of the two recall bounds (ann_lsh_recall +
                  # embedding_dedup_lsh_recall, retired r15) inherits both
                  # members' documented bounded exact sides
@@ -68,11 +65,6 @@ ALLOWED_BNLJ = {
     "bigram_rarity":
         "the corpus bigram total is a ONE-ROW broadcast crossJoin "
         "(surprisal denominator) — bounded by construction",
-    "ppl_buckets":
-        "the bigram_rarity ONE-ROW total crossJoin, appearing twice "
-        "because the scored frame feeds both the census and the "
-        "join-back — bounded by construction; the census join-back "
-        "itself is an equi-key BroadcastHashJoin",
     "quality_classifier":
         "two ONE-ROW broadcast crossJoins: the class token totals and "
         "the class prior — bounded by construction",
@@ -86,11 +78,6 @@ ALLOWED_BNLJ = {
         "corpus max-weight shift the accept race normalizes against — "
         "all bounded by construction; the bucket-weight join itself is "
         "an equi-join on bkt",
-    "cluster_sample":
-        "the IVF coarse-quantization crossJoin against the broadcast "
-        "n_cells-row codebook (_rank_cells — the same O(n x n_cells) "
-        "scoring pass the allowed ANN gates run), bounded by the "
-        "codebook size",
 }
 
 
@@ -139,8 +126,7 @@ def main() -> int:
     # foot-gun guard: `plan_audit.py some_key` (sf_dir omitted) must not
     # audit every query against a data dir named "some_key" and overwrite
     # PLANS.json with 79 error stubs
-    args = [a for a in sys.argv[1:] if a != "--pending"]
-    pending = "--pending" in sys.argv[1:]
+    args = sys.argv[1:]
     if args and not os.path.isdir(args[0]):
         sf_dir, keys = "/root/testdata/sf0.001", args
     else:
@@ -150,11 +136,9 @@ def main() -> int:
     import __spark_entry__ as em
     from obadiah_spark.session import get_spark
 
-    # --pending audits the staged next-round queue into a separate
-    # PENDING_PLANS.json (the pytest guard covers PLANS.json only).
     # Streaming-replay runners (pack_stream) EXECUTE in the runner and
     # return a memory-sink scan — their audit records that trivially.
-    qs = em.pending_queries() if pending else em.queries()
+    qs = em.queries()
     unknown = [k for k in keys if k not in qs]
     if unknown:
         print(f"unknown query key(s) {unknown} — a mistyped sf_dir lands "
@@ -185,8 +169,7 @@ def main() -> int:
         print(f"{name}: exchanges={res['exchanges']} windows={res['windows']}"
               f" scans={res['scans']} cross={cross}{flag}")
 
-    plans_path = os.path.join(
-        REPO, "PENDING_PLANS.json" if pending else "PLANS.json")
+    plans_path = os.path.join(REPO, "PLANS.json")
     if keys:
         # subset run: MERGE into the existing file — a partial audit must
         # never shrink coverage (the pytest guard checks every query has
@@ -199,7 +182,7 @@ def main() -> int:
         except (OSError, ValueError):
             merged = {}
         merged.update(out)
-        live = set(em.pending_queries() if pending else em.queries())
+        live = set(em.queries())
         out = {k: v for k, v in merged.items() if k in live}
     with open(plans_path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)

@@ -106,7 +106,6 @@ def main() -> None:
     for gate in GATES:
         for cpus in ("32", "8"):
             env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
-            env.pop("OBADIAH_STREAM_SHUFFLE_PARTITIONS", None)
             r = subprocess.run([sys.executable, arm_file, gate],
                                env=env, capture_output=True, text=True)
             line = [ln for ln in r.stdout.splitlines()

@@ -113,8 +113,7 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
 
 
 def main():
-    args = [a for a in sys.argv[1:] if a != "--pending"]
-    pending = "--pending" in sys.argv[1:]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
@@ -128,15 +127,9 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    if pending:
-        # the staged next-round registration queue (not visible to the
-        # driver): pre-verify before moving keys into queries()
-        qs = entrymod.pending_queries()
-        oracles = entrymod.pending_oracle_sql()
-    else:
-        qs = entrymod.queries()
-        oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_weak = 0
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    n_pass = n_fail = 0
     for key, fn in qs.items():
         if only and key not in only:
             continue
@@ -146,10 +139,6 @@ def main():
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {key}: spark raised {type(e).__name__}: {e}")
             n_fail += 1
-            continue
-        if key not in oracles:
-            print(f"weak  {key}: rows={len(spark_pdf)} (no oracle, rows-only check)")
-            n_weak += 1
             continue
         try:
             duck_pdf = con.sql(oracles[key]).df()
@@ -166,8 +155,8 @@ def main():
         else:
             print(f"pass  {key}: rows={len(spark_pdf)}")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_weak} weak (rows-only), {n_fail} fail")
-    if n_pass + n_weak + n_fail == 0:
+    print(f"\n{n_pass} pass, {n_fail} fail")
+    if n_pass + n_fail == 0:
         print("ERROR: zero queries verified — queries() empty or all keys filtered out")
         sys.exit(2)
     sys.exit(1 if n_fail else 0)
