@@ -395,6 +395,84 @@ class _DepthFolder(EpisodeFolder):
             o["volume_change"].append(vol - prev)
 
 
+class BucketFolder(EpisodeFolder):
+    """Bucketed depth snapshot per level-changing episode, with the bucket
+    sums carried across episodes instead of rescanning every level (the
+    queues and depth_summary folds).
+
+    A subclass supplies :meth:`key` — the bucket of one level, a tuple
+    whose first element is the side, or ``None`` outside the range — and
+    :meth:`emit`, called once per emitting episode with the sorted
+    ``(key, volume)`` snapshot. ``OWN_BEST_ANCHORS`` says which best a
+    side's keys depend on: its own (depth_summary's bps distance) or the
+    opposite side's (queues' tick distance).
+
+    While a side's anchor best is unchanged, only the episode's changed
+    levels adjust their buckets (O(changed)); an anchor move rebuilds that
+    side from the book (best moves are themselves level changes, so the
+    rebuild is the rare path). Bit-identical to a fresh per-episode rescan
+    by exactness, not luck: level volumes are sums of the fabric's
+    exact-quarter amounts (dyadic rationals far below 2^52), so float
+    add/sub never rounds and incremental totals equal fresh sums in any
+    order; a bucket reaching exactly 0.0 is dropped, matching a fresh
+    scan's absence. The seed episode of a period fold is absorbed into the
+    bucket state without emitting."""
+
+    OWN_BEST_ANCHORS: bool
+
+    def __init__(self, meta: pd.Series) -> None:
+        super().__init__(meta)
+        self._anchors: dict[str, float | None] = {"b": None, "s": None}
+        self._buckets: dict[tuple, float] = {}
+
+    def key(self, side: str, price: float, bb: float | None,
+            ba: float | None) -> tuple | None:
+        raise NotImplementedError
+
+    def emit(self, ts, buckets: list[tuple[tuple, float]]) -> None:
+        raise NotImplementedError
+
+    def _apply(self, changed) -> None:
+        bb = self.book.best("b")[0]
+        ba = self.book.best("s")[0]
+        b = self._buckets
+        key_ = self.key
+        own = self.OWN_BEST_ANCHORS
+        for side, anchor in (("b", bb if own else ba), ("s", ba if own else bb)):
+            if anchor != self._anchors[side]:
+                # the anchor moved: rebuild this side from the book
+                self._anchors[side] = anchor
+                for k in [k for k in b if k[0] == side]:
+                    del b[k]
+                for (s, price), q in self.book.levels.items():
+                    if s != side:
+                        continue
+                    k = key_(s, price, bb, ba)
+                    if k is not None:
+                        b[k] = b.get(k, 0.0) + q
+                continue
+            for (s, price), vol, prev in changed:
+                if s != side:
+                    continue
+                k = key_(s, price, bb, ba)
+                if k is None:
+                    continue
+                q = b.get(k, 0.0) + (vol - prev)
+                if q == 0.0:
+                    b.pop(k, None)
+                else:
+                    b[k] = q
+
+    def on_seed(self) -> None:
+        self._apply(self.changed_levels())
+
+    def on_episode(self, ts) -> None:
+        changed = self.changed_levels()
+        if changed:
+            self._apply(changed)
+            self.emit(ts, sorted(self._buckets.items()))
+
+
 _EVENT_COLS = [
     "pair_id", "exchange_id", "era",
     "microtimestamp", "order_id", "event_no", "side", "price", "amount", "chain_state",
@@ -570,7 +648,7 @@ def book_checkpoints(l3: DataFrame, frequency_s: int = 86400,
 
 
 def period_fold(l3: DataFrame, folder: type[EpisodeFolder], schema: str,
-                frequency_s: int = 86400, start: str | None = None,
+                frequency_s: int | None = 86400, start: str | None = None,
                 end: str | None = None) -> DataFrame:
     """The reference's answer to "one giant era serializes the fold"
     (``_periods_within_eras`` + seeded restart, db/obanalytics_schema.sql:
@@ -597,9 +675,19 @@ def period_fold(l3: DataFrame, folder: type[EpisodeFolder], schema: str,
     can emit in-range instants are folded (events outside them never
     shuffle), and the output equals the unrestricted fold filtered to the
     range — cost O(range + one period tail), not O(history). The schema's
-    ``microtimestamp`` column is the filter axis."""
+    ``microtimestamp`` column is the filter axis; ``start`` and ``end`` come
+    together.
+
+    ``frequency_s=None`` is the unsplit per-era fold (no seeds, no range)."""
     from pyspark.sql import functions as F
 
+    if (start is None) != (end is None):
+        raise ValueError("start and end come together")
+    if frequency_s is None:
+        if start is not None:
+            raise ValueError("the range overload requires period_s (the "
+                             "pruning axis)")
+        return stream_fold(l3.select(*_EVENT_COLS), folder, schema)
     freq_us = frequency_s * 1_000_000
     ev = l3.select(*_EVENT_COLS).withColumn(
         "period_start", _period_start(F.col("microtimestamp"), freq_us))

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from obadiah_spark.fold import EpisodeFolder, stream_fold
+from obadiah_spark.fold import EpisodeFolder, period_fold
 
 _BOOK_COLS = ["pair_id", "order_id", "side", "price", "amount"]
 
@@ -95,9 +95,7 @@ class _BookEpisodeFolder(EpisodeFolder):
 
 def book_by_episode(l3: DataFrame) -> DataFrame:
     """B2 surface: per change-episode per-side book summary from the fold."""
-    cols = ["pair_id", "exchange_id", "era", "microtimestamp", "order_id",
-            "event_no", "side", "price", "amount", "chain_state"]
-    return stream_fold(l3.select(*cols), _BookEpisodeFolder, BOOK_EPISODE_SCHEMA)
+    return period_fold(l3, _BookEpisodeFolder, BOOK_EPISODE_SCHEMA, None)
 
 
 def book_by_episode_oracle_sql() -> str:

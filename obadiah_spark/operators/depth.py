@@ -759,43 +759,20 @@ def depth_summary_fold(l3, bps_step: int = 25, max_bps_level: int = 500, r0: int
     is grid-sampled first, then the range applies to the sampled log."""
     import math
 
-    from obadiah_spark.fold import EpisodeFolder, period_fold, stream_fold
+    from obadiah_spark.fold import BucketFolder, period_fold
 
-    if (start is None) != (end is None):
-        raise ValueError("start and end come together")
-    if start is not None and period_s is None:
-        raise ValueError("the range overload requires period_s (the "
-                         "pruning axis)")
     if frequency_s is not None:
         l3 = grid_sample_l3(l3, frequency_s)
 
     scale = 10 ** r0
 
-    class _DepthSummaryFolder(EpisodeFolder):
-        """Incremental bucket state (r16, the queues-fold pattern): the
-        bps buckets are carried across episodes — a side whose own best
-        is unchanged delta-updates only that episode's changed levels;
-        a best move rebuilds just that side (the move is itself a level
-        change, so rebuilds ride the rare path).  Bit-identical: level
-        volumes are sums of the fabric's exact-quarter amounts (dyadic
-        floats — add/sub never rounds in any order), the bucket key
-        (adj, lvl) is a pure function of (side, price, best) recomputed
-        with the identical op sequence, and a bucket reaching exactly
-        0.0 drops out like a fresh scan's absence.  Emission contract
-        unchanged: every level-changing episode emits the full sorted
-        snapshot."""
-
+    class _DepthSummaryFolder(BucketFolder):
         OUT_COLS = ("pair_id", "microtimestamp", "side", "price",
                     "volume", "bps_level")
-
-        def __init__(self, meta) -> None:
-            super().__init__(meta)
-            self._bb = None   # best bid the bid buckets were built against
-            self._ba = None   # best ask the ask buckets were built against
-            self._buckets: dict = {}
+        OWN_BEST_ANCHORS = True
 
         @staticmethod
-        def _key(side: str, price: float, best_bid, best_ask):
+        def key(side: str, price: float, best_bid, best_ask):
             if side == "s":
                 if best_ask is None:
                     return None
@@ -814,53 +791,9 @@ def depth_summary_fold(l3, bps_step: int = 25, max_bps_level: int = 500, r0: int
                 return None
             return (side, adj, lvl)
 
-        def _rebuild_side(self, side: str, bb, ba) -> None:
-            b = self._buckets
-            for k in [k for k in b if k[0] == side]:
-                del b[k]
-            key_ = self._key
-            for (s, price), q in self.book.levels.items():
-                if s != side:
-                    continue
-                k = key_(s, price, bb, ba)
-                if k is not None:
-                    b[k] = b.get(k, 0.0) + q
-
-        def _apply(self, changed) -> None:
-            bb = self.book.best("b")[0]
-            ba = self.book.best("s")[0]
-            b = self._buckets
-            key_ = self._key
-            for side in ("b", "s"):
-                best_now = bb if side == "b" else ba
-                best_was = self._bb if side == "b" else self._ba
-                if best_now != best_was:
-                    self._rebuild_side(side, bb, ba)
-                    continue
-                for (s, price), vol, prev in changed:
-                    if s != side:
-                        continue
-                    k = key_(s, price, bb, ba)
-                    if k is None:
-                        continue
-                    q = b.get(k, 0.0) + (vol - prev)
-                    if q == 0.0:
-                        b.pop(k, None)
-                    else:
-                        b[k] = q
-            self._bb, self._ba = bb, ba
-
-        def on_seed(self) -> None:
-            # absorb the seeded book into the bucket state, no emission
-            self._apply(self.changed_levels())
-
-        def on_episode(self, ts) -> None:
-            changed = self.changed_levels()
-            if not changed:
-                return
-            self._apply(changed)
+        def emit(self, ts, buckets) -> None:
             out = self.out
-            for (side, adj, lvl), vol in sorted(self._buckets.items()):
+            for (side, adj, lvl), vol in buckets:
                 out["pair_id"].append(self.pair_id)
                 out["microtimestamp"].append(ts)
                 out["side"].append("ask" if side == "s" else "bid")
@@ -868,18 +801,13 @@ def depth_summary_fold(l3, bps_step: int = 25, max_bps_level: int = 500, r0: int
                 out["volume"].append(vol)
                 out["bps_level"].append(lvl)
 
-    cols = ["pair_id", "exchange_id", "era", "microtimestamp", "order_id",
-            "event_no", "side", "price", "amount", "chain_state"]
     schema = ("pair_id int, microtimestamp timestamp, side string, "
               "price double, volume double, bps_level bigint")
-    if start is not None:
-        folded = period_fold(l3, _DepthSummaryFolder, schema,
-                             frequency_s=period_s, start=start, end=end)
-        starting = depth_summary_at(l3, start, bps_step, max_bps_level, r0)
-        return starting.unionByName(folded)
-    if period_s is not None:
-        return period_fold(l3, _DepthSummaryFolder, schema, frequency_s=period_s)
-    return stream_fold(l3.select(*cols), _DepthSummaryFolder, schema)
+    folded = period_fold(l3, _DepthSummaryFolder, schema, period_s, start, end)
+    if start is None:
+        return folded
+    starting = depth_summary_at(l3, start, bps_step, max_bps_level, r0)
+    return starting.unionByName(folded)
 
 
 def depth_summary_oracle_sql(bps_step: int = 25, max_bps_level: int = 500,

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from obadiah_spark.fold import EpisodeFolder, period_fold, stream_fold
+from obadiah_spark.fold import EpisodeFolder, period_fold
 
 DEPTH_CHAINS_FOLD_SCHEMA = (
     "pair_id int, exchange_id int, era timestamp, microtimestamp timestamp, "
@@ -83,14 +83,8 @@ class _DepthChangesPreSpreadFolder(EpisodeFolder):
 
 def depth_changes_with_chains(l3: DataFrame,
                               period_s: int | None = 86400) -> DataFrame:
-    cols = ["pair_id", "exchange_id", "era", "microtimestamp", "order_id",
-            "event_no", "side", "price", "amount", "chain_state"]
-    if period_s is not None:
-        folded = period_fold(l3, _DepthChangesPreSpreadFolder,
-                             DEPTH_CHAINS_FOLD_SCHEMA, frequency_s=period_s)
-    else:
-        folded = stream_fold(l3.select(*cols), _DepthChangesPreSpreadFolder,
-                             DEPTH_CHAINS_FOLD_SCHEMA)
+    folded = period_fold(l3, _DepthChangesPreSpreadFolder,
+                         DEPTH_CHAINS_FOLD_SCHEMA, period_s)
     # the fold output feeds BOTH the key-ranking aggregate and the join
     # back — materialize it once so the expensive period-parallel fold
     # doesn't run twice, and so the join sides have runtime stats (AQE

@@ -53,7 +53,7 @@ def depth_resample(l3: DataFrame, frequency_s: int = 3600, tick: float = 0.05,
 
     import numpy as np
 
-    from obadiah_spark.fold import EpisodeFolder, period_fold, stream_fold
+    from obadiah_spark.fold import EpisodeFolder, period_fold
 
     if period_s is not None and period_s % frequency_s != 0:
         raise ValueError("period_s must be a multiple of frequency_s")
@@ -108,14 +108,9 @@ def depth_resample(l3: DataFrame, frequency_s: int = 3600, tick: float = 0.05,
             if self._cur_g is not None:
                 self._emit_bucket(self._cur_g)
 
-    cols = ["pair_id", "exchange_id", "era", "microtimestamp", "order_id",
-            "event_no", "side", "price", "amount", "chain_state"]
     schema = ("pair_id int, microtimestamp timestamp, side string, "
               "tick_price double, volume double")
-    if period_s is not None:
-        folded = period_fold(l3, _ResampleFolder, schema, frequency_s=period_s)
-    else:
-        folded = stream_fold(l3.select(*cols), _ResampleFolder, schema)
+    folded = period_fold(l3, _ResampleFolder, schema, period_s)
     # a grid instant at an era boundary can close buckets of BOTH eras —
     # merge them (the reference grid form aggregates across eras too); tiny
     # output, map-side combinable
@@ -237,120 +232,44 @@ def queues(l3: DataFrame, tick: float = 0.05, max_ticks: int = 10,
     not O(history); same boundary convention as depth_summary_fold."""
     import math
 
-    from obadiah_spark.fold import EpisodeFolder, period_fold, stream_fold
+    from obadiah_spark.fold import BucketFolder, period_fold
 
-    if (start is None) != (end is None):
-        raise ValueError("start and end come together")
-    if start is not None and period_s is None:
-        raise ValueError("the range overload requires period_s")
     if frequency_s is not None:
         from obadiah_spark.operators.depth import grid_sample_l3
 
         l3 = grid_sample_l3(l3, frequency_s)
 
-    class _QueuesFolder(EpisodeFolder):
-        """Incremental bucket state (r16): the fold used to re-scan EVERY
-        book level on EVERY emitting episode to rebuild the tick-bucket
-        sums — O(episodes x levels), ~3.2M bucketing steps at sf0.1 (the
-        profiled hot loop: 67.9k episodes x ~47 levels, ~74% of the
-        fold's CPU).  The bucket sums are now carried across episodes:
-        when a side's OPPOSITE best is unchanged, only that episode's
-        changed levels adjust their buckets (O(changed)); a best move
-        rebuilds just the affected side (best moves are themselves level
-        changes, so the rebuild is the rare path).  Bit-identical by
-        exactness, not luck: level volumes are sums of the fabric's
-        exact-quarter amounts (dyadic rationals far below 2^52), so
-        float add/sub never rounds and incremental totals equal fresh
-        per-episode sums in any order; a bucket reaching exactly 0.0
-        is removed, matching a fresh scan's absence.  The emission
-        contract is unchanged — every level-changing episode emits the
-        FULL non-empty bucket snapshot, sorted."""
-
+    class _QueuesFolder(BucketFolder):
         OUT_COLS = ("pair_id", "microtimestamp", "side", "tick_idx", "volume")
-
-        def __init__(self, meta) -> None:
-            super().__init__(meta)
-            self._bb = None   # best bid the ask buckets were built against
-            self._ba = None   # best ask the bid buckets were built against
-            self._buckets: dict = {}
+        OWN_BEST_ANCHORS = False
 
         @staticmethod
-        def _idx(side: str, price: float, bb, ba):
+        def key(side: str, price: float, bb, ba):
             if side == "b":
                 if ba is None:
                     return None
-                return math.ceil((ba - price) / tick - _EPS)
-            if bb is None:
-                return None
-            return math.ceil((price - bb) / tick - _EPS)
+                idx = math.ceil((ba - price) / tick - _EPS)
+            else:
+                if bb is None:
+                    return None
+                idx = math.ceil((price - bb) / tick - _EPS)
+            return (side, idx) if 1 <= idx <= max_ticks else None
 
-        def _rebuild_side(self, side: str, bb, ba) -> None:
-            b = self._buckets
-            for k in [k for k in b if k[0] == side]:
-                del b[k]
-            idx_ = self._idx
-            for (s, price), q in self.book.levels.items():
-                if s != side:
-                    continue
-                idx = idx_(s, price, bb, ba)
-                if idx is not None and 1 <= idx <= max_ticks:
-                    k = (s, idx)
-                    b[k] = b.get(k, 0.0) + q
-
-        def _apply(self, changed) -> None:
-            bb = self.book.best("b")[0]
-            ba = self.book.best("s")[0]
-            b = self._buckets
-            idx_ = self._idx
-            for side in ("b", "s"):
-                best_now = ba if side == "b" else bb
-                best_was = self._ba if side == "b" else self._bb
-                if best_now != best_was:
-                    self._rebuild_side(side, bb, ba)
-                    continue
-                for (s, price), vol, prev in changed:
-                    if s != side:
-                        continue
-                    idx = idx_(s, price, bb, ba)
-                    if idx is None or not (1 <= idx <= max_ticks):
-                        continue
-                    k = (s, idx)
-                    q = b.get(k, 0.0) + (vol - prev)
-                    if q == 0.0:
-                        b.pop(k, None)
-                    else:
-                        b[k] = q
-            self._bb, self._ba = bb, ba
-
-        def on_seed(self) -> None:
-            # absorb the seeded book into the bucket state without
-            # emitting (the period decomposition's seed episode)
-            self._apply(self.changed_levels())
-
-        def on_episode(self, ts) -> None:
-            changed = self.changed_levels()
-            if not changed:
-                return
-            self._apply(changed)
+        def emit(self, ts, buckets) -> None:
             out = self.out
-            for (side, idx), vol in sorted(self._buckets.items()):
+            for (side, idx), vol in buckets:
                 out["pair_id"].append(self.pair_id)
                 out["microtimestamp"].append(ts)
                 out["side"].append(side)
                 out["tick_idx"].append(idx)
                 out["volume"].append(vol)
 
-    cols = ["pair_id", "exchange_id", "era", "microtimestamp", "order_id",
-            "event_no", "side", "price", "amount", "chain_state"]
     schema = ("pair_id int, microtimestamp timestamp, side string, "
               "tick_idx bigint, volume double")
-    if start is not None:
-        folded = period_fold(l3, _QueuesFolder, schema,
-                             frequency_s=period_s, start=start, end=end)
-        return queues_at(l3, start, tick, max_ticks).unionByName(folded)
-    if period_s is not None:
-        return period_fold(l3, _QueuesFolder, schema, frequency_s=period_s)
-    return stream_fold(l3.select(*cols), _QueuesFolder, schema)
+    folded = period_fold(l3, _QueuesFolder, schema, period_s, start, end)
+    if start is None:
+        return folded
+    return queues_at(l3, start, tick, max_ticks).unionByName(folded)
 
 
 def queues_oracle_sql(tick: float = 0.05, max_ticks: int = 10,

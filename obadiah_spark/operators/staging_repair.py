@@ -43,12 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-_L3_COLS = [
-    "microtimestamp", "order_id", "event_no", "side", "price", "amount",
-    "fill", "next_microtimestamp", "next_event_no", "pair_id", "exchange_id",
-    "local_timestamp", "price_microtimestamp", "price_event_no",
-    "chain_state", "era", "life_no",
-]
+from obadiah_spark.operators.repair import _L3_COLS
 
 
 def find_and_repair_missing_fill(l3: DataFrame, trade_links: DataFrame) -> DataFrame:
@@ -192,18 +187,11 @@ def corrupt_fills(l3: DataFrame, matches: DataFrame) -> tuple[DataFrame, DataFra
 
 # ------------------------------------------------------- reveal_episodes ----
 
-def reveal_episodes(l3: DataFrame, trades: DataFrame) -> DataFrame:
-    """Q5 ``bitstamp.reveal_episodes``: move both events of each matched
-    trade to the trade's episode instant — the aggressor event's
-    price-chain start. Returns the full rewritten level3 frame.
-
-    ``trades`` needs (pair_id, side, buy_microtimestamp, buy_order_id,
-    buy_event_no, sell_microtimestamp, sell_order_id, sell_event_no) with
-    ``side`` = the taker direction ('b' = buyer is the aggressor) — the
-    inferred_trades output shape.
-    """
+def _aggressor_resting(trades: DataFrame) -> DataFrame:
+    """Each trade's aggressor (a_*) and resting (r_*) event keys; ``side``
+    is the taker direction ('b' = the buyer is the aggressor)."""
     is_buy = F.col("side") == "b"
-    t = trades.select(
+    return trades.select(
         "pair_id",
         F.when(is_buy, F.col("buy_microtimestamp"))
         .otherwise(F.col("sell_microtimestamp")).alias("a_ts"),
@@ -218,6 +206,62 @@ def reveal_episodes(l3: DataFrame, trades: DataFrame) -> DataFrame:
         F.when(is_buy, F.col("sell_event_no"))
         .otherwise(F.col("buy_event_no")).alias("r_eno"),
     )
+
+
+def _apply_moves(l3: DataFrame, moves: DataFrame) -> DataFrame:
+    """Rewrite level3 by ``moves`` (m_pair, m_old, m_oid, m_eno → m_new; unique
+    on the first four by its groupBy): each moved event takes its new
+    microtimestamp, and forward and price-chain pointers onto a moved event
+    follow it (a moved event may be a price-chain start — later members and
+    the start's own self-pointer must track it)."""
+    # two consumers (event rewrite + pointer follow): materialize once
+    # (lazy: the eager flip — the winnow_pairs race fix — A/B'd equal to
+    # marginally slower at both repairs, r16)
+    moves = moves.localCheckpoint(eager=False)
+    out = l3.join(
+        moves,
+        (F.col("pair_id") == F.col("m_pair"))
+        & (F.col("microtimestamp") == F.col("m_old"))
+        & (F.col("order_id") == F.col("m_oid"))
+        & (F.col("event_no") == F.col("m_eno")),
+        "left",
+    )
+    for p, ts_col, eno_col in (("p", "next_microtimestamp", "next_event_no"),
+                               ("q", "price_microtimestamp", "price_event_no")):
+        ptr = moves.select(
+            F.col("m_pair").alias(f"{p}_pair"), F.col("m_oid").alias(f"{p}_oid"),
+            F.col("m_old").alias(f"{p}_old"), F.col("m_eno").alias(f"{p}_eno"),
+            F.col("m_new").alias(f"{p}_new"),
+        )
+        out = out.join(
+            ptr,
+            (F.col("pair_id") == F.col(f"{p}_pair"))
+            & (F.col("order_id") == F.col(f"{p}_oid"))
+            & (F.col(ts_col) == F.col(f"{p}_old"))
+            & (F.col(eno_col) == F.col(f"{p}_eno")),
+            "left",
+        )
+    return out.select(
+        F.coalesce(F.col("m_new"), F.col("microtimestamp")).alias("microtimestamp"),
+        "order_id", "event_no", "side", "price", "amount", "fill",
+        F.coalesce(F.col("p_new"), F.col("next_microtimestamp")).alias("next_microtimestamp"),
+        "next_event_no", "pair_id", "exchange_id", "local_timestamp",
+        F.coalesce(F.col("q_new"), F.col("price_microtimestamp")).alias("price_microtimestamp"),
+        *_L3_COLS[13:],
+    )
+
+
+def reveal_episodes(l3: DataFrame, trades: DataFrame) -> DataFrame:
+    """Q5 ``bitstamp.reveal_episodes``: move both events of each matched
+    trade to the trade's episode instant — the aggressor event's
+    price-chain start. Returns the full rewritten level3 frame.
+
+    ``trades`` needs (pair_id, side, buy_microtimestamp, buy_order_id,
+    buy_event_no, sell_microtimestamp, sell_order_id, sell_event_no) with
+    ``side`` = the taker direction ('b' = buyer is the aggressor) — the
+    inferred_trades output shape.
+    """
+    t = _aggressor_resting(trades)
     # the aggressor event's price-chain start = the episode instant
     ag = t.join(
         l3.select(
@@ -239,55 +283,8 @@ def reveal_episodes(l3: DataFrame, trades: DataFrame) -> DataFrame:
         .groupBy(F.col("pair_id").alias("m_pair"), "m_old", "m_oid", "m_eno")
         .agg(F.min("episode_ts").alias("m_new"))
         .filter(F.col("m_new") != F.col("m_old"))
-        # two consumers (event rewrite + pointer follow): materialize once
-        # (lazy: the eager flip — the winnow_pairs race fix — A/B'd equal
-        # to marginally slower here, r16)
-        .localCheckpoint(eager=False)
     )
-    tagged = l3.join(
-        moves,
-        (F.col("pair_id") == F.col("m_pair"))
-        & (F.col("microtimestamp") == F.col("m_old"))
-        & (F.col("order_id") == F.col("m_oid"))
-        & (F.col("event_no") == F.col("m_eno")),
-        "left",
-    )
-    # forward AND price-chain pointers follow moved events (a moved trade
-    # event may be a price-chain start — later members must track it)
-    ptr = moves.select(
-        F.col("m_pair").alias("p_pair"), F.col("m_oid").alias("p_oid"),
-        F.col("m_old").alias("p_old"), F.col("m_eno").alias("p_eno"),
-        F.col("m_new").alias("p_new"),
-    )  # moves is unique on these keys by its groupBy — no distinct needed
-    out = tagged.join(
-        ptr,
-        (F.col("pair_id") == F.col("p_pair"))
-        & (F.col("order_id") == F.col("p_oid"))
-        & (F.col("next_microtimestamp") == F.col("p_old"))
-        & (F.col("next_event_no") == F.col("p_eno")),
-        "left",
-    )
-    pp = moves.select(
-        F.col("m_pair").alias("q_pair"), F.col("m_oid").alias("q_oid"),
-        F.col("m_old").alias("q_old"), F.col("m_eno").alias("q_eno"),
-        F.col("m_new").alias("q_new"),
-    )
-    out = out.join(
-        pp,
-        (F.col("pair_id") == F.col("q_pair"))
-        & (F.col("order_id") == F.col("q_oid"))
-        & (F.col("price_microtimestamp") == F.col("q_old"))
-        & (F.col("price_event_no") == F.col("q_eno")),
-        "left",
-    )
-    return out.select(
-        F.coalesce(F.col("m_new"), F.col("microtimestamp")).alias("microtimestamp"),
-        "order_id", "event_no", "side", "price", "amount", "fill",
-        F.coalesce(F.col("p_new"), F.col("next_microtimestamp")).alias("next_microtimestamp"),
-        "next_event_no", "pair_id", "exchange_id", "local_timestamp",
-        F.coalesce(F.col("q_new"), F.col("price_microtimestamp")).alias("price_microtimestamp"),
-        *_L3_COLS[13:],
-    )
+    return _apply_moves(l3, moves)
 
 
 def normalize_event_order(l3: DataFrame) -> DataFrame:
@@ -514,22 +511,7 @@ def fix_aggressor_creation_order(l3: DataFrame, trades: DataFrame) -> DataFrame:
     forward pointers following moved events; conflicting targets merge to
     the earliest instant (min).
     """
-    is_buy = F.col("side") == "b"
-    t = trades.select(
-        "pair_id",
-        F.when(is_buy, F.col("buy_microtimestamp"))
-        .otherwise(F.col("sell_microtimestamp")).alias("a_ts"),
-        F.when(is_buy, F.col("buy_order_id"))
-        .otherwise(F.col("sell_order_id")).alias("a_oid"),
-        F.when(is_buy, F.col("buy_event_no"))
-        .otherwise(F.col("sell_event_no")).alias("a_eno"),
-        F.when(is_buy, F.col("sell_microtimestamp"))
-        .otherwise(F.col("buy_microtimestamp")).alias("r_ts"),
-        F.when(is_buy, F.col("sell_order_id"))
-        .otherwise(F.col("buy_order_id")).alias("r_oid"),
-        F.when(is_buy, F.col("sell_event_no"))
-        .otherwise(F.col("buy_event_no")).alias("r_eno"),
-    )
+    t = _aggressor_resting(trades)
     lsel = l3.select(
         F.col("pair_id").alias("l_pair"), F.col("microtimestamp").alias("l_ts"),
         F.col("order_id").alias("l_oid"), F.col("event_no").alias("l_eno"),
@@ -595,56 +577,8 @@ def fix_aggressor_creation_order(l3: DataFrame, trades: DataFrame) -> DataFrame:
         .groupBy(F.col("pair_id").alias("m_pair"), "m_old", "m_oid", "m_eno")
         .agg(F.min("m_new").alias("m_new"))
         .filter(F.col("m_new") != F.col("m_old"))
-        # two consumers (event rewrite + pointer follow): materialize once
-        # instead of re-deriving the whole trade-join subtree per branch
-        # (lazy: the eager flip A/B'd equal to marginally slower here, r16)
-        .localCheckpoint(eager=False)
     )
-    tagged = l3.join(
-        moves,
-        (F.col("pair_id") == F.col("m_pair"))
-        & (F.col("microtimestamp") == F.col("m_old"))
-        & (F.col("order_id") == F.col("m_oid"))
-        & (F.col("event_no") == F.col("m_eno")),
-        "left",
-    )
-    ptr = moves.select(
-        F.col("m_pair").alias("p_pair"), F.col("m_oid").alias("p_oid"),
-        F.col("m_old").alias("p_old"), F.col("m_eno").alias("p_eno"),
-        F.col("m_new").alias("p_new"),
-    )  # moves is unique on these keys by its groupBy — no distinct needed
-    out = tagged.join(
-        ptr,
-        (F.col("pair_id") == F.col("p_pair"))
-        & (F.col("order_id") == F.col("p_oid"))
-        & (F.col("next_microtimestamp") == F.col("p_old"))
-        & (F.col("next_event_no") == F.col("p_eno")),
-        "left",
-    )
-    # price-chain pointers follow moved events too: phase A/B move price-chain
-    # START events, so the start's own (price_microtimestamp, price_event_no)
-    # self-pointer and every later chain member's pointer must track m_new
-    pp = moves.select(
-        F.col("m_pair").alias("q_pair"), F.col("m_oid").alias("q_oid"),
-        F.col("m_old").alias("q_old"), F.col("m_eno").alias("q_eno"),
-        F.col("m_new").alias("q_new"),
-    )
-    out = out.join(
-        pp,
-        (F.col("pair_id") == F.col("q_pair"))
-        & (F.col("order_id") == F.col("q_oid"))
-        & (F.col("price_microtimestamp") == F.col("q_old"))
-        & (F.col("price_event_no") == F.col("q_eno")),
-        "left",
-    )
-    return out.select(
-        F.coalesce(F.col("m_new"), F.col("microtimestamp")).alias("microtimestamp"),
-        "order_id", "event_no", "side", "price", "amount", "fill",
-        F.coalesce(F.col("p_new"), F.col("next_microtimestamp")).alias("next_microtimestamp"),
-        "next_event_no", "pair_id", "exchange_id", "local_timestamp",
-        F.coalesce(F.col("q_new"), F.col("price_microtimestamp")).alias("price_microtimestamp"),
-        *_L3_COLS[13:],
-    )
+    return _apply_moves(l3, moves)
 
 
 def fix_aggressor_creation_order_oracle_sql(trades_cte: str) -> str:

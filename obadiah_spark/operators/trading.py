@@ -30,7 +30,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from obadiah_spark.fold import EpisodeFolder, ordered_fold, stream_fold
+from obadiah_spark.fold import EpisodeFolder, ordered_fold, period_fold
 
 _NAN = float("nan")
 
@@ -200,10 +200,6 @@ def trading_period_fold(l3: DataFrame, volume: float = 0.0,
     (:func:`effective_spread_at`) plus emit-on-change rows in
     ``(start, end]`` from PRUNED period folding — O(range), not
     O(history); same convention as depth_summary_fold."""
-    if (start is None) != (end is None):
-        raise ValueError("start and end come together")
-    if start is not None and period_s is None:
-        raise ValueError("the range overload requires period_s")
     if frequency_s is not None:
         from obadiah_spark.operators.depth import grid_sample_l3
 
@@ -247,20 +243,11 @@ def trading_period_fold(l3: DataFrame, volume: float = 0.0,
                 out["ask_price"].append(None if math.isnan(a) else a)
                 self._prev_b, self._prev_a = b, a
 
-    cols = ["pair_id", "exchange_id", "era", "microtimestamp", "order_id",
-            "event_no", "side", "price", "amount", "chain_state"]
-    if start is not None:
-        from obadiah_spark.fold import period_fold
-
-        folded = period_fold(l3, _TradingPeriodFolder, TRADING_PERIOD_SCHEMA,
-                             frequency_s=period_s, start=start, end=end)
-        return effective_spread_at(l3, start, volume).unionByName(folded)
-    if period_s is not None:
-        from obadiah_spark.fold import period_fold
-
-        return period_fold(l3, _TradingPeriodFolder, TRADING_PERIOD_SCHEMA,
-                           frequency_s=period_s)
-    return stream_fold(l3.select(*cols), _TradingPeriodFolder, TRADING_PERIOD_SCHEMA)
+    folded = period_fold(l3, _TradingPeriodFolder, TRADING_PERIOD_SCHEMA,
+                         period_s, start, end)
+    if start is None:
+        return folded
+    return effective_spread_at(l3, start, volume).unionByName(folded)
 
 
 # faithful port of src/position_discovery.cpp:28-241 (InstantPrice = (price,

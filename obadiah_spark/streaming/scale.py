@@ -46,6 +46,7 @@ differentials and the driver oracle hashes are partition-count-invariant.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 #: default density: rows of stream volume per state partition
@@ -89,8 +90,13 @@ def stream_shuffle_partitions(
 # sessions with an active scope (ADVICE r15: two overlapping scopes on
 # ONE session would interleave save/restore and could leave a tiny
 # partition count active session-wide for every later gate; concurrent
-# legs must isolate on spark.newSession() instead — _overlap_legs sites)
+# legs must isolate on spark.newSession() instead — _overlap_legs sites).
+# Keyed by id(): the scope holds its session alive, so no other object can
+# take that id while the entry exists. The check and the add happen under
+# one lock: _overlap_legs runs legs on threads, and two threads on one
+# session must not both pass between the check and the add.
 _ACTIVE_SCOPES: set[int] = set()
+_SCOPES_LOCK = threading.Lock()
 
 
 @contextmanager
@@ -100,20 +106,23 @@ def scoped_shuffle_partitions(spark, n_partitions: int):
     Must enclose BOTH ``start()`` and ``awaitTermination()`` — the conf
     is read at micro-batch planning time, and the state-store layout is
     frozen from it at the checkpoint's first batch.  At most one scope
-    may be active per session (asserted): a concurrent leg that needs
-    its own scope must run on ``spark.newSession()`` (isolated conf,
-    shared context)."""
+    may be active per session (raises otherwise, also across threads): a
+    concurrent leg that needs its own scope must run on
+    ``spark.newSession()`` (isolated conf, shared context)."""
     sid = id(spark)
-    if sid in _ACTIVE_SCOPES:
-        raise RuntimeError(
-            "scoped_shuffle_partitions: a scope is already active on this "
-            "session; run the concurrent leg on spark.newSession()")
+    with _SCOPES_LOCK:
+        if sid in _ACTIVE_SCOPES:
+            raise RuntimeError(
+                "scoped_shuffle_partitions: a scope is already active on "
+                "this session; run the concurrent leg on spark.newSession()")
+        _ACTIVE_SCOPES.add(sid)
     key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    _ACTIVE_SCOPES.add(sid)
-    spark.conf.set(key, str(int(n_partitions)))
     try:
-        yield
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(int(n_partitions)))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
     finally:
-        spark.conf.set(key, old)
         _ACTIVE_SCOPES.discard(sid)

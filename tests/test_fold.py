@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 from obadiah_spark.fold import depth_change_fold, spread_fold  # noqa: E402
@@ -311,6 +313,25 @@ def test_range_fold_edges(spark, level3):
                            F.max("microtimestamp")).first()
     assert str(got[0]) == mid and str(got[1]) == mid
     assert snap_only.count() > 0
+
+
+@pytest.mark.parametrize("fold", ["queues", "depth_summary", "trading_period"])
+@pytest.mark.parametrize("bad_range", [
+    {"start": "2019-01-02 00:00:00"},
+    {"start": "2019-01-02 00:00:00", "end": "2019-01-03 00:00:00",
+     "period_s": None},
+], ids=["start_without_end", "range_without_period"])
+def test_range_arguments_are_checked(level3, fold, bad_range):
+    """The range overload needs both ends and a period split (the pruning
+    axis); each derived fold rejects the rest before building a plan."""
+    from obadiah_spark.operators.depth import depth_summary_fold
+    from obadiah_spark.operators.resample import queues
+    from obadiah_spark.operators.trading import trading_period_fold
+
+    op = {"queues": queues, "depth_summary": depth_summary_fold,
+          "trading_period": trading_period_fold}[fold]
+    with pytest.raises(ValueError):
+        op(level3, **bad_range)
 
 
 def test_queues_incremental_buckets_equal_fresh_rescan(spark, level3):

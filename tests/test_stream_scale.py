@@ -67,3 +67,61 @@ def test_scoped_conf_restores(spark):
         with scoped_shuffle_partitions(spark, 5):
             raise RuntimeError("boom")
     assert spark.conf.get(key) == before
+
+
+def test_scope_guard_admits_one_thread_per_session():
+    """Two threads opening a scope on ONE session: exactly one enters, the
+    other is refused. The stub's ``conf.get`` waits until both threads
+    reach it, so a guard that checks and registers the session in two
+    separate steps (with the conf read between them) lets both in. No
+    Spark needed."""
+    import threading
+
+    class _Conf:
+        def __init__(self, readers: int) -> None:
+            self.all_read = threading.Barrier(readers, timeout=2)
+
+        def get(self, key):
+            try:
+                self.all_read.wait()
+            except threading.BrokenBarrierError:
+                pass  # the other thread never got this far
+            return "8"
+
+        def set(self, key, value) -> None:
+            pass
+
+    class _BrokenConf:
+        def get(self, key):
+            raise OSError("conf unavailable")
+
+    class _Session:
+        conf = _Conf(readers=2)
+
+    session = _Session()
+    entered, refused = [], []
+
+    def leg() -> None:
+        try:
+            with scoped_shuffle_partitions(session, 2):
+                entered.append(1)
+        except RuntimeError:
+            refused.append(1)
+
+    threads = [threading.Thread(target=leg) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=10)
+        assert not t.is_alive()
+    assert (len(entered), len(refused)) == (1, 1)
+
+    # a conf read that raises must not leave the session marked active
+    session.conf = _BrokenConf()
+    with pytest.raises(OSError):
+        with scoped_shuffle_partitions(session, 2):
+            pass
+    session.conf = _Conf(readers=1)
+    with scoped_shuffle_partitions(session, 2):
+        entered.append(1)
+    assert len(entered) == 2
