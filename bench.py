@@ -49,6 +49,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+# a variance probe whose spin exceeds this multiple of the run-start spin
+# ran in a degraded window; its record carries "valid": false
+SPIN_INVALID_RATIO = 1.5
+
+
 def _spin_probe(n: int = 15_000_000) -> float:
     """Single-core clock-health probe (VERDICT r11 #2): wall time of a
     fixed pure-Python spin loop, ~0.6 s on this machine when quiet. A
@@ -246,13 +251,16 @@ def main() -> None:
                 os.unlink(probe)
             if iso is not None:
                 # clock-health stamp taken right after the probe: an
-                # isolated reading from a degraded window arrives with
-                # its own refutation (spin >> quiet baseline)
+                # isolated reading from a degraded window (spin more than
+                # SPIN_INVALID_RATIO x the run-start spin) is marked invalid
                 spin = _spin_probe()
+                valid = spin <= SPIN_INVALID_RATIO * spin_start
                 variance[name] = {"in_bench": timings[name],
-                                  "isolated": iso, "spin": spin}
+                                  "isolated": iso, "spin": spin,
+                                  "valid": valid}
                 print(f"# variance {name}: in_bench={timings[name]:.3f}s "
-                      f"isolated={iso:.3f}s spin={spin:.3f}s",
+                      f"isolated={iso:.3f}s spin={spin:.3f}s"
+                      + ("" if valid else " (invalid: degraded clock)"),
                       file=sys.stderr)
 
     # OUTPUT PROTOCOL (fixed in round 9 — VERDICT r8 task #1): the driver

@@ -67,6 +67,33 @@ DEPTH_SCHEMA = (
     "volume double, volume_change double"
 )
 
+# numpy dtype per Spark type of a fold's output schema; other types stay
+# Python objects for Arrow to convert
+_NUMPY_DTYPES = {"int": "i4", "bigint": "i8", "long": "i8", "float": "f4",
+                 "double": "f8", "boolean": "?", "timestamp": "M8[ns]"}
+
+
+def schema_dtypes(schema: str) -> dict[str, object]:
+    """Column → numpy dtype of a ``"name type, ..."`` schema string."""
+    return {name: _NUMPY_DTYPES.get(t, object)
+            for name, t in (c.split() for c in schema.split(","))}
+
+
+def typed_frame(columns: dict[str, list], dtypes: dict[str, object]
+                ) -> pd.DataFrame:
+    """Per-column value lists as one frame of typed numpy columns — no
+    per-value dtype inference. NULL (None) becomes NaN or NaT; an integer
+    column holding NULL is carried as float64, as pandas infers it."""
+    data = {}
+    for name, vals in columns.items():
+        dt = dtypes[name]
+        if dt == "M8[ns]":
+            vals = [None if v is pd.NaT else v for v in vals]
+        elif dt in ("i4", "i8") and None in vals:
+            dt = "f8"
+        data[name] = np.array(vals, dt)
+    return pd.DataFrame(data)
+
 
 def ordered_fold(
     df: DataFrame,
@@ -90,6 +117,13 @@ def ordered_fold(
     return df.groupBy(*keys).applyInPandas(runner, schema)
 
 
+def group_starts(kf: pd.DataFrame) -> np.ndarray:
+    """First row of every run of equal keys in a key-sorted frame."""
+    change = (kf != kf.shift()).any(axis=1).to_numpy()
+    change[0] = True
+    return np.flatnonzero(change)
+
+
 def stream_fold(
     df: DataFrame,
     make_folder: Callable[[pd.Series], "EpisodeFolder"],
@@ -106,17 +140,16 @@ def stream_fold(
     """
     key_cols = list(keys)
     order_cols = key_cols + (EVENT_ORDER if order is None else list(order))
+    dtypes = schema_dtypes(schema)
 
-    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def chunks(batches: Iterator[pd.DataFrame]) -> Iterator[dict[str, list]]:
         cur_key = None
         folder: EpisodeFolder | None = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             kf = pdf[key_cols]
-            change = (kf != kf.shift()).any(axis=1).to_numpy()
-            change[0] = True
-            starts = np.flatnonzero(change)
+            starts = group_starts(kf)
             bounds = np.append(starts, len(pdf))
             for k in range(len(starts)):
                 s, e = int(starts[k]), int(bounds[k + 1])
@@ -129,6 +162,10 @@ def stream_fold(
                 yield from folder.feed(pdf.iloc[s:e])
         if folder is not None:
             yield from folder.finish()
+
+    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for cols in chunks(batches):
+            yield typed_frame(cols, dtypes)
 
     return (
         df.repartition(*key_cols)
@@ -288,7 +325,7 @@ class EpisodeFolder:
         else:
             self.on_episode(self._cur_ts)
 
-    def feed(self, pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+    def feed(self, pdf: pd.DataFrame) -> Iterator[dict[str, list]]:
         ev = _Events(pdf)
         apply_ = self.book.apply
         first_col = self.OUT_COLS[0]
@@ -305,7 +342,7 @@ class EpisodeFolder:
                 apply_(ev.order_id[i], ev.side[i], ev.price[i],
                        ev.amount[i], ev.deleted[i])
 
-    def finish(self) -> Iterator[pd.DataFrame]:
+    def finish(self) -> Iterator[dict[str, list]]:
         if self._cur_ts is not None:
             self._close_episode()
             self._cur_ts = None
@@ -313,10 +350,10 @@ class EpisodeFolder:
         if len(self.out[self.OUT_COLS[0]]):
             yield self._take()
 
-    def _take(self) -> pd.DataFrame:
-        pdf = pd.DataFrame(self.out)
+    def _take(self) -> dict[str, list]:
+        out = self.out
         self.out = {c: [] for c in self.OUT_COLS}
-        return pdf
+        return out
 
     # shared helper: sync self.emitted with touched levels ---------------
     def changed_levels(self) -> list[tuple[tuple[str, float], float, float]]:

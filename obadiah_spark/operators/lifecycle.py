@@ -396,118 +396,92 @@ def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
     locks) is out of scope per SURVEY §2.6.
 
     Scale: the expensive part — the per-offset lead-window over the full
-    event stream — runs ONCE per offset (``sequential_event_pairs``,
-    checkpointed), not once per grid cell: a 5×4 grid costs 4 windows plus
-    at most 20 cheap equi-joins against broadcast-size state frames.
-    Three further bit-identical prunes (r13) cut the dead-cell overhead:
-    a fused per-offset stats pass counts feasible rows at EACH grid
-    tolerance, so cells with zero feasible candidates are skipped without
-    running any jobs (exact: resolve filters on feasibility at the cell's
-    tolerance over a subset of the counted frame); the claimed-state
-    broadcasts drop their defensive ``distinct`` (anti-joins are invariant
-    under duplicate build rows); and the grid short-circuit bound is the
-    distinct matchable-trade count across the feasible frames rather than
-    the raw trade count, so it fires even when some trades are
-    unmatchable at every cell. Each cell's
-    result is checkpointed, so the threaded state (anti-join frames) stays
-    a union of tiny in-memory leaves and the logical plan depth is bounded
-    per cell, not cumulative across the grid. ``period_s`` passes through
-    to :func:`sequential_event_pairs` — the period-parallel neighbor
-    lookup for reducer-breakingly large eras (same opt-in and same
-    split-equality guarantee as :func:`match_sequential`).
+    event stream, joined once to the full trade set — runs at most ONCE per
+    offset (``sequential_event_pairs``, checkpointed), not once per grid
+    cell; each cell then anti-joins and resolves over that offset's small
+    candidate frame. Offsets are built lazily: offset 1 first, and offsets
+    2..k only when the grid reaches them — or all at once, concurrently,
+    as soon as offset 1's stats show that the first cell cannot match
+    every trade. Cells with zero feasible candidates at their tolerance are
+    skipped without running any jobs, and the grid stops as soon as every
+    matchable trade is matched; both prunes are exact, so the output is
+    the full grid's. ``period_s`` passes through to
+    :func:`sequential_event_pairs` — the period-parallel neighbor lookup
+    for reducer-breakingly large eras (same opt-in and same split-equality
+    guarantee as :func:`match_sequential`).
     """
     if not tolerances or max_offset < 1:
         raise ValueError("sweep grid is empty")
     if cache_inputs:
         trades = trades.localCheckpoint(eager=True)
-    # the per-offset lead-window frames — and the tolerance-INDEPENDENT
-    # candidate join of each against the full trade set — are independent
-    # of each other and of the grid state, so they materialize as
-    # concurrent jobs (the cells themselves are sequentially dependent by
-    # the reference's semantics: each cell's exclusion state is every
-    # earlier cell's claims). Hoisting the candidate join per offset is
-    # what makes the full 5x4 grid affordable: each cell then anti-joins
-    # and resolves over a frame of O(trades) candidate rows instead of
-    # rescanning the O(events) pair frame — measured 21.6 s -> ~8 s at
-    # sf0.1 for the 20-cell reference grid.
     from concurrent.futures import ThreadPoolExecutor
+    from functools import reduce
 
     from obadiah_spark.operators.matching import (
-        match_candidates, match_feasible, match_resolve, match_rule)
+        candidate_feasible_sql, match_candidates, match_feasible,
+        match_resolve)
 
-    offsets = range(1, max_offset + 1)
     max_tol = max(tolerances)
 
-    def _feasible_at(tol_pct: float):
-        # mirror of match_feasible's rule pair at ONE grid tolerance —
-        # used only for provable-emptiness stats, never to produce rows
-        tol = F.lit(tol_pct) * F.col("t_price")
-        mr = match_rule(F.col("t_amount"), F.col("t_price"),
-                        F.col("amount"), F.col("fill"), F.col("is_del"), tol)
-        n_mr = match_rule(F.col("t_amount"), F.col("t_price"),
-                          F.col("n_amount"), F.col("n_fill"),
-                          F.col("n_is_del"), tol)
-        return mr.isNotNull() & n_mr.isNotNull()
+    cand0: dict[int, DataFrame] = {}
+    feas: dict[int, list[int]] = {}
 
-    def _cand_for(off: int):
+    def _build(off: int, first: bool = False):
+        # the offset's candidate frame (tolerance-independent: the pair
+        # frame joined to every trade) plus one stats job counting its
+        # feasible rows at EACH grid tolerance. The rule's non-NULL set is
+        # monotone in tolerance and the matched/claimed anti-joins only
+        # shrink the frame, so a cell whose count is zero is provably
+        # empty and is skipped.
         p = sequential_event_pairs(l3, off, period_s)
         c = match_feasible(
             match_candidates(p, trades), max_tol).localCheckpoint(eager=True)
-        # fused stats pass over the checkpointed leaf (replaces the old
-        # isEmpty probe — same job count): per grid tolerance, how many
-        # candidate rows are feasible. The F7 rule's non-NULL set is
-        # monotone in tolerance and the claimed/matched anti-joins only
-        # SHRINK the frame, so a (tolerance, offset) cell whose count is
-        # zero here is PROVABLY empty — it can be skipped without running
-        # any of its jobs, bit-identically (an empty cell contributes
-        # nothing to the union). At the gate grid this skips the
-        # low-tolerance cells of the sparse offsets >= 2.
-        row = c.agg(*[
-            F.sum(_feasible_at(t).cast("int")).alias(f"f{i}")
-            for i, t in enumerate(tolerances)]).first()
-        return c, [row[f"f{i}"] or 0 for i in range(len(tolerances))]
+        stats = [F.expr(f"sum(CAST(({candidate_feasible_sql(t)}) AS INT))")
+                 .alias(f"f{i}") for i, t in enumerate(tolerances)]
+        src = c
+        if first:
+            # the same job also counts the trades (unioned in as flagged
+            # rows) and the distinct trades feasible in the first cell
+            stats += [
+                F.expr(f"size(collect_set(CASE WHEN "
+                       f"{candidate_feasible_sql(tolerances[0])} THEN "
+                       f"struct(pair_id, exchange_trade_id) END))"
+                       ).alias("d0"),
+                F.sum("_trade").alias("n_trades")]
+            src = c.withColumn("_trade", F.lit(0)).unionByName(
+                trades.select(F.lit(1).alias("_trade")),
+                allowMissingColumns=True)
+        row = src.agg(*stats).first()
+        cand0[off] = c
+        feas[off] = [row[f"f{i}"] or 0 for i in range(len(tolerances))]
+        return row
 
-    with ThreadPoolExecutor(max_workers=min(4, max_offset)) as pool:
-        res = dict(zip(offsets, pool.map(_cand_for, offsets)))
-    cand0 = {off: c for off, (c, _) in res.items()}
-    feas = {off: f for off, (_, f) in res.items()}
-    # short-circuit (r11, tightened r13): a trade matches in at most one
-    # cell, so once every MATCHABLE trade is matched the remaining grid is
-    # all-empty — break out of it. The bound is the distinct count of
-    # trades appearing in ANY offset's feasible candidate frame (one tiny
-    # job over the checkpointed leaves) — strictly tighter than the old
-    # trades.count() bound, which never fired when some trades are
-    # unmatchable at every cell. Output is bit-identical: a cell past the
-    # bound could only match a NEW trade, and every matchable trade is
-    # feasible somewhere, hence already counted. A per-cell
-    # candidate-emptiness probe (WITH the anti-joins) was tried and
-    # REJECTED: on productive grids (the gate's shape) the extra action
-    # per cell costs more than the cells it ever skips; the monotone
-    # zero-count skip above is the free subset of it.
-    idx_max = tolerances.index(max_tol)
-    n_matchable = None
-    if cache_inputs:
-        ids = [cand0[off].select("pair_id", "exchange_trade_id")
-               for off in offsets if feas[off][idx_max] > 0]
-        if ids:
-            u = ids[0]
-            for d in ids[1:]:
-                u = u.unionByName(d)
-            n_matchable = u.distinct().count()
-        else:
-            n_matchable = 0
+    first = _build(1, first=True)
+    # a trade matches in at most one cell, so the grid is done once every
+    # matchable trade is matched; the trade count bounds that number
+    bound = first["n_trades"] or 0
+    if first["d0"] < bound:
+        # the first cell cannot match every trade: build the remaining
+        # offsets now, as concurrent jobs (they are independent of each
+        # other and of the grid state)
+        rest = range(2, max_offset + 1)
+        if len(rest):
+            with ThreadPoolExecutor(max_workers=min(4, len(rest))) as pool:
+                list(pool.map(_build, rest))
+        if cache_inputs:
+            # the tight bound: distinct trades feasible in any offset
+            ids = [cand0[off].select("pair_id", "exchange_trade_id")
+                   for off in cand0 if feas[off][tolerances.index(max_tol)]]
+            bound = (reduce(lambda a, b: a.unionByName(b), ids)
+                     .distinct().count() if ids else 0)
     n_matched = 0
     out: DataFrame | None = None
     for ti, tol in enumerate(tolerances):
-        if n_matchable is not None and n_matched >= n_matchable:
+        if n_matched >= bound:
             break  # every matchable trade matched — the rest is empty
-        # (a row-start probe — one anti-join job per tolerance row to skip
-        # cells whose feasible trades are all matched — was tried in r13
-        # and REVERTED: the gate's dead mid-grid cells die in RESOLVE
-        # (claimed events, one-event-one-trade dedup), not in the trade
-        # anti-join, so the probe count stays positive, skips nothing,
-        # and its jobs made the warm grid 26.0 -> 30.9 s at sf0.1.)
         for off in range(1, max_offset + 1):
+            if off not in cand0:
+                _build(off)
             if feas[off][ti] == 0:
                 continue  # provably empty at this tolerance (see above)
             cl = claimed
@@ -523,10 +497,8 @@ def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
                 # filtering the pair frame (the trade equi-join commutes
                 # with a filter on the event-side columns) and still AFTER
                 # the lead window, the reference's filter placement.
-                # No distinct: left_anti is invariant under duplicate build
-                # rows, claims are unique by construction (one event per
-                # trade, resolve dedups within a cell), and the distinct
-                # was a shuffle inside BOTH broadcast builds every cell
+                # left_anti is invariant under duplicate build rows, so the
+                # claims need no distinct
                 cand = cand.join(
                     F.broadcast(cl),
                     ["pair_id", "era", "microtimestamp", "order_id",
@@ -540,44 +512,20 @@ def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
                     F.broadcast(cl2),
                     ["pair_id", "era", "n_microtimestamp", "n_order_id",
                      "n_event_no"], "left_anti")
-            # ACCUMULATED state, one flat leaf (r16): the loop used to
-            # checkpoint each cell's result separately and union the
-            # leaves, so by cell k the threaded state was a union of k
-            # leaves and the claims chain 2k projections — and every
-            # cell's CONSTRUCTION (py4j + analysis of the growing plan)
-            # cost ~0.4-0.9 s of pure driver time, the gate's real floor
-            # (profiled: 19.9 s pass = 10.4 s of jobs + ~9 s of driver
-            # gaps; per-cell build dominated both checkpoint job and
-            # count). Re-checkpointing the ACCUMULATED union instead
-            # keeps every cell's plan flat (one leaf + three anti-joins)
-            # for the cost of re-writing <= a few thousand tiny rows per
-            # cell. Same rows, same exclusion state — claimed_events
-            # distributes over union, and the count short-circuit reads
-            # the cumulative total directly. (Eager, as before: the next
-            # cell's broadcast builds would otherwise each re-derive the
-            # state — measured slower lazy in r13, 26.0 -> 62.8 s.)
-            # checkpoint_proposed=False (r16 re-A/B under the flat-state
-            # regime): the per-cell proposed checkpoint job now costs
-            # more than evaluating the narrow filter over the
-            # checkpointed candidate leaf twice — alternating-arm A/B at
-            # sf0.1: lazy 12.9-14.7 s vs eager 14.3-16.8 s per pass (the
-            # r9/r13 A/Bs that favored eager predate the hoisted
-            # candidate checkpoint and the flat accumulated state).
             m = (
                 match_resolve(cand, tol, checkpoint_proposed=False)
                 .withColumn("tolerance", F.lit(float(tol)))
                 .withColumn("sweep_offset", F.lit(off))
             )
-            # coalesce(1): the accumulated state is bounded by the
-            # matched trades and is BROADCAST into every later cell's
-            # anti-joins anyway (it must fit in memory by design), so one
-            # partition keeps each cell's checkpoint/count/broadcast jobs
-            # single-task instead of concatenating every prior cell's
-            # shuffle partitions (A/B: 14.3-15.9 s vs 16.2-17.4 s warm)
+            # the ACCUMULATED matches are re-checkpointed as one flat,
+            # single-partition leaf per cell: every later cell's plan stays
+            # one leaf plus three anti-joins, and the state is broadcast
+            # into those anti-joins anyway (claimed_events distributes
+            # over the union)
             out = (m if out is None else out.unionByName(m)
                    ).coalesce(1).localCheckpoint(eager=True)
             n_matched = out.count()  # free: materialized by the checkpoint
-            if n_matchable is not None and n_matched >= n_matchable:
+            if n_matched >= bound:
                 break
     if out is None:  # every offset infeasible — a correctly-typed empty
         out = (match_resolve(cand0[1], float(tolerances[0]))

@@ -47,6 +47,40 @@ def match_rule(trade_amount: Column, trade_price: Column, event_amount: Column,
     ).cast("int")
 
 
+def match_rule_sql(prefix: str, tolerance_pct: float) -> str:
+    """:func:`match_rule` over a candidate frame, as Spark SQL text, with
+    tolerance = ``tolerance_pct`` × trade price. The trade is
+    ``t_amount``/``t_price``, the event the ``prefix``-ed
+    ``fill``/``amount``/``is_del`` ('' for the event, 'n_' for its lead).
+    One parsed expression: the Column form makes about twenty driver round
+    trips for the same rule."""
+    f, a, d = f"{prefix}fill", f"{prefix}amount", f"{prefix}is_del"
+    tol = f"CAST({tolerance_pct!r} AS DOUBLE) * t_price"
+    return (f"CASE WHEN t_amount = {f} THEN 0 "
+            f"WHEN abs(t_amount * t_price - {f} * t_price) < {tol} THEN 1 "
+            f"WHEN {f} IS NULL THEN 2 "
+            f"WHEN {d} AND {f} = 0 AND abs(t_amount * t_price - {a} * t_price)"
+            f" < {tol} THEN 3 END")
+
+
+def candidate_feasible_sql(tolerance_pct: float) -> str:
+    """Both events of a candidate row carry a non-NULL match rule at
+    ``tolerance_pct`` (SQL text)."""
+    return (f"({match_rule_sql('', tolerance_pct)}) IS NOT NULL AND "
+            f"({match_rule_sql('n_', tolerance_pct)}) IS NOT NULL")
+
+
+# aggressor-direction check: the maker (opposite of the taker side) has the
+# OLDER price_microtimestamp; ties go to the bid maker
+_DIRECTION_SQL = """
+    (trade_type = 'b'
+     AND CASE WHEN ev_is_buy THEN n_pts ELSE price_microtimestamp END
+       < CASE WHEN ev_is_buy THEN price_microtimestamp ELSE n_pts END)
+ OR (trade_type = 's'
+     AND CASE WHEN ev_is_buy THEN price_microtimestamp ELSE n_pts END
+      <= CASE WHEN ev_is_buy THEN n_pts ELSE price_microtimestamp END)"""
+
+
 def match_price_and_fill_exact(l3: DataFrame, trades: DataFrame,
                                max_delay_s: int = 1) -> DataFrame:
     """I5: link unlinked trades to the level3 event that produced them.
@@ -435,9 +469,8 @@ def sequential_event_pairs(l3: DataFrame, offset: int = 1,
     if period_s is None:
         w = W.partitionBy("pair_id", "era").orderBy(
             "microtimestamp", "order_id", "event_no")
-        ev = ev0
-        for src, dst in zip(lead_cols, n_names):
-            ev = ev.withColumn(dst, F.lead(src, offset).over(w))
+        ev = ev0.select("*", *[F.lead(src, offset).over(w).alias(dst)
+                               for src, dst in zip(lead_cols, n_names)])
     else:
         per = F.floor(
             F.unix_micros("microtimestamp") / F.lit(period_s * 1_000_000))
@@ -580,20 +613,8 @@ def match_feasible(cand: DataFrame, max_tolerance_pct: float) -> DataFrame:
     over the few feasible rows (recomputing rule CODES at its own
     tolerance — codes do shift with tolerance, feasibility doesn't)
     instead of the full O(events-with-shared-order-ids) candidate join."""
-    tol = F.lit(max_tolerance_pct) * F.col("t_price")
-    mr = match_rule(F.col("t_amount"), F.col("t_price"), F.col("amount"),
-                    F.col("fill"), F.col("is_del"), tol)
-    n_mr = match_rule(F.col("t_amount"), F.col("t_price"), F.col("n_amount"),
-                      F.col("n_fill"), F.col("n_is_del"), tol)
-    buy_pts = F.when(F.col("ev_is_buy"), F.col("price_microtimestamp")).otherwise(F.col("n_pts"))
-    sell_pts = F.when(F.col("ev_is_buy"), F.col("n_pts")).otherwise(F.col("price_microtimestamp"))
-    return (
-        cand.filter(mr.isNotNull() & n_mr.isNotNull())
-        .filter(
-            ((F.col("trade_type") == "b") & (sell_pts < buy_pts))
-            | ((F.col("trade_type") == "s") & (buy_pts <= sell_pts))
-        )
-    )
+    return cand.filter(candidate_feasible_sql(max_tolerance_pct)).filter(
+        _DIRECTION_SQL)
 
 
 def match_resolve(cand: DataFrame, tolerance_pct: float,
@@ -609,20 +630,12 @@ def match_resolve(cand: DataFrame, tolerance_pct: float,
     vs lazy 19.3–21.1 s across the full grid (SCALE.md §7), so the
     per-cell materialization job wins even on a checkpointed-leaf
     candidate frame. The parameter records the knob and the measurement."""
-    tol = F.lit(tolerance_pct) * F.col("t_price")
-    mr = match_rule(F.col("t_amount"), F.col("t_price"), F.col("amount"),
-                    F.col("fill"), F.col("is_del"), tol)
-    n_mr = match_rule(F.col("t_amount"), F.col("t_price"), F.col("n_amount"),
-                      F.col("n_fill"), F.col("n_is_del"), tol)
-    buy_pts = F.when(F.col("ev_is_buy"), F.col("price_microtimestamp")).otherwise(F.col("n_pts"))
-    sell_pts = F.when(F.col("ev_is_buy"), F.col("n_pts")).otherwise(F.col("price_microtimestamp"))
     proposed = (
-        cand.withColumn("mr", mr).withColumn("n_mr", n_mr)
-        .filter(F.col("mr").isNotNull() & F.col("n_mr").isNotNull())
-        .filter(
-            ((F.col("trade_type") == "b") & (sell_pts < buy_pts))
-            | ((F.col("trade_type") == "s") & (buy_pts <= sell_pts))
-        )
+        cand.select("*",
+                    F.expr(match_rule_sql("", tolerance_pct)).alias("mr"),
+                    F.expr(match_rule_sql("n_", tolerance_pct))
+                    .alias("n_mr"))
+        .filter("mr IS NOT NULL AND n_mr IS NOT NULL").filter(_DIRECTION_SQL)
     )
     # a single event may not participate in two trades (reference `matches`).
     # `proposed` is referenced twice below (as itself and as the exclusion

@@ -24,8 +24,14 @@ that re-detection must confirm.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from obadiah_spark.fold import group_starts
 
 
 def merge_episodes(l3: DataFrame, start: str, end: str) -> DataFrame:
@@ -648,8 +654,12 @@ def corrupt_chains(l3: DataFrame) -> DataFrame:
       (fix_premature_deletes, :2290-2336).
     """
     cols = l3.columns
-    w_life = W.partitionBy(*_CHAIN_KEYS)
-    sized = l3.withColumn("_n_life", F.max("event_no").over(w_life))
+    # cut the input's lineage once, after the life-size window: each
+    # operation below would otherwise re-analyze the whole upstream plan
+    # (a synthesized level3 is deep)
+    sized = l3.withColumn(
+        "_n_life", F.max("event_no").over(W.partitionBy(*_CHAIN_KEYS))
+    ).localCheckpoint()
 
     dup_fam = (F.col("order_id") % 10 == 3) & (F.col("life_no") == 0)
     dup_rows = (
@@ -665,39 +675,22 @@ def corrupt_chains(l3: DataFrame) -> DataFrame:
         .select(*cols)
     )
 
-    et_fam = ((F.col("order_id") % 10 == 4) & (F.col("life_no") == 0)
-              & (F.col("_n_life") >= 3))
-    base = sized.select(
-        *cols,
-        F.when(et_fam & (F.col("event_no") == 2), True)
-        .otherwise(False).alias("_wipe"))
-    base = (
-        base
-        .withColumn("chain_state",
-                    F.when(F.col("_wipe"), "alive").otherwise(F.col("chain_state")))
-        .withColumn("next_microtimestamp",
-                    F.when(F.col("_wipe"), F.lit(None).cast("timestamp"))
-                    .otherwise(F.col("next_microtimestamp")))
-        .withColumn("next_event_no",
-                    F.when(F.col("_wipe"), F.lit(None).cast("int"))
-                    .otherwise(F.col("next_event_no")))
-        .drop("_wipe")
-    )
-
     pm_fam = ((F.col("order_id") % 10 == 6) & (F.col("life_no") == 0)
               & (F.col("_n_life") >= 2))
     e1 = sized.filter(pm_fam & (F.col("event_no") == 1)
-                      & (F.col("chain_state") == "chained")).select(
-        *_CHAIN_KEYS,
-        F.col("microtimestamp").alias("_ts1"),
-        F.col("next_microtimestamp").alias("_ts2"))
+                      & (F.col("chain_state") == "chained"))
     mid = F.timestamp_micros(
-        ((F.unix_micros("_ts1") + F.unix_micros("_ts2")) / 2).cast("long"))
-    g_meta = e1.select(*_CHAIN_KEYS, F.col("_ts2"), mid.alias("_g_ts"))
-    e2 = sized.filter(pm_fam & (F.col("event_no") == 2)).select(*cols)
+        ((F.unix_micros("microtimestamp")
+          + F.unix_micros("next_microtimestamp")) / 2).cast("long"))
+    g_meta = e1.select(*_CHAIN_KEYS,
+                       F.col("next_microtimestamp").alias("_ts2"),
+                       mid.alias("_g_ts"))
+    # one join serves both the generated deletes (cloned from event 2)
+    # and the re-pointing of event 1
+    joined = sized.join(g_meta, _CHAIN_KEYS, "left")
     g_rows = (
-        e2.join(g_meta, _CHAIN_KEYS)
-        .filter(F.col("microtimestamp") == F.col("_ts2"))
+        joined.filter(pm_fam & (F.col("event_no") == 2)
+                      & (F.col("microtimestamp") == F.col("_ts2")))
         .withColumn("microtimestamp", F.col("_g_ts"))
         .withColumn("local_timestamp", F.lit(None).cast("timestamp"))
         .withColumn("chain_state", F.lit("deleted"))
@@ -705,28 +698,31 @@ def corrupt_chains(l3: DataFrame) -> DataFrame:
         .withColumn("next_event_no", F.lit(None).cast("int"))
         .select(*cols)
     )
-    repointed = (
-        base.join(g_meta.select(*_CHAIN_KEYS,
-                                F.col("_ts2").alias("_pm_ts2"), "_g_ts"),
-                  _CHAIN_KEYS, "left")
-        .withColumn(
-            "next_microtimestamp",
-            F.when((F.col("event_no") == 1)
-                   & F.col("_g_ts").isNotNull()
-                   & (F.col("next_microtimestamp") == F.col("_pm_ts2")),
-                   F.col("_g_ts"))
-            .otherwise(F.col("next_microtimestamp")))
-        .select(*cols)
-    )
-    return repointed.unionByName(dup_rows).unionByName(g_rows)
+
+    et_fam = ((F.col("order_id") % 10 == 4) & (F.col("life_no") == 0)
+              & (F.col("_n_life") >= 3))
+    wipe = et_fam & (F.col("event_no") == 2)
+    repoint = ((F.col("event_no") == 1) & F.col("_g_ts").isNotNull()
+               & (F.col("next_microtimestamp") == F.col("_ts2")))
+    rewrite = {
+        "chain_state": F.when(wipe, "alive").otherwise(F.col("chain_state")),
+        "next_event_no": F.when(wipe, F.lit(None).cast("int"))
+        .otherwise(F.col("next_event_no")),
+        "next_microtimestamp": F.when(wipe, F.lit(None).cast("timestamp"))
+        .when(repoint, F.col("_g_ts"))
+        .otherwise(F.col("next_microtimestamp")),
+    }
+    base = joined.select(
+        *[rewrite[c].alias(c) if c in rewrite else c for c in cols])
+    return base.unionByName(dup_rows).unionByName(g_rows)
 
 
 def fix_chain_integrity(l3: DataFrame) -> DataFrame:
     """Q4 repairs as one closed-form rewrite — the reference's
     ``qty_level3_fix_duplicate_order_events`` / ``fix_eternals`` /
     ``fix_premature_deletes`` (db/obanalytics_schema.sql:2157-2336), which
-    are per-era plpgsql DELETE/UPDATE programs there and three distributed
-    set operations here:
+    are per-era plpgsql DELETE/UPDATE programs there and three rules applied
+    to each life here:
 
     1. drop spurious eternal duplicate creations: event_no = 1, 'alive',
        belonging to an (order, life) with any duplicated event_no;
@@ -743,96 +739,119 @@ def fix_chain_integrity(l3: DataFrame) -> DataFrame:
     a generated delete is never treated as eternal), and the generated row
     is dropped only if still orphaned AFTER re-pointing.
 
-    Each stage's result is materialized (localCheckpoint) before the next:
-    every stage self-joins its input twice, so an unbroken lineage grows
-    the plan exponentially across the three stages (a production pipeline
-    writes each rewrite to the silver table anyway — this mirrors that
-    lifecycle in-session)."""
-    cols = l3.columns
-    keys = _CHAIN_KEYS
-    l3 = l3.localCheckpoint()
+    Every rule reads one life (``_CHAIN_KEYS``) only, so the rewrite is one
+    shuffle on the life key and a per-life kernel (:func:`_fix_lives`)
+    streaming the sorted partition, with no self-joins."""
+    keys = list(_CHAIN_KEYS)
 
-    # (1) duplicate eternal creations
-    dup_lives = (l3.groupBy(*keys, "event_no").count().filter("count > 1")
-                 .select(*keys).distinct())
-    is_dup_victim = (F.col("event_no") == 1) & (F.col("chain_state") == "alive")
-    l3 = (
-        l3.join(dup_lives.withColumn("_dup", F.lit(True)), keys, "left")
-        .filter(~(F.coalesce(F.col("_dup"), F.lit(False)) & is_dup_victim))
-        .drop("_dup")
-    ).localCheckpoint()
+    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if len(pdf) == 0:
+                continue
+            starts = group_starts(pdf[keys])
+            # the last life may continue in the next batch: hold it back
+            if starts[-1] > 0:
+                yield _fix_lives(pdf.iloc[:starts[-1]], starts[:-1])
+            carry = pdf.iloc[starts[-1]:]
+        if carry is not None and len(carry):
+            yield _fix_lives(carry, group_starts(carry[keys]))
 
-    # orphan set: event_no > 1 and no same-life row points at it
-    def _orphans(df: DataFrame) -> DataFrame:
-        a, b = df.alias("a"), df.alias("b")
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-        cond = cond & (F.col("b.next_microtimestamp") == F.col("a.microtimestamp")) \
-                    & (F.col("b.next_event_no") == F.col("a.event_no"))
-        return (a.filter("a.event_no > 1").join(b, cond, "left_anti")
-                .select(*[f"a.{c}" for c in df.columns]))
+    return (l3.repartition(*keys).sortWithinPartitions(*keys)
+            .mapInPandas(runner, l3.schema))
 
-    # (2) premature deletes: generated delete + orphaned exchange twin
-    gen = l3.filter((F.col("chain_state") == "deleted")
-                    & F.col("local_timestamp").isNull()).select(
-        *keys, "event_no", F.col("microtimestamp").alias("_g_ts"))
-    twin = (
-        _orphans(l3).filter(F.col("local_timestamp").isNotNull())
-        .join(gen, keys + ["event_no"])
-        .select(*keys, "event_no", "_g_ts",
-                F.col("microtimestamp").alias("_e_ts"))
-    )
-    # join ON the pointer match itself: a life with several generated
-    # deletes must not fan out unfixed row copies (tw is unique per
-    # (life, event_no), so each row matches at most once)
-    tw = twin.select(
-        *[F.col(k).alias(f"_tw_{k}") for k in keys],
-        F.col("event_no").alias("_t_eno"), "_g_ts", "_e_ts")
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & (F.col(k) == F.col(f"_tw_{k}"))
-    cond = cond & (F.col("next_microtimestamp") == F.col("_g_ts")) \
-                & (F.col("next_event_no") == F.col("_t_eno"))
-    l3 = (
-        l3.join(tw, cond, "left")
-        .withColumn("next_microtimestamp",
-                    F.coalesce(F.col("_e_ts"), F.col("next_microtimestamp")))
-        .select(*cols)
-    ).localCheckpoint()
-    # drop generated deletes that are STILL orphaned after re-pointing
-    still = _orphans(l3).filter((F.col("chain_state") == "deleted")
-                                & F.col("local_timestamp").isNull())
-    l3 = l3.join(
-        still.select(*keys, "event_no", "microtimestamp")
-        .withColumn("_drop", F.lit(True)),
-        keys + ["event_no", "microtimestamp"], "left"
-    ).filter(F.col("_drop").isNull()).drop("_drop").localCheckpoint()
 
-    # (3) eternals: reconnect event_no-1 'alive' rows to remaining orphans
-    # (join keyed by event_no == orphan.event_no - 1: at most one orphan
-    # per (life, event_no), so no fan-out for multi-orphan lives)
-    orph = _orphans(l3).select(
-        *[F.col(k).alias(f"_or_{k}") for k in keys],
-        F.col("event_no").alias("_o_eno"),
-        F.col("microtimestamp").alias("_o_ts"))
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & (F.col(k) == F.col(f"_or_{k}"))
-    cond = cond & (F.col("event_no") == F.col("_o_eno") - 1) \
-                & (F.col("chain_state") == "alive")
-    l3 = (
-        l3.join(orph, cond, "left")
-        .withColumn("_fix", F.col("_o_eno").isNotNull())
-        .withColumn("next_microtimestamp",
-                    F.when(F.col("_fix"), F.col("_o_ts"))
-                    .otherwise(F.col("next_microtimestamp")))
-        .withColumn("next_event_no",
-                    F.when(F.col("_fix"), F.col("_o_eno"))
-                    .otherwise(F.col("next_event_no")).cast("int"))
-        .withColumn("chain_state",
-                    F.when(F.col("_fix"), "chained")
-                    .otherwise(F.col("chain_state")))
-        .select(*cols)
-    )
-    return l3
+_NAT = np.iinfo("i8").min  # NaT as int64 ticks
+
+
+def _int_list(s: pd.Series) -> list:
+    """Column values as Python ints (timestamps as int64 ticks), None for
+    NULL."""
+    a = s.to_numpy()
+    null = pd.isna(a)
+    vals = (a.astype("M8[ns]").view("i8") if a.dtype.kind == "M"
+            else np.where(null, 0, a).astype("i8")).tolist()
+    for i in np.flatnonzero(null):
+        vals[i] = None
+    return vals
+
+
+def _fix_lives(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+    """The three Q4 rules over a slice of whole lives (``starts`` = first
+    row of each life). Emits rows of ``pdf`` with ``next_microtimestamp``,
+    ``next_event_no`` and ``chain_state`` rewritten; a row may be dropped
+    or, where several repairs target it (as the equi-joins would fan out),
+    repeated."""
+    ts = _int_list(pdf["microtimestamp"])
+    eno = _int_list(pdf["event_no"])
+    nts = _int_list(pdf["next_microtimestamp"])
+    neno = _int_list(pdf["next_event_no"])
+    exch = pdf["local_timestamp"].notna().tolist()
+    state = pdf["chain_state"].tolist()
+
+    def orphans(rows):
+        # (row, ts) of every event_no > 1 row no same-life pointer targets
+        ptr = {(r[1], r[2]) for r in rows
+               if r[1] is not None and r[2] is not None}
+        return [(r, ts[r[0]]) for r in rows
+                if eno[r[0]] is not None and eno[r[0]] > 1
+                and (ts[r[0]], eno[r[0]]) not in ptr]
+
+    # working rows: (source row, next_ts, next_eno, chain_state)
+    out: list[tuple] = []
+    for s, e in zip(starts.tolist(), starts[1:].tolist() + [len(pdf)]):
+        # (1) duplicate eternal creations
+        life = range(s, e)
+        if len({eno[i] for i in life}) < e - s:
+            life = [i for i in life
+                    if not (eno[i] == 1 and state[i] == "alive")]
+        rows = [(i, nts[i], neno[i], state[i]) for i in life]
+
+        # (2) premature deletes: generated deletes by event_no
+        gen: dict[int, list] = {}
+        for r in rows:
+            i = r[0]
+            if (r[3] == "deleted" and not exch[i] and eno[i] is not None
+                    and ts[i] is not None):
+                gen.setdefault(eno[i], []).append(ts[i])
+        if gen:
+            twin: dict[tuple, list] = {}
+            for r, t in orphans(rows):
+                if exch[r[0]] and eno[r[0]] in gen:
+                    for g in gen[eno[r[0]]]:
+                        twin.setdefault((g, eno[r[0]]), []).append(t)
+            if twin:
+                rows = [
+                    (r[0], r[1] if t is None else t, r[2], r[3])
+                    for r in rows
+                    for t in twin.get((r[1], r[2]), (r[1],))]
+            # drop generated deletes that are STILL orphaned
+            drop = {(eno[r[0]], t) for r, t in orphans(rows)
+                    if r[3] == "deleted" and not exch[r[0]]
+                    and t is not None}
+            if drop:
+                rows = [r for r in rows
+                        if (eno[r[0]], ts[r[0]]) not in drop]
+
+        # (3) eternals: an 'alive' event_no − 1 row links to each orphan
+        orph: dict[int, list] = {}
+        for r, t in orphans(rows):
+            orph.setdefault(eno[r[0]], []).append(t)
+        for r in rows:
+            e1 = None if eno[r[0]] is None else eno[r[0]] + 1
+            if r[3] == "alive" and e1 in orph:
+                out.extend((r[0], t, e1, "chained") for t in orph[e1])
+            else:
+                out.append(r)
+
+    res = pdf.iloc[[r[0] for r in out]].reset_index(drop=True)
+    if not out:
+        return res
+    _, new_nts, new_neno, new_state = zip(*out)
+    res["next_microtimestamp"] = np.array(
+        [_NAT if t is None else t for t in new_nts], "i8").view("M8[ns]")
+    res["next_event_no"] = np.array(new_neno, "f8")  # NULL as NaN
+    res["chain_state"] = list(new_state)
+    return res

@@ -44,10 +44,14 @@ hook is noted at the drop site.
 
 from __future__ import annotations
 
+import functools
+from collections import namedtuple
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
+from obadiah_spark.fold import schema_dtypes, typed_frame
 from obadiah_spark.streaming.ingest import _ChainState, advance_chain
 
 # fold state before the tail (7) + after the tail (7) + tail row (12) + rev
@@ -72,7 +76,9 @@ OUTPUT_SCHEMA = (
     "event_id long, rev long"
 )
 
-_OUT_COLS = [c.rsplit(" ", 1)[0].strip() for c in OUTPUT_SCHEMA.split(",")]
+_OUT_DTYPES = schema_dtypes(OUTPUT_SCHEMA)
+_OUT_COLS = list(_OUT_DTYPES)
+_ROW_COLS = _OUT_COLS[:-1]  # the level3 row fields; ``rev`` is appended
 
 
 def _ts_us(ts) -> int | None:
@@ -102,13 +108,32 @@ def _unpack_chain(t: tuple) -> _ChainState:
     return s
 
 
+@functools.cache
+def _row_type(cols: tuple[str, ...]) -> type:
+    return namedtuple("Row", cols)
+
+
+def _latest_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """The batch's messages as named row tuples in (microtimestamp,
+    local_timestamp, event_id) order, keeping the LATEST message per
+    microtimestamp (per-episode dedup, I1 :374-384)."""
+    ts = pdf["microtimestamp"].to_numpy()
+    order = np.lexsort((pdf["event_id"].to_numpy(),
+                        pdf["local_timestamp"].to_numpy(), ts))
+    t = ts[order].view("i8")
+    idx = order[np.append(t[1:] != t[:-1], True)]
+    cols = tuple(pdf.columns)
+    return map(_row_type(cols)._make,
+               zip(*[pdf[c].iloc[idx].tolist() for c in cols]))
+
+
 def chain_events(key: tuple, pdfs: Iterator[pd.DataFrame], state
                  ) -> Iterator[pd.DataFrame]:
     """applyInPandasWithState body for one (pair, exchange, era, order) chain."""
     pair_id, exchange_id, era, order_id = key
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    pdf = pdf.sort_values(["microtimestamp", "local_timestamp", "event_id"])
-    pdf = pdf.drop_duplicates(["microtimestamp"], keep="last")
+    frames = list(pdfs)
+    pdf = frames[0] if len(frames) == 1 else pd.concat(frames,
+                                                       ignore_index=True)
 
     if state.exists:
         st = state.get
@@ -132,14 +157,14 @@ def chain_events(key: tuple, pdfs: Iterator[pd.DataFrame], state
         tail = None
         rev = 0
 
-    emitted: list[dict] = []
+    emitted: list[tuple] = []
 
     def emit(row: dict) -> None:
         nonlocal rev
         rev += 1
-        emitted.append({**row, "rev": rev})
+        emitted.append((*map(row.__getitem__, _ROW_COLS), rev))
 
-    for r in pdf.itertuples(index=False):
+    for r in _latest_rows(pdf):
         if tail is not None and r.microtimestamp < tail["microtimestamp"]:
             # CROSS-BATCH STRAGGLER: an event-time-earlier row arriving in
             # a later micro-batch. withWatermark only DROPS rows older
@@ -191,7 +216,7 @@ def chain_events(key: tuple, pdfs: Iterator[pd.DataFrame], state
         # downstream concat warn (and, on a future pandas, change the
         # result dtypes) — the generator protocol allows a bare return
         return
-    yield pd.DataFrame(emitted)[_OUT_COLS]
+    yield typed_frame(dict(zip(_OUT_COLS, zip(*emitted))), _OUT_DTYPES)
 
 
 def keyed_stream(events_stream):
@@ -279,25 +304,25 @@ def finalize_open_chains(l3: pd.DataFrame) -> pd.DataFrame:
     397-399); everything else rests 'alive' (+infinity next_microtimestamp,
     db/obanalytics_schema.sql:149)."""
     l3 = l3.copy()
-    open_idx = l3.index[l3["chain_state"].isna()]
-    # predecessor lookup: (order, era, life, event_no) → row position
-    pred = {
-        (r.order_id, r.era, r.life_no, r.event_no): i
-        for i, r in zip(l3.index, l3.itertuples(index=False))
-    }
-    for i in open_idx:
-        r = l3.loc[i]
-        if r["order_id"] % 3 == 0:
-            j = pred.get((r["order_id"], r["era"], r["life_no"],
-                          r["event_no"] - 1))
-            if j is not None:
-                for c in ("price", "amount", "price_microtimestamp",
-                          "price_event_no"):
-                    l3.loc[i, c] = l3.loc[j, c]
-            l3.loc[i, "fill"] = None
-            l3.loc[i, "chain_state"] = "deleted"
-        else:
-            l3.loc[i, "chain_state"] = "alive"
+    is_open = l3["chain_state"].isna().to_numpy()
+    closing = is_open & (l3["order_id"] % 3 == 0).to_numpy()
+    if closing.any():
+        # predecessor of each closing tail: (order, era, life, event_no − 1)
+        key = ["order_id", "era", "life_no", "event_no"]
+        carried = ["price", "amount", "price_microtimestamp",
+                   "price_event_no"]
+        tails = l3.loc[closing, key]
+        tails["event_no"] = tails["event_no"] - 1
+        found = tails.merge(
+            l3[key + carried].drop_duplicates(key, keep="last"),
+            on=key, how="left", indicator=True)
+        hit = (found["_merge"] == "both").to_numpy()
+        rows = l3.index[closing][hit]
+        for c in carried:
+            l3.loc[rows, c] = found.loc[hit, c].to_numpy().astype(l3[c].dtype)
+        l3.loc[closing, "fill"] = None
+    l3.loc[closing, "chain_state"] = "deleted"
+    l3.loc[is_open & ~closing, "chain_state"] = "alive"
     return l3
 
 

@@ -53,11 +53,11 @@ class StreamingFold:
             folder = self.folders.get(key)
             if folder is None:
                 folder = self.folders[key] = self.folder_cls(grp.iloc[0])
-            self.out.extend(folder.feed(grp))
+            self.out.extend(map(pd.DataFrame, folder.feed(grp)))
 
     def flush(self) -> pd.DataFrame:
         for folder in self.folders.values():
-            self.out.extend(folder.finish())
+            self.out.extend(map(pd.DataFrame, folder.finish()))
         cols = list(self.folder_cls.OUT_COLS)
         if not self.out:
             return pd.DataFrame(columns=cols)

@@ -28,6 +28,7 @@ from obadiah_spark.operators.lifecycle import (  # noqa: E402
 from obadiah_spark.operators.matching import (  # noqa: E402
     match_price_and_fill_exact,
     match_sum_of_fills,
+    sequential_event_pairs,
 )
 
 ERA = datetime(2024, 1, 10)
@@ -464,6 +465,30 @@ def test_sweep_full_reference_grid(spark):
     want = {int(r.exchange_trade_id): (r.tolerance, int(r.sweep_offset))
             for r in oracle.itertuples()}
     assert got == want
+
+
+def test_sweep_builds_offsets_lazily(spark, monkeypatch):
+    """When the first cell matches every trade, only offset 1's candidate
+    frame is built; when it cannot, every offset is."""
+    import obadiah_spark.operators.lifecycle as lc
+
+    built = []
+
+    def counting(l3, offset, period_s=None):
+        built.append(offset)
+        return sequential_event_pairs(l3, offset, period_s)
+
+    monkeypatch.setattr(lc, "sequential_event_pairs", counting)
+    l3, trades = _sweep_frames(spark, trade_ids={100})
+    out = lc.bitstamp_match_sweep(l3, trades)  # the full 5 x 4 grid
+    assert [(r.exchange_trade_id, r.tolerance, r.sweep_offset)
+            for r in out.collect()] == [(100, 0.0001, 1)]
+    assert built == [1]
+
+    built.clear()
+    l3, trades = _sweep_frames(spark)
+    lc.bitstamp_match_sweep(l3, trades)
+    assert sorted(built) == [1, 2, 3, 4]
 
 
 def test_read_links_distinguishes_missing_from_broken(spark, tmp_path):

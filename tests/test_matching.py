@@ -113,3 +113,36 @@ def test_match_sequential_period_split_equals_unsplit(spark, level3):
         a = sorted(map(tuple, unsplit.select(*cols).collect()))
         b = sorted(map(tuple, split.select(*cols).collect()))
         assert a == b, f"period split diverges at offset={offset}"
+
+
+def test_match_rule_sql_codes(spark):
+    """F7 codes of the SQL rule, equal to the Column form's, on every
+    branch — exact, within tolerance, unknown fill, the deleted zero-fill
+    exchange bug, no match — and on NULL inputs, at tolerances on both
+    sides of the 2.05-vs-2.0 gap."""
+    from obadiah_spark.operators.matching import match_rule, match_rule_sql
+
+    rows = [
+        # t_amount, t_price, fill, amount, is_del
+        (2.0, 100.0, 2.0, 5.0, False),      # exact
+        (2.0, 100.0, 2.00005, 5.0, False),  # within 0.0001 * price
+        (2.0, 100.0, 2.05, 5.0, False),     # within 0.1 * price only
+        (2.0, 100.0, None, 5.0, False),     # unknown fill
+        (2.0, 100.0, 0.0, 2.0, True),       # deleted, zero fill
+        (2.0, 100.0, 0.0, 2.0, False),      # zero fill, not deleted
+        (2.0, 100.0, 7.0, 9.0, True),       # nothing
+        (None, 100.0, 2.0, 5.0, None),      # NULL trade amount
+    ]
+    want = {0.0001: [0, 1, None, 2, 3, None, None, None],
+            0.1: [0, 1, 1, 2, 3, None, None, None]}
+    df = spark.createDataFrame(
+        rows, "t_amount double, t_price double, fill double, "
+              "amount double, is_del boolean")
+    for tol, codes in want.items():
+        col = match_rule(F.col("t_amount"), F.col("t_price"), F.col("amount"),
+                         F.col("fill"), F.col("is_del"),
+                         F.lit(tol) * F.col("t_price"))
+        got = df.select(F.expr(match_rule_sql("", tol)).alias("sql"),
+                        col.alias("col")).collect()
+        assert [r.sql for r in got] == codes, tol
+        assert [r.col for r in got] == codes, tol

@@ -213,3 +213,98 @@ def test_fix_chain_integrity_round_trip(level3):
     ).reset_index(drop=True)
     pd.testing.assert_frame_equal(a[cols], b[cols], check_dtype=False)
     bad.unpersist(); fixed.unpersist()
+
+
+# (order_id, life_no, event_no, t_sec, chain_state, next_t_sec, next_event_no,
+#  exchange-produced) — one era, pair 1, exchange 1
+_FIX_ROWS = [
+    # two generated deletes in one life: G@20 (eno 2) has an orphaned
+    # exchange twin @30 and is dropped once event 1 is re-pointed at the
+    # twin; G@40 (eno 3) has no twin, is pointed at, and stays
+    (100, 0, 1, 10, "chained", 20, 2, True),
+    (100, 0, 2, 20, "deleted", None, None, False),
+    (100, 0, 2, 30, "chained", 40, 3, True),
+    (100, 0, 3, 40, "deleted", None, None, False),
+    # the generated delete @70 shares (ts, event_no) with the orphaned
+    # twin of G@60: re-pointing event 1 at @70 un-orphans it, so it stays
+    (150, 0, 1, 50, "chained", 60, 2, True),
+    (150, 0, 2, 60, "deleted", None, None, False),
+    (150, 0, 2, 70, "alive", None, None, True),
+    (150, 0, 2, 70, "deleted", None, None, False),
+    # two orphans: event 2 reconnects to the 'alive' event 1; event 3
+    # stays orphaned because event 2 is 'chained', not 'alive'
+    (200, 0, 1, 10, "alive", None, None, True),
+    (200, 0, 2, 20, "chained", 90, 9, True),
+    (200, 0, 3, 30, "alive", None, None, True),
+    # a second life of the same order repairs on its own
+    (200, 1, 1, 50, "alive", None, None, True),
+    (200, 1, 2, 60, "alive", None, None, True),
+    # duplicated event_no 2 whose event_no = 1 row is 'chained': kept
+    (300, 0, 1, 10, "chained", 20, 2, True),
+    (300, 0, 2, 20, "alive", None, None, True),
+    (300, 0, 2, 25, "alive", None, None, True),
+    # duplicated event_no 1 with an 'alive' creation: the clone goes
+    (310, 0, 1, 10, "chained", 20, 2, True),
+    (310, 0, 1, 47, "alive", None, None, True),
+    (310, 0, 2, 20, "alive", None, None, True),
+]
+
+# frozen from the self-join implementation the per-life kernel replaced
+_FIX_WANT = [
+    (100, 0, 1, 10, "chained", 30, 2, True),
+    (100, 0, 2, 30, "chained", 40, 3, True),
+    (100, 0, 3, 40, "deleted", None, None, False),
+    (150, 0, 1, 50, "chained", 70, 2, True),
+    (150, 0, 2, 70, "alive", None, None, True),
+    (150, 0, 2, 70, "deleted", None, None, False),
+    (200, 0, 1, 10, "chained", 20, 2, True),
+    (200, 0, 2, 20, "chained", 90, 9, True),
+    (200, 0, 3, 30, "alive", None, None, True),
+    (200, 1, 1, 50, "chained", 60, 2, True),
+    (200, 1, 2, 60, "alive", None, None, True),
+    (300, 0, 1, 10, "chained", 20, 2, True),
+    (300, 0, 2, 20, "alive", None, None, True),
+    (300, 0, 2, 25, "alive", None, None, True),
+    (310, 0, 1, 10, "chained", 20, 2, True),
+    (310, 0, 2, 20, "alive", None, None, True),
+]
+
+
+def test_fix_chain_integrity_hand_built_lives(spark):
+    """The Q4 trio's general rules, beyond the fabric round trip: premature
+    deletes are re-pointed before a generated delete is judged orphaned,
+    eternals reconnect only from an 'alive' event_no − 1, and a duplicate
+    life loses only its 'alive' event_no = 1 creation."""
+    from datetime import timedelta
+
+    from obadiah_spark.operators.repair import fix_chain_integrity
+
+    era = datetime(2024, 1, 1)
+
+    def ts(sec):
+        return None if sec is None else era + timedelta(seconds=sec)
+
+    l3 = spark.createDataFrame(
+        [(ts(t), oid, eno, "b", 100.0, 1.0, None, ts(nt), neno, 1, 1,
+          ts(t) if exch else None, ts(t), 1, st, era, life)
+         for oid, life, eno, t, st, nt, neno, exch in _FIX_ROWS],
+        "microtimestamp timestamp, order_id bigint, event_no int, "
+        "side string, price double, amount double, fill double, "
+        "next_microtimestamp timestamp, next_event_no int, pair_id int, "
+        "exchange_id int, local_timestamp timestamp, "
+        "price_microtimestamp timestamp, price_event_no int, "
+        "chain_state string, era timestamp, life_no int")
+    fixed = fix_chain_integrity(l3)
+    assert fixed.columns == l3.columns
+
+    def key(row):
+        return tuple((x is None, x) for x in row)
+
+    got = sorted((
+        (r.order_id, r.life_no, r.event_no,
+         int((r.microtimestamp - era).total_seconds()), r.chain_state,
+         None if r.next_microtimestamp is None
+         else int((r.next_microtimestamp - era).total_seconds()),
+         r.next_event_no, r.local_timestamp is not None)
+        for r in fixed.collect()), key=key)
+    assert got == sorted(_FIX_WANT, key=key)

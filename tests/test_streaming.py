@@ -256,3 +256,72 @@ def test_streaming_depth_change_end_to_end(spark, level3):
                                          os.path.join(d, "ckpt"))
     want = depth_change_fold(level3).toPandas()
     assert not compare("streaming-depth-e2e", got, want)
+
+
+def _finalize_by_row(l3):
+    """The per-row reference for finalize_open_chains: predecessor lookup
+    by (order, era, life, event_no − 1), one tail at a time."""
+    l3 = l3.copy()
+    pred = {(r.order_id, r.era, r.life_no, r.event_no): i
+            for i, r in zip(l3.index, l3.itertuples(index=False))}
+    for i in l3.index[l3["chain_state"].isna()]:
+        r = l3.loc[i]
+        if r["order_id"] % 3 == 0:
+            j = pred.get((r["order_id"], r["era"], r["life_no"],
+                          r["event_no"] - 1))
+            if j is not None:
+                for c in ("price", "amount", "price_microtimestamp",
+                          "price_event_no"):
+                    l3.loc[i, c] = l3.loc[j, c]
+            l3.loc[i, "fill"] = None
+            l3.loc[i, "chain_state"] = "deleted"
+        else:
+            l3.loc[i, "chain_state"] = "alive"
+    return l3
+
+
+def test_finalize_open_chains_equals_per_row_reference():
+    """Open tails in both families — order_id % 3 == 0 with and without a
+    predecessor row, and the rest — close exactly as the row-at-a-time
+    lookup closes them."""
+    import numpy as np
+    import pandas as pd
+
+    from obadiah_spark.streaming.chain import finalize_open_chains
+
+    era = pd.Timestamp("2024-01-01")
+
+    def t(m):
+        return era + pd.Timedelta(minutes=m)
+
+    rows = [
+        # (order_id, life_no, event_no, minute, price, amount, fill, state)
+        (3, 0, 1, 0, 100.0, 2.0, None, "chained"),
+        (3, 0, 2, 1, 101.0, 1.0, 1.0, None),      # closes, predecessor
+        (6, 1, 1, 2, 99.0, 4.0, None, None),      # closes, no predecessor
+        (9, 0, 3, 3, 98.0, 3.0, 0.5, None),       # closes, no event 2
+        (9, 0, 1, 1, 97.0, 5.0, None, "chained"),
+        (4, 0, 1, 0, 102.0, 2.0, None, "chained"),
+        (4, 0, 2, 2, 102.0, 1.5, 0.5, None),      # rests alive
+        (5, 0, 1, 4, 103.0, 1.0, None, "deleted"),
+        (3, 1, 1, 5, 104.0, 6.0, None, None),     # other life: no carry
+    ]
+    l3 = pd.DataFrame({
+        "order_id": [r[0] for r in rows],
+        "life_no": np.array([r[1] for r in rows], "i4"),
+        "event_no": np.array([r[2] for r in rows], "i4"),
+        "microtimestamp": [t(r[3]) for r in rows],
+        "era": era,
+        "price": [r[4] for r in rows],
+        "amount": [r[5] for r in rows],
+        "fill": np.array([r[6] for r in rows], "f8"),
+        "price_microtimestamp": [t(r[3]) for r in rows],
+        "price_event_no": np.array([r[2] for r in rows], "i4"),
+        "chain_state": [r[7] for r in rows],
+    })
+    got = finalize_open_chains(l3)
+    pd.testing.assert_frame_equal(got, _finalize_by_row(l3))
+    assert got["chain_state"].tolist() == [
+        "chained", "deleted", "deleted", "deleted", "chained", "chained",
+        "alive", "deleted", "deleted"]
+    assert got.loc[1, "price"] == 100.0 and np.isnan(got.loc[1, "fill"])
