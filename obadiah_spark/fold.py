@@ -527,6 +527,24 @@ def depth_change_fold(l3: DataFrame) -> DataFrame:
     return stream_fold(l3.select(*_EVENT_COLS), _DepthFolder, DEPTH_SCHEMA)
 
 
+def fold_at(l3: DataFrame, folder: type[EpisodeFolder], schema: str,
+            at: str) -> DataFrame:
+    """``folder``'s output for the book state AT ``at`` (closed): the live
+    set (:func:`~obadiah_spark.operators.order_book.live_at`) re-stamped to
+    ``at`` is one episode per (pair, exchange, era), so the folder's first
+    emission is the starting row of a range overload — the reference's
+    ``level2_continuous(p_start_time, ...)`` starting depth, bucketed like
+    any other episode (db/get_schema.sql:115-130). A pair whose book is
+    empty at ``at`` has no live event, hence no episode and no row."""
+    from pyspark.sql import functions as F
+
+    from obadiah_spark.operators.order_book import live_at
+
+    live = live_at(l3, at).withColumn(
+        "microtimestamp", F.lit(at).cast("timestamp"))
+    return stream_fold(live.select(*_EVENT_COLS), folder, schema)
+
+
 # ----------------------------------------------- period decomposition (D3) --
 
 def _period_start(ts, freq_us: int):

@@ -19,9 +19,13 @@ survive 100× data without plan change.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from obadiah_spark.fold import BucketFolder, fold_at, period_fold
+from obadiah_spark.operators.order_book import live_at
 
 
 # ------------------------------------------- F1 frequency-grid helpers ------
@@ -276,8 +280,6 @@ def get_spread(l3, l1, start: str, end: str, frequency_s: int | None = None):
     and consecutive equal grid rows are suppressed per (pair, era) —
     exactly what folding the ceiled event cursor (episode.cpp:91-101)
     produces."""
-    from obadiah_spark.operators.order_book import live_at
-
     from obadiah_spark.functions import validate_parameters
 
     validate_parameters(start, end)  # F6 range guard (get_schema.sql:150-159)
@@ -285,40 +287,37 @@ def get_spread(l3, l1, start: str, end: str, frequency_s: int | None = None):
         return _get_spread_freq(l3, l1, start, end, frequency_s)
     start_c = F.lit(start).cast("timestamp")
     end_c = F.lit(end).cast("timestamp")
-    live = live_at(l3, start, before=True)
-    lvl = live.groupBy("pair_id", "side", "price").agg(F.sum("amount").alias("qty"))
-    best = lvl.groupBy("pair_id").agg(
-        F.max(F.when(F.col("side") == "b", F.col("price"))).alias("best_bid_price"),
-        F.min(F.when(F.col("side") == "s", F.col("price"))).alias("best_ask_price"),
-    )
-    starting = (
-        best.join(lvl, "pair_id")
-        .groupBy("pair_id", "best_bid_price", "best_ask_price")
-        .agg(
-            F.max(F.when((F.col("side") == "b")
-                         & (F.col("price") == F.col("best_bid_price")),
-                         F.col("qty"))).alias("best_bid_qty"),
-            F.max(F.when((F.col("side") == "s")
-                         & (F.col("price") == F.col("best_ask_price")),
-                         F.col("qty"))).alias("best_ask_qty"),
-        )
-        .select("pair_id", start_c.alias("microtimestamp"),
-                "best_bid_price", "best_bid_qty", "best_ask_price", "best_ask_qty")
-    )
+    starting = spread_at(l3, start)
     stream = l1.filter(
         (F.col("microtimestamp") > start_c) & (F.col("microtimestamp") <= end_c)
-    ).select("pair_id", "microtimestamp",
-             "best_bid_price", "best_bid_qty", "best_ask_price", "best_ask_qty")
+    ).select("pair_id", "microtimestamp", *_SPREAD_COLS)
     return starting.unionByName(stream)
 
 
 _SPREAD_COLS = ["best_bid_price", "best_bid_qty", "best_ask_price", "best_ask_qty"]
 
 
+def _starting_spread(l3, at: str, before: bool, keys=("pair_id",)):
+    """Level1 of the book at ``at`` per ``keys`` (the instant before with
+    ``before``, else closed at ``at``), stamped at ``at``: the best price
+    per side and that level's volume, one aggregate over the level sums
+    (the reference's ``_spread_from_depth`` over ``_starting_depth``,
+    db/obanalytics_schema.sql:1064-1112)."""
+    lvl = live_at(l3, at, before=before).groupBy(*keys, "side", "price").agg(
+        F.sum("amount").alias("qty"))
+    bid = F.when(F.col("side") == "b", F.col("price"))
+    ask = F.when(F.col("side") == "s", F.col("price"))
+    return lvl.groupBy(*keys).agg(
+        F.max(bid).alias("best_bid_price"),
+        F.max_by("qty", bid).alias("best_bid_qty"),
+        F.min(ask).alias("best_ask_price"),
+        F.min_by("qty", ask).alias("best_ask_qty"),
+    ).select(*keys, F.lit(at).cast("timestamp").alias("microtimestamp"),
+             *_SPREAD_COLS)
+
+
 def _get_spread_freq(l3, l1, start: str, end: str, frequency_s: int):
     """Grid overload body of :func:`get_spread` (see its docstring)."""
-    from obadiah_spark.operators.order_book import live_at
-
     lo = date_floor_s(start, frequency_s)
     hi = date_floor_s(end, frequency_s)
     lo_c = F.lit(lo).cast("timestamp")
@@ -328,26 +327,7 @@ def _get_spread_freq(l3, l1, start: str, end: str, frequency_s: int):
     # the boundary emits at ceil(lo)=lo, so its effect belongs to the lo
     # row; folding it into the seeded starting spread yields the same
     # observable state at every instant >= lo with one row instead of two.
-    live = live_at(l3, lo, before=False)
-    lvl = live.groupBy("pair_id", "era", "side", "price").agg(
-        F.sum("amount").alias("qty"))
-    best = lvl.groupBy("pair_id", "era").agg(
-        F.max(F.when(F.col("side") == "b", F.col("price"))).alias("best_bid_price"),
-        F.min(F.when(F.col("side") == "s", F.col("price"))).alias("best_ask_price"),
-    )
-    starting = (
-        best.join(lvl, ["pair_id", "era"])
-        .groupBy("pair_id", "era", "best_bid_price", "best_ask_price")
-        .agg(
-            F.max(F.when((F.col("side") == "b")
-                         & (F.col("price") == F.col("best_bid_price")),
-                         F.col("qty"))).alias("best_bid_qty"),
-            F.max(F.when((F.col("side") == "s")
-                         & (F.col("price") == F.col("best_ask_price")),
-                         F.col("qty"))).alias("best_ask_qty"),
-        )
-        .select("pair_id", "era", lo_c.alias("microtimestamp"), *_SPREAD_COLS)
-    )
+    starting = _starting_spread(l3, lo, before=False, keys=("pair_id", "era"))
     # last level1 state within each grid interval wins, stamped at the
     # closed right boundary
     cand = (
@@ -479,34 +459,10 @@ def spread_at(l3, at: str, frequency_s: int | None = None):
     overload (db/get_schema.sql:640-653): the starting spread alone —
     ``_spread_from_depth`` over ``_starting_depth`` at ``at`` (grid-floored
     when ``frequency_s`` is given), no stream. One row per pair."""
-    from obadiah_spark.operators.order_book import live_at
-
     lo = at if frequency_s is None else date_floor_s(at, frequency_s)
-    lo_c = F.lit(lo).cast("timestamp")
     # the single-point overload always reads the book BEFORE the instant
     # (order_book p_before := true via _starting_depth, get_schema.sql:115)
-    live = live_at(l3, lo, before=True)
-    lvl = live.groupBy("pair_id", "side", "price").agg(
-        F.sum("amount").alias("qty"))
-    best = lvl.groupBy("pair_id").agg(
-        F.max(F.when(F.col("side") == "b", F.col("price"))).alias("best_bid_price"),
-        F.min(F.when(F.col("side") == "s", F.col("price"))).alias("best_ask_price"),
-    )
-    return (
-        best.join(lvl, "pair_id")
-        .groupBy("pair_id", "best_bid_price", "best_ask_price")
-        .agg(
-            F.max(F.when((F.col("side") == "b")
-                         & (F.col("price") == F.col("best_bid_price")),
-                         F.col("qty"))).alias("best_bid_qty"),
-            F.max(F.when((F.col("side") == "s")
-                         & (F.col("price") == F.col("best_ask_price")),
-                         F.col("qty"))).alias("best_ask_qty"),
-        )
-        .select("pair_id", lo_c.alias("microtimestamp"),
-                "best_bid_price", "best_bid_qty",
-                "best_ask_price", "best_ask_qty")
-    )
+    return _starting_spread(l3, lo, before=True)
 
 
 def spread_at_oracle_sql(at: str, frequency_s: int | None = None) -> str:
@@ -566,8 +522,6 @@ def get_depth(l3, start: str, end: str, frequency_s: int | None = None,
     ``p_starting_depth`` / ``p_depth_changes`` toggles
     (get_schema.sql:239-244) — the R client's interval cache fetches the
     two halves separately when merging cached ranges."""
-    from obadiah_spark.operators.order_book import live_at
-
     from obadiah_spark.functions import validate_parameters
 
     validate_parameters(start, end)  # F6 range guard (get_schema.sql:150-159)
@@ -664,106 +618,15 @@ FROM (
 
 # -------------------------------------------------------- D5 depth_summary --
 
-def depth_summary_at(l3, at: str, bps_step: int = 25,
-                     max_bps_level: int = 500, r0: int = 2):
-    """Single-instant full bucketed depth — the bps arithmetic of D5 over
-    the book state AT ``at`` (closed, events at the instant included),
-    derived relationally from :func:`live_at` instead of a fold. Supplies
-    the starting row of the range overload (the reference's
-    ``level2_continuous(p_start_time, ...)`` emits starting depth at the
-    range start, db/get_schema.sql:115-130, which ``depth_summary_agg``
-    buckets like any other episode). The float op sequence matches the
-    folder and the SQL oracle bit-for-bit (ceil → scale → floor-round)."""
-    from obadiah_spark.operators.order_book import live_at
-
-    scale = 10 ** r0
-    lvl = (
-        live_at(l3, at, before=False)
-        .groupBy("pair_id", "side", "price")
-        .agg(F.sum("amount").alias("qty"))
-        .filter(F.col("qty") > 0)
-    )
-    best = lvl.groupBy("pair_id").agg(
-        F.max(F.when(F.col("side") == "b", F.col("price"))).alias("bb"),
-        F.min(F.when(F.col("side") == "s", F.col("price"))).alias("ba"),
-    )
-    bl = F.when(
-        F.col("side") == "s",
-        F.ceil((F.col("price") - F.col("ba")) / F.col("ba")
-               / F.lit(bps_step) * 10000) * bps_step,
-    ).otherwise(
-        F.ceil((F.col("bb") - F.col("price")) / F.col("bb")
-               / F.lit(bps_step) * 10000) * bps_step)
-    j = (
-        lvl.join(best, "pair_id")
-        .filter(((F.col("side") == "s") & F.col("ba").isNotNull())
-                | ((F.col("side") == "b") & F.col("bb").isNotNull()))
-        .withColumn("_lvl", bl)
-        .filter(F.col("_lvl") <= max_bps_level)
-        .withColumn(
-            "_adj",
-            F.when(F.col("side") == "s",
-                   F.floor(F.col("ba") * (1 + F.col("_lvl") / 10000)
-                           * scale + F.lit(0.5)) / scale)
-            .otherwise(
-                F.floor(F.col("bb") * (1 - F.col("_lvl") / 10000)
-                        * scale + F.lit(0.5)) / scale))
-    )
-    return (
-        j.groupBy(
-            "pair_id",
-            F.when(F.col("side") == "s", "ask").otherwise("bid").alias("side"),
-            F.col("_adj").alias("price"),
-            F.col("_lvl").alias("bps_level"))
-        .agg(F.sum("qty").alias("volume"))
-        .select("pair_id",
-                F.lit(at).cast("timestamp").alias("microtimestamp"),
-                "side", "price", "volume", "bps_level")
-    )
+_DEPTH_SUMMARY_SCHEMA = ("pair_id int, microtimestamp timestamp, side string, "
+                         "price double, volume double, bps_level bigint")
 
 
-def depth_summary_fold(l3, bps_step: int = 25, max_bps_level: int = 500, r0: int = 2,
-                       period_s: int | None = 86400,
-                       frequency_s: int | None = None,
-                       start: str | None = None, end: str | None = None):
-    """D5 ``get.depth_summary``: per change-episode, the FULL depth bucketed
-    by bps distance from the best price (reference db/get_schema.sql:278-298;
-    bucketing db/obanalytics_schema.sql:662-712): bps_level =
-    ceil(((price−best)/best)/step*10⁴)*step, price re-projected to the bucket
-    boundary rounded to the pair tick (R0), volumes summed per bucket.
-
-    Runs in the book fold (depth state is O(levels)); the oracle re-derives
-    the same from the episode×level grid. Rounding is floor(x*100+0.5)/100 on
-    BOTH engines (python and SQL share the op sequence bit-for-bit).
-
-    ``period_s`` splits eras into seeded periods (fold.period_fold) so
-    parallelism is #periods; every output row belongs to one episode and
-    the only cross-episode state is the book + emitted map (both seeded),
-    so the split output is identical (pytest-enforced).
-
-    ``frequency_s`` is the reference's ``p_frequency`` output grid
-    (db/get_schema.sql:278): the event log is resampled onto the
-    closed-right ceiling grid (:func:`grid_sample_l3`) so the summary
-    emits at most once per grid interval, with the true full-depth
-    buckets at each grid point.
-
-    ``start``/``end`` (both or neither) are the reference's
-    p_start_time/p_end_time: a full bucketed snapshot AT ``start``
-    (:func:`depth_summary_at` — the level2_continuous starting-depth
-    episode) plus change episodes in ``(start, end]``, computed by PRUNED
-    period folding (only the periods intersecting the range shuffle —
-    O(range), not O(history)). Boundary convention matches the engine's
-    freq path: the starting row is CLOSED at start, change episodes
-    strictly after — one row per instant, same observable state as the
-    reference's starting+change pair. With ``frequency_s`` too, the log
-    is grid-sampled first, then the range applies to the sampled log."""
-    import math
-
-    from obadiah_spark.fold import BucketFolder, period_fold
-
-    if frequency_s is not None:
-        l3 = grid_sample_l3(l3, frequency_s)
-
+def _depth_summary_folder(bps_step: int, max_bps_level: int, r0: int):
+    """D5's bucket folder: a level's key is its bps distance from its own
+    side's best, ceil(((price−best)/best)/step*10⁴)*step, and the price
+    re-projected to that bucket boundary rounded to the pair tick (R0) as
+    floor(x*10^r0+0.5)/10^r0 — the SQL oracle's op sequence."""
     scale = 10 ** r0
 
     class _DepthSummaryFolder(BucketFolder):
@@ -801,9 +664,62 @@ def depth_summary_fold(l3, bps_step: int = 25, max_bps_level: int = 500, r0: int
                 out["volume"].append(vol)
                 out["bps_level"].append(lvl)
 
-    schema = ("pair_id int, microtimestamp timestamp, side string, "
-              "price double, volume double, bps_level bigint")
-    folded = period_fold(l3, _DepthSummaryFolder, schema, period_s, start, end)
+    return _DepthSummaryFolder
+
+
+def depth_summary_at(l3, at: str, bps_step: int = 25,
+                     max_bps_level: int = 500, r0: int = 2):
+    """Single-instant full bucketed depth — D5's folder over the book state
+    AT ``at`` (closed, events at the instant included), via
+    :func:`obadiah_spark.fold.fold_at`. Supplies the starting row of the
+    range overload (the reference's ``level2_continuous(p_start_time,
+    ...)`` emits starting depth at the range start,
+    db/get_schema.sql:115-130, which ``depth_summary_agg`` buckets like any
+    other episode)."""
+    return fold_at(l3, _depth_summary_folder(bps_step, max_bps_level, r0),
+                   _DEPTH_SUMMARY_SCHEMA, at)
+
+
+def depth_summary_fold(l3, bps_step: int = 25, max_bps_level: int = 500, r0: int = 2,
+                       period_s: int | None = 86400,
+                       frequency_s: int | None = None,
+                       start: str | None = None, end: str | None = None):
+    """D5 ``get.depth_summary``: per change-episode, the FULL depth bucketed
+    by bps distance from the best price (reference db/get_schema.sql:278-298;
+    bucketing db/obanalytics_schema.sql:662-712): bps_level =
+    ceil(((price−best)/best)/step*10⁴)*step, price re-projected to the bucket
+    boundary rounded to the pair tick (R0), volumes summed per bucket.
+
+    Runs in the book fold (depth state is O(levels)); the oracle re-derives
+    the same from the episode×level grid. Rounding is floor(x*100+0.5)/100 on
+    BOTH engines (python and SQL share the op sequence bit-for-bit).
+
+    ``period_s`` splits eras into seeded periods (fold.period_fold) so
+    parallelism is #periods; every output row belongs to one episode and
+    the only cross-episode state is the book + emitted map (both seeded),
+    so the split output is identical (pytest-enforced).
+
+    ``frequency_s`` is the reference's ``p_frequency`` output grid
+    (db/get_schema.sql:278): the event log is resampled onto the
+    closed-right ceiling grid (:func:`grid_sample_l3`) so the summary
+    emits at most once per grid interval, with the true full-depth
+    buckets at each grid point.
+
+    ``start``/``end`` (both or neither) are the reference's
+    p_start_time/p_end_time: a full bucketed snapshot AT ``start``
+    (:func:`depth_summary_at` — the level2_continuous starting-depth
+    episode, from the same folder class) plus change episodes in ``(start,
+    end]``, computed by PRUNED period folding (only the periods
+    intersecting the range shuffle — O(range), not O(history)). Boundary
+    convention matches the engine's freq path: the starting row is CLOSED
+    at start, change episodes strictly after — one row per instant, same
+    observable state as the reference's starting+change pair. With
+    ``frequency_s`` too, the log is grid-sampled first, then the range
+    applies to the sampled log."""
+    if frequency_s is not None:
+        l3 = grid_sample_l3(l3, frequency_s)
+    folded = period_fold(l3, _depth_summary_folder(bps_step, max_bps_level, r0),
+                         _DEPTH_SUMMARY_SCHEMA, period_s, start, end)
     if start is None:
         return folded
     starting = depth_summary_at(l3, start, bps_step, max_bps_level, r0)

@@ -22,10 +22,16 @@ oracle, one shuffle on (pair, era, side, price).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from obadiah_spark.operators.depth import DEPTH_CHANGES_CTES, SPREAD_L1_CTES
+from obadiah_spark.fold import BucketFolder, EpisodeFolder, fold_at, period_fold
+from obadiah_spark.operators.depth import (
+    DEPTH_CHANGES_CTES, SPREAD_L1_CTES, grid_sample_l3)
 
 _EPS = 1e-9
 
@@ -49,12 +55,6 @@ def depth_resample(l3: DataFrame, frequency_s: int = 3600, tick: float = 0.05,
     bucket is emitted by exactly one period — the end-of-period flush takes
     the place of the unsplit fold's boundary-crossing emit, and the output
     is identical). ``None`` falls back to the per-era fold."""
-    import math
-
-    import numpy as np
-
-    from obadiah_spark.fold import EpisodeFolder, period_fold
-
     if period_s is not None and period_s % frequency_s != 0:
         raise ValueError("period_s must be a multiple of frequency_s")
 
@@ -114,8 +114,6 @@ def depth_resample(l3: DataFrame, frequency_s: int = 3600, tick: float = 0.05,
     # a grid instant at an era boundary can close buckets of BOTH eras —
     # merge them (the reference grid form aggregates across eras too); tiny
     # output, map-side combinable
-    from pyspark.sql import functions as F
-
     return folded.groupBy("pair_id", "microtimestamp", "side", "tick_price").agg(
         F.sum("volume").alias("volume"))
 
@@ -167,77 +165,15 @@ GROUP BY pair_id, grid_ts, side, tick_price
 """
 
 
-def queues_at(l3: DataFrame, at: str, tick: float = 0.05,
-              max_ticks: int = 10) -> DataFrame:
-    """Single-instant queue buckets — D12's tick arithmetic over the book
-    state AT ``at`` (closed), relational via live_at. Supplies the range
-    overload's starting row (level2_continuous's starting-depth episode,
-    db/get_schema.sql:115-130, bucketed like any other)."""
-    from obadiah_spark.operators.order_book import live_at
-
-    lvl = (
-        live_at(l3, at, before=False)
-        .groupBy("pair_id", "side", "price")
-        .agg(F.sum("amount").alias("qty"))
-        .filter(F.col("qty") > 0)
-    )
-    best = lvl.groupBy("pair_id").agg(
-        F.max(F.when(F.col("side") == "b", F.col("price"))).alias("bb"),
-        F.min(F.when(F.col("side") == "s", F.col("price"))).alias("ba"),
-    )
-    idx = F.when(
-        F.col("side") == "b",
-        F.ceil((F.col("ba") - F.col("price")) / F.lit(tick) - F.lit(_EPS)),
-    ).otherwise(
-        F.ceil((F.col("price") - F.col("bb")) / F.lit(tick) - F.lit(_EPS)))
-    return (
-        lvl.join(best, "pair_id")
-        .filter(((F.col("side") == "b") & F.col("ba").isNotNull())
-                | ((F.col("side") == "s") & F.col("bb").isNotNull()))
-        .withColumn("_idx", idx)
-        .filter((F.col("_idx") >= 1) & (F.col("_idx") <= max_ticks))
-        .groupBy("pair_id", "side", F.col("_idx").alias("tick_idx"))
-        .agg(F.sum("qty").alias("volume"))
-        .select("pair_id",
-                F.lit(at).cast("timestamp").alias("microtimestamp"),
-                "side", "tick_idx", "volume")
-    )
+_QUEUES_SCHEMA = ("pair_id int, microtimestamp timestamp, side string, "
+                  "tick_idx bigint, volume double")
 
 
-def queues(l3: DataFrame, tick: float = 0.05, max_ticks: int = 10,
-           period_s: int | None = 86400,
-           frequency_s: int | None = None,
-           start: str | None = None, end: str | None = None) -> DataFrame:
-    """D12: per change-episode queue volumes bucketed by tick distance from
-    the opposite best (long format: one row per non-empty tick bucket).
-
-    Fold-based (the 100 TB path): one shuffle on the fold keys, the book
-    state supplies per-episode levels AND the opposite best in a linear
-    scan — the declarative episode×level grid survives as the oracle only
-    (it shuffles the grid twice and was ~20× slower at sf0.1).
-
-    ``period_s`` splits each era into seeded periods (fold.period_fold):
-    parallelism = #periods, not #eras — every output row belongs to exactly
-    one episode, so the split output is identical row-for-row (the folder's
-    only cross-episode state is the book + emitted map, both seeded).
-
-    ``frequency_s`` is the reference's ``p_frequency`` output grid
-    (db/get_schema.sql:623): the event log is resampled onto the
-    closed-right ceiling grid (depth.grid_sample_l3) before folding, so
-    queue states emit at most once per grid interval.
-
-    ``start``/``end`` (both or neither) are p_start_time/p_end_time: a
-    full bucketed snapshot AT ``start`` (:func:`queues_at`) plus change
-    episodes in ``(start, end]`` from PRUNED period folding — O(range),
-    not O(history); same boundary convention as depth_summary_fold."""
-    import math
-
-    from obadiah_spark.fold import BucketFolder, period_fold
-
-    if frequency_s is not None:
-        from obadiah_spark.operators.depth import grid_sample_l3
-
-        l3 = grid_sample_l3(l3, frequency_s)
+def _queues_folder(tick: float, max_ticks: int):
+    """D12's bucket folder: a level's key is its integer tick distance
+    from the OPPOSITE best (bids ceil((best_ask−price)/tick), asks
+    ceil((price−best_bid)/tick), epsilon-guarded), kept when in
+    [1, max_ticks]."""
 
     class _QueuesFolder(BucketFolder):
         OUT_COLS = ("pair_id", "microtimestamp", "side", "tick_idx", "volume")
@@ -264,9 +200,49 @@ def queues(l3: DataFrame, tick: float = 0.05, max_ticks: int = 10,
                 out["tick_idx"].append(idx)
                 out["volume"].append(vol)
 
-    schema = ("pair_id int, microtimestamp timestamp, side string, "
-              "tick_idx bigint, volume double")
-    folded = period_fold(l3, _QueuesFolder, schema, period_s, start, end)
+    return _QueuesFolder
+
+
+def queues_at(l3: DataFrame, at: str, tick: float = 0.05,
+              max_ticks: int = 10) -> DataFrame:
+    """Single-instant queue buckets — D12's folder over the book state AT
+    ``at`` (closed), via :func:`obadiah_spark.fold.fold_at`. Supplies the
+    range overload's starting row (level2_continuous's starting-depth
+    episode, db/get_schema.sql:115-130, bucketed like any other)."""
+    return fold_at(l3, _queues_folder(tick, max_ticks), _QUEUES_SCHEMA, at)
+
+
+def queues(l3: DataFrame, tick: float = 0.05, max_ticks: int = 10,
+           period_s: int | None = 86400,
+           frequency_s: int | None = None,
+           start: str | None = None, end: str | None = None) -> DataFrame:
+    """D12: per change-episode queue volumes bucketed by tick distance from
+    the opposite best (long format: one row per non-empty tick bucket).
+
+    Fold-based (the 100 TB path): one shuffle on the fold keys, the book
+    state supplies per-episode levels AND the opposite best in a linear
+    scan — the declarative episode×level grid survives as the oracle only
+    (it shuffles the grid twice and was ~20× slower at sf0.1).
+
+    ``period_s`` splits each era into seeded periods (fold.period_fold):
+    parallelism = #periods, not #eras — every output row belongs to exactly
+    one episode, so the split output is identical row-for-row (the folder's
+    only cross-episode state is the book + emitted map, both seeded).
+
+    ``frequency_s`` is the reference's ``p_frequency`` output grid
+    (db/get_schema.sql:623): the event log is resampled onto the
+    closed-right ceiling grid (depth.grid_sample_l3) before folding, so
+    queue states emit at most once per grid interval.
+
+    ``start``/``end`` (both or neither) are p_start_time/p_end_time: a
+    full bucketed snapshot AT ``start`` (:func:`queues_at`, the same
+    folder class) plus change episodes in ``(start, end]`` from PRUNED period
+    folding — O(range), not O(history); same boundary convention as
+    depth_summary_fold."""
+    if frequency_s is not None:
+        l3 = grid_sample_l3(l3, frequency_s)
+    folded = period_fold(l3, _queues_folder(tick, max_ticks), _QUEUES_SCHEMA,
+                         period_s, start, end)
     if start is None:
         return folded
     return queues_at(l3, start, tick, max_ticks).unionByName(folded)

@@ -30,7 +30,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from obadiah_spark.fold import EpisodeFolder, ordered_fold, period_fold
+from obadiah_spark.fold import EpisodeFolder, fold_at, ordered_fold, period_fold
+from obadiah_spark.operators.depth import SPREAD_L1_CTES, grid_sample_l3
 
 _NAN = float("nan")
 
@@ -81,129 +82,10 @@ def _pair_eq(a: float, b: float) -> bool:
     return (math.isnan(a) and math.isnan(b)) or a == b
 
 
-def effective_spread_at(l3: DataFrame, at: str,
-                        volume: float = 0.0) -> DataFrame:
-    """Single-instant effective bid/ask for executing ``volume`` — the
-    relational form of :func:`_effective_price` over the book state AT
-    ``at`` (closed): bids walk from the highest price down, asks from the
-    lowest up, VWAP over the first ``volume`` units (reference
-    src/base.h:288-349). Supplies the starting row of the range overload.
-
-    One row per (pair, era-containing-at) that has ANY event at or before
-    ``at`` — a pair whose book is empty at the instant still has a
-    prevailing (NULL, NULL) state, mirroring the fold's emit semantics
-    after the book empties."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from obadiah_spark.operators.order_book import live_at
-
-    at_c = F.lit(at).cast("timestamp")
-    # pairs with a defined prevailing state: era containing `at` has events
-    w_pair = W.partitionBy("pair_id", "exchange_id")
-    base = (
-        l3.filter(F.col("era") <= at_c)
-        .withColumn("_cur", F.max("era").over(w_pair))
-        .filter((F.col("era") == F.col("_cur"))
-                & (F.col("microtimestamp") <= at_c))
-        .select("pair_id", "era").distinct()
-    )
-    lvl = (
-        live_at(l3, at, before=False)
-        .groupBy("pair_id", "era", "side", "price")
-        .agg(F.sum("amount").alias("qty"))
-        .filter(F.col("qty") > 0)
-    )
-    if volume == 0:
-        eff = lvl.groupBy("pair_id", "era").agg(
-            F.max(F.when(F.col("side") == "b", F.col("price")))
-            .alias("bid_price"),
-            F.min(F.when(F.col("side") == "s", F.col("price")))
-            .alias("ask_price"),
-        )
-    else:
-        # price-ordered walk per side, FLOAT-FAITHFUL to the folder's
-        # sequential loop: _prev is the exclusive running sum (the loop's
-        # `v` before this level — NOT `_cum - qty`, whose float value can
-        # differ and flip the fillability test at the boundary), `_take`
-        # mirrors `min(q, volume - v)`, the accumulator is a sequential
-        # running sum (post-fill takes are exact 0.0, so trailing rows
-        # leave it unchanged), fillability is `v + q >= volume` on the
-        # last contributing row, and the VWAP divides by exactly
-        # ``volume`` (the loop pins v = volume on fill)
-        order_expr = (F.when(F.col("side") == "b", -F.col("price"))
-                      .otherwise(F.col("price")))
-        w_run = (W.partitionBy("pair_id", "era", "side").orderBy(order_expr)
-                 .rowsBetween(W.unboundedPreceding, W.currentRow))
-        w_prev = (W.partitionBy("pair_id", "era", "side").orderBy(order_expr)
-                  .rowsBetween(W.unboundedPreceding, -1))
-        walked = (
-            lvl.withColumn(
-                "_prev", F.coalesce(F.sum("qty").over(w_prev), F.lit(0.0)))
-            .withColumn(
-                "_take",
-                F.when(F.col("_prev") < volume,
-                       F.least(F.col("qty"), F.lit(volume) - F.col("_prev")))
-                .otherwise(F.lit(0.0)))
-            .withColumn("_acc", F.sum(F.col("_take") * F.col("price"))
-                        .over(w_run))
-            .withColumn("_filled",
-                        F.col("_prev") + F.col("qty") >= F.lit(volume))
-        )
-        per_side = (
-            walked.groupBy("pair_id", "era", "side")
-            .agg(F.max_by(F.col("_acc"), F.struct(
-                F.col("_prev"), F.col("qty"))).alias("_acc_last"),
-                 F.max("_filled").alias("_fillable"))
-            .withColumn(
-                "_eff",
-                F.when(F.col("_fillable"),
-                       F.col("_acc_last") / F.lit(volume)))
-        )
-        eff = per_side.groupBy("pair_id", "era").agg(
-            F.max(F.when(F.col("side") == "b", F.col("_eff")))
-            .alias("bid_price"),
-            F.max(F.when(F.col("side") == "s", F.col("_eff")))
-            .alias("ask_price"),
-        )
-    return (
-        base.join(eff, ["pair_id", "era"], "left")
-        .select("pair_id", "era", at_c.alias("microtimestamp"),
-                "bid_price", "ask_price")
-    )
-
-
-def trading_period_fold(l3: DataFrame, volume: float = 0.0,
-                        period_s: int | None = 86400,
-                        frequency_s: int | None = None,
-                        start: str | None = None,
-                        end: str | None = None) -> DataFrame:
-    """T1: effective bid/ask stream for executing ``volume``, emit-on-change.
-
-    At volume=0 this equals the best-price projection of the spread fold —
-    that identity is the operator's differential oracle.
-
-    ``period_s`` splits each era into seeded periods (fold.period_fold):
-    parallelism = #periods, not #eras. The emit-on-change state is restored
-    from the seeded book (after any emission the prevailing pair always
-    equals the book-derived effective prices, so recomputing them from the
-    seed reproduces the unsplit dedup exactly).
-
-    ``frequency_s`` is the reference's ``p_frequency`` grid
-    (db/get_schema.sql:729 — the C CalculateTradingPeriod consumes the
-    level1 stream sampled at that interval): the event log is resampled
-    onto the closed-right ceiling grid (depth.grid_sample_l3), so the
-    effective-price stream changes at most once per grid interval.
-
-    ``start``/``end`` (both or neither) are p_start_time/p_end_time
-    (get_schema.sql:729): the prevailing effective-price row AT ``start``
-    (:func:`effective_spread_at`) plus emit-on-change rows in
-    ``(start, end]`` from PRUNED period folding — O(range), not
-    O(history); same convention as depth_summary_fold."""
-    if frequency_s is not None:
-        from obadiah_spark.operators.depth import grid_sample_l3
-
-        l3 = grid_sample_l3(l3, frequency_s)
+def _trading_period_folder(volume: float):
+    """T1's emit-on-change folder: the effective (bid, ask) for executing
+    ``volume`` after each episode, emitted when either side changes (NaN
+    equal to NaN); a leading empty book emits nothing."""
 
     class _TradingPeriodFolder(EpisodeFolder):
         OUT_COLS = ("pair_id", "era", "microtimestamp", "bid_price", "ask_price")
@@ -243,8 +125,75 @@ def trading_period_fold(l3: DataFrame, volume: float = 0.0,
                 out["ask_price"].append(None if math.isnan(a) else a)
                 self._prev_b, self._prev_a = b, a
 
-    folded = period_fold(l3, _TradingPeriodFolder, TRADING_PERIOD_SCHEMA,
-                         period_s, start, end)
+    return _TradingPeriodFolder
+
+
+def effective_spread_at(l3: DataFrame, at: str,
+                        volume: float = 0.0) -> DataFrame:
+    """Single-instant effective bid/ask for executing ``volume`` over the
+    book state AT ``at`` (closed) — T1's folder run on that one state
+    (:func:`obadiah_spark.fold.fold_at`): bids walk from the highest price
+    down, asks from the lowest up, VWAP over the first ``volume`` units
+    (reference src/base.h:288-349). Supplies the starting row of the range
+    overload.
+
+    One row per (pair, era-containing-at) that has ANY event at or before
+    ``at`` — a pair whose book is empty at the instant still has a
+    prevailing (NULL, NULL) state, mirroring the fold's emit semantics
+    after the book empties (an empty book has no live event, so
+    ``fold_at`` has no row for it and the left join supplies the NULLs)."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    at_c = F.lit(at).cast("timestamp")
+    # pairs with a defined prevailing state: era containing `at` has events
+    w_pair = W.partitionBy("pair_id", "exchange_id")
+    base = (
+        l3.filter(F.col("era") <= at_c)
+        .withColumn("_cur", F.max("era").over(w_pair))
+        .filter((F.col("era") == F.col("_cur"))
+                & (F.col("microtimestamp") <= at_c))
+        .select("pair_id", "era").distinct()
+    )
+    eff = fold_at(l3, _trading_period_folder(volume), TRADING_PERIOD_SCHEMA, at)
+    return (
+        base.join(eff.drop("microtimestamp"), ["pair_id", "era"], "left")
+        .select("pair_id", "era", at_c.alias("microtimestamp"),
+                "bid_price", "ask_price")
+    )
+
+
+def trading_period_fold(l3: DataFrame, volume: float = 0.0,
+                        period_s: int | None = 86400,
+                        frequency_s: int | None = None,
+                        start: str | None = None,
+                        end: str | None = None) -> DataFrame:
+    """T1: effective bid/ask stream for executing ``volume``, emit-on-change.
+
+    At volume=0 this equals the best-price projection of the spread fold —
+    that identity is the operator's differential oracle.
+
+    ``period_s`` splits each era into seeded periods (fold.period_fold):
+    parallelism = #periods, not #eras. The emit-on-change state is restored
+    from the seeded book (after any emission the prevailing pair always
+    equals the book-derived effective prices, so recomputing them from the
+    seed reproduces the unsplit dedup exactly).
+
+    ``frequency_s`` is the reference's ``p_frequency`` grid
+    (db/get_schema.sql:729 — the C CalculateTradingPeriod consumes the
+    level1 stream sampled at that interval): the event log is resampled
+    onto the closed-right ceiling grid (depth.grid_sample_l3), so the
+    effective-price stream changes at most once per grid interval.
+
+    ``start``/``end`` (both or neither) are p_start_time/p_end_time
+    (get_schema.sql:729): the prevailing effective-price row AT ``start``
+    (:func:`effective_spread_at`, the same folder) plus emit-on-change
+    rows in ``(start, end]`` from PRUNED period folding — O(range), not
+    O(history); same convention as depth_summary_fold."""
+    if frequency_s is not None:
+        l3 = grid_sample_l3(l3, frequency_s)
+    folded = period_fold(l3, _trading_period_folder(volume),
+                         TRADING_PERIOD_SCHEMA, period_s, start, end)
     if start is None:
         return folded
     return effective_spread_at(l3, start, volume).unionByName(folded)
@@ -444,8 +393,6 @@ WHERE pb IS DISTINCT FROM bid_price OR pa IS DISTINCT FROM ask_price
 
 
 def trading_period_v0_oracle() -> str:
-    from obadiah_spark.operators.depth import SPREAD_L1_CTES
-
     return f"WITH {SPREAD_L1_CTES}{TRADING_PERIOD_V0_ORACLE_BODY_SUFFIX}"
 
 
@@ -453,8 +400,6 @@ def trading_period_v0_range_oracle(start: str, end: str) -> str:
     """Range form of the v0 oracle: emitted rows in (start, end] plus the
     last in-era emission at/before start re-stamped to it (independent of
     the engine's live-set starting derivation)."""
-    from obadiah_spark.operators.depth import SPREAD_L1_CTES
-
     return f"""
 WITH {SPREAD_L1_CTES}, tp AS (
     SELECT pair_id, era, ts,
@@ -649,8 +594,6 @@ def trading_strategy_mid_oracle_sql(phi: float, rho: float = 0.0,
     direct-comparison text verbatim — ln-form and direct-form agree
     except at ln-rounding ties the gate fabric never produces, and the
     rho = 0 gates are hash-anchored to the original text."""
-    from obadiah_spark.operators.depth import SPREAD_L1_CTES
-
     if rho != 0.0:
         return _trading_strategy_mid_rho_sql(phi, rho, mid_cte)
     comm = repr(2.0 * max(float(phi), 0.0))
@@ -756,8 +699,6 @@ def _trading_strategy_mid_rho_sql(phi: float, rho: float,
     since it fails to outrun interest), extensions and closes race the
     accrued interest, and the close-no-reopen branches fire when interest
     alone exceeds what commission leaves of the retracement."""
-    from obadiah_spark.operators.depth import SPREAD_L1_CTES
-
     comm = repr(2.0 * max(float(phi), 0.0))
     r = repr(max(float(rho), 0.0))
     mid = mid_cte if mid_cte is not None else _MID_CTE
@@ -878,8 +819,6 @@ def epsilon_draws_mid_oracle_sql(epsilon: float,
     """Recursive-CTE replay of _discover_draws over the mid-price stream.
 
     ``mid_cte`` substitutes the mid-price source (range overload)."""
-    from obadiah_spark.operators.depth import SPREAD_L1_CTES
-
     eps = repr(float(epsilon))
     mid = mid_cte if mid_cte is not None else _MID_CTE
     return f"""

@@ -247,6 +247,114 @@ def test_range_with_frequency_combo(spark, level3):
     assert len(a) > 0
 
 
+_STARTING_ROW_SURFACES = ["spread_at", "get_spread", "get_spread_freq",
+                          "queues_range", "depth_summary_range",
+                          "trading_period_range"]
+
+
+@pytest.mark.parametrize("surface", _STARTING_ROW_SURFACES)
+def test_starting_row_surfaces_vs_duckdb(spark, duck, level3, surface):
+    """Every surface that emits a starting row at ``start`` against its
+    independent DuckDB oracle (the range tests above build both sides of
+    their snapshot from the same folder, so only an oracle pins the
+    folder's starting arithmetic itself)."""
+    from pyspark.sql import functions as F
+
+    from obadiah_spark.operators.depth import (
+        depth_summary_fold, depth_summary_oracle_sql, get_spread,
+        get_spread_freq_oracle_sql, get_spread_oracle_sql, spread_at,
+        spread_at_oracle_sql)
+    from obadiah_spark.operators.resample import queues, queues_oracle_sql
+    from obadiah_spark.operators.trading import (
+        trading_period_fold, trading_period_v0_range_oracle)
+
+    lo, hi = level3.agg(
+        F.min("microtimestamp"), F.max("microtimestamp")).first()
+    span = hi - lo
+    start = (lo + span / 3).strftime("%Y-%m-%d %H:%M:%S")
+    end = (lo + 2 * span / 3).strftime("%Y-%m-%d %H:%M:%S")
+
+    got, oracle = {
+        "spread_at": (lambda: spread_at(level3, start),
+                      lambda: spread_at_oracle_sql(start)),
+        "get_spread": (lambda: get_spread(level3, spread_fold(level3),
+                                          start, end),
+                       lambda: get_spread_oracle_sql(start, end)),
+        "get_spread_freq": (
+            lambda: get_spread(level3, spread_fold(level3), start, end,
+                               frequency_s=300),
+            lambda: get_spread_freq_oracle_sql(start, end, 300)),
+        "queues_range": (lambda: queues(level3, start=start, end=end),
+                         lambda: queues_oracle_sql(start=start, end=end)),
+        "depth_summary_range": (
+            lambda: depth_summary_fold(level3, start=start, end=end),
+            lambda: depth_summary_oracle_sql(start=start, end=end)),
+        "trading_period_range": (
+            lambda: trading_period_fold(level3, start=start, end=end),
+            lambda: trading_period_v0_range_oracle(start, end)),
+    }[surface]
+    spark_pdf = got().toPandas()
+    duck_pdf = duck.sql(level3_cte(oracle())).df()
+    assert len(spark_pdf) > 0, "range picked an empty window — fixture drifted"
+    assert not compare(surface, spark_pdf, duck_pdf)
+
+
+def test_range_starting_row_on_empty_book(spark):
+    """A pair whose only order was deleted before ``start`` has an empty
+    book there: trading_period's range overload still carries its
+    prevailing (NULL, NULL) row at ``start``, while the bucket folds emit
+    no starting row (an empty book has no buckets). A pair with no event
+    before ``start`` has no prevailing state at all, so no fold emits a
+    starting row for it. The fabric always has live orders, so the case
+    is built by hand."""
+    import pandas as pd
+
+    from obadiah_spark.operators.depth import depth_summary_fold
+    from obadiah_spark.operators.resample import queues
+    from obadiah_spark.operators.trading import trading_period_fold
+
+    era = "2024-01-01 00:00:00"
+    start, end = "2024-01-01 01:00:00", "2024-01-01 03:00:00"
+    rows = [
+        # pair 1: order 1 created then deleted, both before start
+        (1, 1, "2024-01-01 00:00:01", 1, "b", 100.0, 1.0, "chained",
+         "2024-01-01 00:00:02", 2),
+        (1, 2, "2024-01-01 00:00:02", 1, "b", 100.0, 1.0, "deleted",
+         None, None),
+        # pair 2: a two-sided book that opens only after start
+        (2, 1, "2024-01-01 02:00:00", 2, "b", 100.0, 1.0, "alive",
+         None, None),
+        (2, 1, "2024-01-01 02:00:00", 3, "s", 100.25, 1.0, "alive",
+         None, None),
+    ]
+    l3 = spark.createDataFrame(
+        [(pair, 1, era, ts, oid, ev, side, price, amount, state, nxt, nev, 1)
+         for pair, ev, ts, oid, side, price, amount, state, nxt, nev in rows],
+        "pair_id int, exchange_id int, era string, microtimestamp string, "
+        "order_id long, event_no int, side string, price double, "
+        "amount double, chain_state string, next_microtimestamp string, "
+        "next_event_no int, life_no int",
+    ).selectExpr("pair_id", "exchange_id", "CAST(era AS TIMESTAMP) era",
+                 "CAST(microtimestamp AS TIMESTAMP) microtimestamp",
+                 "order_id", "event_no", "side", "price", "amount",
+                 "chain_state",
+                 "CAST(next_microtimestamp AS TIMESTAMP) next_microtimestamp",
+                 "next_event_no", "life_no")
+
+    def at_start(df):
+        pdf = df.toPandas()
+        return pdf[pdf["microtimestamp"] == pd.Timestamp(start)]
+
+    tp = at_start(trading_period_fold(l3, start=start, end=end))
+    assert tp["pair_id"].tolist() == [1]
+    assert tp["bid_price"].isna().all() and tp["ask_price"].isna().all()
+    for fold in (queues, depth_summary_fold):
+        assert at_start(fold(l3, start=start, end=end)).empty, fold.__name__
+        # pair 2's book opens inside the range, so the fold itself runs
+        assert (fold(l3, start=start, end=end).toPandas()["pair_id"]
+                == 2).any(), fold.__name__
+
+
 def test_grid_sample_idempotent_and_boundary(spark, level3):
     """grid_sample_l3 invariants: (a) idempotent — sampling a sampled log
     changes nothing (every ts already sits on the grid, and the ceiling

@@ -116,9 +116,9 @@ def test_trading_period_volume_walk(spark, level3):
 
 
 def test_effective_spread_at_matches_loop_walk(spark):
-    """The relational single-instant effective price must equal the
-    folder's sequential loop bit-for-bit — including the float boundary
-    where cum(0.1+0.2) >= 0.3 only under the loop's accumulation order."""
+    """The single-instant effective price must equal the folder's
+    sequential loop bit-for-bit — including the float boundary where
+    cum(0.1+0.2) >= 0.3 only under the loop's accumulation order."""
     import math
 
     from obadiah_spark.operators.trading import (
