@@ -62,6 +62,8 @@ same links, merged by key).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -69,12 +71,11 @@ from pyspark.sql.window import Window as W
 from obadiah_spark.operators.matching import (
     match_fill_exact_oracle_sql,
     match_price_and_fill_exact,
-    match_sequential,
     match_sequential_body_sql,
+    match_sequential_grid,
     match_sequential_pairs_sql,
     match_sum_of_fills,
     match_sum_of_fills_oracle_sql,
-    sequential_event_pairs,
 )
 
 # reference defaults: p_delay '00:02:00', p_max_interval '02:00:00'
@@ -201,8 +202,7 @@ def incremental_match(l3: DataFrame, trades: DataFrame,
                       max_interval_us: int = MAX_INTERVAL_US,
                       max_delay_s: int = 1, lookback_s: int = 60,
                       max_steps: int = 10_000,
-                      cache_inputs: bool = True,
-                      parallelism: int = 4) -> DataFrame:
+                      cache_inputs: bool = True) -> DataFrame:
     """Drive :func:`incremental_match_step` to the current frame horizon —
     the whole ``pga_match`` lifecycle replayed as a bounded batch loop.
 
@@ -216,7 +216,7 @@ def incremental_match(l3: DataFrame, trades: DataFrame,
     construction is >= every kept link, so the per-step linked-state
     aggregate of :func:`match_frame` is redundant here) — they are known
     up front, and the tiling proof (module docstring) makes the steps
-    INDEPENDENT: a backlog replay therefore submits up to ``parallelism``
+    INDEPENDENT: a backlog replay therefore submits up to four
     chunk jobs concurrently from driver threads (Spark schedules
     concurrent jobs from one session fairly), instead of serializing a
     month of bounded jobs end to end. The live scheduled job
@@ -264,13 +264,8 @@ def incremental_match(l3: DataFrame, trades: DataFrame,
             l3, trades, *frame, max_delay_s, lookback_s
         ).localCheckpoint(eager=True)
 
-    if parallelism > 1 and len(frames) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            steps = list(pool.map(run, frames))
-    else:
-        steps = [run(f) for f in frames]
+    with ThreadPoolExecutor(max_workers=min(4, len(frames))) as pool:
+        steps = list(pool.map(run, frames))
     links = steps[0]
     for step in steps[1:]:
         links = links.unionByName(step)
@@ -361,9 +356,7 @@ def claimed_events(matches: DataFrame) -> DataFrame:
 def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
                          tolerances: tuple[float, ...] = SWEEP_TOLERANCES,
                          max_offset: int = SWEEP_MAX_OFFSET,
-                         claimed: DataFrame | None = None,
-                         cache_inputs: bool = True,
-                         period_s: int | None = None) -> DataFrame:
+                         claimed: DataFrame | None = None) -> DataFrame:
     """The ``bitstamp.pga_match`` sequential-matching sweep (reference
     db/bitstamp_schema.sql:1780-1861): for each tolerance percentage (outer)
     and event offset 1..max_offset (inner), run
@@ -371,8 +364,7 @@ def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
     over the still-unmatched trades, excluding events claimed by earlier
     cells — the reference threads this state through live_trades UPDATEs
     (matched trades leave ``unmatched_trades``) and the live_orders trade_id
-    backfill (claimed events fail ``trade_id is null``); here both are
-    derived from the accumulated result frame.
+    backfill (claimed events fail ``trade_id is null``).
 
     Returns one row per matched trade: the I10 link columns plus
     (tolerance, sweep_offset) provenance — which grid cell matched it.
@@ -395,143 +387,17 @@ def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
     gate's closed loop performs. Orchestration (pgagent cadence, advisory
     locks) is out of scope per SURVEY §2.6.
 
-    Scale: the expensive part — the per-offset lead-window over the full
-    event stream, joined once to the full trade set — runs at most ONCE per
-    offset (``sequential_event_pairs``, checkpointed), not once per grid
-    cell; each cell then anti-joins and resolves over that offset's small
-    candidate frame. Offsets are built lazily: offset 1 first, and offsets
-    2..k only when the grid reaches them — or all at once, concurrently,
-    as soon as offset 1's stats show that the first cell cannot match
-    every trade. Cells with zero feasible candidates at their tolerance are
-    skipped without running any jobs, and the grid stops as soon as every
-    matchable trade is matched; both prunes are exact, so the output is
-    the full grid's. ``period_s`` passes through to
-    :func:`sequential_event_pairs` — the period-parallel neighbor lookup
-    for reducer-breakingly large eras (same opt-in and same split-equality
-    guarantee as :func:`match_sequential`).
+    Scale: the whole grid is one :func:`match_sequential_grid` plan — one
+    lead-window select for every offset, one candidate join, and one
+    grouped kernel that threads the matched/claimed state from cell to
+    cell per pair. Lazy: no job runs until the result is consumed.
     """
     if not tolerances or max_offset < 1:
         raise ValueError("sweep grid is empty")
-    if cache_inputs:
-        trades = trades.localCheckpoint(eager=True)
-    from concurrent.futures import ThreadPoolExecutor
-    from functools import reduce
-
-    from obadiah_spark.operators.matching import (
-        candidate_feasible_sql, match_candidates, match_feasible,
-        match_resolve)
-
-    max_tol = max(tolerances)
-
-    cand0: dict[int, DataFrame] = {}
-    feas: dict[int, list[int]] = {}
-
-    def _build(off: int, first: bool = False):
-        # the offset's candidate frame (tolerance-independent: the pair
-        # frame joined to every trade) plus one stats job counting its
-        # feasible rows at EACH grid tolerance. The rule's non-NULL set is
-        # monotone in tolerance and the matched/claimed anti-joins only
-        # shrink the frame, so a cell whose count is zero is provably
-        # empty and is skipped.
-        p = sequential_event_pairs(l3, off, period_s)
-        c = match_feasible(
-            match_candidates(p, trades), max_tol).localCheckpoint(eager=True)
-        stats = [F.expr(f"sum(CAST(({candidate_feasible_sql(t)}) AS INT))")
-                 .alias(f"f{i}") for i, t in enumerate(tolerances)]
-        src = c
-        if first:
-            # the same job also counts the trades (unioned in as flagged
-            # rows) and the distinct trades feasible in the first cell
-            stats += [
-                F.expr(f"size(collect_set(CASE WHEN "
-                       f"{candidate_feasible_sql(tolerances[0])} THEN "
-                       f"struct(pair_id, exchange_trade_id) END))"
-                       ).alias("d0"),
-                F.sum("_trade").alias("n_trades")]
-            src = c.withColumn("_trade", F.lit(0)).unionByName(
-                trades.select(F.lit(1).alias("_trade")),
-                allowMissingColumns=True)
-        row = src.agg(*stats).first()
-        cand0[off] = c
-        feas[off] = [row[f"f{i}"] or 0 for i in range(len(tolerances))]
-        return row
-
-    first = _build(1, first=True)
-    # a trade matches in at most one cell, so the grid is done once every
-    # matchable trade is matched; the trade count bounds that number
-    bound = first["n_trades"] or 0
-    if first["d0"] < bound:
-        # the first cell cannot match every trade: build the remaining
-        # offsets now, as concurrent jobs (they are independent of each
-        # other and of the grid state)
-        rest = range(2, max_offset + 1)
-        if len(rest):
-            with ThreadPoolExecutor(max_workers=min(4, len(rest))) as pool:
-                list(pool.map(_build, rest))
-        if cache_inputs:
-            # the tight bound: distinct trades feasible in any offset
-            ids = [cand0[off].select("pair_id", "exchange_trade_id")
-                   for off in cand0 if feas[off][tolerances.index(max_tol)]]
-            bound = (reduce(lambda a, b: a.unionByName(b), ids)
-                     .distinct().count() if ids else 0)
-    n_matched = 0
-    out: DataFrame | None = None
-    for ti, tol in enumerate(tolerances):
-        if n_matched >= bound:
-            break  # every matchable trade matched — the rest is empty
-        for off in range(1, max_offset + 1):
-            if off not in cand0:
-                _build(off)
-            if feas[off][ti] == 0:
-                continue  # provably empty at this tolerance (see above)
-            cl = claimed
-            cand = cand0[off]
-            if out is not None:
-                new_cl = claimed_events(out)
-                cl = new_cl if cl is None else cl.unionByName(new_cl)
-                cand = cand.join(
-                    out.select("pair_id", "exchange_trade_id"),
-                    ["pair_id", "exchange_trade_id"], "left_anti")
-            if cl is not None:
-                # claimed exclusion on the candidate frame — identical to
-                # filtering the pair frame (the trade equi-join commutes
-                # with a filter on the event-side columns) and still AFTER
-                # the lead window, the reference's filter placement.
-                # left_anti is invariant under duplicate build rows, so the
-                # claims need no distinct
-                cand = cand.join(
-                    F.broadcast(cl),
-                    ["pair_id", "era", "microtimestamp", "order_id",
-                     "event_no"], "left_anti")
-                cl2 = cl.select(
-                    "pair_id", "era",
-                    F.col("microtimestamp").alias("n_microtimestamp"),
-                    F.col("order_id").alias("n_order_id"),
-                    F.col("event_no").alias("n_event_no"))
-                cand = cand.join(
-                    F.broadcast(cl2),
-                    ["pair_id", "era", "n_microtimestamp", "n_order_id",
-                     "n_event_no"], "left_anti")
-            m = (
-                match_resolve(cand, tol, checkpoint_proposed=False)
-                .withColumn("tolerance", F.lit(float(tol)))
-                .withColumn("sweep_offset", F.lit(off))
-            )
-            # the ACCUMULATED matches are re-checkpointed as one flat,
-            # single-partition leaf per cell: every later cell's plan stays
-            # one leaf plus three anti-joins, and the state is broadcast
-            # into those anti-joins anyway (claimed_events distributes
-            # over the union)
-            out = (m if out is None else out.unionByName(m)
-                   ).coalesce(1).localCheckpoint(eager=True)
-            n_matched = out.count()  # free: materialized by the checkpoint
-            if n_matched >= bound:
-                break
-    if out is None:  # every offset infeasible — a correctly-typed empty
-        out = (match_resolve(cand0[1], float(tolerances[0]))
-               .withColumn("tolerance", F.lit(float(tolerances[0])))
-               .withColumn("sweep_offset", F.lit(1)))
-    return out
+    return match_sequential_grid(
+        l3, trades,
+        [(t, k) for t in tolerances for k in range(1, max_offset + 1)],
+        claimed)
 
 
 def bitstamp_match_sweep_oracle_sql(
@@ -540,7 +406,7 @@ def bitstamp_match_sweep_oracle_sql(
         trades_cte: str = "sweep_trades") -> str:
     """One-statement DuckDB mirror of :func:`bitstamp_match_sweep`: the grid
     unrolls into chained CTEs — ``sweep_pairs_o{k}`` materialized once per
-    offset (the Spark checkpoint), then per cell i: ``m_i`` (one
+    offset, then per cell i: ``m_i`` (one
     :func:`match_sequential_body_sql` over the not-yet-matched trades
     ``u_i`` with claimed-event exclusion ``c_i``), running union ``acc_i``,
     and the next cell's state ``u_{i+1}``/``c_{i+1}`` derived from it."""

@@ -27,8 +27,16 @@ ids. No quadratic stage.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from functools import partial
+
+import numpy as np
+import pandas as pd
+
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from obadiah_spark.fold import ordered_fold
 
 
 def match_rule(trade_amount: Column, trade_price: Column, event_amount: Column,
@@ -61,13 +69,6 @@ def match_rule_sql(prefix: str, tolerance_pct: float) -> str:
             f"WHEN {f} IS NULL THEN 2 "
             f"WHEN {d} AND {f} = 0 AND abs(t_amount * t_price - {a} * t_price)"
             f" < {tol} THEN 3 END")
-
-
-def candidate_feasible_sql(tolerance_pct: float) -> str:
-    """Both events of a candidate row carry a non-NULL match rule at
-    ``tolerance_pct`` (SQL text)."""
-    return (f"({match_rule_sql('', tolerance_pct)}) IS NOT NULL AND "
-            f"({match_rule_sql('n_', tolerance_pct)}) IS NOT NULL")
 
 
 # aggressor-direction check: the maker (opposite of the taker side) has the
@@ -449,68 +450,48 @@ JOIN mem m ON m.pair_id = s.pair_id AND m.era = s.era
 """
 
 
-def sequential_event_pairs(l3: DataFrame, offset: int = 1,
-                           period_s: int | None = None) -> DataFrame:
-    """The (event, lead(event, offset)) candidate-pair frame of
-    :func:`match_sequential`, tolerance-independent — build once per
-    offset and reuse across a tolerance sweep. See match_sequential for
-    the per-era window vs period-parallel (``period_s``) trade-offs."""
-    is_del = F.col("chain_state") == "deleted"
-    ev0 = l3.select(
-        "pair_id", "era", "microtimestamp", "order_id", "event_no",
-        "side", "amount", "fill", "price_microtimestamp",
-        is_del.alias("is_del"),
-        (is_del | (F.col("event_no") > 1)).alias("is_fillish"),
-    )
-    lead_cols = ("microtimestamp", "order_id", "event_no", "side", "amount",
-                 "fill", "price_microtimestamp", "is_del", "is_fillish")
-    n_names = ("n_microtimestamp", "n_order_id", "n_event_no", "n_side",
-               "n_amount", "n_fill", "n_pts", "n_is_del", "n_is_fillish")
-    if period_s is None:
-        w = W.partitionBy("pair_id", "era").orderBy(
-            "microtimestamp", "order_id", "event_no")
-        ev = ev0.select("*", *[F.lead(src, offset).over(w).alias(dst)
-                               for src, dst in zip(lead_cols, n_names)])
-    else:
-        per = F.floor(
-            F.unix_micros("microtimestamp") / F.lit(period_s * 1_000_000))
-        w_loc = W.partitionBy("pair_id", "era", "_per").orderBy(
-            "microtimestamp", "order_id", "event_no")
-        numbered = ev0.withColumn("_per", per).withColumn(
-            "_rn", F.row_number().over(w_loc))
-        counts = numbered.groupBy("pair_id", "era", "_per").agg(
-            F.count(F.lit(1)).alias("_cnt"))
-        w_cum = (W.partitionBy("pair_id", "era").orderBy("_per")
-                 .rowsBetween(W.unboundedPreceding, -1))
-        bases = counts.withColumn(
-            "_base", F.coalesce(F.sum("_cnt").over(w_cum), F.lit(0))
-        ).drop("_cnt")
-        ev1 = (
-            numbered.join(F.broadcast(bases), ["pair_id", "era", "_per"])
-            .withColumn("_gpos", F.col("_base") + F.col("_rn"))
-            .drop("_per", "_rn", "_base")
-        )
-        nxt = ev1.select(
-            F.col("pair_id").alias("x_pair"), F.col("era").alias("x_era"),
-            (F.col("_gpos") - offset).alias("x_gpos"),
-            *[F.col(src).alias(dst) for src, dst in zip(lead_cols, n_names)],
-        )
-        ev = ev1.join(
-            nxt,
-            (ev1.pair_id == nxt.x_pair) & (ev1.era == nxt.x_era)
-            & (ev1._gpos == nxt.x_gpos),
-            "left",
-        ).drop("x_pair", "x_era", "x_gpos", "_gpos")
-    return ev.filter(
-        (F.col("side") != F.col("n_side"))
-        & F.col("is_fillish") & F.col("n_is_fillish")
-    )
+_IS_DEL = "chain_state = 'deleted'"
+_IS_FILLISH = f"({_IS_DEL} OR event_no > 1)"
+# the event columns of a candidate pair
+_EVENT_COLS = ("pair_id", "era", "microtimestamp", "order_id", "event_no",
+               "side", "amount", "fill", "price_microtimestamp", "is_del",
+               "is_fillish")
+# (SQL source, lead-column name) of the nine columns a candidate pair
+# carries from its second event
+_LEADS = (("microtimestamp", "n_microtimestamp"), ("order_id", "n_order_id"),
+          ("event_no", "n_event_no"), ("side", "n_side"),
+          ("amount", "n_amount"), ("fill", "n_fill"),
+          ("price_microtimestamp", "n_pts"), (_IS_DEL, "n_is_del"),
+          (_IS_FILLISH, "n_is_fillish"))
+
+
+def sequential_event_pairs(l3: DataFrame,
+                           offsets: Sequence[int] = (1,)) -> DataFrame:
+    """The (event, lead(event, k)) candidate pairs of :func:`match_sequential`
+    for every offset k in ``offsets``, one row per pair tagged
+    ``sweep_offset``; tolerance-independent. Every offset's lead columns
+    come from ONE window select over the per-(pair, era) stream, and the
+    rows are exploded after it (a window cannot sit inside a generator).
+    Written as SQL text: one driver round trip per select instead of
+    several per Column."""
+    w = ("OVER (PARTITION BY pair_id, era "
+         "ORDER BY microtimestamp, order_id, event_no)")
+    leads = l3.selectExpr(
+        *_EVENT_COLS[:-2], f"{_IS_DEL} AS is_del",
+        f"{_IS_FILLISH} AS is_fillish", *[
+            f"lead({src}, {k}) {w} AS {dst}_{k}"
+            for k in offsets for src, dst in _LEADS])
+    pairs = ", ".join(
+        f"named_struct('sweep_offset', {k}, "
+        + ", ".join(f"'{dst}', {dst}_{k}" for _, dst in _LEADS) + ")"
+        for k in offsets)
+    return leads.selectExpr(*_EVENT_COLS, f"inline(array({pairs}))").filter(
+        "side <> n_side AND is_fillish AND n_is_fillish")
 
 
 def match_sequential(l3: DataFrame, trades: DataFrame,
-                     tolerance_pct: float = 0.0001, offset: int = 1,
-                     period_s: int | None = None,
-                     pairs: DataFrame | None = None) -> DataFrame:
+                     tolerance_pct: float = 0.0001,
+                     offset: int = 1) -> DataFrame:
     """I10 ``bitstamp.match_trades_to_sequential_events``: link a trade that
     knows its buy/sell ORDER ids (but not the events) to a pair of adjacent
     opposite-side events in the sequential event stream (reference
@@ -528,7 +509,7 @@ def match_sequential(l3: DataFrame, trades: DataFrame,
       keeping only opposite-side pairs where neither event is an order
       creation;
     - join to trades on {event order ids} = {trade's buy/sell order ids}
-      (both orientations — two equi-joins, unioned);
+      (both orientations);
     - both events must carry a non-NULL F7 match rule
       (:func:`match_rule`, tolerance = tolerance_pct × trade price);
     - aggressor-direction check: the maker (opposite of the taker side) must
@@ -537,39 +518,143 @@ def match_sequential(l3: DataFrame, trades: DataFrame,
       reference uses strict inequalities and drops ties);
     - an event may not participate in two trades (anti-join on the pair's
       second event, reference ``matches`` CTE), then one event pair per
-      trade via row_number.
+      trade, the first in event order.
 
-    Scale: all joins are per (pair, era); no cross product. With
-    ``period_s`` set the sequential-neighbor lookup is period-parallel: row
-    numbers are assigned per (pair, era, period) partition, a prefix sum
-    over the TINY per-period count table turns them into exact global
-    positions, and ``lead(offset)`` becomes an equi-join on
-    ``gpos + offset`` — identical output to the unsplit window for any
-    offset (split-equality pytest), with parallelism = #periods instead of
-    one reducer per era. The join evaluates the event projection twice, so
-    it wins only when eras are reducer-breakingly large AND ``l3`` is a
-    cheap scan (the silver parquet), not a derived lineage — hence the
-    default keeps the single-pass per-era window, the same call-site
-    escape hatch as the other period-decomposed operators.
-
-    ``pairs`` injects a precomputed :func:`sequential_event_pairs` frame —
-    it depends on (l3, offset) only, so a tolerance sweep
-    (lifecycle.bitstamp_match_sweep) builds it once per offset instead
-    of once per (tolerance, offset) cell.
+    The one-cell grid of :func:`match_sequential_grid`, without its
+    provenance columns.
     """
-    ev = pairs if pairs is not None else sequential_event_pairs(
-        l3, offset, period_s)
-    return match_resolve(match_candidates(ev, trades), tolerance_pct)
+    return match_sequential_grid(l3, trades, [(tolerance_pct, offset)]).drop(
+        "tolerance", "sweep_offset")
+
+
+# link columns the grid kernel carries through unchanged (the trade's
+# amount and price: the candidate's t_amount / t_price)
+_LINK_COLS = ("pair_id", "era", "exchange_trade_id", "trade_microtimestamp",
+              "amount", "price", "trade_type", "buy_order_id",
+              "sell_order_id")
+# the candidate event pair, as the grid kernel reads it
+_PAIR_COLS = ("ev_is_buy", "sweep_offset", "microtimestamp", "order_id",
+              "event_no", "n_microtimestamp", "n_order_id", "n_event_no")
+
+
+def match_sequential_grid(l3: DataFrame, trades: DataFrame,
+                          grid: Sequence[tuple[float, int]],
+                          claimed: DataFrame | None = None) -> DataFrame:
+    """:func:`match_sequential` once per (tolerance_pct, offset) cell of
+    ``grid``, in order, each cell over the trades no earlier cell matched
+    and the events no earlier cell claimed. ``claimed`` seeds the claims
+    with (pair_id, era, microtimestamp, order_id, event_no) rows. Returns
+    the link columns plus the cell that matched each trade: ``tolerance``
+    and ``sweep_offset``.
+
+    Spark builds the candidate frame once: every offset's event pairs
+    joined to the trades, kept where both events carry a rule at the
+    grid's largest tolerance (the rule's non-NULL set is monotone in
+    tolerance) and the direction check holds, minus the seeded claims
+    (after the lead window, so claimed events still occupy stream
+    positions), plus one ``mr{i}``/``n_mr{i}`` rule-code pair per grid
+    tolerance. :func:`_resolve_grid` then runs the cells over each pair's
+    candidates in one grouped pass. The groups are pairs, not eras: the
+    matched-trade exclusion and the per-trade pick are keyed
+    (pair_id, exchange_trade_id). Lazy: no job runs at call time."""
+    tols = list(dict.fromkeys(t for t, _ in grid))
+    cand = match_feasible(match_candidates(
+        sequential_event_pairs(l3, sorted({k for _, k in grid})), trades),
+        max(tols))
+    if claimed is not None:
+        key = ["pair_id", "era", "microtimestamp", "order_id", "event_no"]
+        n_key = key[:2] + [f"n_{c}" for c in key[2:]]
+        n_claimed = claimed.selectExpr(
+            *[f"{c} AS {n}" for c, n in zip(key, n_key)])
+        cand = cand.join(F.broadcast(claimed), key, "left_anti").join(
+            F.broadcast(n_claimed), n_key, "left_anti")
+    cand = cand.selectExpr(
+        *[f"t_{c} AS {c}" if c in ("amount", "price") else c
+          for c in _LINK_COLS],
+        *_PAIR_COLS, *[f"{match_rule_sql(p, t)} AS {p}mr{i}"
+                       for i, t in enumerate(tols) for p in ("", "n_")])
+    types = {f.name: f.dataType.simpleString() for f in cand.schema}
+    types["match_rule"] = types["mr0"]
+    schema = ", ".join(
+        [f"{c} {types[c]}" for c in _LINK_COLS]
+        + [f"{side}_{c} {types[c]}" for side in ("buy", "sell")
+           for c in ("microtimestamp", "event_no", "match_rule")]
+        + ["tolerance double", "sweep_offset int"])
+    cells = [(tols.index(t), float(t), k) for t, k in grid]
+    return ordered_fold(cand, partial(_resolve_grid, cells=cells), schema,
+                        keys=("pair_id",))
+
+
+def _ids(*cols: np.ndarray) -> np.ndarray:
+    """Dense integer id of each row's tuple over ``cols``."""
+    return pd.MultiIndex.from_arrays(cols).factorize()[0]
+
+
+def _resolve_grid(pdf: pd.DataFrame,
+                  cells: list[tuple[int, float, int]]) -> pd.DataFrame:
+    """One pair's candidates through the grid ``cells`` of
+    (tolerance index, tolerance, offset), in order; ``pdf`` is in event
+    order. Each cell:
+
+    1. keeps its offset's rows whose rule codes are non-NULL at its
+       tolerance, whose trade is not yet matched and neither of whose
+       events is claimed (claim key: era, microtimestamp, order_id,
+       event_no);
+    2. drops the rows whose (era, order_id, event_no) is any kept row's
+       second event (the reference ``matches`` CTE);
+    3. keeps the first remaining row per trade;
+    4. emits those, then marks their trades matched and both their events
+       claimed.
+
+    Memory: one pair's feasible candidates (a few rows per trade); the
+    O(events) lead window stays in Spark."""
+    n = len(pdf)
+    col = {c: pdf[c].to_numpy() for c in _LINK_COLS + _PAIR_COLS}
+    trade = pd.factorize(col["exchange_trade_id"])[0]
+    era = np.concatenate([col["era"], col["era"]])
+    oid = np.concatenate([col["order_id"], col["n_order_id"]])
+    eno = np.concatenate([col["event_no"], col["n_event_no"]])
+    ev = _ids(era, np.concatenate([col["microtimestamp"],
+                                   col["n_microtimestamp"]]), oid, eno)
+    oe = _ids(era, oid, eno)
+    mr, n_mr = (pdf.filter(regex=rf"^{p}mr\d+$").to_numpy(
+        "f8", na_value=np.nan) for p in ("", "n_"))
+    ruled = ~np.isnan(mr) & ~np.isnan(n_mr)
+    matched, claimed = np.zeros(n, bool), np.zeros(2 * n, bool)
+    picks = []
+    for i, _, k in cells:
+        keep = ((col["sweep_offset"] == k) & ruled[:, i] & ~matched[trade]
+                & ~claimed[ev[:n]] & ~claimed[ev[n:]])
+        seconds = np.zeros(2 * n, bool)
+        seconds[oe[n:][keep]] = True
+        rows = np.flatnonzero(keep & ~seconds[oe[:n]])
+        rows = np.sort(rows[np.unique(trade[rows], return_index=True)[1]])
+        matched[trade[rows]] = True
+        claimed[ev[:n][rows]] = claimed[ev[n:][rows]] = True
+        picks.append(rows)
+    sizes = [len(r) for r in picks]
+    rows = np.concatenate(picks)
+    ti = np.repeat([i for i, _, _ in cells], sizes)
+    buy = col["ev_is_buy"][rows]
+    out = {c: col[c][rows] for c in _LINK_COLS}
+    for side, first in (("buy", buy), ("sell", ~buy)):
+        out[f"{side}_microtimestamp"] = np.where(
+            first, col["microtimestamp"][rows], col["n_microtimestamp"][rows])
+        out[f"{side}_event_no"] = np.where(
+            first, col["event_no"][rows], col["n_event_no"][rows])
+        out[f"{side}_match_rule"] = np.where(
+            first, mr[rows, ti], n_mr[rows, ti]).astype("i4")
+    out["tolerance"] = np.repeat([t for _, t, _ in cells], sizes)
+    out["sweep_offset"] = np.repeat([k for _, _, k in cells], sizes).astype("i4")
+    return pd.DataFrame(out)
 
 
 def match_candidates(ev: DataFrame, trades: DataFrame) -> DataFrame:
     """The tolerance-INDEPENDENT half of :func:`match_sequential`: join
     the (event, lead-offset event) pair frame to the trades on order ids,
-    both orientations. A tolerance sweep hoists this per offset (it
-    depends on (l3, offset, trades) only) and each grid cell then works
-    on this TINY candidate frame — anti-joins against matched/claimed
-    state and the per-tolerance resolve — instead of rescanning the full
-    event-pair frame per cell."""
+    both orientations. It depends on (l3, offsets, trades) only, so a
+    whole tolerance grid shares one candidate frame. The trade's columns
+    keep their ``t_``-prefixed join names."""
     # both orientations as ONE equi-join: explode each trade into its two
     # (first event, second event) order-id orientations and join once.
     # Semantically identical to the union of the buy-first and sell-first
@@ -579,113 +664,36 @@ def match_candidates(ev: DataFrame, trades: DataFrame) -> DataFrame:
     # Join keys get t_-prefixed names: `trades` commonly shares lineage
     # with `l3` (closed-loop gates derive it FROM the event log), and
     # fresh names sidestep the ambiguous-self-join attribute trap
-    t2 = trades.select(
-        F.col("pair_id").alias("t_pair_id"), F.col("era").alias("t_era"),
-        "exchange_trade_id", "trade_microtimestamp",
-        F.col("amount").alias("t_amount"), F.col("price").alias("t_price"),
+    t2 = trades.selectExpr(
+        "pair_id AS t_pair_id", "era AS t_era", "exchange_trade_id",
+        "trade_microtimestamp", "amount AS t_amount", "price AS t_price",
         "trade_type", "buy_order_id", "sell_order_id",
-        F.explode(F.array(F.lit(True), F.lit(False))).alias("ev_is_buy"),
-    ).withColumn(
-        "_first_oid",
-        F.when(F.col("ev_is_buy"), F.col("buy_order_id"))
-         .otherwise(F.col("sell_order_id")),
-    ).withColumn(
-        "_second_oid",
-        F.when(F.col("ev_is_buy"), F.col("sell_order_id"))
-         .otherwise(F.col("buy_order_id")),
-    )
-    return (
-        ev.join(t2, (F.col("pair_id") == F.col("t_pair_id"))
-                & (F.col("era") == F.col("t_era"))
-                & (F.col("order_id") == F.col("_first_oid"))
-                & (F.col("n_order_id") == F.col("_second_oid")))
-        .drop("t_pair_id", "t_era", "_first_oid", "_second_oid")
-    )
+        "inline(array(named_struct('ev_is_buy', true, '_first_oid', "
+        "buy_order_id, '_second_oid', sell_order_id), named_struct("
+        "'ev_is_buy', false, '_first_oid', sell_order_id, '_second_oid', "
+        "buy_order_id)))")
+    return ev.join(t2, F.expr(
+        "pair_id = t_pair_id AND era = t_era AND order_id = _first_oid "
+        "AND n_order_id = _second_oid"))
 
 
 def match_feasible(cand: DataFrame, max_tolerance_pct: float) -> DataFrame:
     """Prefilter of the candidate frame to rows that can match in SOME
-    cell of a tolerance sweep: the F7 rule's non-NULL set is monotone in
+    cell of a tolerance grid: the F7 rule's non-NULL set is monotone in
     tolerance (its only tolerance terms are ``< tolerance`` bounds), so a
-    row whose rule is NULL at the sweep's LARGEST tolerance is NULL in
+    row whose rule is NULL at the grid's LARGEST tolerance is NULL in
     every cell; the aggressor-direction check is tolerance-independent.
-    A sweep applies this once per offset — each grid cell then resolves
-    over the few feasible rows (recomputing rule CODES at its own
-    tolerance — codes do shift with tolerance, feasibility doesn't)
-    instead of the full O(events-with-shared-order-ids) candidate join."""
-    return cand.filter(candidate_feasible_sql(max_tolerance_pct)).filter(
-        _DIRECTION_SQL)
-
-
-def match_resolve(cand: DataFrame, tolerance_pct: float,
-                  checkpoint_proposed: bool = True) -> DataFrame:
-    """The per-tolerance half of :func:`match_sequential`: F7 rule on both
-    events, aggressor-direction check, one-event-one-trade dedup, one
-    pair per trade.
-
-    ``checkpoint_proposed=False`` skips the internal eager checkpoint of
-    the proposed frame — correct either way (the frame is merely
-    evaluated twice). Every call site, including the sweep, keeps the
-    default True: the post-hoist A/B at sf0.1 measured eager 17.7–20.3 s
-    vs lazy 19.3–21.1 s across the full grid (SCALE.md §7), so the
-    per-cell materialization job wins even on a checkpointed-leaf
-    candidate frame. The parameter records the knob and the measurement."""
-    proposed = (
-        cand.select("*",
-                    F.expr(match_rule_sql("", tolerance_pct)).alias("mr"),
-                    F.expr(match_rule_sql("n_", tolerance_pct))
-                    .alias("n_mr"))
-        .filter("mr IS NOT NULL AND n_mr IS NOT NULL").filter(_DIRECTION_SQL)
-    )
-    # a single event may not participate in two trades (reference `matches`).
-    # `proposed` is referenced twice below (as itself and as the exclusion
-    # set) — cut lineage so the candidate pipeline (lead windows + trade
-    # join) runs once, not once per reference; one candidate row per trade
-    # orientation, so this is a small frame (lazy was measured SLOWER both
-    # pre-hoist (r8) and post-hoist (r9 A/B, SCALE.md §7), so eager stays
-    # the default everywhere — see the docstring)
-    if checkpoint_proposed:
-        proposed = proposed.localCheckpoint()
-    seconds = proposed.select(
-        F.col("pair_id").alias("x_pair"), F.col("era").alias("x_era"),
-        F.col("n_order_id").alias("x_oid"), F.col("n_event_no").alias("x_eno"),
-    ).distinct()
-    dedup = proposed.join(
-        seconds,
-        (proposed.pair_id == seconds.x_pair) & (proposed.era == seconds.x_era)
-        & (proposed.order_id == seconds.x_oid)
-        & (proposed.event_no == seconds.x_eno),
-        "left_anti",
-    )
-    w_t = W.partitionBy("pair_id", "exchange_trade_id").orderBy(
-        "microtimestamp", "order_id", "event_no")
-    return (
-        dedup.withColumn("r", F.row_number().over(w_t)).filter("r = 1")
-        .select(
-            "pair_id", "era", "exchange_trade_id", "trade_microtimestamp",
-            F.col("t_amount").alias("amount"), F.col("t_price").alias("price"),
-            "trade_type", "buy_order_id", "sell_order_id",
-            F.when(F.col("ev_is_buy"), F.col("microtimestamp"))
-             .otherwise(F.col("n_microtimestamp")).alias("buy_microtimestamp"),
-            F.when(F.col("ev_is_buy"), F.col("event_no"))
-             .otherwise(F.col("n_event_no")).alias("buy_event_no"),
-            F.when(F.col("ev_is_buy"), F.col("mr"))
-             .otherwise(F.col("n_mr")).alias("buy_match_rule"),
-            F.when(~F.col("ev_is_buy"), F.col("microtimestamp"))
-             .otherwise(F.col("n_microtimestamp")).alias("sell_microtimestamp"),
-            F.when(~F.col("ev_is_buy"), F.col("event_no"))
-             .otherwise(F.col("n_event_no")).alias("sell_event_no"),
-            F.when(~F.col("ev_is_buy"), F.col("mr"))
-             .otherwise(F.col("n_mr")).alias("sell_match_rule"),
-        )
-    )
+    Rule CODES still shift with tolerance, so each cell reads its own."""
+    return cand.filter(
+        f"({match_rule_sql('', max_tolerance_pct)}) IS NOT NULL AND "
+        f"({match_rule_sql('n_', max_tolerance_pct)}) IS NOT NULL AND "
+        f"({_DIRECTION_SQL})")
 
 
 def match_sequential_pairs_sql(offset: int = 1, source: str = "level3") -> str:
     """The ``sequential_event_pairs`` frame as a standalone DuckDB query —
     the (event, lead(event, offset)) candidate pairs. Tolerance-independent;
-    a sweep oracle materializes one per offset (mirror of the Spark side's
-    per-offset ``localCheckpoint``)."""
+    a sweep oracle materializes one per offset."""
     return f"""
 WITH ev AS (
     SELECT pair_id, era, microtimestamp, order_id, event_no, side, amount,

@@ -175,7 +175,7 @@ class BitstampMatchJob:
                 links.select("pair_id", "exchange_trade_id").distinct(),
                 ["pair_id", "exchange_trade_id"], "left_anti")
             # ...but the claimed-EVENT exclusion is force-broadcast into
-            # two anti-joins per grid cell — seed it only with claims that
+            # two anti-joins once per sweep — seed it only with claims that
             # can still collide with the cursor-filtered event pairs (a
             # claim wholly before the cursor is never rescanned), so the
             # broadcast stays bounded by the unmatched tail instead of

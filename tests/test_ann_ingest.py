@@ -7,13 +7,10 @@ query-identical through ann_ivfpq_query."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import pandas as pd  # noqa: E402
-import pytest  # noqa: E402
+import pandas as pd
+import pytest
 
 
 def _emb(spark, sf_dir):

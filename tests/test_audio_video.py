@@ -4,15 +4,11 @@ length-prefix frame skipping)."""
 
 from __future__ import annotations
 
-import sys
+import numpy as np
 
-sys.path.insert(0, "/root/repo")
-
-import numpy as np  # noqa: E402
-
-from obadiah_spark.pipelines.audio import encode_wav, wav_decode, wav_header  # noqa: E402
-from obadiah_spark.pipelines.jpeg import encode_jpeg, jpeg_decode  # noqa: E402
-from obadiah_spark.pipelines.video import mjpeg_pack, mjpeg_unpack  # noqa: E402
+from obadiah_spark.pipelines.audio import encode_wav, wav_decode, wav_header
+from obadiah_spark.pipelines.jpeg import encode_jpeg, jpeg_decode
+from obadiah_spark.pipelines.video import mjpeg_pack, mjpeg_unpack
 
 
 def test_wav_16bit_roundtrip_exact():
@@ -316,9 +312,6 @@ def test_adpcm_header_strictness():
 def test_adpcm_gate_duckdb_differential(spark, sf_dir, duck):
     """The r13 gate oracle: the recursive-CTE state machine must equal
     the Python codec on every document."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.verify_local import canonicalize
 
     from obadiah_spark.pipelines.audio import (adpcm_roundtrip,

@@ -4,9 +4,6 @@ differential over the r13 gate's oracle."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_hand_computed_whole_bit_surprisal(spark):

@@ -5,13 +5,10 @@ express (real newline-structured docs with a shared footer)."""
 from __future__ import annotations
 
 import hashlib
-import sys
 
-sys.path.insert(0, "/root/repo")
+import pandas as pd
 
-import pandas as pd  # noqa: E402
-
-from tools.verify_local import canonicalize  # noqa: E402
+from tools.verify_local import canonicalize
 
 
 def test_boilerplate_fabric_differential(spark, duck):

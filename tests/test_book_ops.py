@@ -3,13 +3,9 @@ real snapshots of the synthetic book 3 days apart."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from obadiah_spark.operators.book_ops import diff_order_books, update_order_book  # noqa: E402
-from obadiah_spark.operators.order_book import live_at  # noqa: E402
-from tools.verify_local import compare  # noqa: E402
+from obadiah_spark.operators.book_ops import diff_order_books, update_order_book
+from obadiah_spark.operators.order_book import live_at
+from tools.verify_local import compare
 
 COLS = ["pair_id", "order_id", "side", "price", "amount"]
 

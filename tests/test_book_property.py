@@ -6,10 +6,6 @@ randomized coverage; the reference has no property tests)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

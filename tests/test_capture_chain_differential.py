@@ -11,10 +11,6 @@ payloads, price chains."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F

@@ -3,10 +3,6 @@
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from tools.verify_local import canonicalize
 
 

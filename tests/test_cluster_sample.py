@@ -4,11 +4,7 @@ offline-codebook path."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from tools.verify_local import canonicalize  # noqa: E402
+from tools.verify_local import canonicalize
 
 PER_CELL = 20  # sf0.01: ~31 vectors/cell at 16 cells → real drops
 

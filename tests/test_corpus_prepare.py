@@ -4,13 +4,9 @@ stage-consistency pins against the standalone operators."""
 
 from __future__ import annotations
 
-import sys
+import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import pytest  # noqa: E402
-
-from tools.verify_local import canonicalize  # noqa: E402
+from tools.verify_local import canonicalize
 
 
 @pytest.fixture(scope="module")

@@ -6,13 +6,10 @@ operators, so only the dedup stage can diverge — and doesn't)."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import pandas as pd  # noqa: E402
-import pytest  # noqa: E402
+import pandas as pd
+import pytest
 
 
 def _replay(spark, tmp_path, rows, chunks=3, name="cc_stream_out"):

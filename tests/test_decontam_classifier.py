@@ -4,10 +4,6 @@ gate oracles."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from tools.verify_local import canonicalize
 
 

@@ -6,16 +6,13 @@ deviation is pinned separately)."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+import pandas as pd
 
-import pandas as pd  # noqa: E402
-
-from obadiah_spark.pipelines.dedup import (  # noqa: E402
+from obadiah_spark.pipelines.dedup import (
     _minhash_bands, minhash_lsh_candidates)
-from obadiah_spark.streaming.dedup_stream import (  # noqa: E402
+from obadiah_spark.streaming.dedup_stream import (
     minhash_bands_stream, minhash_lsh_stream)
 
 DOCS_SCHEMA = "doc_id long, text string"

@@ -5,11 +5,7 @@ acceptance is weight-monotone in expectation)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from tools.verify_local import canonicalize  # noqa: E402
+from tools.verify_local import canonicalize
 
 # gate fabric: the target corpus is a deterministic 30% hash sample of
 # the documents table — reproducible on both engines from the shared

@@ -78,3 +78,26 @@ def test_rotation_age_bound():
         f"entries past the driver's 50-slot cap without a green row in "
         f"{[os.path.basename(p) for p in paths]} (their driver "
         f"verification would age past two rounds): {stale}")
+
+
+def test_tests_import_their_own_checkout():
+    """conftest.py puts the test's own checkout first on ``sys.path``; a
+    test that inserts a fixed absolute path instead would import and test
+    the code of that other copy. No file under tests/ may name this
+    checkout's absolute path or insert any absolute path literal."""
+    import re
+
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    checkout = os.path.dirname(tests_dir)
+    fixed = re.compile(r"""path\.insert\(\s*0\s*,\s*["']/""")
+    bad = []
+    for root, _, files in os.walk(tests_dir):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+            if checkout in text or fixed.search(text):
+                bad.append(os.path.relpath(path, checkout))
+    assert not bad, f"tests importing a fixed checkout: {bad}"

@@ -12,10 +12,7 @@ examples; the brute force is exact, not a model."""
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
-
-sys.path.insert(0, "/root/repo")
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st

@@ -4,21 +4,17 @@ declarative Spark form, and the DuckDB oracle must agree exactly."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from obadiah_spark.fold import depth_change_fold, spread_fold  # noqa: E402
-from obadiah_spark.operators.depth import (  # noqa: E402
+from obadiah_spark.fold import depth_change_fold, spread_fold
+from obadiah_spark.operators.depth import (
     DEPTH_CHANGE_ORACLE_BODY,
     SPREAD_LINEAR_ORACLE_BODY,
     depth_change,
 )
-from obadiah_spark.operators.spread import spread_slow  # noqa: E402
-from obadiah_spark.synth import level3_cte  # noqa: E402
-from tools.verify_local import compare  # noqa: E402
+from obadiah_spark.operators.spread import spread_slow
+from obadiah_spark.synth import level3_cte
+from tools.verify_local import compare
 
 
 def test_depth_fold_vs_declarative_vs_duckdb(spark, duck, level3):

@@ -6,12 +6,9 @@ price, and the emitted depth changes."""
 
 from __future__ import annotations
 
-import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
-
-from obadiah_spark.fold import depth_change_fold, spread_fold  # noqa: E402
+from obadiah_spark.fold import depth_change_fold, spread_fold
 
 T0 = datetime(2024, 1, 1, 10, 0, 0)
 T1 = datetime(2024, 1, 1, 10, 0, 1)

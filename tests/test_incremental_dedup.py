@@ -4,10 +4,6 @@ new side, and the DuckDB oracle (the r13 gate) must value-match."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from tools.verify_local import canonicalize
 
 
@@ -101,9 +97,6 @@ def test_near_dup_verify_flags_and_oracle(spark, sf_dir, duck):
     differential over the gate oracle, plus a constructed mixed pairs
     frame so BOTH flag classes are exercised (the fabric's LSH
     candidates are all true near-dups)."""
-    import sys as _s
-
-    _s.path.insert(0, "/root/repo")
     from tools.verify_local import canonicalize
 
     from obadiah_spark.pipelines.dedup import (minhash_lsh_candidates,

@@ -7,11 +7,8 @@ its probed cell directories."""
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 def _emb(spark, sf_dir):

@@ -5,19 +5,15 @@ dims, restart markers, strictness, and dims-header agreement."""
 
 from __future__ import annotations
 
-import sys
+import numpy as np
 
-sys.path.insert(0, "/root/repo")
-
-import numpy as np  # noqa: E402
-
-from obadiah_spark.pipelines.jpeg import (  # noqa: E402
+from obadiah_spark.pipelines.jpeg import (
     GATE_QTABLE,
     encode_jpeg,
     jpeg_decode,
     jpeg_header,
 )
-from obadiah_spark.pipelines.multimodal import decode_image, image_dims  # noqa: E402
+from obadiah_spark.pipelines.multimodal import decode_image, image_dims
 
 
 def _psnr(a: np.ndarray, b: np.ndarray) -> float:

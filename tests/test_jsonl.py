@@ -4,9 +4,6 @@ kept verbatim, never silently dropped, never job-fatal."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_roundtrip_documents_table(spark, sf_dir, tmp_path):

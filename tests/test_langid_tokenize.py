@@ -7,17 +7,13 @@ and mixed content."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from obadiah_spark.pipelines.langid import (  # noqa: E402
+from obadiah_spark.pipelines.langid import (
     LANGS,
     PROFILE_K,
     PROFILES,
     lang_id_ngram,
 )
-from obadiah_spark.pipelines.tokenize import tokenize_regex  # noqa: E402
+from obadiah_spark.pipelines.tokenize import tokenize_regex
 
 # Real prose held OUT of the profile samples — different sentences, same
 # languages. The classifier must label each correctly with a clear margin.

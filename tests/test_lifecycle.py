@@ -11,24 +11,20 @@ trades inside the 2-minute delay tail that must stay unmatched."""
 
 from __future__ import annotations
 
-import sys
 from datetime import datetime, timedelta
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from obadiah_spark.operators.lifecycle import (  # noqa: E402
+from obadiah_spark.operators.lifecycle import (
     incremental_match,
     incremental_match_step,
     match_frame,
 )
-from obadiah_spark.operators.matching import (  # noqa: E402
+from obadiah_spark.operators.matching import (
     match_price_and_fill_exact,
     match_sum_of_fills,
-    sequential_event_pairs,
 )
 
 ERA = datetime(2024, 1, 10)
@@ -424,22 +420,6 @@ def test_bitstamp_match_job_resume_and_replay(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "bs_trades")).count() == n
 
 
-def test_sweep_period_split_equals_unsplit(spark):
-    """period_s passes through to the pair builds: the period-parallel
-    neighbor lookup must not change the sweep result (the fixture's events
-    span >3 s, so period_s=1 actually splits the stream)."""
-    from obadiah_spark.operators.lifecycle import bitstamp_match_sweep
-
-    l3, trades = _sweep_frames(spark)
-    base = bitstamp_match_sweep(l3, trades, **SWEEP_GRID)
-    split = bitstamp_match_sweep(l3, trades, period_s=1, **SWEEP_GRID)
-    key = lambda df: sorted(  # noqa: E731
-        (r.exchange_trade_id, r.tolerance, r.sweep_offset,
-         r.buy_microtimestamp, r.sell_microtimestamp)
-        for r in df.collect())
-    assert key(base) == key(split)
-
-
 def test_sweep_full_reference_grid(spark):
     """The production-default grid (the reference's 5 tolerances x 4
     offsets) runs end to end; on this fixture the extra cells are sterile,
@@ -467,28 +447,77 @@ def test_sweep_full_reference_grid(spark):
     assert got == want
 
 
-def test_sweep_builds_offsets_lazily(spark, monkeypatch):
-    """When the first cell matches every trade, only offset 1's candidate
-    frame is built; when it cannot, every offset is."""
-    import obadiah_spark.operators.lifecycle as lc
+def test_sweep_call_starts_no_jobs(spark):
+    """The sweep is one lazy plan: calling it, with or without seeded
+    claims, starts no Spark job (jobs counted by job group); consuming the
+    result under the same group does start them, so the count is live."""
+    import uuid
 
-    built = []
+    from obadiah_spark.operators.lifecycle import (
+        bitstamp_match_sweep, claimed_events)
 
-    def counting(l3, offset, period_s=None):
-        built.append(offset)
-        return sequential_event_pairs(l3, offset, period_s)
-
-    monkeypatch.setattr(lc, "sequential_event_pairs", counting)
-    l3, trades = _sweep_frames(spark, trade_ids={100})
-    out = lc.bitstamp_match_sweep(l3, trades)  # the full 5 x 4 grid
-    assert [(r.exchange_trade_id, r.tolerance, r.sweep_offset)
-            for r in out.collect()] == [(100, 0.0001, 1)]
-    assert built == [1]
-
-    built.clear()
     l3, trades = _sweep_frames(spark)
-    lc.bitstamp_match_sweep(l3, trades)
-    assert sorted(built) == [1, 2, 3, 4]
+    seed = claimed_events(bitstamp_match_sweep(
+        l3, trades.filter(F.col("exchange_trade_id") == 100)))
+    sc = spark.sparkContext
+    for claimed in (None, seed):
+        group = f"sweep-call-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "bitstamp_match_sweep call")
+        try:
+            out = bitstamp_match_sweep(l3, trades, claimed=claimed)
+            called = list(sc.statusTracker().getJobIdsForGroup(group))
+            out.collect()
+            consumed = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert called == []
+        assert consumed
+
+
+def test_sweep_trade_id_recurring_across_eras(spark):
+    """One exchange_trade_id in two eras of one pair is ONE trade to the
+    sweep: the matched-trade exclusion and the per-trade pick are keyed
+    (pair_id, exchange_trade_id) without era, so only the earlier era's
+    pair links — in the same cell (trade 500) and in a later one (600,
+    whose era-2 copy needs the 0.1 cell). Checked against the oracle."""
+    import duckdb
+
+    from obadiah_spark.operators.lifecycle import (
+        bitstamp_match_sweep, bitstamp_match_sweep_oracle_sql)
+
+    era2 = ERA + timedelta(days=7)
+    events = [(ERA, 10, 1.0, "s", 5.0, 0.5), (ERA, 20, 1.1, "b", 5.0, 0.8),
+              (ERA, 30, 2.0, "s", 6.0, 1.5), (ERA, 40, 2.1, "b", 6.0, 1.8),
+              (era2, 11, 1.0, "s", 5.0, 0.5), (era2, 21, 1.1, "b", 5.0, 0.8),
+              (era2, 31, 2.0, "s", 6.0, 1.5), (era2, 41, 2.1, "b", 6.0, 1.8)]
+    l3 = spark.createDataFrame(
+        [(1, era, era + timedelta(seconds=t), oid, 2, side, 0.0, f,
+          era + timedelta(seconds=pts), "active")
+         for era, oid, t, side, f, pts in events],
+        "pair_id int, era timestamp, microtimestamp timestamp, "
+        "order_id bigint, event_no int, side string, amount double, "
+        "fill double, price_microtimestamp timestamp, chain_state string",
+    )
+    trades = spark.createDataFrame(
+        [(1, era, tid, era + timedelta(seconds=t), a, 100.0, "b", bo, so)
+         for era, tid, t, a, bo, so in [
+             (ERA, 500, 1.2, 5.0, 20, 10), (era2, 500, 1.2, 5.0, 21, 11),
+             (ERA, 600, 2.2, 6.0, 40, 30), (era2, 600, 2.2, 6.05, 41, 31)]],
+        "pair_id int, era timestamp, exchange_trade_id bigint, "
+        "trade_microtimestamp timestamp, amount double, price double, "
+        "trade_type string, buy_order_id bigint, sell_order_id bigint",
+    )
+    out = bitstamp_match_sweep(l3, trades, **SWEEP_GRID)
+    cols = sorted(out.columns)
+    got = sorted(map(tuple, out.select(*cols).toPandas().itertuples(index=False)))
+    assert sorted((r.exchange_trade_id, r.era, r.tolerance)
+                  for r in out.collect()) == [(500, ERA, 0.0001),
+                                              (600, ERA, 0.0001)]
+    con = duckdb.connect()
+    con.register("level3", l3.toPandas())
+    con.register("sweep_trades", trades.toPandas())
+    oracle = con.execute(bitstamp_match_sweep_oracle_sql(**SWEEP_GRID)).fetch_df()
+    assert got == sorted(map(tuple, oracle[cols].itertuples(index=False)))
 
 
 def test_read_links_distinguishes_missing_from_broken(spark, tmp_path):

@@ -4,13 +4,9 @@ the trade's (price, fill, side, episode) signature is unambiguous."""
 
 from __future__ import annotations
 
-import sys
+from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from obadiah_spark.operators.matching import (  # noqa: E402
+from obadiah_spark.operators.matching import (
     match_price_and_fill_exact,
     match_sum_of_fills,
 )
@@ -85,34 +81,6 @@ def test_match_sum_of_fills_recovers_non_consecutive_subset(spark):
     out = match_sum_of_fills(l3, trades).orderBy("exchange_trade_id").collect()
     assert [r.exchange_trade_id for r in out] == [101, 103]
     assert all(r.order_id == 7 and r.group_size == 2 for r in out)
-
-
-def test_match_sequential_period_split_equals_unsplit(spark, level3):
-    """The period-parallel neighbor lookup (gpos equi-join) must reproduce
-    the per-era lead window exactly — including with a period length short
-    enough that many period boundaries fall inside each era."""
-    from obadiah_spark.operators.matching import inferred_trades, match_sequential
-
-    t = inferred_trades(level3).select(
-        "pair_id",
-        F.date_trunc("week", "microtimestamp").alias("era"),
-        (F.col("buy_order_id").cast("bigint") * 1000000000000
-         + F.col("buy_event_no").cast("bigint") * 100000000
-         + F.col("sell_order_id").cast("bigint") * 10000
-         + F.col("sell_event_no").cast("bigint")).alias("exchange_trade_id"),
-        F.col("microtimestamp").alias("trade_microtimestamp"),
-        "amount", "price",
-        F.col("side").alias("trade_type"),
-        "buy_order_id", "sell_order_id",
-    )
-    cols = ["pair_id", "exchange_trade_id", "buy_microtimestamp",
-            "buy_event_no", "sell_microtimestamp", "sell_event_no"]
-    for offset in (1, 2):
-        unsplit = match_sequential(level3, t, offset=offset, period_s=None)
-        split = match_sequential(level3, t, offset=offset, period_s=3600)
-        a = sorted(map(tuple, unsplit.select(*cols).collect()))
-        b = sorted(map(tuple, split.select(*cols).collect()))
-        assert a == b, f"period split diverges at offset={offset}"
 
 
 def test_match_rule_sql_codes(spark):

@@ -5,12 +5,9 @@ micro-batch boundaries; the per-shard state is three scalars."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import pandas as pd  # noqa: E402
+import pandas as pd
 
 
 def _replay(spark, tmp_path, rows, chunks=3, budget=None,

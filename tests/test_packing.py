@@ -3,9 +3,6 @@ handling, shard independence, and budget-sweep sanity."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 
 def _pack(spark, rows, **kw):

@@ -4,16 +4,12 @@ LSH recall vs brute force, and the multimodal plumbing invariants."""
 
 from __future__ import annotations
 
-import sys
+import numpy as np
+from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-import numpy as np  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from obadiah_spark.pipelines.dedup import minhash_lsh_candidates, ngram_jaccard_pairs  # noqa: E402
-from obadiah_spark.pipelines.multimodal import multimodal_features, pack_blobs  # noqa: E402
-from obadiah_spark.pipelines.similarity import (  # noqa: E402
+from obadiah_spark.pipelines.dedup import minhash_lsh_candidates, ngram_jaccard_pairs
+from obadiah_spark.pipelines.multimodal import multimodal_features, pack_blobs
+from obadiah_spark.pipelines.similarity import (
     IVF_CELLS,
     ann_bruteforce,
     ann_ivf,

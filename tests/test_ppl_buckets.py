@@ -6,9 +6,6 @@ staged gate's oracle."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 
 def _docs(spark, sf_dir):

@@ -5,12 +5,9 @@ from __future__ import annotations
 
 import pytest
 
-import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
-
-from obadiah_spark.operators.quality import chain_audit, crossed_books  # noqa: E402
+from obadiah_spark.operators.quality import chain_audit, crossed_books
 
 
 def test_chain_audit_clean_on_synth(level3):

@@ -2,18 +2,15 @@
 
 from __future__ import annotations
 
-import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
+import pytest
+from pyspark.sql import functions as F
 
-import pytest  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from obadiah_spark.functions import validate_parameters  # noqa: E402
-from obadiah_spark.operators.depth_chains import depth_changes_with_chains  # noqa: E402
-from obadiah_spark.operators.matching import match_sum_of_fills  # noqa: E402
-from obadiah_spark.operators.repair import merge_episodes  # noqa: E402
+from obadiah_spark.functions import validate_parameters
+from obadiah_spark.operators.depth_chains import depth_changes_with_chains
+from obadiah_spark.operators.matching import match_sum_of_fills
+from obadiah_spark.operators.repair import merge_episodes
 
 S, E = "2024-01-09 00:00:00", "2024-01-13 00:00:00"
 

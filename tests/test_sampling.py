@@ -4,9 +4,6 @@ independence, stratified mixing, and a value-level DuckDB differential
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_sample_is_deterministic_and_nested(spark, sf_dir):

@@ -5,13 +5,9 @@ offline-codebook production path."""
 
 from __future__ import annotations
 
-import sys
+import numpy as np
 
-sys.path.insert(0, "/root/repo")
-
-import numpy as np  # noqa: E402
-
-from tools.verify_local import canonicalize  # noqa: E402
+from tools.verify_local import canonicalize
 
 # the gate-fabric threshold: the driver embeddings are uniform random
 # (within-cell cosines top out ~0.45), so the paper's 0.95 would make

@@ -4,14 +4,11 @@ vs relational.sessionize_events), including the per-row cents rounding."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+import pandas as pd
 
-import pandas as pd  # noqa: E402
-
-from obadiah_spark.streaming.sessionize_stream import (  # noqa: E402
+from obadiah_spark.streaming.sessionize_stream import (
     EVENTS_IN_SCHEMA, _cents, sessionize_stream)
 
 GAP_MIN = 30

@@ -8,14 +8,10 @@ driver's gate exercises them at sf0.01 regardless.
 
 from __future__ import annotations
 
-import sys
+import pytest
+from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-import pytest  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from tools.verify_local import compare  # noqa: E402
+from tools.verify_local import compare
 
 
 _L3_SCHEMA = (

@@ -10,15 +10,12 @@ output or in the recall gap)."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+import pandas as pd
+import pytest
 
-import pandas as pd  # noqa: E402
-import pytest  # noqa: E402
-
-from obadiah_spark.streaming.sessionize_stream import (  # noqa: E402
+from obadiah_spark.streaming.sessionize_stream import (
     EVENTS_IN_SCHEMA, _duration_ms, sessionize_stream)
 
 T0 = 1_700_000_000_000_000  # anchor event time, us

@@ -5,15 +5,12 @@ reference's trigger-based chaining is order-insensitive the same way)."""
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+import numpy as np
 
-import numpy as np  # noqa: E402
-
-from obadiah_spark.streaming.ingest import Level3Ingestor, run_streaming_ingest  # noqa: E402
-from tools.verify_local import canonicalize, compare  # noqa: E402
+from obadiah_spark.streaming.ingest import Level3Ingestor, run_streaming_ingest
+from tools.verify_local import canonicalize, compare
 
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, event_type string, "
                  "value double, props string")

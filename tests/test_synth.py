@@ -6,12 +6,8 @@ reincarnation_no, db/bitfinex_schema.sql:408-417)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from obadiah_spark.synth import LEVEL3_BODY_SQL  # noqa: E402
-from tools.verify_local import compare  # noqa: E402
+from obadiah_spark.synth import LEVEL3_BODY_SQL
+from tools.verify_local import compare
 
 
 def test_level3_identical_on_both_engines(spark, duck, level3):

@@ -5,11 +5,8 @@ dispatch integration."""
 from __future__ import annotations
 
 import struct
-import sys
 
 import numpy as np
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_roundtrip_property_random_images():
@@ -70,9 +67,6 @@ def test_strict_rejections():
 
 
 def test_multimodal_dispatch_and_gate_cycle(spark, sf_dir, duck):
-    import sys as _s
-
-    _s.path.insert(0, "/root/repo")
     from tools.verify_local import canonicalize
 
     from obadiah_spark.pipelines.multimodal import (CODEC_ROUNDTRIP_ORACLE,

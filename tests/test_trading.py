@@ -6,19 +6,15 @@ fold deduped on price change."""
 
 from __future__ import annotations
 
-import sys
+import numpy as np
 
-sys.path.insert(0, "/root/repo")
-
-import numpy as np  # noqa: E402
-
-from obadiah_spark.operators.trading import (  # noqa: E402
+from obadiah_spark.operators.trading import (
     _discover_draws,
     _discover_positions,
     trading_period_fold,
 )
-from obadiah_spark.fold import spread_fold  # noqa: E402
-from tools.verify_local import compare  # noqa: E402
+from obadiah_spark.fold import spread_fold
+from tools.verify_local import compare
 
 
 def _ts(*secs):

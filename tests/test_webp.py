@@ -6,13 +6,10 @@ prefix codes), strictness, and the distance-map table pin."""
 from __future__ import annotations
 
 import random
-import sys
 
-sys.path.insert(0, "/root/repo")
+import pytest
 
-import pytest  # noqa: E402
-
-from obadiah_spark.pipelines.webp import (  # noqa: E402
+from obadiah_spark.pipelines.webp import (
     _DIST_MAP, encode_webp, webp_decode)
 
 

@@ -5,10 +5,6 @@ chunks under a single-column sort."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from tools.verify_local import canonicalize
 
 

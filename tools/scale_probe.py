@@ -163,7 +163,7 @@ def _match_sweep(l3):
     inferred closed-loop trades (links forgotten, amounts bucket-perturbed
     so all three tolerance cells are productive), 3 tolerances x 2 offsets.
     Full-stream operator — expect exponent ~1 in events, dominated by the
-    two per-offset lead windows (built once, reused across cells)."""
+    one lead-window select that builds both offsets' candidate pairs."""
     from pyspark.sql import functions as F
 
     from obadiah_spark.operators.lifecycle import bitstamp_match_sweep
