@@ -1439,11 +1439,10 @@ def _q_match_fill_exact(spark, sf_dir):
 
 
 def _q_match_incremental(spark, sf_dir):
-    """I5+I6 scheduled-matching lifecycle replayed as a chunked batch loop
-    (reference bitfinex.pga_match, db/bitfinex_schema.sql:748-846): resume
-    from link state, 2-minute delay guard, bounded chunks — here 7-day
-    chunks across the synthetic month so the loop actually takes several
-    steps. The chunking is provably invisible in the link set
+    """I5+I6 scheduled-matching lifecycle (reference bitfinex.pga_match,
+    db/bitfinex_schema.sql:748-846) over the whole synthetic month: one
+    step from the oldest trade to the 2-minute delay guard. The reference's
+    per-run interval cap is provably invisible in the link set
     (operators/lifecycle.py module docstring), so the oracle is the
     one-shot form bounded to newest − delay."""
     from pyspark.sql import functions as F
@@ -1457,8 +1456,7 @@ def _q_match_incremental(spark, sf_dir):
         "price", F.col("amount").alias("fill"),
         F.col("side").alias("origination"), "exchange_trade_id",
     )
-    return incremental_match(l3, trades,
-                             max_interval_us=7 * 86_400_000_000)
+    return incremental_match(l3, trades)
 
 
 def _q_inferred_trades(spark, sf_dir):

@@ -13,12 +13,15 @@ over a bounded chunk with a delay guard, resuming from its own link state:
   same resume-from-last-link shape (v_start = max linked microtimestamp)
   driving I9/I10.
 
-This module is the batch embodiment of that scheduler loop: a driver-side
-chunk cursor stands in for the cron cadence (documented deviation — the
-reference's advisory locks and pgagent jobs are orchestration, out of
-scope per SURVEY §2.6; the QUERY content per chunk is what's reproduced),
-and the reference's in-place UPDATEs become recompute-and-return link
-frames (the repo-wide convention).
+This module reproduces the QUERY content of that scheduler loop, not its
+cadence: a backlog (or a restart) is matched in ONE step over the whole
+frame, (last linked trade or oldest trade − 1 µs, newest trade − delay].
+The reference's p_max_interval cap only bounds how much one cron run
+does; the tiling proof below shows it never changes the links, so the
+cap, the cron cadence, the advisory locks and the pgagent jobs are all
+orchestration, out of scope per SURVEY §2.6. The reference's in-place
+UPDATEs become recompute-and-return link frames (the repo-wide
+convention).
 
 Chunked ≡ one-shot, exactly
 ---------------------------
@@ -50,19 +53,14 @@ trades to <= (newest − delay) for I5 while leaving the I6 run fabric
 unfiltered and bounding groups by group_ts (see
 ``incremental_match_oracle_sql``).
 
-Scale: each step touches only the chunk ± horizon — the level3 scan is
-pruned to it (predicate pushdown on microtimestamp), the matchers shuffle
-on (pair, era, price/fill) within the chunk, and accumulated links are
-lineage-cut per step (localCheckpoint), so a month of backlog replays as
-a sequence of bounded jobs instead of one unbounded one. State = the link
-frame itself (resume is max linked trade ts), so a restart resumes and a
-replay is idempotent (re-running over already-linked ground produces the
-same links, merged by key).
+State = the link frame itself (resume is max linked trade ts), so a
+restart resumes and a replay is idempotent (re-running over already-linked
+ground produces the same links, merged by key). Resume relies on the
+tiling above: the step over (cursor, horizon] is the one-shot result
+restricted to that frame.
 """
 
 from __future__ import annotations
-
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -78,56 +76,12 @@ from obadiah_spark.operators.matching import (
     match_sum_of_fills_oracle_sql,
 )
 
-# reference defaults: p_delay '00:02:00', p_max_interval '02:00:00'
-# (db/bitfinex_schema.sql:748); the gate uses a larger max_interval so the
-# synthetic month still spans multiple chunks without thousands of steps.
+# reference default p_delay '00:02:00' (db/bitfinex_schema.sql:748)
 DELAY_US = 120_000_000
-MAX_INTERVAL_US = 7_200_000_000
 
 _LINK_COLS = ["pair_id", "exchange_trade_id", "trade_microtimestamp",
               "event_microtimestamp", "order_id", "event_no", "side",
               "price", "fill"]
-
-
-def match_frame(trades: DataFrame, linked: DataFrame | None,
-                cursor_us: int | None = None,
-                delay_us: int = DELAY_US,
-                max_interval_us: int = MAX_INTERVAL_US,
-                ) -> tuple[int, int] | None:
-    """One ``pga_match`` frame decision: ``(o_start_us, o_end_us]`` or None.
-
-    Mirrors reference db/bitfinex_schema.sql:788-811: resume from the last
-    linked trade if any (else the oldest trade), stop ``delay_us`` before
-    the newest trade (first run: at most one ``max_interval_us`` from the
-    start), cap the chunk at ``max_interval_us``. ``cursor_us`` is the
-    batch driver's progress cursor (max of all previous o_ends) — it
-    guarantees termination when a chunk yields no links, which the
-    reference delegates to its cron cadence. Three scalar aggregates;
-    driver-side by design (the scheduler's frame decision, catalog-lookup
-    class)."""
-    b = trades.agg(
-        F.min(F.unix_micros("trade_microtimestamp")).alias("mn"),
-        F.max(F.unix_micros("trade_microtimestamp")).alias("mx"),
-    ).collect()[0]
-    if b.mn is None:
-        return None
-    last_link = None
-    if linked is not None:
-        last_link = linked.agg(
-            F.max(F.unix_micros("trade_microtimestamp"))).collect()[0][0]
-    resumes = [x for x in (last_link, cursor_us) if x is not None]
-    if resumes:
-        o_start = max(resumes)
-        o_end = b.mx - delay_us
-    else:
-        # first run: inclusive of the very first trade -> open the interval
-        # 1 us below it; no delay guard (reference else-branch :803-806)
-        o_start = b.mn - 1
-        o_end = min(b.mx - delay_us, b.mn + max_interval_us)
-    o_end = min(o_end, o_start + max_interval_us)
-    if o_end <= o_start:
-        return None
-    return o_start, o_end
 
 
 def _between_us(col: str, lo_us: int, hi_us: int):
@@ -149,17 +103,12 @@ def incremental_match_step(l3: DataFrame, trades: DataFrame,
     ext_lo, ext_hi = lo_us - l_us - d_us, hi_us + l_us + d_us
     # materialize both chunk windows once: I5 and I6 each reference the
     # event/trade windows in several subtrees (joins + windows), and
-    # without the cut every subtree re-scans the full cached l3/trades
-    # and re-applies the filter — ~6 full-input scan waves per chunk of
+    # without the cut every subtree re-scans the full l3/trades and
+    # re-applies the filter — ~6 full-input scan waves per chunk of
     # pure overhead (guide §2.4: share one materialization instead of
-    # re-deriving). LAZY on purpose (r16 A/B): flipping these three to
-    # eager — the fix for the winnow_pairs concurrent-materialization
-    # race — was tried and measured SLOWER here (warm union 7.5-7.9 s
-    # lazy vs 10.5-10.7 s eager at sf0.1): the chunk loop already runs
-    # up to 4 chunks from driver threads, and three eager barriers per
-    # chunk serialize each thread's pipeline without buying overlap,
-    # while the cross-job duplication race is confined to one chunk's
-    # broadcast builds and rarely fires.
+    # re-deriving). The cuts still pay on one whole-horizon step: 3.6 s
+    # with them, 5.6-5.9 s without (sf0.1, 4 cores, warm); lazy, not
+    # eager, per the A/B in OPTIMIZATION_r16.md.
     t_ext = trades.filter(_between_us("trade_microtimestamp",
                                       ext_lo - 1, ext_hi)
                           ).localCheckpoint(eager=False)
@@ -199,39 +148,18 @@ def incremental_match_step(l3: DataFrame, trades: DataFrame,
 def incremental_match(l3: DataFrame, trades: DataFrame,
                       existing_links: DataFrame | None = None,
                       delay_us: int = DELAY_US,
-                      max_interval_us: int = MAX_INTERVAL_US,
-                      max_delay_s: int = 1, lookback_s: int = 60,
-                      max_steps: int = 10_000,
-                      cache_inputs: bool = True) -> DataFrame:
-    """Drive :func:`incremental_match_step` to the current frame horizon —
-    the whole ``pga_match`` lifecycle replayed as a bounded batch loop.
+                      max_delay_s: int = 1, lookback_s: int = 60) -> DataFrame:
+    """The whole ``pga_match`` lifecycle up to the current horizon, as one
+    lazy :func:`incremental_match_step` over (last linked trade, or oldest
+    trade − 1 µs, newest trade − ``delay_us``].
 
     Returns the NEW links only (recompute-and-return, like the matchers);
     pass the previous result as ``existing_links`` to resume after a
-    restart — the frame rule picks up from the last linked trade, and a
-    full replay over already-linked ground yields zero rows
-    (tests/test_lifecycle.py).
-
-    The chunk frames advance arithmetically off the cursor (which by
-    construction is >= every kept link, so the per-step linked-state
-    aggregate of :func:`match_frame` is redundant here) — they are known
-    up front, and the tiling proof (module docstring) makes the steps
-    INDEPENDENT: a backlog replay therefore submits up to four
-    chunk jobs concurrently from driver threads (Spark schedules
-    concurrent jobs from one session fairly), instead of serializing a
-    month of bounded jobs end to end. The live scheduled job
-    (streaming/match_job.py) still advances one frame per micro-batch —
-    the cadence is the point there; the thread pool is the batch-replay
-    path. Results are unioned in frame order, so the output is
-    bit-identical to the serial loop (pytest: chunk-size invariance).
-
-    With ``cache_inputs`` (default) the trades frame is materialized up
-    front so a computed/view-backed input isn't re-derived every chunk;
-    pass False when trades is a silver parquet table — then each chunk's
-    time filter reaches the scan as a pushed-down predicate and nothing
-    is pinned."""
-    if cache_inputs:
-        trades = trades.localCheckpoint(eager=True)
+    restart — the frame starts at the last linked trade, and a full
+    replay over already-linked ground yields zero rows
+    (tests/test_lifecycle.py). The frame decision is two scalar
+    aggregates (trade bounds, resume cursor), driver-side by design; an
+    empty frame returns the step's empty frame."""
     b = trades.agg(
         F.min(F.unix_micros("trade_microtimestamp")).alias("mn"),
         F.max(F.unix_micros("trade_microtimestamp")).alias("mx"),
@@ -240,36 +168,13 @@ def incremental_match(l3: DataFrame, trades: DataFrame,
     if existing_links is not None:
         cursor = existing_links.agg(
             F.max(F.unix_micros("trade_microtimestamp"))).collect()[0][0]
-    frames: list[tuple[int, int]] = []
+    lo = hi = 0
     if b.mn is not None:
         lo = cursor if cursor is not None else b.mn - 1
-        while len(frames) <= max_steps:
-            hi = min(b.mx - delay_us, lo + max_interval_us)
-            if hi <= lo:
-                break
-            frames.append((lo, hi))
-            lo = hi
-        if len(frames) > max_steps:
-            raise RuntimeError(f"incremental_match did not converge in "
-                               f"{max_steps} steps")
-    if not frames:
-        return incremental_match_step(l3, trades.limit(0), 0, 0,
-                                      max_delay_s, lookback_s).limit(0)
-
-    def run(frame: tuple[int, int]) -> DataFrame:
-        # cut lineage per chunk: unioning raw steps would stack one plan
-        # per chunk (verify-skill gotcha on multi-stage self-joins); the
-        # eager checkpoint is also what each worker thread blocks on
-        return incremental_match_step(
-            l3, trades, *frame, max_delay_s, lookback_s
-        ).localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=min(4, len(frames))) as pool:
-        steps = list(pool.map(run, frames))
-    links = steps[0]
-    for step in steps[1:]:
-        links = links.unionByName(step)
-    return links
+        hi = b.mx - delay_us
+    if hi <= lo:  # nothing to match: the step's empty frame, same schema
+        trades, lo, hi = trades.limit(0), 0, 0
+    return incremental_match_step(l3, trades, lo, hi, max_delay_s, lookback_s)
 
 
 def incremental_match_oracle_sql(delay_us: int = DELAY_US,

@@ -20,8 +20,12 @@ At-least-once replay safety (foreachBatch's contract):
   ``incremental_match`` against the already-appended links, whose frame
   rule resumes past them and yields zero rows.
 
-At 100 TB the trades store is the silver matches table (time-partitioned;
-each lifecycle step scans only its chunk ± horizon via pushdown) and the
+Each micro-batch matches everything from the resume cursor up to the
+current horizon in one lazy step; the reference's p_max_interval cap
+bounds a cron run's work, never its links (operators/lifecycle.py), so it
+is not reproduced. The parquet-backed trades store is read, never pinned:
+no micro-batch checkpoints the whole growing store (ADVICE r8). At 100 TB
+the trades store is the silver matches table (time-partitioned) and the
 level3 reader re-reads the growing silver log — here a caller-supplied
 thunk so tests can pin a static frame.
 """
@@ -33,11 +37,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from obadiah_spark.operators.lifecycle import (
-    DELAY_US,
-    MAX_INTERVAL_US,
-    incremental_match,
-)
+from obadiah_spark.operators.lifecycle import DELAY_US, incremental_match
 
 
 def read_links(spark, links_store: str) -> DataFrame | None:
@@ -69,13 +69,11 @@ class MatchJob:
     def __init__(self, l3_reader: Callable[..., DataFrame],
                  trades_store: str, links_store: str,
                  delay_us: int = DELAY_US,
-                 max_interval_us: int = MAX_INTERVAL_US,
-                 max_delay_s: int = 1, lookback_s: int = 60,
-                 cache_inputs: bool = False) -> None:
+                 max_delay_s: int = 1, lookback_s: int = 60) -> None:
         # stream-finality invariant: the delay guard is WHY matching a
-        # growing store equals the one-shot batch — every chunk's extended
+        # growing store equals the one-shot batch — every frame's extended
         # window [lo − lookback − max_delay, hi + lookback + max_delay]
-        # must lie wholly below the newest trade when the chunk is matched,
+        # must lie wholly below the newest trade when the frame is matched,
         # so (for in-order feeds) its content is final. The reference
         # encodes the same assumption: p_delay (2 min) dwarfs the 1 s
         # match window.
@@ -83,20 +81,13 @@ class MatchJob:
             raise ValueError(
                 f"delay_us ({delay_us}) must exceed the matcher horizon "
                 f"(lookback_s + max_delay_s = {lookback_s + max_delay_s} s) "
-                f"or chunks could match against not-yet-final windows")
+                f"or frames could match against not-yet-final windows")
         self.l3_reader = l3_reader
         self.trades_store = trades_store
         self.links_store = links_store
         self.delay_us = delay_us
-        self.max_interval_us = max_interval_us
         self.max_delay_s = max_delay_s
         self.lookback_s = lookback_s
-        # default False: the trades store is parquet-backed, so the chunk
-        # filters must PUSH DOWN to the scan — eagerly localCheckpoint-ing
-        # the whole growing store every micro-batch would cost O(history)
-        # per batch and pin executor storage (ADVICE r8; matches
-        # lifecycle.py's own guidance for parquet-backed inputs)
-        self.cache_inputs = cache_inputs
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -109,9 +100,8 @@ class MatchJob:
         existing = read_links(spark, self.links_store)
         new = incremental_match(
             self.l3_reader(spark), trades, existing_links=existing,
-            delay_us=self.delay_us, max_interval_us=self.max_interval_us,
-            max_delay_s=self.max_delay_s, lookback_s=self.lookback_s,
-            cache_inputs=self.cache_inputs)
+            delay_us=self.delay_us, max_delay_s=self.max_delay_s,
+            lookback_s=self.lookback_s)
         new.write.mode("append").parquet(self.links_store)
 
 

@@ -1,7 +1,8 @@
 """Incremental matching lifecycle (VERDICT r6 task #4 / r7 task #4):
-chunked ``incremental_match`` must equal the one-shot batch matchers
-exactly — including runs and contested events straddling chunk
-boundaries — be idempotent on replay, and terminate across empty chunks.
+``incremental_match`` must equal the one-shot batch matchers exactly, and
+so must the union of its steps over any cut of the frame — including runs
+and contested events straddling a cut — be idempotent on replay, and
+cover empty stretches and long backlogs.
 
 The feed is hand-crafted (the sf0.001 fabric has an empty ``matches``)
 so every boundary case is actually present: an event contested by trades
@@ -18,9 +19,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from obadiah_spark.operators.lifecycle import (
+    DELAY_US,
     incremental_match,
     incremental_match_step,
-    match_frame,
 )
 from obadiah_spark.operators.matching import (
     match_price_and_fill_exact,
@@ -28,7 +29,7 @@ from obadiah_spark.operators.matching import (
 )
 
 ERA = datetime(2024, 1, 10)
-MAX_INTERVAL_US = 600 * 1_000_000  # 10-min chunks for the test feed
+CUT_US = 600 * 1_000_000  # 10-min cuts for the test feed
 
 
 def _ts(sec: float) -> datetime:
@@ -120,13 +121,19 @@ def _links(df) -> set:
             for r in df.collect()}
 
 
+def _first_frame(trades) -> tuple[int, int]:
+    """(oldest trade − 1 µs, newest trade − delay]: a first run's frame."""
+    b = trades.agg(F.min(F.unix_micros("trade_microtimestamp")),
+                   F.max(F.unix_micros("trade_microtimestamp"))).collect()[0]
+    return b[0] - 1, b[1] - DELAY_US
+
+
 def test_incremental_equals_one_shot(feed):
     l3, trades = feed
     hi_us = trades.agg(
         F.max(F.unix_micros("trade_microtimestamp"))).collect()[0][0] \
         - 120_000_000
-    got = _links(incremental_match(l3, trades,
-                                   max_interval_us=MAX_INTERVAL_US))
+    got = _links(incremental_match(l3, trades))
     want = _one_shot(l3, trades, hi_us)
     assert got == want
     # the boundary cases actually fired:
@@ -140,23 +147,26 @@ def test_incremental_equals_one_shot(feed):
 
 
 def test_chunk_size_invariance(feed):
-    """The link set must not depend on the chunk cadence — 10-min chunks,
-    4-min chunks, and one giant single chunk all agree."""
+    """The steps tile: the union of :func:`incremental_match_step` over
+    10-min cuts, and over 4-min cuts, of (oldest − 1 µs, horizon] equals
+    the one-step ``incremental_match`` — the property resume relies on."""
     l3, trades = feed
-    base = _links(incremental_match(l3, trades,
-                                    max_interval_us=MAX_INTERVAL_US))
-    for interval_us in (240 * 1_000_000, 10_000 * 1_000_000):
-        assert _links(incremental_match(
-            l3, trades, max_interval_us=interval_us)) == base
+    base = _links(incremental_match(l3, trades))
+    lo, hi = _first_frame(trades)
+    for cut_us in (CUT_US, 240 * 1_000_000):
+        got = set()
+        for a in range(lo, hi, cut_us):
+            got |= _links(incremental_match_step(
+                l3, trades, a, min(a + cut_us, hi)))
+        assert got == base
 
 
 def test_replay_is_idempotent(feed):
     """Restart semantics (reference pga_match resumes from its own link
     state): feeding the previous result back yields ZERO new links."""
     l3, trades = feed
-    links = incremental_match(l3, trades, max_interval_us=MAX_INTERVAL_US)
-    again = incremental_match(l3, trades, existing_links=links,
-                              max_interval_us=MAX_INTERVAL_US)
+    links = incremental_match(l3, trades)
+    again = incremental_match(l3, trades, existing_links=links)
     assert again.count() == 0
 
 
@@ -164,11 +174,11 @@ def test_step_is_pure_and_tiling(feed):
     """Replaying a single chunk reproduces its links verbatim, and chunk
     outputs are disjoint (each link owned by exactly one chunk)."""
     l3, trades = feed
-    f1 = match_frame(trades, None, None,
-                     max_interval_us=MAX_INTERVAL_US)
+    lo, _ = _first_frame(trades)
+    f1 = (lo, lo + CUT_US)
     s1 = _links(incremental_match_step(l3, trades, *f1))
     assert s1 == _links(incremental_match_step(l3, trades, *f1))
-    f2 = match_frame(trades, None, f1[1], max_interval_us=MAX_INTERVAL_US)
+    f2 = (f1[1], f1[1] + CUT_US)
     s2 = _links(incremental_match_step(l3, trades, *f2))
     assert s1 and s2 and not (s1 & s2)
 
@@ -183,8 +193,7 @@ def test_match_job_incremental_arrival_and_replay(feed, tmp_path, spark):
 
     l3, trades = feed
     job = MatchJob(lambda s: l3, str(tmp_path / "trades"),
-                   str(tmp_path / "links"),
-                   max_interval_us=MAX_INTERVAL_US)
+                   str(tmp_path / "links"))
     batches = [
         trades.filter(F.col("exchange_trade_id") <= 4),
         trades.filter((F.col("exchange_trade_id") > 4)
@@ -193,8 +202,7 @@ def test_match_job_incremental_arrival_and_replay(feed, tmp_path, spark):
     ]
     for i, b in enumerate(batches):
         job(b, i)
-    want = _links(incremental_match(l3, trades,
-                                    max_interval_us=MAX_INTERVAL_US))
+    want = _links(incremental_match(l3, trades))
     assert _links(read_links(spark, str(tmp_path / "links"))) == want
     n_trades = spark.read.parquet(str(tmp_path / "trades")).count()
     assert n_trades == trades.count()
@@ -210,9 +218,9 @@ def test_match_job_incremental_arrival_and_replay(feed, tmp_path, spark):
 
 
 def test_terminates_across_empty_chunks(spark):
-    """A chunk with no trades yields no links; the cursor must still
-    advance (the reference delegates this to cron cadence — the batch
-    driver may not stall)."""
+    """A frame with a long stretch of no trades still yields the links on
+    either side of it (the reference delegates the empty stretch to cron
+    cadence — the batch replay may not stall)."""
     trades = spark.createDataFrame(
         [(1, ERA, _ts(0.0), 100.0, 1.0, "b", 1),
          (1, ERA, _ts(3000.0), 105.0, 1.0, "s", 2)],
@@ -226,10 +234,32 @@ def test_terminates_across_empty_chunks(spark):
         "order_id bigint, event_no int, side string, price double, "
         "fill double",
     )
-    got = _links(incremental_match(l3, trades,
-                                   max_interval_us=MAX_INTERVAL_US,
-                                   max_steps=50))
+    got = _links(incremental_match(l3, trades))
     assert got == {(1, 1001, 1, "fill_exact")}
+
+
+def test_long_backlog_at_default_arguments(spark):
+    """A first run over a backlog far longer than the reference's 2 h
+    per-run interval (two linked trades 1,000 days apart, default
+    arguments) matches it whole: no step bound, no convergence error."""
+    far = 1000 * 86_400.0
+    trades = spark.createDataFrame(
+        [(1, ERA, _ts(0.0), 100.0, 1.0, "b", 1),
+         (1, ERA, _ts(far), 105.0, 1.0, "s", 2),
+         (1, ERA, _ts(far + 3600.0), 110.0, 1.0, "b", 3)],
+        "pair_id int, era timestamp, trade_microtimestamp timestamp, "
+        "price double, fill double, origination string, "
+        "exchange_trade_id bigint",
+    )
+    l3 = spark.createDataFrame(
+        [(1, ERA, _ts(0.5), 1001, 1, "s", 100.0, 1.0),
+         (1, ERA, _ts(far + 0.5), 1002, 1, "b", 105.0, 1.0)],
+        "pair_id int, era timestamp, microtimestamp timestamp, "
+        "order_id bigint, event_no int, side string, price double, "
+        "fill double",
+    )
+    got = _links(incremental_match(l3, trades))
+    assert got == {(1, 1001, 1, "fill_exact"), (2, 1002, 1, "fill_exact")}
 
 
 def test_lookback_precondition_holds_on_gate_fabric(spark, level3):
