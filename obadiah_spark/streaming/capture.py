@@ -139,72 +139,14 @@ def _parse_one_strict(line: str, line_no: int) -> list[tuple]:
              *vals[:4], line_no, 0)]
 
 
-# JVM fast-lane shape (round 10, VERDICT r9 task #4): the dominant wire
-# line by volume is the flat book update `[chan, [f0, f1, f2], rts]`.
-# This regex admits ONLY lines whose typing is unambiguous from the text:
-# a bare small integer channel, a flat bracket payload containing no
-# quotes / braces / letters (so no strings, bools, nulls, NaN tokens —
-# every member is a bare JSON number), and an optional bare-integer
-# timestamp. For such lines `from_json` + casts reproduce the Python
-# parser bit-for-bit (differential-tested); everything else — trades,
-# snapshots, dict events, heartbeats, garbage, and every ambiguous corner
-# (quoted numbers, booleans, overflow) — keeps the per-line Python parser,
-# which now sees ~10% of the stream instead of all of it.
-_FAST_UPDATE_RE = (
-    r"^\s*\[\s*-?\d{1,9}\s*,\s*\[[0-9eE+\-.,\t ]*\]\s*"
-    r"(,\s*-?\d{1,18}\s*)?\]\s*$"
-)
-
-
-def _materialize_for_fanout(with_no: DataFrame) -> DataFrame:
-    """Make the id-stamped frame SAFE to fan out into the complementary
-    fast/slow parse lanes (``jvm_lane=True`` only — the default Python
-    lane consumes it exactly once and needs none of this).
-
-    Both lanes filter the same id-stamped frame, so without materialization
-    the id-assigning scan runs twice (once per lane) and the two scans must
-    agree row-for-row for ``line_no`` to be a consistent key. In batch mode
-    we don't rely on that: ``localCheckpoint(eager)`` pins the assignment
-    once, making each lane a narrow filter of the SAME materialized rows.
-    In streaming mode checkpointing isn't available; there the lanes are
-    only correct because every supported source (file replay, the socket
-    transport) yields a deterministic partitioning and row order within a
-    micro-batch. A stream that shuffles or repartitions upstream of this
-    point would assign DIFFERENT line_no values per lane — silent
-    corruption — so that shape is rejected loudly here (best-effort
-    logical-plan scan; plans Spark hides from it remain the caller's
-    contract).
-    """
-    if not with_no.isStreaming:
-        return with_no.localCheckpoint(eager=True)
-    try:
-        plan = with_no._jdf.queryExecution().logical().toString()
-    except Exception:  # plan introspection is best-effort only
-        plan = ""
-    if "Repartition" in plan or "Rebalance" in plan:
-        raise ValueError(
-            "jvm_lane=True on a streaming frame with an upstream "
-            "repartition: the two parse lanes would re-evaluate the "
-            "line_no-assigning scan on different partitionings. Use the "
-            "default Python lane, or drop the repartition.")
-    return with_no
-
-
-def parse_frames(lines: DataFrame, jvm_lane: bool = False) -> DataFrame:
+def parse_frames(lines: DataFrame) -> DataFrame:
     """Wire parse: ``value`` (one line per row) → normalized frame rows.
     Works on batch and streaming frames alike; output is line_no-keyed, so
     evaluation order is irrelevant.
 
-    The DEFAULT is the single-pass Arrow-batched Python parser — the
-    measured winner (tools/stream_bench.py, 2M lines, local[32]: 1.5M
-    rows/s vs 0.4M for the hybrid). ``jvm_lane=True`` keeps the r10
-    hybrid: flat book updates (the hot shape) parse JVM-side via
-    ``from_json`` inside whole-stage codegen, everything else falls back
-    to the Python lane — output-identical (differential-tested), but the
-    fan-out costs a materialization plus two scans and a union, which
-    loses to one vectorized pass at every scale measured on this
-    hardware. It remains available (and tested) for deployments where
-    executor Python workers, not cores, are the bottleneck."""
+    One Arrow-batched Python pass (``mapInPandas``) over the lines. It
+    outran every JVM ``from_json`` hybrid measured (SCALE.md §6: 1.5–3.8×
+    on both wire dialects), so it is the only parse lane."""
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -213,35 +155,8 @@ def parse_frames(lines: DataFrame, jvm_lane: bool = False) -> DataFrame:
                 rows.extend(_parse_one(line, int(no)))
             yield pd.DataFrame(rows, columns=_PARSED_COLS)
 
-    with_no = lines.withColumn("line_no", F.monotonically_increasing_id())
-    if not jvm_lane:
-        return with_no.mapInPandas(gen, schema=PARSED_SCHEMA)
-    with_no = _materialize_for_fanout(with_no)
-    arr = F.from_json(F.col("value"), "array<string>")
-    # arr can only be null here if the line is invalid JSON despite the
-    # shape regex (e.g. a trailing comma) — those fall through to the
-    # Python lane, which classifies them garbage
-    is_fast = F.col("value").rlike(_FAST_UPDATE_RE) & arr.isNotNull()
-    inner = F.from_json(F.get(arr, 1), "array<double>")
-    fast_rows = with_no.filter(is_fast).select(
-        F.lit("data").alias("kind"),
-        F.lit(None).cast("string").alias("event"),
-        F.get(arr, 0).cast("int").alias("chan_id"),
-        F.lit(None).cast("string").alias("channel"),
-        F.lit("update").alias("tag"),
-        F.size(inner).alias("arity"),
-        F.lit(False).alias("is_snapshot"),
-        F.get(arr, 2).cast("long").alias("rts_ms"),
-        F.get(inner, 0).alias("f0"),
-        F.get(inner, 1).alias("f1"),
-        F.get(inner, 2).alias("f2"),
-        F.get(inner, 3).alias("f3"),
-        F.col("line_no"),
-        F.lit(0).alias("entry_no"),
-    )
-    slow_rows = (with_no.filter(~is_fast)
-                 .mapInPandas(gen, schema=PARSED_SCHEMA))
-    return slow_rows.unionByName(fast_rows)
+    return (lines.withColumn("line_no", F.monotonically_increasing_id())
+            .mapInPandas(gen, schema=PARSED_SCHEMA))
 
 
 # ------------------------------------------------------- channel registry --
@@ -650,30 +565,9 @@ def _bs_parse_one_strict(line: str, line_no: int) -> list[tuple]:
              None, None, None, None, line_no)]
 
 
-# bitstamp JVM fast lane (round 10): every leaf parses as STRING (so
-# quoted and bare atoms land identically), then try_cast reproduces the
-# Python conversions; any null requirement routes the line back to the
-# per-line Python parser. The event/channel regex guards the corners
-# where Python's str() of a non-string JSON value (True -> 'True',
-# objects -> repr) differs from the raw JSON text.
-_BS_JSON_SCHEMA = (
-    "struct<event string, channel string, data struct<"
-    "microtimestamp string, datetime string, amount_str string, "
-    "price_str string, id string, order_type string, "
-    "buy_order_id string, sell_order_id string, type string>>"
-)
-_BS_NAME_RE = r"^[A-Za-z0-9:_.\-]+$"
-
-
-def parse_bitstamp_frames(lines: DataFrame,
-                          jvm_lane: bool = False) -> DataFrame:
-    """Bitstamp wire parse (batch and streaming alike). Default = the
-    single-pass Python lane (the measured winner — see
-    :func:`parse_frames`). ``jvm_lane=True``: the r10 hybrid — the three
-    regular dict shapes (order events / trades / control events) parse
-    JVM-side via ``from_json`` + ``try_cast``, lines that miss any
-    requirement fall back to the per-line Python parser
-    (differential-tested equal, but slower end-to-end on this hardware)."""
+def parse_bitstamp_frames(lines: DataFrame) -> DataFrame:
+    """Bitstamp wire parse (batch and streaming alike): the same
+    single-pass Python lane as :func:`parse_frames`."""
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -682,88 +576,8 @@ def parse_bitstamp_frames(lines: DataFrame,
                 rows.extend(_bs_parse_one(line, int(no)))
             yield pd.DataFrame(rows, columns=_BS_PARSED_COLS)
 
-    with_no = lines.withColumn("line_no", F.monotonically_increasing_id())
-    if not jvm_lane:
-        return with_no.mapInPandas(gen, schema=BS_PARSED_SCHEMA)
-    with_no = _materialize_for_fanout(with_no)
-    j = F.from_json(F.col("value"), _BS_JSON_SCHEMA)
-    d = j["data"]
-
-    def _lng(col):  # mirrors Python int(str): integral strings only
-        return col.try_cast("long")
-
-    def _dbl(col):  # mirrors Python float(str)
-        return col.try_cast("double")
-
-    us = _dbl(d["microtimestamp"]).try_cast("long")  # int(float(x))
-    dt_s = _dbl(d["datetime"])
-    amount = _dbl(d["amount_str"])
-    price = _dbl(d["price_str"])
-    oid = _lng(d["id"])
-    otype = _lng(d["order_type"])
-    tid = _lng(d["id"])
-    buy_id = _lng(d["buy_order_id"])
-    sell_id = _lng(d["sell_order_id"])
-    ttype = _lng(d["type"])
-
-    event = j["event"]
-    is_order = event.isin(*_BS_ORDER_EVENTS)
-    is_trade = event == "trade"
-    order_ok = (us.isNotNull() & dt_s.isNotNull() & amount.isNotNull()
-                & price.isNotNull() & oid.isNotNull() & otype.isNotNull())
-    trade_ok = (us.isNotNull() & amount.isNotNull() & price.isNotNull()
-                & tid.isNotNull() & buy_id.isNotNull() & sell_id.isNotNull()
-                & ttype.isNotNull())
-    # event/channel must be QUOTED STRINGS in the raw text: Python's
-    # str() of a non-string JSON value (True -> 'True', 5e2 -> '500.0',
-    # None -> 'None') differs from the raw token from_json preserves, so
-    # any non-string value routes the line to the Python lane. Both
-    # guards are NEGATIVE whole-line checks ("no unquoted value for this
-    # key anywhere"): a positive '"event"\s*:\s*"' test alone is evadable
-    # by a line whose top-level event is a non-string token while a
-    # NESTED quoted "event" (e.g. inside data) satisfies the regex —
-    # from_json would then surface the raw token ('5e2', 'true') where
-    # the Python parser emits str() forms. The negative form only ever
-    # errs conservatively: a nested unquoted event demotes a convertible
-    # line to the Python lane, never the reverse. channel: absent -> null
-    # on both engines.
-    chan_ok = (~F.col("value").rlike(r'"channel"\s*:\s*[^"]')
-               & (j["channel"].isNull() | j["channel"].rlike(_BS_NAME_RE)))
-    is_fast = (
-        event.isNotNull() & event.rlike(_BS_NAME_RE)
-        & F.col("value").rlike(r'"event"\s*:\s*"')
-        & ~F.col("value").rlike(r'"event"\s*:\s*[^"]')
-        & chan_ok
-        & (F.when(is_order, order_ok)
-            .when(is_trade, trade_ok)
-            .otherwise(F.lit(True)))
-    )
-    null_l = F.lit(None).cast("long")
-    null_d = F.lit(None).cast("double")
-    kind = (F.when(is_order, F.lit("order"))
-             .when(is_trade, F.lit("trade"))
-             .otherwise(F.lit("event")))
-    fast_rows = with_no.filter(is_fast).select(
-        kind.alias("kind"),
-        event.alias("event"),
-        j["channel"].alias("channel"),
-        F.when(is_order | is_trade, us).otherwise(null_l).alias("us"),
-        F.when(is_order, dt_s).otherwise(null_d).alias("dt_s"),
-        F.when(is_order | is_trade, amount).otherwise(null_d).alias("amount"),
-        F.when(is_order | is_trade, price).otherwise(null_d).alias("price"),
-        F.when(is_order, oid).otherwise(null_l).alias("order_id"),
-        F.when(is_order, otype.cast("int"))
-         .otherwise(F.lit(None).cast("int")).alias("order_type"),
-        F.when(is_trade, tid).otherwise(null_l).alias("trade_id"),
-        F.when(is_trade, buy_id).otherwise(null_l).alias("buy_order_id"),
-        F.when(is_trade, sell_id).otherwise(null_l).alias("sell_order_id"),
-        F.when(is_trade, ttype.cast("int"))
-         .otherwise(F.lit(None).cast("int")).alias("trade_type"),
-        F.col("line_no"),
-    )
-    slow_rows = (with_no.filter(~F.coalesce(is_fast, F.lit(False)))
-                 .mapInPandas(gen, schema=BS_PARSED_SCHEMA))
-    return slow_rows.unionByName(fast_rows)
+    return (lines.withColumn("line_no", F.monotonically_increasing_id())
+            .mapInPandas(gen, schema=BS_PARSED_SCHEMA))
 
 
 def route_bitstamp_batch(parsed: DataFrame, pair_id: int, era_us: int,

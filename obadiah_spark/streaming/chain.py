@@ -1,12 +1,16 @@
-"""Executor-side level3 chaining: keyed state in the Spark state store.
+"""Executor-side level3 chaining: the Structured Streaming binding of the
+chain machine in :mod:`obadiah_spark.streaming.ingest`.
 
 This is the production shape of the I1+I8 ingest state machine
 (``bitfinex.capture_transient_raw_book_events`` db/bitfinex_schema.sql:279-468
 + ``level3_incorporate_new_event`` db/obanalytics_schema.sql:1760-1834): the
-per-chain tail state lives in Structured Streaming's keyed state store,
-partitioned by (pair_id, exchange_id, era, order_id), checkpointed with the
-query — NEVER on the driver. Each micro-batch advances every touched chain
-and emits UPDATE-mode row versions:
+open tails live in Structured Streaming's keyed state store, partitioned by
+market-era (pair_id, exchange_id, era) — one state row per market holding
+its open chains as arrays (``STATE_SCHEMA``) — and checkpointed with the
+query, NEVER on the driver. Each micro-batch makes one Python call per
+touched market; :func:`~obadiah_spark.streaming.ingest.chain_events` (the
+kernel :class:`~obadiah_spark.streaming.ingest.Level3Ingestor` also drives)
+advances every touched chain and emits UPDATE-mode row versions:
 
 - a new event emits its level3 row with ``chain_state`` NULL (tentative —
   the reference's freshly-inserted row before any trigger revisits it),
@@ -16,207 +20,32 @@ and emits UPDATE-mode row versions:
 - a same-episode amendment re-emits the tail row derived from the replayed
   message (per-episode dedup keeping the latest message, I1 :374-384).
 
-Downstream materialization is latest-wins per (pair, era, order,
-microtimestamp) using the monotone ``rev`` — exactly how a DB mirror of the
-reference's table would consume logical-replication updates.
+Downstream materialization is latest-wins per (pair, exchange, era, order,
+microtimestamp) using the per-chain monotone ``rev``
+(:func:`~obadiah_spark.streaming.ingest.latest_wins`); era close
+(:func:`finalize_open_chains`) classifies the still-open tails.
 
 API surface: Spark 3.4's ``applyInPandasWithState``. (The Spark 4
 ``transformWithStateInPandas`` surface needs ``google.protobuf`` in the
 python worker, absent in this container; the state model here is identical —
 keyed, incremental, executor-side — so swapping the binding is mechanical.)
 
-State size is O(1) per open chain (the fold state before/after the tail plus
-the tail row); at 100 TB scale state is sharded by the grouping key across
-executors and RocksDB-backed; era close (see :func:`finalize_open_chains`)
-retires a whole era's keys.
-
 Ordering contract: rows WITHIN a micro-batch are sorted before folding;
-ACROSS batches the processor relies on the transport delivering
+ACROSS batches the kernel relies on the transport delivering
 capture-ordered batches (file replay and the batch_seq-ordered capture
 bronze both do). An event-time-earlier row that still arrives in a later
 batch — possible only on a disordered external feed, inside the watermark
 slack — is dropped with the same too-late contract the reference's
-reorderer applies beyond its slack, never chained backward. Full in-slack
-cross-batch reordering would hold such rows in a watermark-gated pending
-buffer inside the state row and flush them as the watermark passes; the
-hook is noted at the drop site.
+reorderer applies beyond its slack, never chained backward.
 """
 
 from __future__ import annotations
 
-import functools
-from collections import namedtuple
-from collections.abc import Iterator
-
-import numpy as np
 import pandas as pd
 
-from obadiah_spark.fold import schema_dtypes, typed_frame
-from obadiah_spark.streaming.ingest import _ChainState, advance_chain
-
-# fold state before the tail (7) + after the tail (7) + tail row (12) + rev
-# (side is DATA carried in state, never re-derived from order_id — a real
-# feed's side assignment has no formula)
-STATE_SCHEMA = (
-    "b_seq int, b_life int, b_count int, b_prev_price double, "
-    "b_prev_amount double, b_pg_us long, b_pg_eno int, "
-    "a_seq int, a_life int, a_count int, a_prev_price double, "
-    "a_prev_amount double, a_pg_us long, a_pg_eno int, "
-    "t_us long, t_eno int, t_side string, t_price double, t_amount double, "
-    "t_fill double, t_pms_us long, t_pe_no int, t_state string, t_life int, "
-    "t_event_id long, t_lts_us long, rev long"
-)
-
-OUTPUT_SCHEMA = (
-    "microtimestamp timestamp, order_id long, event_no int, side string, "
-    "price double, amount double, fill double, next_microtimestamp timestamp, "
-    "next_event_no int, pair_id int, exchange_id int, "
-    "local_timestamp timestamp, price_microtimestamp timestamp, "
-    "price_event_no int, chain_state string, era timestamp, life_no int, "
-    "event_id long, rev long"
-)
-
-_OUT_DTYPES = schema_dtypes(OUTPUT_SCHEMA)
-_OUT_COLS = list(_OUT_DTYPES)
-_ROW_COLS = _OUT_COLS[:-1]  # the level3 row fields; ``rev`` is appended
-
-
-def _ts_us(ts) -> int | None:
-    if ts is None or pd.isna(ts):
-        return None
-    return pd.Timestamp(ts).value // 1000
-
-
-def _us_ts(us) -> pd.Timestamp | None:
-    if us is None or pd.isna(us):
-        return None
-    return pd.Timestamp(int(us) * 1000)
-
-
-def _pack_chain(s: _ChainState) -> tuple:
-    return (s.seq, s.life_no, s.count, s.prev_price, s.prev_amount,
-            _ts_us(s.pg_ts), s.pg_eno)
-
-
-def _unpack_chain(t: tuple) -> _ChainState:
-    s = _ChainState()
-    (s.seq, s.life_no, s.count, s.prev_price, s.prev_amount, pg_us,
-     s.pg_eno) = t
-    s.pg_ts = _us_ts(pg_us)
-    if s.pg_eno is not None:
-        s.pg_eno = int(s.pg_eno)
-    return s
-
-
-@functools.cache
-def _row_type(cols: tuple[str, ...]) -> type:
-    return namedtuple("Row", cols)
-
-
-def _latest_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
-    """The batch's messages as named row tuples in (microtimestamp,
-    local_timestamp, event_id) order, keeping the LATEST message per
-    microtimestamp (per-episode dedup, I1 :374-384)."""
-    ts = pdf["microtimestamp"].to_numpy()
-    order = np.lexsort((pdf["event_id"].to_numpy(),
-                        pdf["local_timestamp"].to_numpy(), ts))
-    t = ts[order].view("i8")
-    idx = order[np.append(t[1:] != t[:-1], True)]
-    cols = tuple(pdf.columns)
-    return map(_row_type(cols)._make,
-               zip(*[pdf[c].iloc[idx].tolist() for c in cols]))
-
-
-def chain_events(key: tuple, pdfs: Iterator[pd.DataFrame], state
-                 ) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState body for one (pair, exchange, era, order) chain."""
-    pair_id, exchange_id, era, order_id = key
-    frames = list(pdfs)
-    pdf = frames[0] if len(frames) == 1 else pd.concat(frames,
-                                                       ignore_index=True)
-
-    if state.exists:
-        st = state.get
-        before, after = _unpack_chain(st[0:7]), _unpack_chain(st[7:14])
-        (t_us, t_eno, t_side, t_price, t_amount, t_fill, t_pms_us, t_pe_no,
-         t_state, t_life, t_event_id, t_lts_us, rev) = st[14:27]
-        tail = {
-            "microtimestamp": _us_ts(t_us), "order_id": int(order_id),
-            "event_no": int(t_eno), "side": t_side, "price": t_price,
-            "amount": t_amount, "fill": t_fill,
-            "next_microtimestamp": None, "next_event_no": None,
-            "pair_id": int(pair_id), "exchange_id": int(exchange_id),
-            "local_timestamp": _us_ts(t_lts_us),
-            "price_microtimestamp": _us_ts(t_pms_us),
-            "price_event_no": int(t_pe_no),
-            "chain_state": t_state, "era": era, "life_no": int(t_life),
-            "event_id": int(t_event_id),
-        }
-    else:
-        before = after = None
-        tail = None
-        rev = 0
-
-    emitted: list[tuple] = []
-
-    def emit(row: dict) -> None:
-        nonlocal rev
-        rev += 1
-        emitted.append((*map(row.__getitem__, _ROW_COLS), rev))
-
-    for r in _latest_rows(pdf):
-        if tail is not None and r.microtimestamp < tail["microtimestamp"]:
-            # CROSS-BATCH STRAGGLER: an event-time-earlier row arriving in
-            # a later micro-batch. withWatermark only DROPS rows older
-            # than the watermark — it does not reorder across batches —
-            # so chaining this row forward would write a backward
-            # next_microtimestamp and corrupt event_no/fill. Both in-repo
-            # transports deliver capture-ordered batches (the file source
-            # replays files in order; the capture bronze is batch_seq-
-            # ordered), so this fires only on a disordered external feed —
-            # where the reference's reorderer applies the SAME contract
-            # beyond its slack: log-and-drop rather than corrupt
-            # (python/obadiah/capture.py reorderer). In-slack cross-batch
-            # reordering would need a watermark-gated pending buffer in
-            # state (future work, noted in the module docstring).
-            continue
-        if tail is not None and tail["microtimestamp"] == r.microtimestamp:
-            # cross-batch episode amendment: the later message replaces the
-            # tail if newer by (local_timestamp, event_id)
-            if (r.local_timestamp, r.event_id) >= (
-                    tail["local_timestamp"], tail["event_id"]):
-                after = before.copy()
-                advance_chain(after, r, tail)
-                emit(tail)
-            continue
-        if tail is None:
-            before = _ChainState()
-        else:
-            if tail["chain_state"] is None:      # not a delete → link forward
-                tail["next_microtimestamp"] = r.microtimestamp
-                tail["next_event_no"] = tail["event_no"] + 1
-                tail["chain_state"] = "chained"
-                emit(tail)
-            before = after
-        after = before.copy()
-        tail = advance_chain(after, r)
-        emit(tail)
-
-    state.update(
-        _pack_chain(before) + _pack_chain(after) + (
-            _ts_us(tail["microtimestamp"]), tail["event_no"], tail["side"],
-            tail["price"], tail["amount"], tail["fill"],
-            _ts_us(tail["price_microtimestamp"]), tail["price_event_no"],
-            tail["chain_state"], tail["life_no"], tail["event_id"],
-            _ts_us(tail["local_timestamp"]), rev,
-        ))
-
-    if not emitted:          # every message was a stale replay — no change
-        # yield nothing at all: an empty all-object frame makes pandas'
-        # downstream concat warn (and, on a future pandas, change the
-        # result dtypes) — the generator protocol allows a bare return
-        return
-    yield typed_frame(dict(zip(_OUT_COLS, zip(*emitted))), _OUT_DTYPES)
+from obadiah_spark.streaming.ingest import (  # noqa: F401 — finalize_open_chains re-exported
+    OUTPUT_SCHEMA, STATE_SCHEMA, chain_events, finalize_open_chains,
+    latest_wins)
 
 
 def keyed_stream(events_stream):
@@ -244,11 +73,11 @@ def keyed_stream(events_stream):
 
 
 def chain_stream(keyed):
-    """Group the keyed stream by chain and run the stateful processor."""
+    """Group the keyed stream by market-era and run the stateful kernel."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return keyed.groupBy(
-        "pair_id", "exchange_id", "era", "order_id"
+        "pair_id", "exchange_id", "era"
     ).applyInPandasWithState(
         chain_events, OUTPUT_SCHEMA, STATE_SCHEMA, "update",
         GroupStateTimeout.NoTimeout,
@@ -259,7 +88,7 @@ def _run_stream(spark, src_dir: str, schema: str, checkpoint_dir: str,
                 adapter, ts_col: str, query_name: str) -> pd.DataFrame:
     """Shared driver for both chain runners: file-per-trigger stream →
     watermark → keyed adapter → stateful chain → latest-wins fold of the
-    update-mode upserts (max ``rev`` per logical row)."""
+    update-mode upserts."""
     from obadiah_spark.streaming.reorder import with_reorder_watermark
 
     stream = (
@@ -276,14 +105,7 @@ def _run_stream(spark, src_dir: str, schema: str, checkpoint_dir: str,
         .start()
     )
     q.awaitTermination()
-    ups = spark.table(query_name).toPandas()
-    return (
-        ups.sort_values("rev")
-        .drop_duplicates(["pair_id", "era", "order_id", "microtimestamp"],
-                         keep="last")
-        .drop(columns=["rev"])
-        .reset_index(drop=True)
-    )
+    return latest_wins(spark.table(query_name).toPandas())
 
 
 def run_chain_stream(spark, events_dir: str, schema: str, checkpoint_dir: str,
@@ -292,38 +114,6 @@ def run_chain_stream(spark, events_dir: str, schema: str, checkpoint_dir: str,
     return the materialized latest-wins level3."""
     return _run_stream(spark, events_dir, schema, checkpoint_dir,
                        keyed_stream, "ts", query_name)
-
-
-def finalize_open_chains(l3: pd.DataFrame) -> pd.DataFrame:
-    """Era-close classification of still-open tails (I11's completeness gate:
-    a chain with no successor when the stream closes is promoted to its
-    terminal state). Orders in the synthetic close-with-delete family
-    (order_id % 3 == 0) get the closing delete — price/amount/price-chain
-    carried from the predecessor, NULL fill (the reference's
-    abs(lag(...)) convention for price=0 deletes, db/bitfinex_schema.sql:
-    397-399); everything else rests 'alive' (+infinity next_microtimestamp,
-    db/obanalytics_schema.sql:149)."""
-    l3 = l3.copy()
-    is_open = l3["chain_state"].isna().to_numpy()
-    closing = is_open & (l3["order_id"] % 3 == 0).to_numpy()
-    if closing.any():
-        # predecessor of each closing tail: (order, era, life, event_no − 1)
-        key = ["order_id", "era", "life_no", "event_no"]
-        carried = ["price", "amount", "price_microtimestamp",
-                   "price_event_no"]
-        tails = l3.loc[closing, key]
-        tails["event_no"] = tails["event_no"] - 1
-        found = tails.merge(
-            l3[key + carried].drop_duplicates(key, keep="last"),
-            on=key, how="left", indicator=True)
-        hit = (found["_merge"] == "both").to_numpy()
-        rows = l3.index[closing][hit]
-        for c in carried:
-            l3.loc[rows, c] = found.loc[hit, c].to_numpy().astype(l3[c].dtype)
-        l3.loc[closing, "fill"] = None
-    l3.loc[closing, "chain_state"] = "deleted"
-    l3.loc[is_open & ~closing, "chain_state"] = "alive"
-    return l3
 
 
 def payload_keyed_stream(framed_stream):

@@ -5,7 +5,7 @@ The reference buffers events in a heap and releases them only after a fixed
 (reference python/obadiah/reorder.py:26-112, delay :53). In Structured
 Streaming that contract is exactly ``withWatermark``: events later than the
 delay are dropped/finalized, and each micro-batch is sorted in event time
-before processing (the sort happens inside foreachBatch — global ordering is
+before processing (the chain kernel sorts each market's rows — ordering is
 per-batch, cross-batch ordering is the watermark's job).
 """
 
@@ -19,7 +19,3 @@ def with_reorder_watermark(stream: DataFrame, ts_col: str = "ts",
     """Declare the reorderer's lateness contract on a streaming DataFrame."""
     return stream.withWatermark(ts_col, delay)
 
-
-def sort_batch(batch: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """The in-batch equivalent of the reference's heap pop order."""
-    return batch.orderBy(ts_col)

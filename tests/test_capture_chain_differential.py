@@ -26,11 +26,9 @@ class _RawIngestor(Level3Ingestor):
     _keyed = staticmethod(lambda batch: batch)
 
     def finalize(self) -> pd.DataFrame:
-        for tail in self.tails.values():
-            row = self.rows[tail["idx"]]
-            if row["chain_state"] is None:
-                row["chain_state"] = "alive"
-        return pd.DataFrame(self.rows)
+        l3 = self.latest()
+        l3.loc[l3.chain_state.isna(), "chain_state"] = "alive"
+        return l3
 
 
 def test_capture_chain_matches_batch_i1(spark):

@@ -9,7 +9,7 @@ import tempfile
 
 import numpy as np
 
-from obadiah_spark.streaming.ingest import Level3Ingestor, run_streaming_ingest
+from obadiah_spark.streaming.ingest import Level3Ingestor
 from tools.verify_local import canonicalize, compare
 
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, event_type string, "
@@ -68,8 +68,9 @@ def _write_event_chunks(spark, events, d, n_chunks=4):
 
 def test_chain_stream_executor_side(spark, level3):
     """The production streaming path: applyInPandasWithState keyed by
-    (pair, exchange, era, order) — state in the Spark state store, update-mode
-    upsert emissions, latest-wins materialization, era-close finalization.
+    market-era (pair, exchange, era) — state in the Spark state store,
+    update-mode upsert emissions, latest-wins materialization, era-close
+    finalization.
     Must reproduce the one-shot batch synthesis bit-for-bit."""
     from obadiah_spark.streaming.chain import finalize_open_chains, run_chain_stream
 
@@ -81,6 +82,88 @@ def test_chain_stream_executor_side(spark, level3):
     got = finalize_open_chains(latest)
     want = _batch_l3(level3)
     assert not compare("chain-stream-vs-batch", got, want)
+
+
+def test_chain_stream_restarts_from_checkpoint(spark, level3, tmp_path):
+    """Stop the chain stream after the first two of four event files, add
+    the other two and restart from the same checkpoint: the open chains
+    must come back from the state store, so both runs' versions, latest-wins
+    and era-closed, equal the one-shot batch level3. (A foreachBatch parquet
+    sink keyed by batch id: the memory sink refuses checkpoint recovery.)"""
+    import shutil
+    import time
+
+    from obadiah_spark.streaming.chain import (chain_stream,
+                                               finalize_open_chains,
+                                               keyed_stream, latest_wins)
+    from obadiah_spark.streaming.reorder import with_reorder_watermark
+
+    events = spark.table("events").toPandas().sort_values("ts").reset_index(drop=True)
+    flat = _write_event_chunks(spark, events, str(tmp_path))
+    files = sorted(os.listdir(flat))
+    assert len(files) == 4
+    src, sink = tmp_path / "src", tmp_path / "sink"
+    src.mkdir()
+    now = time.time()
+
+    def add(names):
+        for i, f in enumerate(names, start=files.index(names[0])):
+            shutil.move(os.path.join(flat, f), src / f)
+            # the file source replays in mtime order; same-ms files tie
+            os.utime(src / f, (now + 10 * i,) * 2)
+
+    def run():
+        stream = with_reorder_watermark(
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .option("maxFilesPerTrigger", 1).parquet(str(src)), "ts",
+            "1 second")
+        q = (chain_stream(keyed_stream(stream)).writeStream
+             .foreachBatch(lambda df, batch_id: df.write.parquet(
+                 str(sink / f"batch_id={batch_id}")))
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .outputMode("update").trigger(availableNow=True).start())
+        q.awaitTermination()
+
+    add(files[:2])
+    run()
+    first = {p.name for p in sink.iterdir()}
+    add(files[2:])
+    run()
+    assert first and {p.name for p in sink.iterdir()} > first
+    ups = spark.read.parquet(str(sink)).toPandas().drop(columns=["batch_id"])
+    got = finalize_open_chains(latest_wins(ups))
+    assert not compare("chain-stream-restart-vs-batch", got, _batch_l3(level3))
+
+
+def test_ingestor_drops_cross_batch_straggler():
+    """An event-time-earlier message of an open chain that arrives in a
+    later batch is dropped, as the stream drops it — never chained
+    backward."""
+    import pandas as pd
+
+    class Keyed(Level3Ingestor):
+        _keyed = staticmethod(lambda batch: batch)
+
+    era = pd.Timestamp("2024-01-01")
+
+    def msgs(*minutes):
+        return pd.DataFrame([{
+            "event_id": 100 + m, "order_id": 5, "pair_id": 1, "era": era,
+            "side": "s", "price": 100.0 + m, "amount": 1.0,
+            "is_delete": False,
+            "microtimestamp": era + pd.Timedelta(minutes=m),
+            "local_timestamp": era + pd.Timedelta(minutes=m, seconds=1),
+        } for m in minutes])
+
+    ing = Keyed()
+    ing.process_batch(msgs(0, 5))
+    ing.process_batch(msgs(2))
+    got = ing.finalize().sort_values("microtimestamp").reset_index(drop=True)
+    t = [era + pd.Timedelta(minutes=m) for m in (0, 5)]
+    assert got["microtimestamp"].tolist() == t
+    assert got["event_no"].tolist() == [1, 2]
+    assert got.loc[0, "next_microtimestamp"] == t[1]
+    assert got["chain_state"].tolist() == ["chained", "alive"]
 
 
 def test_side_is_data_not_formula(spark):
@@ -131,7 +214,7 @@ def test_chain_events_carries_side_and_payload_in_state():
             self._t = t
 
     era = pd.Timestamp("2024-01-01")
-    key = (1, 1, era, 5)  # order_id 5: the synth formula would say 'b'
+    key = (1, 1, era)  # order_id 5: the synth formula would say 'b'
 
     def batch(eid, ts_min):
         return pd.DataFrame([{
@@ -151,31 +234,6 @@ def test_chain_events_carries_side_and_payload_in_state():
     assert len(rows) == 3  # new, chained re-emit of the tail, new
     assert (rows["side"] == "s").all()
     assert (rows["price"] == 123.0).all()
-
-
-def test_streaming_end_to_end(spark, level3):
-    """Real Structured Streaming run: file source, one file per micro-batch,
-    availableNow trigger, watermark declared, foreachBatch chaining."""
-    events = spark.table("events").toPandas().sort_values("ts").reset_index(drop=True)
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "events")
-        os.makedirs(src)
-        for i, chunk in enumerate(_split_frame(events, 4)):
-            spark.createDataFrame(chunk).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(src, f"chunk_{i:03d}"))
-        # flatten: file source wants files in one dir
-        flat = os.path.join(d, "flat")
-        os.makedirs(flat)
-        n = 0
-        for root, _, files in sorted(os.walk(src)):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    os.rename(os.path.join(root, f), os.path.join(flat, f"{n:03d}.parquet"))
-                    n += 1
-        got = run_streaming_ingest(spark, flat, EVENTS_SCHEMA,
-                                   os.path.join(d, "ckpt"))
-    want = _batch_l3(level3)
-    assert not compare("streaming-vs-batch", got, want)
 
 
 def test_streaming_spread_equals_batch(spark, level3):

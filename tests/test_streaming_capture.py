@@ -220,11 +220,10 @@ def test_parse_frames_classification(spark):
     parsed.unpersist()
 
 
-def test_parse_frames_jvm_lane_differential(spark):
-    """r10 hybrid parse: the JVM fast lane (flat book updates through
-    from_json) must reproduce the per-line Python parser bit-for-bit, and
-    every ambiguous corner (quoted rts, bool rts, float chan, nulls in
-    payload) must land on whichever lane gives the Python answer."""
+def test_parse_frames_corner_corpus_differential(spark):
+    """The batched parse must reproduce the per-line Python parser
+    bit-for-bit over the flat-update corner corpus (quoted rts, bool rts,
+    float chan, nulls in payload, number-shaped invalid JSON)."""
     from obadiah_spark.streaming.capture import _parse_one
 
     lines = [
@@ -244,27 +243,21 @@ def test_parse_frames_jvm_lane_differential(spark):
         '[17, [1,2,3], "123"]',   # quoted rts: Python says rts None
         '[17, [1,2,3], true]',    # bool rts: Python says rts 1
         '[17.9, [1,2,3], 12]',    # float chan: Python truncates to 17
-        '[17, [1,2,,3], 12]',     # regex-passing but invalid JSON
+        '[17, [1,2,,3], 12]',     # number-shaped but invalid JSON
     ]
     df = (spark.createDataFrame([(ln,) for ln in lines], "value string")
           .coalesce(1))  # single partition => line_no is 0..n-1
-    got = sorted((tuple(r)
-                  for r in parse_frames(df, jvm_lane=True).collect()),
-                 key=repr)
     exp = []
     for no, ln in enumerate(lines):
         exp.extend(_parse_one(ln, no))
     exp = sorted(exp, key=repr)
-    assert got == exp
-    # the default (Python-only) lane is the same function the ground
-    # truth runs per line, batched — pin the equality anyway
     assert sorted((tuple(r) for r in parse_frames(df).collect()),
                   key=repr) == exp
 
 
-def test_parse_bitstamp_frames_jvm_lane_differential(spark):
-    """Same contract for the bitstamp dict shapes: JVM lane == Python
-    parser, with every divergence corner routed to the Python lane."""
+def test_parse_bitstamp_frames_corner_corpus_differential(spark):
+    """Same contract for the bitstamp dict shapes, over the corpus of
+    non-string event/channel tokens, quoted ids and missing keys."""
     from obadiah_spark.streaming.capture import (
         _bs_parse_one, parse_bitstamp_frames)
 
@@ -287,12 +280,10 @@ def test_parse_bitstamp_frames_jvm_lane_differential(spark):
         '{"event":true}',                   # bool event: str() -> 'True'
         '{"event":null}',                   # null event
         '{"event":5e2}',                    # numeric event: str() -> '500.0'
-        # top-level non-string event EVADING the positive quoted-event
-        # regex via a nested quoted "event" key — must route Python-side
+        # top-level non-string event beside a nested quoted "event" key
         '{"event":5e2,"data":{"event":"x"}}',
         '{"event":true,"data":{"event":"order_created"}}',
-        # nested unquoted event on an otherwise-fast line: conservative
-        # fallback to the Python lane, same output either way
+        # nested unquoted event inside an otherwise regular trade
         json.dumps({"event": "trade", "channel": "live_trades_btcusd",
                     "data": {**d_trade, "event": 1}}),
         '{"no_event_key":1}',
@@ -306,15 +297,10 @@ def test_parse_bitstamp_frames_jvm_lane_differential(spark):
     ]
     df = (spark.createDataFrame([(ln,) for ln in lines], "value string")
           .coalesce(1))
-    got = sorted(
-        (tuple(r)
-         for r in parse_bitstamp_frames(df, jvm_lane=True).collect()),
-        key=repr)
     exp = []
     for no, ln in enumerate(lines):
         exp.extend(_bs_parse_one(ln, no))
     exp = sorted(exp, key=repr)
-    assert got == exp
     assert sorted((tuple(r) for r in parse_bitstamp_frames(df).collect()),
                   key=repr) == exp
 
@@ -342,23 +328,6 @@ def test_parse_tolerance_malformed_frames(spark):
     out = parse_frames(df)
     assert out.count() == len(bad)
     assert out.filter("kind <> 'garbage'").count() == 0
-
-
-def test_jvm_lane_rejects_repartitioned_stream(spark):
-    """jvm_lane=True fans the frame out into two lanes that re-evaluate
-    the line_no-assigning scan; on a streaming frame with an upstream
-    repartition the lanes could assign DIFFERENT line_no values — that
-    shape must fail loudly at plan time, not corrupt silently (r11
-    code-review finding). The default Python lane accepts the same frame
-    (single consumer, no fan-out hazard)."""
-    import pytest
-
-    stream = (spark.readStream.format("rate").option("rowsPerSecond", 1)
-              .load().selectExpr("CAST(value AS STRING) AS value")
-              .repartition(4))
-    with pytest.raises(ValueError, match="repartition"):
-        parse_frames(stream, jvm_lane=True)
-    parse_frames(stream)  # python lane: plan builds fine
 
 
 def test_flush_all_none_column_keeps_schema(spark, tmp_path):

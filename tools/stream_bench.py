@@ -166,19 +166,16 @@ def _gen_bs_wire(src: str, n_lines: int) -> int:
 
 def bench_parse(spark, work: str, n_lines: int) -> list[dict]:
     """Parse-isolating mode (VERDICT r10 task #3): BATCH-mode parse of the
-    wire fixtures — no triggers, no sink — with the JVM from_json lane on
-    vs off. This is the only measurement where the lane's effect is
-    visible: under file-per-trigger replay the ~1 s/micro-batch trigger
-    floor swamps it."""
+    wire fixtures — no triggers, no sink. Under file-per-trigger replay the
+    ~1 s/micro-batch trigger floor swamps the parse cost."""
     from obadiah_spark.streaming.capture import (parse_bitstamp_frames,
                                                  parse_frames)
 
     out = []
     jobs = [
-        ("parse_bitfinex", os.path.join(work, "wire"),
-         lambda df, lane: parse_frames(df, jvm_lane=lane)),
+        ("parse_bitfinex", os.path.join(work, "wire"), parse_frames),
         ("parse_bitstamp", os.path.join(work, "bs_wire"),
-         lambda df, lane: parse_bitstamp_frames(df, jvm_lane=lane)),
+         parse_bitstamp_frames),
     ]
     if not os.path.isdir(jobs[0][1]):
         _gen_wire(jobs[0][1], n_lines)
@@ -186,13 +183,12 @@ def bench_parse(spark, work: str, n_lines: int) -> list[dict]:
     for stage, src, fn in jobs:
         df = spark.read.text(src).localCheckpoint(eager=True)  # exclude IO
         rows_in = df.count()
-        for lane, tag in ((True, "jvm"), (False, "python")):
-            # warm once (Arrow/codegen), then time the second evaluation
-            fn(df, lane).write.mode("overwrite").format("noop").save()
-            t0 = time.perf_counter()
-            fn(df, lane).write.mode("overwrite").format("noop").save()
-            wall = time.perf_counter() - t0
-            out.append(_report(f"{stage}_{tag}", rows_in, wall, []))
+        # warm once (Arrow), then time the second evaluation
+        fn(df).write.mode("overwrite").format("noop").save()
+        t0 = time.perf_counter()
+        fn(df).write.mode("overwrite").format("noop").save()
+        wall = time.perf_counter() - t0
+        out.append(_report(stage, rows_in, wall, []))
     return out
 
 
