@@ -47,12 +47,15 @@ The gate corpus and the reference's pair dim are single-exchange-per-pair.
 from __future__ import annotations
 
 import heapq
+import os
 from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from obadiah_spark.log import get_logger
 
 FOLD_KEYS = ("pair_id", "exchange_id", "era")
 EVENT_ORDER = ["microtimestamp", "order_id", "event_no"]
@@ -557,31 +560,61 @@ def _period_start(ts, freq_us: int):
     return F.timestamp_micros((us - us % F.lit(freq_us)).cast("long"))
 
 
-# (session object, input semanticHash, frequency) -> (input frame, cached
-# checkpoints). Keyed by the LIVE session object (not id(), which a dead
-# session's reuse could collide with); a hit is honored only after an exact
-# plan comparison via sameSemantics, so the 32-bit semanticHash is just a
-# bucket, never the authority. The table is tiny (boundaries × open
-# chains); .cache() makes the period-fold consumers derive it once per
-# session instead of once each. Bounded LRU: the oldest entry is
-# unpersisted and dropped past 32 entries (dict preserves insertion order).
-# Caveat (use_cache contract): a hit serves the PLAN-equal cached frame —
-# if the files underneath an identical plan changed mid-session, the cached
-# checkpoints are stale; pass use_cache=False (or seed_checkpoint_cache a
-# fresh table) after rewriting inputs in place.
-_CKPT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+# (session object, input semanticHash, frequency) -> (input frame, input
+# file stamps, checkpoints). Keyed by the LIVE session object (not id(),
+# which a dead session's reuse could collide with); a hit needs an exact
+# plan match (sameSemantics; the 32-bit semanticHash is only a bucket) AND
+# unchanged (path, size, mtime) of every input file, because a table
+# rewritten in place reads back plan-equal. Spark's CacheManager serves a
+# .cache()d plan to ANY plan-equal query, use_cache=False derivations
+# included, so a mismatched entry is unpersisted before anything is
+# derived again. The table is tiny (boundaries × open chains); .cache()
+# makes the period-fold consumers derive it once per session instead of
+# once each. Bounded LRU: past 32 entries the oldest is unpersisted and
+# dropped (dict preserves insertion order).
+_CKPT_CACHE: dict[tuple, tuple[DataFrame, tuple, DataFrame]] = {}
 _CKPT_CACHE_MAX = 32
+_log = get_logger("fold")
 
 
-def _ckpt_cache_put(key: tuple, entry: tuple[DataFrame, DataFrame]) -> None:
-    _CKPT_CACHE.pop(key, None)  # re-insert moves the key to MRU position
+def _input_stamps(df: DataFrame) -> tuple:
+    """(path, size, mtime) of every file the plan reads, sorted (empty for
+    a cached or in-memory frame, whose plan is its own identity)."""
+    from urllib.parse import unquote, urlparse
+
+    stamps = []
+    for f in sorted(df.inputFiles()):
+        u = urlparse(f)
+        if u.scheme in ("", "file"):
+            try:
+                st = os.stat(unquote(u.path))
+                stamps.append((f, st.st_size, st.st_mtime_ns))
+            except OSError:
+                stamps.append((f, -1, -1))
+        else:
+            jvm = df.sparkSession._jvm
+            jp = jvm.org.apache.hadoop.fs.Path(f)
+            st = jp.getFileSystem(
+                df.sparkSession._jsc.hadoopConfiguration()).getFileStatus(jp)
+            stamps.append((f, st.getLen(), st.getModificationTime()))
+    return tuple(stamps)
+
+
+def _ckpt_cache_evict(key: tuple, why: str) -> None:
+    old = _CKPT_CACHE.pop(key)[2]
+    try:
+        old.unpersist()
+    except Exception:
+        pass  # session may be stopped; eviction must not raise
+    _log.debug("checkpoint cache evict (%s): frequency_s=%s", why, key[2])
+
+
+def _ckpt_cache_put(key: tuple, entry: tuple[DataFrame, tuple, DataFrame]
+                    ) -> None:
+    if key in _CKPT_CACHE:
+        _ckpt_cache_evict(key, "replaced")
     while len(_CKPT_CACHE) >= _CKPT_CACHE_MAX:
-        oldest_key = next(iter(_CKPT_CACHE))
-        _, old_df = _CKPT_CACHE.pop(oldest_key)
-        try:
-            old_df.unpersist()
-        except Exception:
-            pass  # session may be stopped; eviction must not raise
+        _ckpt_cache_evict(next(iter(_CKPT_CACHE)), "lru")
     _CKPT_CACHE[key] = entry
 
 
@@ -591,11 +624,12 @@ def seed_checkpoint_cache(l3: DataFrame, frequency_s: int,
     written by :func:`obadiah_spark.sources.silver.write_checkpoints`) so
     that every later ``book_checkpoints(l3, frequency_s)`` call — including
     the ones inside :func:`period_fold` consumers — reads it instead of
-    re-deriving from the full log. ``ckpts`` must be row-identical to
+    re-deriving from the full log, until ``l3``'s input files change.
+    ``ckpts`` must be row-identical to
     ``book_checkpoints(l3, frequency_s, use_cache=False)`` (the silver
     round-trip pytest enforces this)."""
     key = (l3.sparkSession, l3.semanticHash(), frequency_s)
-    _ckpt_cache_put(key, (l3, ckpts))
+    _ckpt_cache_put(key, (l3, _input_stamps(l3), ckpts))
 
 
 def book_checkpoints(l3: DataFrame, frequency_s: int = 86400,
@@ -607,10 +641,18 @@ def book_checkpoints(l3: DataFrame, frequency_s: int = 86400,
     This is the engine's materializable "book state at era/month start"
     silver table (SURVEY §4.2.3; the reference's Q6 boundary clones and
     ``order_book()`` seeds play the same role): period_fold seeds its
-    periods from it, and ``snapshot_checkpointed`` answers point-in-time
-    queries by reading ONE boundary's rows plus the (boundary, ts] event
-    tail instead of the era's whole history — the difference between a
-    partition-pruned probe and a full-era scan at 100 TB.
+    periods from it, and, written to silver, it lets
+    :func:`~obadiah_spark.operators.order_book.snapshot_from_silver`
+    answer point-in-time queries by reading ONE boundary's rows plus the
+    (boundary, ts] event tail instead of the era's whole history — the
+    difference between a partition-pruned probe and a full-era scan at
+    100 TB.
+
+    ``use_cache`` serves and keeps the result in the session's checkpoint
+    cache; a hit needs a plan-equal input whose files are unchanged. With
+    ``use_cache=False`` the rows are derived from ``l3`` as it is now: an
+    entry that no longer matches is dropped first, so Spark's cache cannot
+    answer the derivation with rows of the files' previous version.
 
     Derivation is declarative: one window carries each chain's last event
     onto boundary probes (probes sort AFTER events at the exact boundary, so
@@ -621,16 +663,19 @@ def book_checkpoints(l3: DataFrame, frequency_s: int = 86400,
     from pyspark.sql import functions as F
 
     l3_orig = l3
-    if use_cache:
-        key = (l3.sparkSession, l3.semanticHash(), frequency_s)
-        hit = _CKPT_CACHE.get(key)
-        if hit is not None and l3.sameSemantics(hit[0]):
+    key = (l3.sparkSession, l3.semanticHash(), frequency_s)
+    stamps = _input_stamps(l3)
+    hit = _CKPT_CACHE.get(key)
+    if hit is not None:
+        if not (hit[1] == stamps and l3.sameSemantics(hit[0])):
+            _ckpt_cache_evict(key, "stale")
+        elif use_cache:
             # true LRU: a hit refreshes recency, so a hot entry (e.g. the
             # seeded silver table every period_fold consumer reads) cannot
             # be evicted by a burst of cold derived-frame inserts
-            _CKPT_CACHE.pop(key, None)
-            _CKPT_CACHE[key] = hit
-            return hit[1]
+            _CKPT_CACHE[key] = _CKPT_CACHE.pop(key)
+            _log.debug("checkpoint cache hit: frequency_s=%s", frequency_s)
+            return hit[2]
 
     # tolerate event-projection inputs (the documented fold contract): the
     # pointer/price columns are only needed by snapshot consumers; seeds
@@ -697,8 +742,9 @@ def book_checkpoints(l3: DataFrame, frequency_s: int = 86400,
                 *[F.col(f"c.{c}").alias(c) for c in carried])
     )
     if use_cache:
+        _log.debug("checkpoint cache miss: frequency_s=%s", frequency_s)
         out = out.cache()
-        _ckpt_cache_put(key, (l3_orig, out))
+        _ckpt_cache_put(key, (l3_orig, stamps, out))
     return out
 
 

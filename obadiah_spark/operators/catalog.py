@@ -63,21 +63,9 @@ def available_period(l3: DataFrame) -> DataFrame:
 
 def export(l3: DataFrame, start: str, end: str) -> DataFrame:
     """SRC6: obAnalytics event export over (start, end]."""
-    from obadiah_spark.operators.order_book import live_at
+    from obadiah_spark.operators.events import active_events
 
-    start_c = F.lit(start).cast("timestamp")
-    end_c = F.lit(end).cast("timestamp")
-    window_events = l3.filter(
-        (F.col("microtimestamp") > start_c)
-        & (F.col("microtimestamp") <= end_c)
-        & ~((F.col("amount") == 0) & (F.col("event_no") == 1)
-            & (F.col("chain_state") != "deleted"))
-    ).withColumn("is_deleted_event", F.col("chain_state") == "deleted")
-    book0 = live_at(l3, start).withColumn("is_deleted_event", F.lit(False))
-    cols = ["pair_id", "microtimestamp", "order_id", "event_no",
-            "is_deleted_event", "side", "price", "amount", "price_microtimestamp"]
-    active = window_events.select(*cols).unionByName(book0.select(*cols))
-    return active.select(
+    return active_events(l3, start, end).select(
         "pair_id",
         F.col("order_id").alias("id"),
         F.unix_micros("microtimestamp").alias("ts_us"),

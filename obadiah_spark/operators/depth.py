@@ -70,6 +70,19 @@ def grid_ceil_col(col: str, frequency_s: int):
         f" * {f}) * 1000000)")
 
 
+def grid_last(l1: DataFrame, frequency_s: int, cols: list[str]) -> DataFrame:
+    """The last level1 state (``cols``) of each closed-right grid interval
+    per (pair, era), stamped at the interval's right boundary — the
+    reference's level1_continuous with p_frequency (get_schema.sql:339)."""
+    return (
+        l1.withColumn("_g_ts", grid_ceil_col("microtimestamp", frequency_s))
+        .groupBy("pair_id", "era", "_g_ts")
+        .agg(F.max_by(F.struct(*cols), F.col("microtimestamp")).alias("_s"))
+        .select("pair_id", "era", F.col("_g_ts").alias("microtimestamp"),
+                *[F.col(f"_s.{c}").alias(c) for c in cols])
+    )
+
+
 def grid_ceil_sql(col: str, frequency_s: int) -> str:
     """DuckDB mirror of :func:`grid_ceil_col` (same integer op sequence)."""
     f = int(frequency_s)
@@ -129,10 +142,8 @@ def grid_sample_l3_sql(body: str, frequency_s: int) -> str:
     return f"{cte},\n{stripped}"
 
 
-def depth_change(l3: DataFrame, keep_era: bool = False,
-                 frequency_s: int | None = None) -> DataFrame:
+def depth_change(l3: DataFrame, frequency_s: int | None = None) -> DataFrame:
     """D2: per-episode changed (side, price) levels with running volume.
-    ``keep_era=True`` retains the era column for era-scoped consumers.
 
     ``frequency_s`` applies the reference's closed-right grid convention:
     every event's microtimestamp is mapped to ``_date_ceiling(ts, f)``
@@ -167,9 +178,8 @@ def depth_change(l3: DataFrame, keep_era: bool = False,
         .filter(F.col("volume_change") != 0)
     )
     w_level = W.partitionBy("pair_id", "era", "side", "price").orderBy("microtimestamp")
-    cols = ["pair_id"] + (["era"] if keep_era else []) + ["microtimestamp", "side", "price"]
     return changes.select(
-        *cols,
+        "pair_id", "microtimestamp", "side", "price",
         F.sum("volume_change").over(
             w_level.rowsBetween(W.unboundedPreceding, W.currentRow)
         ).alias("volume"),
@@ -297,14 +307,21 @@ def get_spread(l3, l1, start: str, end: str, frequency_s: int | None = None):
 _SPREAD_COLS = ["best_bid_price", "best_bid_qty", "best_ask_price", "best_ask_qty"]
 
 
+def _level_sums_at(l3, at: str, before: bool, keys=("pair_id",)):
+    """Volume ``qty`` per (``keys``, side, price) of the book at ``at`` (the
+    instant before with ``before``, else closed at ``at``) — the
+    reference's ``_starting_depth`` (get_schema.sql:115-130)."""
+    return live_at(l3, at, before=before).groupBy(*keys, "side", "price").agg(
+        F.sum("amount").alias("qty"))
+
+
 def _starting_spread(l3, at: str, before: bool, keys=("pair_id",)):
     """Level1 of the book at ``at`` per ``keys`` (the instant before with
     ``before``, else closed at ``at``), stamped at ``at``: the best price
     per side and that level's volume, one aggregate over the level sums
     (the reference's ``_spread_from_depth`` over ``_starting_depth``,
     db/obanalytics_schema.sql:1064-1112)."""
-    lvl = live_at(l3, at, before=before).groupBy(*keys, "side", "price").agg(
-        F.sum("amount").alias("qty"))
+    lvl = _level_sums_at(l3, at, before, keys)
     bid = F.when(F.col("side") == "b", F.col("price"))
     ask = F.when(F.col("side") == "s", F.col("price"))
     return lvl.groupBy(*keys).agg(
@@ -328,16 +345,9 @@ def _get_spread_freq(l3, l1, start: str, end: str, frequency_s: int):
     # row; folding it into the seeded starting spread yields the same
     # observable state at every instant >= lo with one row instead of two.
     starting = _starting_spread(l3, lo, before=False, keys=("pair_id", "era"))
-    # last level1 state within each grid interval wins, stamped at the
-    # closed right boundary
-    cand = (
-        l1.filter((F.col("microtimestamp") > lo_c) & (F.col("microtimestamp") <= hi_c))
-        .withColumn("g_ts", grid_ceil_col("microtimestamp", frequency_s))
-        .groupBy("pair_id", "era", "g_ts")
-        .agg(F.max_by(F.struct(*_SPREAD_COLS), F.col("microtimestamp")).alias("s"))
-        .select("pair_id", "era", F.col("g_ts").alias("microtimestamp"),
-                *[F.col(f"s.{c}").alias(c) for c in _SPREAD_COLS])
-    )
+    cand = grid_last(
+        l1.filter((F.col("microtimestamp") > lo_c) & (F.col("microtimestamp") <= hi_c)),
+        frequency_s, _SPREAD_COLS)
     un = starting.unionByName(cand)
     w = W.partitionBy("pair_id", "era").orderBy("microtimestamp")
     changed = F.lit(False)
@@ -538,10 +548,9 @@ def get_depth(l3, start: str, end: str, frequency_s: int | None = None,
         # floor(start), so a boundary event belongs to the starting row (see
         # docstring); raw path: open (before=True), a change row at exactly
         # `start` can only come from an event at that instant.
-        live_at(l3, lo, before=frequency_s is None)
-        .groupBy("pair_id", "side", "price")
-        .agg(F.sum("amount").alias("volume"))
-        .select("pair_id", start_c.alias("microtimestamp"), "side", "price", "volume")
+        _level_sums_at(l3, lo, before=frequency_s is None)
+        .select("pair_id", start_c.alias("microtimestamp"), "side", "price",
+                F.col("qty").alias("volume"))
     )
     hi_cond = (F.col("microtimestamp") <= end_c) if hi_op == "<=" \
         else (F.col("microtimestamp") < end_c)

@@ -33,13 +33,38 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from obadiah_spark.functions import level3_uuid, level3_uuid_sql
-from obadiah_spark.operators.depth import SPREAD_L1_CTES
+from obadiah_spark.operators.depth import SPREAD_L1_CTES, grid_last
 from obadiah_spark.operators.order_book import live_at
 
 _ACTIVE_COLS = [
     "pair_id", "exchange_id", "era", "microtimestamp", "order_id", "event_no",
     "is_deleted_event", "side", "price", "amount", "fill", "price_microtimestamp",
 ]
+
+
+def active_events(l3: DataFrame, start: str, end: str) -> DataFrame:
+    """The events E1 and SRC6 report over (start, end]: window events ∪
+    the book at ``start`` (reference get.events and get.export,
+    db/get_schema.sql:307-453, 520-552), zero-amount phantom creates
+    dropped (:352)."""
+    start_c = F.lit(start).cast("timestamp")
+    end_c = F.lit(end).cast("timestamp")
+    window_events = (
+        l3.filter(
+            (F.col("microtimestamp") > start_c)
+            & (F.col("microtimestamp") <= end_c)
+            & ~((F.col("amount") == 0) & (F.col("event_no") == 1)
+                & (F.col("chain_state") != "deleted"))
+        )
+        .withColumn("is_deleted_event", F.col("chain_state") == "deleted")
+        .select(*_ACTIVE_COLS)
+    )
+    book_at_start = (
+        live_at(l3, start)
+        .withColumn("is_deleted_event", F.lit(False))
+        .select(*_ACTIVE_COLS)
+    )
+    return window_events.unionByName(book_at_start)
 
 
 def get_events(l3: DataFrame, l1: DataFrame, matches: DataFrame,
@@ -57,40 +82,8 @@ def get_events(l3: DataFrame, l1: DataFrame, matches: DataFrame,
 
     validate_parameters(start, end)  # F6 range guard (get_schema.sql:150-159)
     if frequency_s is not None:
-        from obadiah_spark.operators.depth import grid_ceil_col
-
-        l1 = (
-            l1.withColumn("_g_ts",
-                          grid_ceil_col("microtimestamp", frequency_s))
-            .groupBy("pair_id", "era", "_g_ts")
-            .agg(F.max_by(
-                F.struct("best_bid_price", "best_ask_price"),
-                F.col("microtimestamp")).alias("_s"))
-            .select("pair_id", "era",
-                    F.col("_g_ts").alias("microtimestamp"),
-                    F.col("_s.best_bid_price").alias("best_bid_price"),
-                    F.col("_s.best_ask_price").alias("best_ask_price"))
-        )
-    start_c = F.lit(start).cast("timestamp")
-    end_c = F.lit(end).cast("timestamp")
-
-    window_events = (
-        l3.filter(
-            (F.col("microtimestamp") > start_c)
-            & (F.col("microtimestamp") <= end_c)
-            # reference drops zero-amount phantom creates (get_schema.sql:352)
-            & ~((F.col("amount") == 0) & (F.col("event_no") == 1)
-                & (F.col("chain_state") != "deleted"))
-        )
-        .withColumn("is_deleted_event", F.col("chain_state") == "deleted")
-        .select(*_ACTIVE_COLS)
-    )
-    book_at_start = (
-        live_at(l3, start)
-        .withColumn("is_deleted_event", F.lit(False))
-        .select(*_ACTIVE_COLS)
-    )
-    active = window_events.unionByName(book_at_start)
+        l1 = grid_last(l1, frequency_s, ["best_bid_price", "best_ask_price"])
+    active = active_events(l3, start, end)
 
     # --- as-of (strictly-before) prevailing spread -------------------------
     l1_rows = l1.select(
@@ -138,6 +131,8 @@ def get_events(l3: DataFrame, l1: DataFrame, matches: DataFrame,
     # inclusive lower bound: reference selects matches BETWEEN p_start_time
     # AND p_end_time (get_schema.sql:371) — a trade exactly at start must
     # still link the book-at-start event
+    start_c = F.lit(start).cast("timestamp")
+    end_c = F.lit(end).cast("timestamp")
     tr = matches.filter((F.col("microtimestamp") >= start_c) & (F.col("microtimestamp") <= end_c))
     conn_buy = tr.filter(F.col("buy_order_id").isNotNull()).select(
         "pair_id", "microtimestamp",

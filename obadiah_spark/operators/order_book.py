@@ -25,34 +25,42 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def live_at(l3: DataFrame, at_ts, before: bool = False) -> DataFrame:
-    """Events alive at instant ``at_ts`` within its (data-driven) era.
-
-    ±infinity convention (see synth.py): chain_state 'alive' = next is
-    +infinity (always live once created), 'deleted' = order removed at this
-    event (never live), 'chained' = live in [microtimestamp, next).
-    ``before=True`` uses the book the instant *before* at_ts (strict <), as
-    the reference's ``p_before`` flag does.
-    """
-    at: Column = F.lit(at_ts).cast("timestamp")
+def _alive(at: Column, before: bool = False) -> Column:
+    """Started and not yet ended at ``at`` (the instant before it with
+    ``before``) under the ±infinity convention (see synth.py): chain_state
+    'alive' = next is +infinity (always live once created), 'deleted' =
+    order removed at this event (never live), 'chained' = live in
+    [microtimestamp, next)."""
     started = F.col("microtimestamp") < at if before else F.col("microtimestamp") <= at
     not_ended = (F.col("chain_state") == "alive") | (
         (F.col("chain_state") == "chained")
         & (F.col("next_microtimestamp") >= at if before else F.col("next_microtimestamp") > at)
     )
-    # era is DATA-DRIVEN: the current era is the max era that started at or
-    # before at_ts, per (pair, exchange) — reference selects max(era) <= p_ts
-    # (db/obanalytics_schema.sql:2061-2065). With before=True an era starting
-    # exactly at at_ts is not yet current (strict <).
+    return started & not_ended
+
+
+def _current_era(l3: DataFrame, at_ts, before: bool = False) -> DataFrame:
+    """Rows of each (pair, exchange)'s current era at ``at_ts``: era is
+    DATA-DRIVEN, the max era that started at or before at_ts — reference
+    selects max(era) <= p_ts (db/obanalytics_schema.sql:2061-2065). With
+    ``before`` an era starting exactly at at_ts is not yet current."""
+    at: Column = F.lit(at_ts).cast("timestamp")
     era_started = F.col("era") < at if before else F.col("era") <= at
     w_pair = W.partitionBy("pair_id", "exchange_id")
-    cur = (
+    return (
         l3.filter(era_started)
         .withColumn("_cur_era", F.max("era").over(w_pair))
         .filter(F.col("era") == F.col("_cur_era"))
         .drop("_cur_era")
     )
-    return cur.filter(started & not_ended)
+
+
+def live_at(l3: DataFrame, at_ts, before: bool = False) -> DataFrame:
+    """Events alive at instant ``at_ts`` within its (data-driven) era.
+    ``before=True`` uses the book the instant *before* at_ts (strict <), as
+    the reference's ``p_before`` flag does."""
+    at: Column = F.lit(at_ts).cast("timestamp")
+    return _current_era(l3, at_ts, before).filter(_alive(at, before))
 
 
 def snapshot_multi(l3: DataFrame, instants: DataFrame) -> DataFrame:
@@ -80,10 +88,7 @@ def snapshot_multi(l3: DataFrame, instants: DataFrame) -> DataFrame:
         (F.col("l.pair_id") == F.col("e.pair_id"))
         & (F.col("l.exchange_id") == F.col("e.exchange_id"))
         & (F.col("l.era") == F.col("e._cur_era"))
-        & (F.col("l.microtimestamp") <= at)
-        & ((F.col("l.chain_state") == "alive")
-           | ((F.col("l.chain_state") == "chained")
-              & (F.col("l.next_microtimestamp") > at))),
+        & _alive(at),
     ).select("l.*", "e.at_ts")
     return _maker_crossed_flags(
         live, partition_cols=("at_ts", "pair_id", "exchange_id"))
@@ -172,86 +177,6 @@ def snapshot(l3: DataFrame, at_ts, before: bool = False,
     return out
 
 
-# canonical snapshot projection — shared by every checkpointed probe path
-_SNAPSHOT_COLS = ["pair_id", "exchange_id", "era", "microtimestamp",
-                  "order_id", "event_no", "side", "price", "amount",
-                  "chain_state", "next_microtimestamp", "next_event_no",
-                  "price_microtimestamp", "price_event_no", "life_no"]
-
-
-def _dedup_live(cand: DataFrame, only_makers: bool,
-                side: str | None) -> DataFrame:
-    """Per-order last-event dedup over a (checkpoint ∪ tail) candidate set:
-    the latest row per order decides, alive iff it is not a delete; then the
-    maker/crossed flags. Shared tail of every checkpointed probe so the two
-    paths cannot diverge on dedup semantics."""
-    w_o = (W.partitionBy("pair_id", "exchange_id", "order_id")
-           .orderBy(F.desc("microtimestamp"), F.desc("event_no")))
-    live = (
-        cand.withColumn("_rn", F.row_number().over(w_o))
-        .filter((F.col("_rn") == 1) & (F.col("chain_state") != "deleted"))
-        .drop("_rn")
-    )
-    return _maker_crossed_flags(live, only_makers, side)
-
-
-def snapshot_checkpointed(l3: DataFrame, ckpts: DataFrame, at_ts,
-                          only_makers: bool = False,
-                          side: str | None = None) -> DataFrame:
-    """B1 answered from a :func:`obadiah_spark.fold.book_checkpoints` table:
-    the live set at ``at_ts`` = the latest boundary's open-chain rows
-    (carried with their ORIGINAL event identity) overlaid by the event tail
-    in (boundary, at_ts] — the latest row per order decides, alive iff it is
-    not a delete.
-
-    Scale: with ``ckpts`` materialized and partitioned by (era,
-    period_start), the probe reads ONE boundary partition plus one period's
-    events instead of the era's whole history — the point-in-time scan stops
-    being O(era). Output is identical to :func:`snapshot` at the same
-    instant (pytest-enforced, incl. at_ts exactly on a boundary).
-
-    Plan shape: fully LAZY — no driver jobs at call time. The current era
-    and latest boundary per (pair, exchange) are O(#pairs) aggregates
-    broadcast back into the probe in-plan (the Spark analogue of the
-    reference's scalar subqueries, db/obanalytics_schema.sql:2061-2065).
-    ``ckpts`` appears twice in the plan (bound aggregate + boundary rows):
-    pass a cached/materialized table — `book_checkpoints` returns a
-    session-cached frame and the silver path reads parquet, so both
-    in-repo callers satisfy this; for a production metastore-backed table
-    prefer :func:`snapshot_from_silver`, which resolves boundaries from
-    partition metadata without scanning."""
-    at = F.lit(at_ts).cast("timestamp")
-    era_meta = (
-        l3.select("pair_id", "exchange_id", "era").distinct()
-        .filter(F.col("era") <= at)
-        .groupBy("pair_id", "exchange_id").agg(F.max("era").alias("cur_era"))
-    )
-    bounds = (
-        ckpts.join(F.broadcast(era_meta), ["pair_id", "exchange_id"])
-        .filter((F.col("era") == F.col("cur_era"))
-                & (F.col("period_start") <= at))
-        .groupBy("pair_id", "exchange_id")
-        .agg(F.max("period_start").alias("bound"))
-    )
-    meta = F.broadcast(
-        era_meta.join(bounds, ["pair_id", "exchange_id"], "left"))
-    ck_latest = (
-        ckpts.join(meta, ["pair_id", "exchange_id"])
-        .filter((F.col("era") == F.col("cur_era"))
-                & (F.col("period_start") == F.col("bound")))
-    )
-    tail = (
-        l3.join(meta, ["pair_id", "exchange_id"])
-        .filter((F.col("era") == F.col("cur_era"))
-                & (F.col("microtimestamp") <= at)
-                & (F.col("bound").isNull()
-                   | (F.col("microtimestamp") > F.col("bound"))))
-    )
-    cand = (ck_latest.select(*_SNAPSHOT_COLS)
-            .unionByName(tail.select(*_SNAPSHOT_COLS)))
-    return _dedup_live(cand, only_makers, side)
-
-
 def snapshot_from_silver(l3: DataFrame, ckpt_path: str, at_ts,
                          only_makers: bool = False,
                          side: str | None = None) -> DataFrame:
@@ -284,7 +209,11 @@ def snapshot_from_silver(l3: DataFrame, ckpt_path: str, at_ts,
         return _maker_crossed_flags(
             live_at(l3, at_ts).limit(0), only_makers, side)
     spark = l3.sparkSession
-    cols = _SNAPSHOT_COLS
+    # the (boundary rows ∪ event tail) candidate projection
+    cols = ["pair_id", "exchange_id", "era", "microtimestamp", "order_id",
+            "event_no", "side", "price", "amount", "chain_state",
+            "next_microtimestamp", "next_event_no", "price_microtimestamp",
+            "price_event_no", "life_no"]
 
     ck_dirs = []
     tail_pred = F.lit(False)
@@ -319,7 +248,15 @@ def snapshot_from_silver(l3: DataFrame, ckpt_path: str, at_ts,
     # (p,e,side) — is satisfied by this clustering, so the whole probe
     # pipeline runs in a single exchange (sorts only, no further shuffles)
     cand = cand.repartition("pair_id", "exchange_id")
-    return _dedup_live(cand, only_makers, side)
+    # the latest row per order decides: alive iff it is not a delete
+    w_o = (W.partitionBy("pair_id", "exchange_id", "order_id")
+           .orderBy(F.desc("microtimestamp"), F.desc("event_no")))
+    live = (
+        cand.withColumn("_rn", F.row_number().over(w_o))
+        .filter((F.col("_rn") == 1) & (F.col("chain_state") != "deleted"))
+        .drop("_rn")
+    )
+    return _maker_crossed_flags(live, only_makers, side)
 
 
 def order_book(l3: DataFrame, at_ts, max_levels: int | None = None,
@@ -329,7 +266,7 @@ def order_book(l3: DataFrame, at_ts, max_levels: int | None = None,
     """B6: snapshot with liquidity / bps / price level analytics + filters.
 
     ``live`` supplies a prebuilt flagged snapshot (e.g. from
-    :func:`snapshot_checkpointed`) instead of the full-history as-of filter.
+    :func:`snapshot_from_silver`) instead of the full-history as-of filter.
     """
     if live is None:
         live = snapshot(l3, at_ts, only_makers=only_makers)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 
 from obadiah_spark.fold import EpisodeFolder, fold_at, ordered_fold, period_fold
 from obadiah_spark.operators.depth import SPREAD_L1_CTES, grid_sample_l3
+from obadiah_spark.operators.order_book import _current_era
 
 _NAN = float("nan")
 
@@ -142,17 +143,12 @@ def effective_spread_at(l3: DataFrame, at: str,
     prevailing (NULL, NULL) state, mirroring the fold's emit semantics
     after the book empties (an empty book has no live event, so
     ``fold_at`` has no row for it and the left join supplies the NULLs)."""
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     at_c = F.lit(at).cast("timestamp")
     # pairs with a defined prevailing state: era containing `at` has events
-    w_pair = W.partitionBy("pair_id", "exchange_id")
     base = (
-        l3.filter(F.col("era") <= at_c)
-        .withColumn("_cur", F.max("era").over(w_pair))
-        .filter((F.col("era") == F.col("_cur"))
-                & (F.col("microtimestamp") <= at_c))
+        _current_era(l3, at).filter(F.col("microtimestamp") <= at_c)
         .select("pair_id", "era").distinct()
     )
     eff = fold_at(l3, _trading_period_folder(volume), TRADING_PERIOD_SCHEMA, at)

@@ -794,8 +794,7 @@ def write_minhash_index(docs: DataFrame, path: str) -> None:
 
 
 def minhash_lsh_incremental(spark, index_path: str, new_docs: DataFrame,
-                            max_bucket_size: int = 50,
-                            persist: bool = True) -> DataFrame:
+                            max_bucket_size: int = 50) -> DataFrame:
     """Candidate pairs INVOLVING A NEW DOC — new×index plus new×new —
     equal to the full-corpus :func:`minhash_lsh_candidates` restricted
     to pairs with at least one new side (pytest-differential-pinned).
@@ -808,17 +807,13 @@ def minhash_lsh_incremental(spark, index_path: str, new_docs: DataFrame,
     paths.
 
     Caching contract (ADVICE r12 #3): the increment's band frame is
-    consumed by three joins, so by default it is ``persist()``-ed —
+    consumed by three joins, so it is ``persist()``-ed —
     O(increment × bands) rows, NOT corpus-sized.  The blocks are
     released by Spark's ContextCleaner once the returned plan is no
-    longer referenced (or eagerly via ``spark.catalog.clearCache()``);
-    long-lived sessions that prefer recompute over pinned storage pass
-    ``persist=False``."""
+    longer referenced (or eagerly via ``spark.catalog.clearCache()``)."""
     idx = spark.read.parquet(index_path).select(
         "doc_id", "band", "band_sig")
-    new_bands = _minhash_bands(new_docs)
-    if persist:
-        new_bands = new_bands.persist()
+    new_bands = _minhash_bands(new_docs).persist()
     census = (idx.unionByName(new_bands)
               .groupBy("band", "band_sig")
               .agg(F.count(F.lit(1)).alias("_n"))

@@ -581,16 +581,14 @@ WINDOW op AS (PARTITION BY pair_id, era, order_id, life_no, price_group
 """
 
 
-def assign_eras_by_gap(framed: DataFrame, threshold_s: float = 2.0,
-                       also_monthly: bool = False) -> DataFrame:
+def assign_eras_by_gap(framed: DataFrame, threshold_s: float = 2.0) -> DataFrame:
     """Era assignment for a framed capture stream — the orchestrator half
     the batch I1 operator takes as input: a NEW era opens when the gap
     between consecutive episodes of a pair exceeds ``threshold_s``
     (reference p_new_era_start_threshold default 2s,
-    db/bitfinex_schema.sql:279,332-340). ``also_monthly`` adds the
-    reference's partition-boundary rule (eras forced at month starts — a
-    Postgres-FK artifact this engine does not need, SURVEY §1.3; off by
-    default, kept for byte-compatible replays).
+    db/bitfinex_schema.sql:279,332-340). The reference's partition-boundary
+    rule (eras forced at month starts) is a Postgres-FK artifact this
+    engine does not need (SURVEY §1.3).
 
     Computed per distinct (pair, episode) then joined back, so the window
     runs over episodes, not messages."""
@@ -600,10 +598,6 @@ def assign_eras_by_gap(framed: DataFrame, threshold_s: float = 2.0,
               - F.unix_micros(F.lag("episode_timestamp").over(w)))
     opens = (F.lag("episode_timestamp").over(w).isNull()
              | (gap_us > int(threshold_s * 1_000_000)))
-    if also_monthly:
-        opens = opens | (F.date_trunc("month", "episode_timestamp")
-                         != F.date_trunc(
-                             "month", F.lag("episode_timestamp").over(w)))
     flagged = eps.withColumn(
         "_era_start", F.when(opens, F.col("episode_timestamp")))
     # era = latest opening at or before this episode (running max)

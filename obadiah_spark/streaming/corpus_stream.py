@@ -128,15 +128,14 @@ def dedup_first_seen_stream(docs: DataFrame,
     )
 
 
-def quality_scrub(survivors: DataFrame, dup_n: int | None = None,
-                  materialize: bool = True) -> DataFrame:
+def quality_scrub(survivors: DataFrame, dup_n: int | None = None) -> DataFrame:
     """The per-document tail of ``corpus_clean`` (Gopher keep-filter +
     PII scrub + audit projection), applied to an already-deduplicated
     batch frame. Shared verbatim by the batch composition's semantics:
     both read nothing outside the document.
 
-    ``materialize`` localCheckpoints the survivors frame (and the token
-    frame) first — the same scan discipline as batch corpus_clean:
+    The survivors frame (and the token frame) is localCheckpointed
+    first — the same scan discipline as batch corpus_clean:
     gopher's three aggregates + the scrub join would otherwise re-plan
     the input subtree ~5 times, and when that subtree is the stateful
     first-seen fold of a micro-batch, re-executing a state-store read
@@ -146,10 +145,8 @@ def quality_scrub(survivors: DataFrame, dup_n: int | None = None,
         DUP_NGRAM_N, _words, gopher_quality, pii_scrub)
 
     dup_n = DUP_NGRAM_N if dup_n is None else dup_n
-    tok = None
-    if materialize:
-        survivors = survivors.localCheckpoint()
-        tok = _words(survivors).localCheckpoint()
+    survivors = survivors.localCheckpoint()
+    tok = _words(survivors).localCheckpoint()
     keep = (gopher_quality(survivors, dup_n=dup_n, tok=tok)
             .select("doc_id", "n_words", "keep"))
     kept = (survivors.join(keep, "doc_id")

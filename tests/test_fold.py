@@ -95,29 +95,84 @@ def test_stream_fold_is_batch_size_invariant(spark, level3):
     assert not compare("depth tiny-batches", base_depth, tiny_depth)
 
 
-def test_snapshot_checkpointed_equals_full_scan(spark, level3):
-    """B1 via book_checkpoints must equal the full-history as-of snapshot at
-    awkward instants: mid-period, exactly ON a boundary (an event at ts==P
-    belongs to the state AT P), and before the era's first boundary (no
-    checkpoint -> plain era scan)."""
-    from obadiah_spark.fold import book_checkpoints
-    from obadiah_spark.operators.order_book import snapshot, snapshot_checkpointed
-    from tools.verify_local import compare
+_SNAP_COLS = ["pair_id", "exchange_id", "order_id", "event_no",
+              "microtimestamp", "side", "price", "amount",
+              "price_microtimestamp", "price_event_no", "is_maker",
+              "is_crossed"]
+ERA_START = "2024-01-08 00:00:00"  # the synthetic eras are weekly
 
-    ck = book_checkpoints(level3, frequency_s=6 * 3600)
-    cols = ["pair_id", "exchange_id", "order_id", "event_no", "microtimestamp",
-            "side", "price", "amount", "price_microtimestamp",
-            "price_event_no", "is_maker", "is_crossed"]
+
+@pytest.fixture(scope="module")
+def ckpt_6h(spark, level3, tmp_path_factory):
+    """A 6 h book-checkpoint silver table with its era registry beside it
+    (many boundaries per weekly era, so the probe's boundary pick is
+    exercised)."""
+    from obadiah_spark.fold import book_checkpoints
+    from obadiah_spark.sources.silver import (
+        write_checkpoints, write_era_registry)
+
+    path = str(tmp_path_factory.mktemp("ckpt_6h") / "ckpt")
+    write_checkpoints(
+        book_checkpoints(level3, frequency_s=6 * 3600, use_cache=False), path)
+    write_era_registry(level3, path)
+    return path
+
+
+def test_snapshot_from_silver_equals_full_scan(level3, ckpt_6h):
+    """B1 via the checkpoint silver table must equal the full-history as-of
+    snapshot at awkward instants: mid-period, exactly ON a boundary (an
+    event at ts==P belongs to the state AT P), and before the era's first
+    boundary (no checkpoint -> plain era scan)."""
+    from obadiah_spark.operators.order_book import snapshot, snapshot_from_silver
+
     for at, must_have_rows in [
         ("2024-01-09 15:00:00", True),    # mid-period
         ("2024-01-09 12:00:00", True),    # exactly on a 6h boundary
         ("2024-01-08 00:30:00", False),   # before the era's first boundary
     ]:
-        full = snapshot(level3, at).select(*cols).toPandas()
-        fast = snapshot_checkpointed(level3, ck, at).select(*cols).toPandas()
+        full = snapshot(level3, at).select(*_SNAP_COLS).toPandas()
+        fast = (snapshot_from_silver(level3, ckpt_6h, at)
+                .select(*_SNAP_COLS).toPandas())
         if must_have_rows:
             assert len(full) > 0, at
         assert not compare(f"snapshot@{at}", full, fast), at
+
+
+@pytest.mark.parametrize("at", ["2024-01-10 15:30:00", ERA_START],
+                         ids=["mid_era", "era_start"])
+def test_as_of_readers_agree(spark, level3, ckpt_6h, at):
+    """The three B1 readers — the window-form snapshot, the join-form
+    snapshot_multi (one probe instant) and the checkpoint probe — return
+    the same book, including at the instant a new era starts. There
+    ``live_at(before=True)`` must read the book the instant before — the
+    previous era's — while the closed book is the new era's."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from obadiah_spark.operators.order_book import (
+        live_at, snapshot, snapshot_from_silver, snapshot_multi)
+
+    instants = spark.createDataFrame([(at,)], "s string").select(
+        F.col("s").cast("timestamp").alias("at_ts"))
+    full = snapshot(level3, at).select(*_SNAP_COLS).toPandas()
+    multi = snapshot_multi(level3, instants).select(*_SNAP_COLS).toPandas()
+    silver = (snapshot_from_silver(level3, ckpt_6h, at)
+              .select(*_SNAP_COLS).toPandas())
+    if at != ERA_START:
+        assert len(full) > 0
+    assert not compare(f"snapshot_multi@{at}", full, multi)
+    assert not compare(f"snapshot_from_silver@{at}", full, silver)
+    if at == ERA_START:
+        cols = ["pair_id", "exchange_id", "era", "order_id", "event_no",
+                "microtimestamp"]
+        before = live_at(level3, at, before=True).select(*cols).toPandas()
+        prev = (live_at(level3, "2024-01-07 23:59:59.999999")
+                .select(*cols).toPandas())
+        closed = live_at(level3, at).select(*cols).toPandas()
+        assert len(before) > 0
+        assert (before["era"] < pd.Timestamp(at)).all()
+        assert (closed["era"] == pd.Timestamp(at)).all()
+        assert not compare("before=True @ era start", before, prev)
 
 
 def test_get_depth_toggles_partition_the_output(level3):

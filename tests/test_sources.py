@@ -216,8 +216,9 @@ def test_checkpoint_silver_roundtrip_pruning_and_probe(spark, level3, tmp_path):
     point-in-time snapshot identically to the full-history scan when read
     back from parquet."""
     from obadiah_spark.fold import book_checkpoints
-    from obadiah_spark.operators.order_book import snapshot, snapshot_checkpointed
-    from obadiah_spark.sources.silver import read_checkpoints, write_checkpoints
+    from obadiah_spark.operators.order_book import snapshot, snapshot_from_silver
+    from obadiah_spark.sources.silver import (
+        read_checkpoints, write_checkpoints, write_era_registry)
     from tools.verify_local import compare
 
     derived = book_checkpoints(level3, frequency_s=86400, use_cache=False)
@@ -237,24 +238,57 @@ def test_checkpoint_silver_roundtrip_pruning_and_probe(spark, level3, tmp_path):
     assert "PartitionFilters" in plan
     assert "boundary_us" in plan.split("PartitionFilters")[1][:300]
 
-    full = snapshot(level3, at).drop("event_id")
-    via_silver = snapshot_checkpointed(level3, pruned, at)
-    keys = sorted(set(full.columns) & set(via_silver.columns))
-    assert not compare("ckpt probe == full scan",
-                       via_silver.select(*keys).toPandas(),
-                       full.select(*keys).toPandas())
-
     # the production literal-filter probe (driver-side catalog metadata)
-    from obadiah_spark.operators.order_book import snapshot_from_silver
-    from obadiah_spark.sources.silver import write_era_registry
-
     write_era_registry(level3, path)
     for probe_at in (at, "2024-01-17 00:00:00", "2024-01-01 00:00:30"):
         fast = snapshot_from_silver(level3, path, probe_at)
         ref = snapshot(level3, probe_at).drop("event_id")
+        keys = sorted(set(fast.columns) & set(ref.columns))
         assert not compare(f"silver literal probe @ {probe_at}",
                            fast.select(*keys).toPandas(),
                            ref.select(*keys).toPandas())
+
+
+def test_book_checkpoints_fresh_after_in_place_rewrite(spark, level3,
+                                                       tmp_path, caplog):
+    """A silver level3 table rewritten in place reads back PLAN-EQUAL to
+    the old one, so neither the checkpoint cache nor Spark's own cache may
+    answer for it: with and without ``use_cache`` the checkpoints must be
+    derived from the files as they are now (and the dropped entry is
+    logged)."""
+    import logging
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from obadiah_spark.fold import book_checkpoints
+    from obadiah_spark.sources.silver import read_level3, write_level3
+    from tools.verify_local import compare
+
+    path = str(tmp_path / "l3")
+    write_level3(level3, path)
+    old = read_level3(spark, path)
+    assert book_checkpoints(old, 86400).count() > 0
+
+    even = level3.filter(F.col("order_id") % 2 == 0)
+    write_level3(even, str(tmp_path / "l3_even"))
+    shutil.rmtree(path)
+    shutil.move(str(tmp_path / "l3_even"), path)
+    new = read_level3(spark, path)
+    assert new.sameSemantics(old)
+
+    want = book_checkpoints(even, 86400, use_cache=False)
+    cols = sorted(want.columns)
+    want = want.select(*cols).toPandas()
+    assert 0 < len(want)
+    for use_cache in (False, True):
+        with caplog.at_level(logging.DEBUG, logger="obadiah_spark.fold"):
+            got = book_checkpoints(new, 86400, use_cache=use_cache)
+        assert not compare(f"checkpoints after rewrite, use_cache={use_cache}",
+                           got.select(*cols).toPandas(), want), use_cache
+    logged = [r.getMessage() for r in caplog.records]
+    assert any("evict (stale)" in m for m in logged), logged
+    assert any("miss" in m for m in logged), logged
 
 
 def test_capture_raw_book_reference_branches(spark):

@@ -147,6 +147,13 @@ def main() -> int:
               file=sys.stderr)
         return 2
     spark = get_spark("plan_audit")
+    # The audit plans queries without running them, so whether the cached
+    # level3 is materialized decides how its scans print (a materialized
+    # cache shows its own plan). The first checkpoint-table build of a
+    # checkout (`_ckpt_silver`, when `.silver_cache/` is absent or stale)
+    # materializes it midway through the run; doing it up front makes
+    # every run plan against the same state.
+    em._l3(spark, sf_dir).count()
     if keys:
         qs = {k: qs[k] for k in keys}
 
