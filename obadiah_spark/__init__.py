@@ -8,7 +8,7 @@ Layout
 - ``synth``      — deterministic level3/matches synthesis from the driver's
                    ``events`` table (shared SQL, runs on Spark AND DuckDB)
 - ``fold``       — the one custom physical primitive: ordered stateful fold
-                   per (pair, era) via repartition+sortWithinPartitions+applyInPandas
+                   per (pair, era) via repartition+sortWithinPartitions+mapInPandas
 - ``operators``  — order book / depth / spread / events / trading / quality
 - ``pipelines``  — LLM-data-pipeline ops: dedup, similarity, text, multimodal
 - ``streaming``  — Structured Streaming variants (watermark reorderer, book fold)

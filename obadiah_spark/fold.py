@@ -25,10 +25,7 @@ never crosses an era boundary, so eras are embarrassingly parallel.
 Memory is bounded by O(open orders + price levels) per in-flight group plus
 one Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) plus one
 output chunk (``EpisodeFolder.CHUNK`` rows) — NOT by group size: a
-billion-event era streams through without ever materializing. (Earlier
-revisions used ``groupBy().applyInPandas``, which loads each group as one
-pandas frame; that shape survives only in :func:`ordered_fold` for inputs that
-are already compressed, e.g. the emit-on-change level1 stream.)
+billion-event era streams through without ever materializing.
 
 Best-price lookup is incremental: a lazy-deletion heap per side amortizes to
 O(log levels) per episode instead of a full level scan (the reference keeps

@@ -1,10 +1,6 @@
 """Scalar/utility functions (SURVEY §2.8).
 
 Reference parity:
-- F1 ``get._date_floor`` / ``get._date_ceiling`` — align a timestamp to an
-  interval grid; ceiling is OPEN on an exact boundary (subtracts 1 µs first)
-  (reference db/get_schema.sql:60-87).
-- F2 price tick alignment Up/Down (reference src/base.h:56-90).
 - F5 ``obanalytics._level3_uuid`` — md5 of (ts, order_id, event_no, pair,
   exchange) (reference db/obanalytics_schema.sql:909-911). We hash epoch-µs
   text with '#' separators so Spark and DuckDB produce identical digests.
@@ -17,30 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def date_floor(ts: Column, interval_us: int) -> Column:
-    """F1: largest grid instant <= ts, grid = multiples of interval_us."""
-    us = F.unix_micros(ts)
-    return F.timestamp_micros((us - us % F.lit(interval_us)).cast("long"))
-
-
-def date_ceiling(ts: Column, interval_us: int) -> Column:
-    """F1: smallest grid instant >= ts, OPEN on exact boundary: a ts exactly
-    on the grid maps to itself (the reference subtracts 1 µs then rounds up,
-    db/get_schema.sql:75-87)."""
-    us = F.unix_micros(ts) - F.lit(1)
-    return F.timestamp_micros((us - us % F.lit(interval_us) + F.lit(interval_us)).cast("long"))
-
-
-def align_price_down(price: Column, tick: float) -> Column:
-    """F2 AlignDown: bid prices align toward zero (reference src/base.h:76-82)."""
-    return F.floor(price / F.lit(tick) + F.lit(1e-9)) * F.lit(tick)
-
-
-def align_price_up(price: Column, tick: float) -> Column:
-    """F2 AlignUp: ask prices align away from zero."""
-    return F.ceil(price / F.lit(tick) - F.lit(1e-9)) * F.lit(tick)
 
 
 def level3_uuid(ts: Column, order_id: Column, event_no: Column,

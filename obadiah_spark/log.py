@@ -16,7 +16,3 @@ import logging
 def get_logger(name: str) -> logging.Logger:
     return logging.getLogger(f"obadiah_spark.{name}")
 
-
-def set_log_level(level: str) -> None:
-    """Reference ``SetLogLevel``: adjust the engine namespace's severity."""
-    logging.getLogger("obadiah_spark").setLevel(level.upper())

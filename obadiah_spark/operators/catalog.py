@@ -1,9 +1,10 @@
 """Catalog listings + CSV export (SURVEY §2.5 E6, §2.1 SRC6).
 
 Reference parity:
-- E6 ``get.data_overview`` / ``available_exchanges/pairs/period`` — era
-  catalog joined to the pairs/exchanges dims, last-r eras via row_number
-  (reference db/get_schema.sql:165-233).
+- E6 ``get.data_overview`` / ``available_exchanges/pairs`` — era catalog
+  joined to the pairs/exchanges dims, last-r eras via row_number (reference
+  db/get_schema.sql:165-233); ``available_period`` is the span of the
+  overview's era rows.
 - SRC6 ``get.export`` — events in obAnalytics CSV shape: window events ∪
   book-at-start, projected to (id, timestamps, price, volume, action,
   direction) (reference db/get_schema.sql:520-552). Timestamps here are
@@ -52,13 +53,6 @@ SELECT pair, pair_id, exchange, exchange_id, era, level3,
        row_number() OVER (PARTITION BY pair_id, exchange_id ORDER BY era DESC) AS r
 FROM eras JOIN pairs USING (pair_id) JOIN exchanges USING (exchange_id)
 """
-
-
-def available_period(l3: DataFrame) -> DataFrame:
-    """E6: [min era, max watermark] per (exchange, pair)."""
-    return _eras(l3).groupBy("exchange_id", "pair_id").agg(
-        F.min("era").alias("s"), F.max("level3").alias("e")
-    )
 
 
 def export(l3: DataFrame, start: str, end: str) -> DataFrame:

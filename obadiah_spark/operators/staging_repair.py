@@ -367,23 +367,6 @@ def normalize_event_order(l3: DataFrame) -> DataFrame:
     )
 
 
-def event_order_audit(l3: DataFrame) -> DataFrame:
-    """pga_cleanse's final consistency check as an audit frame: events whose
-    microtimestamp exceeds the minimum of their chain suffix (the reference
-    RAISEs on any hit; callers can assert emptiness)."""
-    chain = ["pair_id", "exchange_id", "era", "order_id", "life_no"]
-    w_desc = (
-        W.partitionBy(*chain).orderBy(F.desc("event_no"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        l3.withColumn("_suffix_min", F.min("microtimestamp").over(w_desc))
-        .filter(F.col("microtimestamp") > F.col("_suffix_min"))
-        .select(*chain, "event_no", "microtimestamp",
-                F.col("_suffix_min").alias("suffix_min"))
-    )
-
-
 # disorder fabric shared by the cleanse gate entry: push every %7==2 order's
 # 2nd chained event 10 minutes forward (creating ts(2) > ts(3) inversions),
 # rebuild the chain pointers, and mark maker-matched events

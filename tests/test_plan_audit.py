@@ -47,3 +47,23 @@ def test_allowed_lists_only_name_registered_queries():
     stale = [k for k in (set(ALLOWED_CROSS) | set(ALLOWED_BNLJ))
              if k not in qs]
     assert not stale, f"allow-list names unknown queries: {stale}"
+
+
+def test_audit_counts_only_the_query_own_nodes(spark):
+    """The formatted explain prints a cached frame's build plan under its
+    InMemoryRelation, differently once the cache is materialized; audit()
+    counts only the query's own nodes, so the same query over a cached frame
+    audits the same before and after the cache is filled."""
+    from tools.plan_audit import audit
+
+    cached = (spark.range(100).selectExpr("id % 3 AS k")
+              .repartition(4, "k").groupBy("k").count().cache())
+    try:
+        q = (cached.join(spark.range(10).withColumnRenamed("id", "k"), "k")
+             .groupBy("k").count())
+        before = audit("q", q)
+        cached.count()
+        assert audit("q", q) == before
+        assert before["exchanges"] == 1  # the query's own aggregate
+    finally:
+        cached.unpersist()

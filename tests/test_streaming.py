@@ -8,12 +8,17 @@ import os
 import tempfile
 
 import numpy as np
+import pytest
 
 from obadiah_spark.streaming.ingest import Level3Ingestor
 from tools.verify_local import canonicalize, compare
 
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, event_type string, "
                  "value double, props string")
+_L3_EVENTS_SCHEMA = ("pair_id int, exchange_id int, era timestamp, "
+                     "microtimestamp timestamp, order_id long, event_no int, "
+                     "side string, price double, amount double, "
+                     "chain_state string")
 
 
 def _batch_l3(level3):
@@ -66,6 +71,28 @@ def _write_event_chunks(spark, events, d, n_chunks=4):
     return flat
 
 
+def _run_in_two_halves(flat, files, src, start, sink):
+    """Move the first half of ``files`` from ``flat`` into ``src`` and run
+    the query ``start(src)`` to completion, then the second half and run
+    it again, resuming from its checkpoint. Returns the sink entries the
+    first run wrote."""
+    import shutil
+    import time
+
+    src.mkdir()
+    now = time.time()
+    first = None
+    for half in (files[:len(files) // 2], files[len(files) // 2:]):
+        for f in half:
+            shutil.move(os.path.join(flat, f), src / f)
+            # the file source replays in mtime order; same-ms files tie
+            os.utime(src / f, (now + 10 * files.index(f),) * 2)
+        start(str(src)).awaitTermination()
+        if first is None:
+            first = {p.name for p in sink.iterdir()}
+    return first
+
+
 def test_chain_stream_executor_side(spark, level3):
     """The production streaming path: applyInPandasWithState keyed by
     market-era (pair, exchange, era) — state in the Spark state store,
@@ -90,9 +117,6 @@ def test_chain_stream_restarts_from_checkpoint(spark, level3, tmp_path):
     must come back from the state store, so both runs' versions, latest-wins
     and era-closed, equal the one-shot batch level3. (A foreachBatch parquet
     sink keyed by batch id: the memory sink refuses checkpoint recovery.)"""
-    import shutil
-    import time
-
     from obadiah_spark.streaming.chain import (chain_stream,
                                                finalize_open_chains,
                                                keyed_stream, latest_wins)
@@ -102,33 +126,20 @@ def test_chain_stream_restarts_from_checkpoint(spark, level3, tmp_path):
     flat = _write_event_chunks(spark, events, str(tmp_path))
     files = sorted(os.listdir(flat))
     assert len(files) == 4
-    src, sink = tmp_path / "src", tmp_path / "sink"
-    src.mkdir()
-    now = time.time()
+    sink = tmp_path / "sink"
 
-    def add(names):
-        for i, f in enumerate(names, start=files.index(names[0])):
-            shutil.move(os.path.join(flat, f), src / f)
-            # the file source replays in mtime order; same-ms files tie
-            os.utime(src / f, (now + 10 * i,) * 2)
-
-    def run():
+    def start(src):
         stream = with_reorder_watermark(
             spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1).parquet(str(src)), "ts",
+            .option("maxFilesPerTrigger", 1).parquet(src), "ts",
             "1 second")
-        q = (chain_stream(keyed_stream(stream)).writeStream
-             .foreachBatch(lambda df, batch_id: df.write.parquet(
-                 str(sink / f"batch_id={batch_id}")))
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
+        return (chain_stream(keyed_stream(stream)).writeStream
+                .foreachBatch(lambda df, batch_id: df.write.parquet(
+                    str(sink / f"batch_id={batch_id}")))
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .outputMode("update").trigger(availableNow=True).start())
 
-    add(files[:2])
-    run()
-    first = {p.name for p in sink.iterdir()}
-    add(files[2:])
-    run()
+    first = _run_in_two_halves(flat, files, tmp_path / "src", start, sink)
     assert first and {p.name for p in sink.iterdir()} > first
     ups = spark.read.parquet(str(sink)).toPandas().drop(columns=["batch_id"])
     got = finalize_open_chains(latest_wins(ups))
@@ -311,6 +322,104 @@ def test_streaming_depth_change_end_to_end(spark, level3):
                                          os.path.join(d, "ckpt"))
     want = depth_change_fold(level3).toPandas()
     assert not compare("streaming-depth-e2e", got, want)
+
+
+@pytest.mark.parametrize("folder_name, batch_name", [
+    ("_SpreadFolder", "spread_fold"), ("_DepthFolder", "depth_change_fold")])
+def test_fold_kernel_holds_pending_episode(spark, folder_name, batch_name):
+    """Unit: a trigger whose rows all belong to the pending episode emits
+    nothing and keeps them pending; the next trigger closes that episode
+    once, and all triggers plus the stream-end close equal the batch fold."""
+    import pandas as pd
+
+    import obadiah_spark.fold as fold
+    from obadiah_spark.streaming.ingest import _HeldState
+    from obadiah_spark.streaming.spread import _fold_events
+
+    folder = getattr(fold, folder_name)
+    era = pd.Timestamp("2024-01-01")
+    key = (1, 1, era)
+
+    def rows(minute, *orders):
+        return pd.DataFrame([{
+            "pair_id": 1, "exchange_id": 1, "era": era,
+            "microtimestamp": era + pd.Timedelta(minutes=minute),
+            "order_id": oid, "event_no": eno, "side": side, "price": price,
+            "amount": amount, "chain_state": state,
+        } for oid, eno, side, price, amount, state in orders])
+
+    triggers = [
+        pd.concat([rows(0, (1, 1, "b", 100.0, 1.0, "chained"),
+                        (2, 1, "s", 101.0, 1.0, "alive")),
+                   rows(1, (3, 1, "b", 100.5, 2.0, "alive"))]),
+        rows(1, (4, 1, "s", 100.75, 0.5, "alive")),
+        rows(2, (3, 2, "b", 100.5, 2.0, "deleted")),
+    ]
+    minute1 = era + pd.Timedelta(minutes=1)
+    state = _HeldState()
+    out = []
+    for t in triggers:
+        out.append(list(_fold_events(folder, key, [t], state)))
+        if len(out) == 2:
+            us, oids = state.get[:2]
+            assert [o for u, o in zip(us, oids)
+                    if u == minute1.value // 1000] == [3, 4]
+    assert out[0] and not out[1] and out[2]
+    assert (pd.concat(out[2])["microtimestamp"] == minute1).all()
+    got = pd.concat([f for fs in out for f in fs]
+                    + list(_fold_events(folder, key, [], state, close=True)))
+    want = getattr(fold, batch_name)(
+        spark.createDataFrame(pd.concat(triggers))).toPandas()
+    assert not compare("fold-kernel-vs-batch", got, want)
+
+
+@pytest.mark.parametrize("folder_name, batch_name", [
+    ("_SpreadFolder", "spread_fold"), ("_DepthFolder", "depth_change_fold")])
+def test_fold_stream_restarts_from_checkpoint(spark, level3, tmp_path,
+                                              folder_name, batch_name):
+    """Stop the level1/level2 fold stream after the first two of four
+    time-ordered files, add the other two and resume from the same
+    checkpoint: the books and the trailing episodes must come back from the
+    state store, so the sink's rows plus the trailing episodes closed from
+    the checkpoint equal the batch fold."""
+    import pandas as pd
+
+    import obadiah_spark.fold as fold
+    from obadiah_spark.streaming.spread import (finalize_open_episodes,
+                                                fold_stream)
+
+    folder = getattr(fold, folder_name)
+    # the fixture's episodes hold one event each; coarsened to 3 hours
+    # they hold several, so file boundaries can fall inside them
+    events = level3.select(*fold._EVENT_COLS).toPandas()
+    events["microtimestamp"] = events["microtimestamp"].dt.floor("3h")
+    events = events.sort_values(fold.EVENT_ORDER).reset_index(drop=True)
+    flat = _write_event_chunks(spark, events, str(tmp_path))
+    files = sorted(os.listdir(flat))
+    assert len(files) == 4
+    episodes = [set(pd.read_parquet(os.path.join(flat, f))[
+        ["pair_id", "exchange_id", "era", "microtimestamp"]]
+        .itertuples(index=False)) for f in files]
+    assert any(a & b for a, b in zip(episodes, episodes[1:])), \
+        "no file boundary splits an episode"
+    ckpt, sink = str(tmp_path / "ckpt"), tmp_path / "sink"
+
+    def start(src):
+        stream = (spark.readStream.schema(_L3_EVENTS_SCHEMA)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        return (fold_stream(stream, folder).writeStream
+                .foreachBatch(lambda df, batch_id: df.write.parquet(
+                    str(sink / f"batch_id={batch_id}")))
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True).start())
+
+    first = _run_in_two_halves(flat, files, tmp_path / "src", start, sink)
+    assert first and {p.name for p in sink.iterdir()} > first
+    got = (spark.read.parquet(str(sink)).drop("batch_id")
+           .unionByName(finalize_open_episodes(spark, ckpt, folder))
+           .toPandas())
+    want = getattr(fold, batch_name)(spark.createDataFrame(events)).toPandas()
+    assert not compare("fold-stream-restart-vs-batch", got, want)
 
 
 def _finalize_by_row(l3):

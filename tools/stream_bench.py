@@ -14,7 +14,8 @@ parse onward):
    ``streaming/chain.py`` applyInPandasWithState event chaining
    (update-mode upserts into a memory sink).
 3. ``level1``   — the silver level3 parquet → ``streaming/spread.py``
-   foreachBatch episode fold to the level1 stream.
+   applyInPandasWithState episode fold to the level1 stream (its runner
+   returns rows, not the query, so no per-batch latencies).
 
 Prints one JSON line per stage and a final summary line:
 {"stage": ..., "rows_in": N, "wall_sec": S, "rows_per_sec": R,
@@ -70,6 +71,18 @@ def _pin_mtimes(d: str) -> None:
     t = time.time()
     for i, f in enumerate(sorted(os.listdir(d))):
         os.utime(os.path.join(d, f), (t + 10 * i, t + 10 * i))
+
+
+def _flatten(src: str, flat: str) -> str:
+    """Move the parquet parts of ``src`` into ``flat`` as 000.parquet,
+    001.parquet, ... in part order — one file per micro-batch — with
+    strictly increasing mtimes; return ``flat``."""
+    os.makedirs(flat)
+    parts = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    for n, f in enumerate(parts):
+        os.rename(os.path.join(src, f), os.path.join(flat, f"{n:03d}.parquet"))
+    _pin_mtimes(flat)
+    return flat
 
 
 def bench_capture(spark, work: str, n_lines: int) -> dict:
@@ -205,14 +218,7 @@ def bench_chain(spark, work: str, sf_dir: str) -> dict:
      .sortWithinPartitions("ts")
      .write.mode("overwrite").parquet(src))
     # one file per micro-batch, replayed in ts order
-    flat = os.path.join(work, "events_flat")
-    os.makedirs(flat)
-    n = 0
-    for f in sorted(os.listdir(src)):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(src, f), os.path.join(flat, f"{n:03d}.parquet"))
-            n += 1
-    _pin_mtimes(flat)
+    flat = _flatten(src, os.path.join(work, "events_flat"))
     rows_in = spark.read.parquet(flat).count()
     t0 = time.perf_counter()
     stream = (spark.readStream.schema(EVENTS_SCHEMA)
@@ -234,8 +240,7 @@ def bench_chain(spark, work: str, sf_dir: str) -> dict:
 def bench_level1(spark, work: str, sf_dir: str) -> dict:
     """Silver level3 through the streaming episode fold to level1."""
     import __spark_entry__ as em
-    from obadiah_spark.fold import _SpreadFolder
-    from obadiah_spark.streaming.spread import StreamingFold
+    from obadiah_spark.streaming.spread import run_streaming_spread
 
     src = os.path.join(work, "l3_chunks")
     # 16 time-range chunks: the fold's state machines need their events
@@ -245,31 +250,16 @@ def bench_level1(spark, work: str, sf_dir: str) -> dict:
      .repartitionByRange(16, "microtimestamp")
      .sortWithinPartitions("microtimestamp")
      .write.mode("overwrite").parquet(src))
-    flat = os.path.join(work, "l3_flat")
-    os.makedirs(flat)
-    n = 0
-    for f in sorted(os.listdir(src)):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(src, f), os.path.join(flat, f"{n:03d}.parquet"))
-            n += 1
-    _pin_mtimes(flat)
+    flat = _flatten(src, os.path.join(work, "l3_flat"))
     df = spark.read.parquet(flat)
     rows_in = df.count()
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in df.schema.fields)
     t0 = time.perf_counter()
-    acc = StreamingFold(_SpreadFolder)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(flat))
-    q = (stream.writeStream
-         .foreachBatch(lambda b, _i: acc.process_batch(b.toPandas()))
-         .option("checkpointLocation", os.path.join(work, "l1_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    durs = _batch_durations(q)
-    out = acc.flush()
+    out = run_streaming_spread(spark, flat, schema,
+                               os.path.join(work, "l1_ckpt"))
     wall = time.perf_counter() - t0
-    rec = _report("level1", rows_in, wall, durs)
+    rec = _report("level1", rows_in, wall, [])
     rec["rows_out"] = len(out)
     return rec
 
@@ -293,15 +283,7 @@ def bench_llm_ingest(spark, work: str, sf_dir: str,
     src = os.path.join(work, "docs_chunks")
     (docs.repartitionByRange(8, "doc_id")
      .write.mode("overwrite").parquet(src))
-    flat = os.path.join(work, "docs_flat")
-    os.makedirs(flat)
-    n = 0
-    for f in sorted(os.listdir(src)):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(src, f),
-                      os.path.join(flat, f"{n:03d}.parquet"))
-            n += 1
-    _pin_mtimes(flat)
+    flat = _flatten(src, os.path.join(work, "docs_flat"))
     rows_in = docs.count()
     out = []
 
